@@ -1,19 +1,21 @@
 package graft.ingest
 
 import graft.model.SchemaBuilder
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Batch CDC write path: envelope → day-partitioned columnar table.
+/** Batch CDC write path: envelope → day-partitioned SnapshotLog table.
   *
   * The reference buffers events in Postgres, encodes Parquet in memory and
   * commits files to Iceberg with a day(_cdc_timestamp) partition spec
   * (ref internal/iceberg/writer/writer.go:95-194, schema/schema.go:106-135).
-  * Spark-native: one `write.partitionBy(_cdc_date)` — the lake layout
-  * (hive-style day directories) is what makes partition pruning work at
-  * 100 TB; no Iceberg jar ships in this container, so plain parquet dirs
-  * stand in for Iceberg tables (SURVEY §7.3; commit atomicity would come
-  * free with the iceberg-spark runtime).
+  * Here every write commits through the [[graft.lake.SnapshotLog]] commit
+  * log: data files land under `data/<uuid>/`, one file per day per
+  * commit, and become visible only when the manifest rename publishes
+  * them — an append ([[appendCommit]]) or an upsert ([[merge]],
+  * [[morMerge]]) is atomic, and a crashed write leaves only unreferenced
+  * debris for [[graft.lake.SnapshotLog.expire]]. Per-file day values in
+  * the manifest drive partition pruning without a directory listing.
   *
   * Fidelity fix vs reference: columns are written TYPED. The reference's
   * physical files hold the whole row as one JSON string column
@@ -27,49 +29,14 @@ object CdcWriter {
     envelope.withColumn(SchemaBuilder.partitionColumn,
       date_format(col(Cdc.TsColumn), "yyyy-MM-dd"))
 
-  /** Write one table's envelope day-partitioned.
-    *
-    * The pre-write `repartition(partitionCol)` routes each day to one
-    * task: without it every write task emits a file into every day dir
-    * (tasks × days small files — the same small-file problem the
-    * reference suffers from its 5 s batches, writer/writer.go:141-163).
-    *
-    * Refuses a snapshot-backed target: once a dir has a commit log,
-    * readers resolve the MANIFEST only — a hive-layout append here would
-    * be invisible to [[read]] and [[merge]] (currentSnapshot wins over
-    * importHive) and swept as unreferenced debris by the next
-    * [[graft.lake.SnapshotLog.expire]]. Silent data loss; fail loudly
-    * instead — snapshot tables take writes through [[merge]]. */
-  def write(envelope: DataFrame, tableDir: String,
-            mode: SaveMode = SaveMode.Overwrite): Unit = {
-    require(!graft.lake.SnapshotLog.isSnapshotTable(envelope.sparkSession, tableDir),
-      s"$tableDir is snapshot-backed; append through merge, not write " +
-        "(a hive-layout append would be invisible to manifest readers)")
-    // PINNED partition count: an unpinned `repartition(col)` is fair
-    // game for AQE's post-shuffle coalescing, which folds a small
-    // micro-batch into ONE write task that then opens/writes/commits
-    // every day's parquet file SERIALLY (measured: ~0.55 s per-table
-    // write jobs with stages=2 tasks=3 on the streaming bench queries —
-    // the dominant per-batch cost). Pinning to defaultParallelism keeps
-    // the one-file-per-day layout (each day still hashes to exactly one
-    // task) while days write in parallel; scale-adaptive by definition
-    // (cores on the cluster, 100 TB batches are admission-bounded).
-    val parts = envelope.sparkSession.sparkContext.defaultParallelism
-    withPartitionColumn(envelope)
-      .repartition(parts, col(SchemaBuilder.partitionColumn))
-      .write.mode(mode)
-      .partitionBy(SchemaBuilder.partitionColumn)
-      .parquet(tableDir)
-  }
-
   /** Append a batch through the commit log WITHOUT merging — the
     * reference writer's flush path (one immutable file per day per
     * batch, ref writer/writer.go:141-163), which is exactly how a
     * snapshot table accretes small files between rewrites: a day
     * receiving k batches holds k files until
-    * [[graft.lake.SnapshotLog.compact]] folds them. Day-partitions the
-    * envelope like [[write]]; new entries join the carried manifest
-    * under an "append" snapshot. */
+    * [[graft.lake.SnapshotLog.compact]] folds them. New entries join the
+    * carried manifest under an "append" snapshot; a missing log
+    * bootstraps the table. */
   def appendCommit(spark: SparkSession, tableDir: String,
                    envelope: DataFrame): graft.lake.SnapshotLog.Snapshot = {
     import graft.lake.SnapshotLog
@@ -85,27 +52,11 @@ object CdcWriter {
     }
   }
 
-  /** Per-table fanout (ref groupEventsByTable, writer/writer.go:114-123):
-    * the distinct table list of a micro-batch is tiny (it is the number of
-    * captured tables, not rows), so collecting it on the driver matches
-    * the reference and stays O(tables). Each table is then written by a
-    * filtered, fully-distributed job. */
-  def routeAndWrite(envelope: DataFrame, baseDir: String, tableCol: String,
-                    mode: SaveMode = SaveMode.Append): Seq[String] = {
-    val tables = envelope.select(col(tableCol)).distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    tables.foreach { t =>
-      write(envelope.filter(col(tableCol) === t), s"$baseDir/$t", mode)
-    }
-    tables
-  }
-
-  /** Read a table: snapshot-backed tables (the MERGE sink's layout)
-    * resolve current-manifest → file set; plain day-partitioned dirs
-    * (the append path) read directly. */
+  /** Read a table's current snapshot (manifest → file set). A directory
+    * with no commit log is not a table and fails loudly. */
   def read(spark: SparkSession, tableDir: String): DataFrame =
-    graft.lake.SnapshotLog.readCurrent(spark, tableDir)
-      .getOrElse(spark.read.parquet(tableDir))
+    graft.lake.SnapshotLog.readCurrent(spark, tableDir).getOrElse(
+      throw new NoSuchElementException(s"no snapshot log at $tableDir"))
 
   /** Lake-level MERGE: apply a CDC delta batch as upserts into the STORED
     * day-partitioned current-state table — the reference writer's upsert
@@ -196,13 +147,10 @@ object CdcWriter {
                      deltaLatest: DataFrame, keyCols: Seq[String],
                      truncLsn: Option[String], pcol: String): Seq[String] = {
     import graft.lake.SnapshotLog
-    // resolve the stored table: an existing commit log wins; a plain
-    // hive-layout table (written by CdcWriter.write) is ADOPTED as
-    // snapshot 1 by listing — no rewrite (Iceberg's add_files); an
-    // absent/empty dir bootstraps (the first merged batch CREATES the
-    // table — the streaming-upsert sink's first trigger).
+    // resolve the stored table: an absent log bootstraps (the first
+    // merged batch CREATES the table — the streaming-upsert sink's first
+    // trigger).
     val cur = SnapshotLog.currentSnapshot(spark, tableDir)
-      .orElse(SnapshotLog.importHive(spark, tableDir, pcol))
     // the touched-day machinery treats partition values as exact day
     // keys; a clusterBy/spec-evolved layout (may-contain pruning) would
     // pull foreign rows into survivors while untouched keeps their
@@ -368,7 +316,6 @@ object CdcWriter {
     val deltaLatest = Cdc.latestVersions(deltas, keyCols).persist()
     try SnapshotLog.withTableLock(tableDir) {
       val cur = SnapshotLog.currentSnapshot(spark, tableDir)
-        .orElse(SnapshotLog.importHive(spark, tableDir, pcol))
       val upserts = withPartitionColumn(
         deltaLatest.filter(col(Cdc.OpColumn) =!= "DELETE"))
       val schema = cur match {
@@ -502,7 +449,7 @@ object CdcWriter {
 
   /** Bounded merge cadence — the COW-amplification lever for streams whose
     * deltas spread across many days (see [[merge]] scaladoc): micro-batches
-    * are STAGED (cheap day-partitioned appends, no stored-table read) and
+    * are STAGED (cheap [[appendCommit]]s, no stored-table read) and
     * the staged backlog merges once every `every` batches, so the stored
     * table is rewritten O(batches / every) times instead of O(batches).
     * Correctness is unchanged: staged batches replay in one merge, and
@@ -514,7 +461,7 @@ object CdcWriter {
     require(every >= 1, s"merge cadence must be >= 1, got $every")
     private var staged = 0
     def onBatch(batch: DataFrame, batchId: Long): Unit = {
-      write(batch, stagingDir, SaveMode.Append)
+      appendCommit(spark, stagingDir, batch)
       staged += 1
       if (staged >= every) flush()
     }

@@ -446,14 +446,13 @@ private[lake] final class GraftScanBuilder(tableDir: String, snap: Snapshot,
     * writer's partitionBy invariant: a file's rows all carry exactly its
     * manifest partition value) and no NULL-day sentinel file exists (a
     * sentinel file's rows have a null day, which no claimed comparison
-    * may match). Hive-adopted files are excluded out of caution — their
-    * value lives in the directory name. */
+    * may match). */
   private def claimableTable: Boolean =
     SnapshotLog.conventionPartitionCol(snap.schema).exists { n =>
       snap.schema(n).dataType == StringType &&
         snap.planMemoized("claimableIdentityDay") {
           GraftFoldStats.record()
-          snap.files.forall(f => !f.hive && f.partition.nonEmpty &&
+          snap.files.forall(f => f.partition.nonEmpty &&
             f.partition != PartitionSentinel &&
             (f.spec.isEmpty || f.spec.contains("identity") ||
               f.spec.contains("day")))
@@ -595,9 +594,7 @@ private[lake] final class GraftScanBuilder(tableDir: String, snap: Snapshot,
 
   /** The native DSv2 Batch path applies when a plain multi-file parquet
     * scan IS the correct read: no live deletes (MOR application needs
-    * the join in [[SnapshotLog.read]]), no hive-adopted files (their
-    * partition value lives in the directory name, not the file), and
-    * every file's write-era schema readable BY NAME under the current
+    * the join in [[SnapshotLog.read]]) and every file's write-era schema readable BY NAME under the current
     * schema (rename/drop evolution needs the per-era by-id projection).
     * Everything else falls back to the V1 bridge, which builds the full
     * DataFrame read. The batch path is what unlocks plan-time
@@ -608,12 +605,10 @@ private[lake] final class GraftScanBuilder(tableDir: String, snap: Snapshot,
     (morData || (snap.deletes.isEmpty && snap.posDeletes.isEmpty)) &&
       snap.planMemoized("batchEraByName") {
         GraftFoldStats.record()
-        snap.files.forall(!_.hive) && {
-          val eras = SnapshotLog.parsedSchemas(snap)
-          snap.files.forall(f => f.schemaId == 0 ||
-            eras.get(f.schemaId).forall(ws =>
-              GraftEras.readable(ws, snap.schema)))
-        }
+        val eras = SnapshotLog.parsedSchemas(snap)
+        snap.files.forall(f => f.schemaId == 0 ||
+          eras.get(f.schemaId).forall(ws =>
+            GraftEras.readable(ws, snap.schema)))
       }
 
   override def build(): Scan = pushedAgg match {

@@ -51,7 +51,7 @@ import graft.lake.SnapshotLog.Snapshot
   * Command trees are left alone — their reads fall back to the V1
   * bridge, which applies deletes itself, so the rewrite is purely an
   * optimization and correctness never depends on it firing). Refused
-  * shapes — hive-adopted files, renamed-era files, mixed eq-key sets, a
+  * shapes — renamed-era files, mixed eq-key sets, a
   * user column shadowing a lineage name — fall back the same way.
   * Disable with `spark.graft.morBatchScan.enabled=false`.
   *
@@ -166,8 +166,8 @@ private[lake] object GraftMorScan {
       StructField(SeqCol, LongType, nullable = false)))
 
   /** Fires only where the rewrite is provably exact: live deletes over
-    * a file set the native batch scan can serve (no hive-adopted files,
-    * no renamed-era by-id reads), every delete era's key columns still
+    * a file set the native batch scan can serve (no renamed-era by-id
+    * reads), every delete era's key columns still
     * existing (mixed key-set eras stack one frame each), and no user
     * column shadowing a lineage name. Anything else keeps the V1
     * bridge (correct, just slower). */
@@ -175,7 +175,6 @@ private[lake] object GraftMorScan {
     val schema = snap.schema
     (snap.deletes.nonEmpty || snap.posDeletes.nonEmpty) &&
       snap.files.nonEmpty &&
-      snap.files.forall(!_.hive) &&
       !schema.fieldNames.exists(n => LineageCols.exists(_.equalsIgnoreCase(n))) &&
       snap.deletes.forall(_.eqCols.forall(schema.fieldNames.contains)) && {
         val eras = SnapshotLog.parsedSchemas(snap)

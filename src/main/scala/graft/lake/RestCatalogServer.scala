@@ -921,7 +921,7 @@ final class RestCatalogServer(spark: SparkSession, warehouseDir: String,
           (valueOf(primary), Some(specName), vals)
         case _ => halt(400, "partition must be an object", "BadRequestException")
       }
-      PendingFile(SnapshotLog.DataFile(rel, partition, hive = false, rows, size,
+      PendingFile(SnapshotLog.DataFile(rel, partition, rows, size,
         minLsn = None, maxLsn = None, seq = -1L, spec = spec), declaredVals)
     }
 

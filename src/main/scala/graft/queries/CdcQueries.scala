@@ -128,27 +128,22 @@ object CdcQueries extends QueryModule {
   }
 
   // ---- lake-level MERGE: the physical counterpart of cdc_apply_changes.
-  // The AS-OF snapshot is WRITTEN to a day-partitioned lake table, the
+  // The AS-OF snapshot is APPENDED to a day-partitioned lake table, the
   // post-watermark deltas are merged INTO THE STORED FILES
   // ([[graft.ingest.CdcWriter.merge]]: affected-partition probe,
-  // anti-join + union, per-partition swap — only key-affected day
-  // partitions are rewritten), and the result is the read-back of the
+  // anti-join + union, one commit — only key-affected day partitions
+  // are rewritten), and the result is the read-back of the
   // final files. The oracle is the FULL recompute over raw events, so a
   // wrong partition probe, a lost survivor row, or a double-applied
   // upsert in the physical merge fails the hash.
   private def cdcLakeMerge(s: SparkSession, d: String): DataFrame = {
-    val dir = Lifecycle.scratchDir(s, "graft_lakemerge", d)
-    // pre-delete (the FixtureCache discipline): merge() below turns the
-    // dir snapshot-backed, and write() REFUSES a snapshot-backed target
-    // — so a second run in the same session (a bench re-measure, a
-    // second full-surface pass) must start from a clean dir, not trip
-    // the hive-append guard. SaveMode.Overwrite alone cannot clear the
-    // commit log.
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    // a fresh dir: the seed is an append, so a second run in the same
+    // session (a bench re-measure, a second full-surface pass) must not
+    // append it on top of the previous run's table
+    val dir = Lifecycle.freshScratchDir(s, "graft_lakemerge", d)
     val env = envelope(s, d)
     val base = graft.ingest.TimeTravel.asOfLsn(env, Seq("user_id"), lit(ApplyLsn))
-    graft.ingest.CdcWriter.write(base, dir)
+    graft.ingest.CdcWriter.appendCommit(s, dir, base)
     graft.ingest.CdcWriter.merge(
       s, dir, env.filter(col(Cdc.LsnColumn) > ApplyLsn), Seq("user_id"))
     graft.ingest.CdcWriter.read(s, dir)

@@ -31,15 +31,37 @@ object Lifecycle extends QueryModule {
     s"${System.getProperty("java.io.tmpdir")}/${prefix}_${s.sparkContext.applicationId}$tag"
   }
 
+  /** [[scratchDir]], emptied first: a query that seeds its table with an
+    * append must not append onto the table a previous run left there. */
+  private[graft] def freshScratchDir(s: SparkSession, prefix: String, sfDir: String): String = {
+    val dir = scratchDir(s, prefix, sfDir)
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    dir
+  }
+
   // ---- write path + partition pruning (Q18): envelope → day-partitioned
-  // parquet → pruned read-back. The filter hits the hive-style partition
-  // column, so the scan lists only 7 of ~31 day directories — the same
-  // pruning Iceberg metadata would give (asserted in LifecycleSpec).
+  // SnapshotLog table → pruned read-back. The manifest's per-file day
+  // values select only the 7 of ~31 days' files the window needs before
+  // any file is opened — the pruning Iceberg metadata gives (asserted in
+  // LifecycleSpec).
+  private[graft] val RoundtripDays = (5 to 11).map(i => f"2024-01-$i%02d")
+
+  /** Append the envelope as one commit; returns the table dir and its
+    * snapshot. Shared with LifecycleSpec so the spec asserts pruning on
+    * exactly what the registered query wrote. */
+  def writeRoundtripSetup(s: SparkSession, d: String)
+  : (String, graft.lake.SnapshotLog.Snapshot) = {
+    val dir = freshScratchDir(s, "graft_roundtrip", d)
+    (dir, CdcWriter.appendCommit(s, dir, CdcQueries.envelope(s, d)))
+  }
+
   private def writeRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = scratchDir(s, "graft_roundtrip", d)
-    CdcWriter.write(CdcQueries.envelope(s, d), dir)
-    CdcWriter.read(s, dir)
-      .filter(col("_cdc_date").between("2024-01-05", "2024-01-11"))
+    import graft.lake.SnapshotLog
+    val (dir, snap) = writeRoundtripSetup(s, d)
+    val keep = SnapshotLog.pruneToDays(snap, RoundtripDays).toSet
+    SnapshotLog.readPruned(s, dir, snap, keep)
+      .filter(col("_cdc_date").between(RoundtripDays.head, RoundtripDays.last))
       .groupBy(col("_cdc_date").cast("string").as("day"))
       .agg(count(lit(1)).as("n"),
         countDistinct(col("user_id")).as("n_users"),
@@ -57,23 +79,34 @@ object Lifecycle extends QueryModule {
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
   // ---- compaction round-trip: fragment the envelope into many small
-  // files per day partition (8 write tasks x days — the exact pathology
-  // the reference's 5 s micro-batches produce, ref writer/writer.go:
-  // 141-163), rewrite each day to one file, then read back. The oracle
-  // replays the aggregate from the raw events — proving compaction
-  // changed the file layout and nothing else. CompactionSpec asserts the
-  // file counts actually dropped 8 → 1.
+  // files per day partition (8 files per day — the exact pathology the
+  // reference's 5 s micro-batches produce, ref writer/writer.go:
+  // 141-163), fold each day to one file with SnapshotLog.compact, then
+  // read back. The oracle replays the aggregate from the raw events —
+  // proving compaction changed the file layout and nothing else.
+  // CompactionSpec asserts the file counts actually dropped 8 → 1.
+  private[graft] val CompactionFragments = 8
+
   /** Fragmented write + compact; returns the table dir. Shared with
     * CompactionSpec so the spec asserts layout on exactly what the
     * registered query ran. */
   def compactionRoundtripSetup(s: SparkSession, d: String): String = {
-    val dir = scratchDir(s, "graft_compact", d)
-    CdcWriter.withPartitionColumn(CdcQueries.envelope(s, d))
-      .repartition(8) // 8 files into every day dir
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy(graft.model.SchemaBuilder.partitionColumn)
-      .parquet(dir)
-    graft.ingest.Compaction.compact(s, dir, maxFiles = 4, targetFiles = 1)
+    import graft.lake.SnapshotLog
+    val pcol = graft.model.SchemaBuilder.partitionColumn
+    val dir = freshScratchDir(s, "graft_compact", d)
+    val env = CdcWriter.withPartitionColumn(CdcQueries.envelope(s, d))
+    // ONE write job fragments every day: a hidden `<day>_<event_id mod 8>`
+    // partition gives each day 8 files, and the manifest records each file
+    // under its day (all of a file's rows carry that day). The hidden
+    // column stays out of the committed schema, so readers never see it.
+    val fragmented = env.withColumn("_fragment", concat_ws("_", col(pcol),
+      pmod(col("event_id"), lit(CompactionFragments))))
+    SnapshotLog.withTableLock(dir) {
+      val files = SnapshotLog.writeData(s, dir, fragmented, Some("_fragment"))
+        .map(f => f.copy(partition = f.partition.takeWhile(_ != '_')))
+      SnapshotLog.commit(s, dir, "append", files, env.schema, parent = None)
+    }
+    SnapshotLog.compact(s, dir, Some(pcol), maxFiles = 4)
     dir
   }
 
@@ -168,17 +201,17 @@ object Lifecycle extends QueryModule {
        |  min(_cdc_lsn) AS lsn_min, max(_cdc_lsn) AS lsn_max
        |FROM envelope GROUP BY 1 ORDER BY 1""".stripMargin
 
-  // ---- retention round-trip (S7): write the envelope day-partitioned,
-  // drop partitions older than the cutoff (an O(partitions) metadata
-  // delete — never a scan), read back. The oracle applies the same
-  // cutoff as a WHERE clause over the raw events: surviving data must be
-  // exactly "everything at or after the cutoff day".
+  // ---- retention round-trip (S7): append the envelope day-partitioned,
+  // drop partitions older than the cutoff (one metadata-only commit of
+  // the filtered manifest — never a scan), read back. The oracle applies
+  // the same cutoff as a WHERE clause over the raw events: surviving
+  // data must be exactly "everything at or after the cutoff day".
   private val RetentionCutoff = "2024-01-20"
 
   private def retentionRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val dir = scratchDir(s, "graft_retain", d)
-    CdcWriter.write(CdcQueries.envelope(s, d), dir)
-    graft.ingest.Retention.dropOlderThan(s, dir, RetentionCutoff)
+    val dir = freshScratchDir(s, "graft_retain", d)
+    CdcWriter.appendCommit(s, dir, CdcQueries.envelope(s, d))
+    graft.lake.SnapshotLog.dropDaysBefore(s, dir, RetentionCutoff)
     CdcWriter.read(s, dir)
       .groupBy(col("_cdc_date").cast("string").as("day"))
       .agg(count(lit(1)).as("n"),
@@ -667,15 +700,16 @@ object Lifecycle extends QueryModule {
   // ---- metadata tables (Q6): $partitions emulation (ref
   // sample-queries.sql:60-61: partition value, record/file counts).
   // Row counts come from reading the written table back; file counts are
-  // MEASURED from the filesystem — and the oracle expects exactly 1 per
-  // day, because that is the layout contract CdcWriter's pre-write
-  // repartition(partitionCol) exists to enforce. A regression to
-  // many-files-per-day fails correctness, not just a perf eyeball.
+  // MEASURED from the committed manifest — and the oracle expects exactly
+  // 1 per day, because that is the layout contract SnapshotLog.writeData's
+  // pre-write repartition(partitionCol) exists to enforce. A regression
+  // to many-files-per-day fails correctness, not just a perf eyeball.
   private def tablePartitions(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val dir = scratchDir(s, "graft_parts", d)
-    CdcWriter.write(CdcQueries.envelope(s, d), dir)
-    val files = graft.ingest.Compaction.fileCounts(s, dir).toSeq
+    val dir = freshScratchDir(s, "graft_parts", d)
+    val files = CdcWriter.appendCommit(s, dir, CdcQueries.envelope(s, d))
+      .files.groupBy(_.partition)
+      .map { case (day, fs) => (day, fs.size) }.toSeq
       .toDF("day", "n_files")
       .select(col("day"), col("n_files").cast("bigint").as("n_files"))
     CdcWriter.read(s, dir)
@@ -1415,22 +1449,17 @@ object Lifecycle extends QueryModule {
 
   // ---- metadata tables (Q6): $properties emulation (ref
   // sample-queries.sql:140-143). Key/value rows of the written table's
-  // static config — format and partition spec measured from the actual
-  // lake layout, row count and LSN watermark from the read-back — so a
+  // static config — format and partition spec measured from the committed
+  // manifest, row count and LSN watermark from the read-back — so a
   // layout regression fails correctness, not just an eyeball.
   private def tableProperties(s: SparkSession, d: String): DataFrame = {
-    val dir = scratchDir(s, "graft_props", d)
-    CdcWriter.write(CdcQueries.envelope(s, d), dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    // partition spec parsed from the hive-style dirs actually on disk
-    val dayDirs = fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-      .filter(_.isDirectory).map(_.getPath)
-      .filter(_.getName.contains("="))
-    val partCol = dayDirs.map(_.getName.takeWhile(_ != '=')).distinct.sorted.mkString(",")
-    // data format from the files inside the first partition
-    val fmt = fs.listStatus(dayDirs.head).map(_.getPath.getName)
-      .filter(!_.startsWith("_")).map(_.split('.').last).distinct.sorted.mkString(",")
+    val dir = freshScratchDir(s, "graft_props", d)
+    val snap = CdcWriter.appendCommit(s, dir, CdcQueries.envelope(s, d))
+    // partitioned iff every data file carries a day value
+    val partCol = graft.lake.SnapshotLog.conventionPartitionCol(snap.schema)
+      .filter(_ => snap.files.forall(_.partition.nonEmpty)).getOrElse("")
+    // data format from the manifest's file names
+    val fmt = snap.files.map(_.path.split('.').last).distinct.sorted.mkString(",")
     CdcWriter.read(s, dir)
       .agg(count(lit(1)).as("n"), max(col(Cdc.LsnColumn)).as("wm"),
         countDistinct(col(graft.model.SchemaBuilder.partitionColumn)).as("nparts"))

@@ -184,8 +184,8 @@ object PipelineOps extends QueryModule {
       process = b => IngestPipeline.processBatch(cfg)(b, 1L))
     require(replayed == before && pendingCount() == 0,
       s"expected $before pending replayed and drained, got $replayed")
-    s.read.parquet(s"${cfg.outDir}/events_0")
-      .unionByName(s.read.parquet(s"${cfg.outDir}/events_1"))
+    graft.ingest.CdcWriter.read(s, s"${cfg.outDir}/events_0")
+      .unionByName(graft.ingest.CdcWriter.read(s, s"${cfg.outDir}/events_1"))
       .groupBy(col("_cdc_table"))
       .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"),
         min(col(Cdc.LsnColumn)).as("lsn_min"), max(col(Cdc.LsnColumn)).as("lsn_max"))
@@ -211,8 +211,8 @@ object PipelineOps extends QueryModule {
     val stream = IngestPipeline.fileEnvelopeSource(
       s, src, s.read.parquet(src).schema, maxFilesPerTrigger = 2)
     IngestPipeline.start(stream, cfg, availableNow = true).awaitTermination()
-    s.read.parquet(s"${cfg.outDir}/events_0")
-      .unionByName(s.read.parquet(s"${cfg.outDir}/events_1"))
+    graft.ingest.CdcWriter.read(s, s"${cfg.outDir}/events_0")
+      .unionByName(graft.ingest.CdcWriter.read(s, s"${cfg.outDir}/events_1"))
       .groupBy(col("_cdc_table"))
       .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"),
         min(col(Cdc.LsnColumn)).as("lsn_min"), max(col(Cdc.LsnColumn)).as("lsn_max"))
@@ -306,7 +306,7 @@ object PipelineOps extends QueryModule {
       s"expected the injected crash to fail run 1, got: $failure")
 
     IngestPipeline.start(stream, cfg, availableNow = true).awaitTermination()
-    (0 until 2).map(i => s.read.parquet(s"${cfg.outDir}/events_$i"))
+    (0 until 2).map(i => graft.ingest.CdcWriter.read(s, s"${cfg.outDir}/events_$i"))
       .reduce(_ unionByName _)
       .groupBy(col("_cdc_table"))
       .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"),
@@ -502,7 +502,7 @@ object PipelineOps extends QueryModule {
       .foreachBatch { (b: DataFrame, _: Long) =>
         // per-table fanout: the distinct table list is O(tables), and each
         // table merges via a filtered fully-distributed job (the same
-        // shape as CdcWriter.routeAndWrite / the reference's writer loop).
+        // shape as IngestPipeline's router / the reference's writer loop).
         // The merges target DISJOINT table dirs (each under its own
         // SnapshotLog lock), so they submit concurrently — independent
         // Spark jobs sharing the executor pool, exactly how a real
@@ -555,11 +555,11 @@ object PipelineOps extends QueryModule {
   // payload schema, add-only merge, decode with the merged schema (the
   // reference's MergeSchemas + ensureTable chain, schema/schema.go:149-174
   // + writer/writer.go:197-253) — and lands via the real processBatch.
-  // The read-back is a mergeSchema scan: pre-drift files surface score as
-  // null, post-drift files carry it. The oracle recomputes count/non-null
-  // count/exact-integer sum per operation from the raw events, so a
-  // dropped column, a misaligned schema merge, or a corrupted value all
-  // fail the hash.
+  // The read-back resolves the snapshot's add-only merged schema:
+  // pre-drift files surface score as null, post-drift files carry it.
+  // The oracle recomputes count/non-null count/exact-integer sum per
+  // operation from the raw events, so a dropped column, a misaligned
+  // schema merge, or a corrupted value all fail the hash.
   private def streamEvolve(s: SparkSession, d: String): DataFrame = {
     val log = evolveLogOnce(s, d)
     val base = Lifecycle.scratchDir(s, "graft_streamevolve", d)
@@ -601,7 +601,7 @@ object PipelineOps extends QueryModule {
     require(decoder.version > 1 &&
       decoder.payloadSchema.fieldNames.contains("score"),
       s"expected mid-stream evolution, still at v${decoder.version}")
-    s.read.option("mergeSchema", "true").parquet(s"${cfg.outDir}/events")
+    graft.ingest.CdcWriter.read(s, s"${cfg.outDir}/events")
       .groupBy(col(Cdc.OpColumn))
       .agg(count(lit(1)).as("n"), count(col("score")).as("n_scored"),
         sum(col("score")).cast("long").as("score_sum"))

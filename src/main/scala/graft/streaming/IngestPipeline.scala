@@ -3,12 +3,13 @@ package graft.streaming
 import graft.ingest.CdcWriter
 import graft.observe.Metrics
 import graft.reliability.{DeadLetter, Retry, RetryPolicy}
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** The streaming half of the engine: CDC envelope stream → per-table
-  * router → day-partitioned append, with batch-level retry and DLQ.
+  * router → one SnapshotLog append commit per table, with batch-level
+  * retry and DLQ.
   *
   * Replaces, via Structured Streaming built-ins, the machinery the
   * reference hand-rolls (SURVEY §2.2):
@@ -16,16 +17,22 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    pipeline.go:119-277) → the streaming query + checkpointLocation;
   *    offsets commit after each successful batch, so restart resumes
   *    exactly where the last batch committed (the reference re-delivers
-  *    up to 10 s of events — at-least-once; this is exactly-once to the
-  *    extent the sink is idempotent).
+  *    up to 10 s of events — at-least-once). The sink is
+  *    [[CdcWriter.appendCommit]]: a table's slice becomes visible only
+  *    at its manifest rename, so a failed or retried write never leaves
+  *    partial rows behind.
   *  - ticker-driven batch processor (ref buffer/batch.go:165-342) →
   *    Trigger.ProcessingTime / AvailableNow micro-batches.
   *  - backpressure watermarks (ref pipeline/backpressure.go:26-165,
   *    pause ≥8000 / resume ≤5000) → source rate limits
   *    (maxFilesPerTrigger / maxOffsetsPerTrigger) + AQE.
   *  - per-batch retry then DLQ (ref buffer/batch.go:215-285) →
-  *    [[Retry.execute]] around each table write, [[DeadLetter.append]] on
+  *    [[Retry.execute]] around each table commit, [[DeadLetter.append]] on
   *    exhaustion; the batch is never lost and never blocks the stream.
+  *
+  * Every routed table is a SnapshotLog table, so [[graft.lake.GraftCatalog]],
+  * the REST catalog and the HTTP API serve it as soon as its first
+  * commit lands.
   */
 final case class IngestConfig(
     outDir: String,
@@ -45,9 +52,9 @@ object IngestPipeline {
     * (dead-lettered, never retried — retrying can't fix a name). The
     * shared guard is [[graft.model.Identifiers]]. */
 
-  /** Process one micro-batch: route per table, write each with retry,
-    * dead-letter a table's slice if retries exhaust. Public so batch jobs
-    * and tests can drive it without a stream. */
+  /** Process one micro-batch: route per table, append-commit each with
+    * retry, dead-letter a table's slice if retries exhaust. Public so
+    * batch jobs and tests can drive it without a stream. */
   def processBatch(cfg: IngestConfig)(batch: DataFrame, batchId: Long): Unit =
     // foreachBatch hands us a frame bound to the streaming session clone,
     // where AQE is force-disabled — re-enable it for these plain batch
@@ -82,7 +89,7 @@ object IngestPipeline {
         .map(r => (if (r.isNullAt(0)) null else r.getString(0)) ->
           (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getTimestamp(2))))
         .sortBy(p => Option(p._1))
-      // per-table slices write to DISJOINT dirs and the batch is cached:
+      // per-table slices commit to DISJOINT tables and the batch is cached:
       // submit them CONCURRENTLY so one table's write tail back-fills
       // with the next table's tasks (guide §2.6 — the same overlap
       // e2eMultitable's merge fanout uses; the reference writer loops
@@ -100,24 +107,18 @@ object IngestPipeline {
           // null name is as unroutable as a malformed one
           require(t != null && graft.model.Identifiers.isValid(t),
             s"invalid table name: '$t'")
-          val dirPath = new org.apache.hadoop.fs.Path(s"${cfg.outDir}/$t")
-          val fs = dirPath.getFileSystem(
-            slice.sparkSession.sparkContext.hadoopConfiguration)
-          def dirBytes: Long =
-            if (fs.exists(dirPath)) fs.getContentSummary(dirPath).getLength else 0L
-          val bytesBefore = dirBytes
-          Retry.execute(cfg.retry) { () =>
-            CdcWriter.write(slice, s"${cfg.outDir}/$t", SaveMode.Append)
+          val snap = Retry.execute(cfg.retry) { () =>
+            CdcWriter.appendCommit(slice.sparkSession, s"${cfg.outDir}/$t", slice)
           }
           cfg.metrics.inc("iceberg", "commits_total")
           // per-table series (exposition-label names — the
           // `{source,table}` dimensions the reference's metrics service
           // queries, services/metrics.go:179-210) plus the bytes
           // counter its writer tracks; counts come from the fused
-          // aggregate above, and the byte delta is two metadata calls
-          // around the write.
+          // aggregate above, bytes from the manifest entries this
+          // commit added (no filesystem walk).
           cfg.metrics.inc("iceberg", "bytes_written_total",
-            math.max(0L, dirBytes - bytesBefore))
+            snap.files.filter(_.seq == snap.id).map(_.sizeBytes).sum)
           cfg.metrics.inc("cdc", s"""events_total{table="$t"}""", nRows)
           maxTsOpt.foreach(ts =>
             cfg.metrics.setGauge("cdc", s"""lag_seconds{table="$t"}""",

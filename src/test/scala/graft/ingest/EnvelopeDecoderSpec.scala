@@ -63,7 +63,7 @@ class EnvelopeDecoderSpec extends SparkTestBase {
       checkpointDir = Files.createTempDirectory("graft-rate-ckpt").toString)
     val q = graft.streaming.IngestPipeline.start(stream, cfg, availableNow = true)
     q.awaitTermination()
-    assert(spark.read.parquet(s"${cfg.outDir}/users").count() === 4)
+    assert(CdcWriter.read(spark, s"${cfg.outDir}/users").count() === 4)
     val batches = q.recentProgress.filter(_.numInputRows > 0)
     assert(batches.length === 4, s"expected 4 rate-limited batches, saw ${batches.length}")
   }

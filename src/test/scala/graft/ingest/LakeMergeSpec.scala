@@ -27,34 +27,26 @@ class LakeMergeSpec extends SparkTestBase {
       .drop("day")
   }
 
-  /** The day's live file identities: manifest entries (path, size, mtime)
-    * once a commit log exists, hive listing before. Equality across a
-    * merge = the files were neither replaced nor rewritten in place. */
+  /** The day's live file identities: manifest entries (path, size,
+    * mtime). Equality across a merge = the files were neither replaced
+    * nor rewritten in place. */
   private def files(dir: String, day: String): Seq[(String, Long, Long)] = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SnapshotLog.currentSnapshot(spark, dir) match {
-      case Some(snap) =>
-        snap.files.filter(_.partition == day).sortBy(_.path).map { f =>
-          val st = fs.getFileStatus(new Path(s"$dir/${f.path}"))
-          (f.path, st.getLen, st.getModificationTime)
-        }
-      case None =>
-        val p = new Path(s"$dir/${SchemaBuilder.partitionColumn}=$day")
-        if (!fs.exists(p)) return Seq.empty
-        fs.listStatus(p).filter(_.isFile).toSeq
-          .map(f => (s"${SchemaBuilder.partitionColumn}=$day/${f.getPath.getName}",
-            f.getLen, f.getModificationTime)).sortBy(_._1)
-    }
+    SnapshotLog.currentSnapshot(spark, dir).toSeq.flatMap(
+      _.files.filter(_.partition == day).sortBy(_.path).map { f =>
+        val st = fs.getFileStatus(new Path(s"$dir/${f.path}"))
+        (f.path, st.getLen, st.getModificationTime)
+      })
   }
 
   test("merge rewrites only key-affected partitions; others keep their files") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-lakemerge").toString + "/t"
     // stored state: keys 1,2 on day1; 3,4 on day2; 5,6 on day3
-    CdcWriter.write(env(
+    CdcWriter.appendCommit(spark, dir, env(
       (1L, 1L, 1.0, "INSERT", "2024-01-01"), (2L, 2L, 2.0, "INSERT", "2024-01-01"),
       (3L, 3L, 3.0, "INSERT", "2024-01-02"), (4L, 4L, 4.0, "INSERT", "2024-01-02"),
-      (5L, 5L, 5.0, "INSERT", "2024-01-03"), (6L, 6L, 6.0, "INSERT", "2024-01-03")), dir)
+      (5L, 5L, 5.0, "INSERT", "2024-01-03"), (6L, 6L, 6.0, "INSERT", "2024-01-03")))
     val before1 = files(dir, "2024-01-01")
     val before3 = files(dir, "2024-01-03")
     assert(before1.nonEmpty && before3.nonEmpty)
@@ -69,7 +61,7 @@ class LakeMergeSpec extends SparkTestBase {
     assert(touched === Seq("2024-01-02", "2024-01-04"))
 
     // the 100 TB property: unaffected partitions untouched, byte-for-byte
-    // (the hive files were ADOPTED into the manifest, never rewritten)
+    // (the seed's files carry into the merge's manifest, never rewritten)
     assert(files(dir, "2024-01-01") === before1)
     assert(files(dir, "2024-01-03") === before3)
 
@@ -88,9 +80,9 @@ class LakeMergeSpec extends SparkTestBase {
   test("a partition emptied by deletes leaves the manifest; expire reclaims its bytes") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-lakemerge-del").toString + "/t"
-    CdcWriter.write(env(
+    CdcWriter.appendCommit(spark, dir, env(
       (1L, 1L, 1.0, "INSERT", "2024-01-01"),
-      (2L, 2L, 2.0, "INSERT", "2024-01-02"), (3L, 3L, 3.0, "INSERT", "2024-01-02")), dir)
+      (2L, 2L, 2.0, "INSERT", "2024-01-02"), (3L, 3L, 3.0, "INSERT", "2024-01-02")))
     val touched = CdcWriter.merge(spark, dir, env(
       (2L, 10L, 0.0, "DELETE", "2024-01-05"),
       (3L, 11L, 0.0, "DELETE", "2024-01-05")), Seq("user_id"))
@@ -115,7 +107,7 @@ class LakeMergeSpec extends SparkTestBase {
       (1L, 10L, 10.0, "UPDATE", "2024-01-02"), (3L, 11L, 3.0, "INSERT", "2024-01-02"))
     val batch2 = env(
       (2L, 20L, 0.0, "DELETE", "2024-01-03"), (1L, 21L, 99.0, "UPDATE", "2024-01-03"))
-    CdcWriter.write(Cdc.currentState(batch0, Seq("user_id")), dir)
+    CdcWriter.appendCommit(spark, dir, Cdc.currentState(batch0, Seq("user_id")))
     CdcWriter.merge(spark, dir, batch1, Seq("user_id"))
     CdcWriter.merge(spark, dir, batch2, Seq("user_id"))
     val merged = CdcWriter.read(spark, dir)
@@ -132,8 +124,8 @@ class LakeMergeSpec extends SparkTestBase {
   test("re-merging the same batch is idempotent (exactly-once under replay)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-lakemerge-replay").toString + "/t"
-    CdcWriter.write(env(
-      (1L, 1L, 1.0, "INSERT", "2024-01-01"), (2L, 2L, 2.0, "INSERT", "2024-01-01")), dir)
+    CdcWriter.appendCommit(spark, dir, env(
+      (1L, 1L, 1.0, "INSERT", "2024-01-01"), (2L, 2L, 2.0, "INSERT", "2024-01-01")))
     val batch = env(
       (1L, 10L, 10.0, "UPDATE", "2024-01-02"),
       (2L, 11L, 0.0, "DELETE", "2024-01-02"),
@@ -158,7 +150,7 @@ class LakeMergeSpec extends SparkTestBase {
   test("a no-op delta batch (keys absent, no inserts) touches nothing") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-lakemerge-noop").toString + "/t"
-    CdcWriter.write(env((1L, 1L, 1.0, "INSERT", "2024-01-01")), dir)
+    CdcWriter.appendCommit(spark, dir, env((1L, 1L, 1.0, "INSERT", "2024-01-01")))
     val before = files(dir, "2024-01-01")
     val touched = CdcWriter.merge(spark, dir, env(
       (9L, 10L, 0.0, "DELETE", "2024-01-06")), Seq("user_id"))
@@ -185,9 +177,9 @@ class LakeMergeSpec extends SparkTestBase {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-lakemerge-trunc").toString + "/t"
     // stored state entirely before the marker: both days must be wiped
-    CdcWriter.write(env(
+    CdcWriter.appendCommit(spark, dir, env(
       (1L, 1L, 1.0, "INSERT", "2024-01-01"), (2L, 2L, 2.0, "INSERT", "2024-01-01"),
-      (3L, 3L, 3.0, "INSERT", "2024-01-02")), dir)
+      (3L, 3L, 3.0, "INSERT", "2024-01-02")))
     // batch: one pre-marker row (discarded), the marker at LSN 10, and
     // two post-marker rows (applied) — one of them re-inserting key 1
     val delta = env(
@@ -218,9 +210,9 @@ class LakeMergeSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft-lakemerge-trunc2").toString + "/t"
     // key 1 stored BEFORE the marker LSN, key 2 stored after it (a
     // replayed batch can legitimately hold rows newer than the marker)
-    CdcWriter.write(env(
+    CdcWriter.appendCommit(spark, dir, env(
       (1L, 5L, 1.0, "INSERT", "2024-01-01"),
-      (2L, 15L, 2.0, "INSERT", "2024-01-01")), dir)
+      (2L, 15L, 2.0, "INSERT", "2024-01-01")))
     val touched = CdcWriter.merge(spark, dir,
       truncMarker(10L, "2024-01-02"), Seq("user_id"))
     assert(touched === Seq("2024-01-01")) // rewritten, not dropped: key 2 survives
@@ -255,8 +247,8 @@ class LakeMergeSpec extends SparkTestBase {
     // a 10-day table; the delta's keys all live in ONE day and its events
     // land in ONE new day — the merge must rewrite exactly those two,
     // however many days the table holds (the 100 TB bound: cost ∝ delta)
-    CdcWriter.write(env((1L to 20L).map(i =>
-      (i, i, i.toDouble, "INSERT", f"2024-01-${(i - 1) % 10 + 1}%02d")): _*), dir)
+    CdcWriter.appendCommit(spark, dir, env((1L to 20L).map(i =>
+      (i, i, i.toDouble, "INSERT", f"2024-01-${(i - 1) % 10 + 1}%02d")): _*))
     val touched = CdcWriter.merge(spark, dir, env(
       (3L, 100L, 30.0, "UPDATE", "2024-02-01"),
       (13L, 101L, 130.0, "UPDATE", "2024-02-01")), Seq("user_id"))
@@ -319,7 +311,7 @@ class LakeMergeSpec extends SparkTestBase {
   test("a merge that empties the whole table leaves a log the next merge can bootstrap") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-lakemerge-empty").toString + "/t"
-    CdcWriter.write(env((1L, 1L, 1.0, "INSERT", "2024-01-01")), dir)
+    CdcWriter.appendCommit(spark, dir, env((1L, 1L, 1.0, "INSERT", "2024-01-01")))
     CdcWriter.merge(spark, dir, env(
       (1L, 10L, 0.0, "DELETE", "2024-01-02")), Seq("user_id"))
     assert(files(dir, "2024-01-01").isEmpty)
@@ -331,22 +323,6 @@ class LakeMergeSpec extends SparkTestBase {
     assert(touched === Seq("2024-01-03"))
     assert(CdcWriter.read(spark, dir).select($"user_id").as[Long].collect().toSeq
       === Seq(2L))
-  }
-
-  test("the append path refuses a snapshot-backed table instead of hiding rows") {
-    val dir = Files.createTempDirectory("graft-lakemerge-mixed").toString + "/t"
-    CdcWriter.write(env((1L, 1L, 1.0, "INSERT", "2024-01-01")), dir)
-    CdcWriter.merge(spark, dir, env(
-      (2L, 2L, 2.0, "INSERT", "2024-01-02")), Seq("user_id"))
-    // the dir now has a commit log: a hive-layout append would be
-    // invisible to manifest readers and swept by the next expire —
-    // write must fail loudly, not lose data silently
-    val e = intercept[IllegalArgumentException] {
-      CdcWriter.write(env((3L, 3L, 3.0, "INSERT", "2024-01-03")), dir,
-        org.apache.spark.sql.SaveMode.Append)
-    }
-    assert(e.getMessage.contains("snapshot-backed"))
-    assert(CdcWriter.read(spark, dir).count() === 2L) // table unharmed
   }
 
   /** `env` rows with a typed `score` column appended (the promotion

@@ -24,7 +24,7 @@ class ManifestModelSpec extends SparkTestBase {
       org.apache.spark.sql.types.LongType)))
 
   private def entry(i: Int): DataFile =
-    DataFile(f"data/m/f$i%06d.parquet", "", hive = false, rows = 1L,
+    DataFile(f"data/m/f$i%06d.parquet", "", rows = 1L,
       sizeBytes = 10L, minLsn = Some(f"$i%016d"), maxLsn = Some(f"$i%016d"),
       seq = -1L, statsCol = Some(graft.ingest.Cdc.LsnColumn))
 

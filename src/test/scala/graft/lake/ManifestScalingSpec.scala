@@ -17,7 +17,7 @@ class ManifestScalingSpec extends SparkTestBase {
   import SnapshotLog.DataFile
 
   private def entry(i: Int): DataFile =
-    DataFile(f"data/fake/f$i%05d.parquet", "", hive = false, rows = 1L,
+    DataFile(f"data/fake/f$i%05d.parquet", "", rows = 1L,
       sizeBytes = 100L, minLsn = Some(f"$i%016d"), maxLsn = Some(f"$i%016d"),
       seq = -1L, statsCol = Some(graft.ingest.Cdc.LsnColumn))
 
@@ -192,5 +192,16 @@ class ManifestScalingSpec extends SparkTestBase {
     }
     assert(SnapshotLog.segmentCount(spark, dir, s2.id) >= 1)
     assert(SnapshotLog.read(spark, dir, s2).count() === 3L)
+    // an inline entry of the retired directory-layout import ("hive":
+    // true keeps its partition value in the directory name only) must
+    // fail resolution loudly, naming the file — never read as inline
+    val legacy = new Path(md, f"snap-${s2.id + 1}%012d.json")
+    val hiveOut = fs.create(legacy, false)
+    hiveOut.write(inline.replace("\"id\":1", s"\"id\":${s2.id + 1}")
+      .replace("\"hive\":false", "\"hive\":true")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    hiveOut.close()
+    val e = intercept[IllegalStateException](SnapshotLog.currentSnapshot(spark, dir))
+    assert(e.getMessage.contains(s1.files.head.path), e.getMessage)
   }
 }

@@ -142,44 +142,6 @@ class SnapshotLogSpec extends SparkTestBase {
     assert(SnapshotLog.expire(spark, dir, keepLast = 1) === 0)
   }
 
-  test("importHive adopts existing day-partitioned files without rewriting them") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft-snaplog-imp").toString + "/t"
-    val env = Seq((1L, "2024-01-01"), (2L, "2024-01-02"))
-      .toDF("id", "_cdc_date")
-      .withColumn(graft.ingest.Cdc.LsnColumn, lpad(col("id").cast("string"), 16, "0"))
-    env.write.partitionBy("_cdc_date").parquet(dir)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mtimes = fs.listStatus(new Path(s"$dir/_cdc_date=2024-01-01"))
-      .filter(_.isFile).map(f => (f.getPath.getName, f.getModificationTime)).toSeq.sorted
-    val before = mtimes
-    val snap = SnapshotLog.withTableLock(dir) {
-      SnapshotLog.importHive(spark, dir, "_cdc_date").get
-    }
-    assert(snap.operation === "import")
-    assert(snap.files.forall(_.hive))
-    assert(snap.files.map(_.partition).sorted === Seq("2024-01-01", "2024-01-02"))
-    assert(mtimes === before) // listed, never rewritten
-    // the adopted read restores the partition value as a string column
-    val back = SnapshotLog.read(spark, dir, snap)
-    assert(back.schema("_cdc_date").dataType.typeName === "string")
-    assert(back.select(col("id"), col("_cdc_date")).as[(Long, String)]
-      .collect().toSeq.sorted === Seq((1L, "2024-01-01"), (2L, "2024-01-02")))
-  }
-
-  test("importHive on day dirs holding no data files bootstraps instead of crashing") {
-    val dir = Files.createTempDirectory("graft-snaplog-imp0").toString + "/t"
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a crashed/cleaned writer's leftovers: a day dir with only dot files
-    fs.mkdirs(new Path(s"$dir/_cdc_date=2024-01-01"))
-    val marker = fs.create(new Path(s"$dir/_cdc_date=2024-01-01/.part.crc"))
-    marker.close()
-    val snap = SnapshotLog.withTableLock(dir) {
-      SnapshotLog.importHive(spark, dir, "_cdc_date")
-    }
-    assert(snap.isEmpty) // nothing to adopt — callers bootstrap
-  }
-
   test("manifest partition pruning reads only the asked-for files") {
     val dir = Files.createTempDirectory("graft-snaplog-prune").toString + "/t"
     import spark.implicits._

@@ -1,30 +1,24 @@
 package graft.queries
 
 import graft.SparkTestBase
-import graft.ingest.CdcWriter
-import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import graft.lake.SnapshotLog
 
 /** Write-path behavior: day partition layout and partition pruning (Q18). */
 class LifecycleSpec extends SparkTestBase {
 
   test("day-partitioned write prunes the scan on _cdc_date (Q18)") {
-    val dir = Files.createTempDirectory("graft-prune").toString
-    CdcWriter.write(CdcQueries.envelope(spark, sf0001), dir)
-
-    val pruned = CdcWriter.read(spark, dir)
-      .filter(col("_cdc_date").between("2024-01-05", "2024-01-11"))
-    // the physical scan must carry a partition filter on _cdc_date and
-    // select only the 7 matching day directories
-    val explain = pruned.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(explain.contains("PartitionFilters"), explain.take(2000))
-    assert(explain.contains("_cdc_date"), explain.take(2000))
-
-    val allDays = CdcWriter.read(spark, dir)
-      .select("_cdc_date").distinct().count()
-    val readDays = pruned.select("_cdc_date").distinct().count()
-    assert(readDays === 7 && allDays > 25)
+    // the registered cdc_write_roundtrip's own table and pruned read path
+    val (dir, snap) = Lifecycle.writeRoundtripSetup(spark, sf0001)
+    val allDays = snap.files.map(_.partition).distinct
+    val kept = SnapshotLog.pruneToDays(snap, Lifecycle.RoundtripDays)
+    // the manifest keeps exactly the 7 window days' files (one per day)
+    // of ~31 before any file is opened
+    assert(allDays.size > 25)
+    assert(kept.map(_.partition).sorted === Lifecycle.RoundtripDays)
+    val pruned = SnapshotLog.readPruned(spark, dir, snap, kept.toSet)
+    // the physical scan lists only the kept files
+    assert(pruned.inputFiles.length === kept.size)
+    assert(pruned.select("_cdc_date").distinct().count() === 7)
   }
 
   test("explain_analyze surfaces non-zero runtime metrics per operator") {

@@ -218,13 +218,13 @@ class PgReplicationSpec extends SparkTestBase
     psql("DELETE FROM ctl_users WHERE id = 1")
     // the runner drains, decodes (schema INFERRED — no seed), routes and
     // merges; poll the lake until the state lands or time out loudly
-    // processBatch lands each table as the raw-zone parquet append (the
+    // processBatch lands each table as a raw-zone append commit (the
     // buffer shape, ref S8) — read it back and fold to current state
     val tableDir = s"$lakeRoot/${p.id}/tables/ctl_users"
     def lakeState(): Option[Map[Long, (String, Double)]] =
       try {
         import spark.implicits._
-        val df = spark.read.parquet(tableDir)
+        val df = graft.ingest.CdcWriter.read(spark, tableDir)
         Some(graft.ingest.Cdc.currentStateWithTruncate(df, Seq("id"))
           .select(col("id").cast("long"), col("name"),
             col("value").cast("double"))
@@ -428,7 +428,7 @@ class PgReplicationSpec extends SparkTestBase
     psql("INSERT INTO rst_users VALUES (5, 'eve')")
     val tableDir = s"$lakeRoot/${p.id}/tables/rst_users"
     def landed(): Boolean =
-      try spark.read.parquet(tableDir)
+      try graft.ingest.CdcWriter.read(spark, tableDir)
         .filter(col("id").cast("long") === 5L).count() > 0
       catch { case scala.util.control.NonFatal(_) => false }
     val d2 = System.currentTimeMillis() + 60000L

@@ -42,7 +42,7 @@ class CrashResumeSpec extends SparkTestBase {
     assert(e.getMessage.contains("injected crash"))
 
     // mid state: batches 0 and 1 (one file each) committed, nothing else
-    val mid = spark.read.parquet(s"$base/lake/t0")
+    val mid = graft.ingest.CdcWriter.read(spark, s"$base/lake/t0")
       .select("event_id").as[Long].collect()
     assert(mid.length > 0 && mid.length < n,
       s"run 1 should commit a strict subset, got ${mid.length} of $n")
@@ -50,7 +50,7 @@ class CrashResumeSpec extends SparkTestBase {
 
     // resume: same checkpoint, no crash — drains the complement exactly
     IngestPipeline.start(stream, cfg, availableNow = true).awaitTermination()
-    val fin = spark.read.parquet(s"$base/lake/t0")
+    val fin = graft.ingest.CdcWriter.read(spark, s"$base/lake/t0")
       .select("event_id").as[Long].collect().sorted
     assert(fin.toSeq === (1 to n).map(_.toLong))
   }
@@ -111,7 +111,7 @@ class CrashResumeSpec extends SparkTestBase {
     assert(d2.version === 2)
     assert(d2.payloadSchema.fieldNames.toSeq === Seq("id", "v", "score"))
     // evolved read-back: all 40 rows, score present iff id > 20, exact
-    val out = spark.read.option("mergeSchema", "true").parquet(s"$base/lake/t0")
+    val out = graft.ingest.CdcWriter.read(spark, s"$base/lake/t0")
       .select($"id", $"score").as[(Long, Option[Long])].collect().sortBy(_._1)
     assert(out.length === 40)
     out.foreach { case (id, score) =>

@@ -1,15 +1,16 @@
 package graft.streaming
 
 import graft.SparkTestBase
-import graft.ingest.Cdc
+import graft.ingest.{Cdc, CdcWriter}
+import graft.lake.SnapshotLog
 import graft.reliability.{DeadLetter, RetryPolicy}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** End-to-end streaming ingest: memory stream → router → partitioned
-  * files; checkpoint resume; DLQ on persistent sink failure. */
+/** End-to-end streaming ingest: memory stream → router → day-partitioned
+  * SnapshotLog tables; checkpoint resume; DLQ on persistent sink failure. */
 class IngestPipelineSpec extends SparkTestBase {
 
   private case class Ev(user_id: Long, event_id: Long, value: Double,
@@ -24,6 +25,10 @@ class IngestPipelineSpec extends SparkTestBase {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  /** Distinct day values the table's current manifest records. */
+  private def manifestDays(dir: String): Seq[String] =
+    SnapshotLog.currentSnapshot(spark, dir).get.files.map(_.partition).distinct.sorted
+
   private def cfg(out: String) = IngestConfig(
     outDir = out, dlqDir = tmp("graft-dlq"), checkpointDir = tmp("graft-ckpt"),
     retry = RetryPolicy(maxAttempts = 2, sleep = _ => ()))
@@ -37,12 +42,41 @@ class IngestPipelineSpec extends SparkTestBase {
     val q = IngestPipeline.start(stream.toDF(), c, availableNow = true)
     q.awaitTermination()
 
-    val users = spark.read.parquet(s"${c.outDir}/users")
+    val users = CdcWriter.read(spark, s"${c.outDir}/users")
     assert(users.count() === 2)
-    // hive-style day partitions exist (the pruning layout)
-    assert(users.select("_cdc_date").distinct().as[String].collect().sorted
-      === Array("2024-01-01", "2024-01-02"))
-    assert(spark.read.parquet(s"${c.outDir}/orders").count() === 1)
+    // the manifest records one day value per file (the pruning layout)
+    assert(manifestDays(s"${c.outDir}/users") === Seq("2024-01-01", "2024-01-02"))
+    assert(CdcWriter.read(spark, s"${c.outDir}/orders").count() === 1)
+  }
+
+  test("ingested tables are catalog tables: listed, queryable, one commit per table per batch") {
+    import spark.implicits._
+    val wh = tmp("graft-ingest-cat")
+    val registry = new graft.observe.Metrics.Registry
+    val c = cfg(s"$wh/lake").copy(metrics = registry)
+    def batch(evs: Ev*): DataFrame = evs
+      .map(e => (e.user_id, e.event_id, e.value, e._cdc_operation,
+        e._cdc_timestamp, e._cdc_lsn, e._cdc_table))
+      .toDF("user_id", "event_id", "value", "_cdc_operation",
+        "_cdc_timestamp", "_cdc_lsn", "_cdc_table")
+    IngestPipeline.processBatch(c)(
+      batch(ev(1, "users", 1), ev(2, "users", 2), ev(3, "orders", 1)), 0L)
+    IngestPipeline.processBatch(c)(
+      batch(ev(4, "users", 3), ev(5, "orders", 2), ev(6, "orders", 3)), 1L)
+    val cat = "ingestcat"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[graft.lake.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    val listed = spark.sql(s"SHOW TABLES IN $cat.lake")
+      .select("tableName").as[String].collect().sorted
+    assert(listed.toSeq === Seq("orders", "users"))
+    def count(t: String): Long =
+      spark.sql(s"SELECT count(*) FROM $cat.lake.$t").as[Long].head()
+    assert(count("users") === 3L && count("orders") === 3L)
+    // every counted commit is a real snapshot, and nothing else is
+    val snapshots = Seq("users", "orders")
+      .map(t => SnapshotLog.snapshots(spark, s"${c.outDir}/$t").size).sum
+    assert(snapshots === 4)
+    assert(registry.counter("iceberg", "commits_total") === snapshots.toLong)
   }
 
   test("restart from checkpoint ingests only new data (exactly-once files)") {
@@ -55,7 +89,7 @@ class IngestPipelineSpec extends SparkTestBase {
     // second run, same checkpoint: only the new event lands
     stream.addData(ev(2, "users", 1))
     IngestPipeline.start(stream.toDF(), c, availableNow = true).awaitTermination()
-    val ids = spark.read.parquet(s"${c.outDir}/users")
+    val ids = CdcWriter.read(spark, s"${c.outDir}/users")
       .select("event_id").as[Long].collect().sorted
     assert(ids.toSeq === Seq(1L, 2L))
   }
@@ -71,7 +105,7 @@ class IngestPipelineSpec extends SparkTestBase {
     val q = IngestPipeline.start(stream.toDF(), c, availableNow = true)
     q.awaitTermination()
     // good table landed
-    assert(spark.read.parquet(s"${c.outDir}/users").count() === 1)
+    assert(CdcWriter.read(spark, s"${c.outDir}/users").count() === 1)
     // broken slice is in the DLQ with payload + classification
     val dlq = DeadLetter.read(spark, c.dlqDir).collect()
     assert(dlq.length === 1)
@@ -95,7 +129,7 @@ class IngestPipelineSpec extends SparkTestBase {
         "_cdc_timestamp", "_cdc_lsn", "_cdc_table")
     IngestPipeline.processBatch(counting)(batch, 0L)
     // healthy table landed; poison slice classified as validation
-    assert(spark.read.parquet(s"${c.outDir}/users").count() === 1)
+    assert(CdcWriter.read(spark, s"${c.outDir}/users").count() === 1)
     val dlq = DeadLetter.read(spark, c.dlqDir).collect()
     assert(dlq.length === 1)
     assert(dlq.head.getAs[String]("table_name") === "not a name")
@@ -119,7 +153,7 @@ class IngestPipelineSpec extends SparkTestBase {
     val batch = Seq((1L, 1L, ts, Some("users")), (2L, 2L, ts, None: Option[String]))
       .toDF("user_id", "event_id", "_cdc_timestamp", "_cdc_table")
     IngestPipeline.processBatch(counting)(batch, 0L)
-    assert(spark.read.parquet(s"${c.outDir}/users").count() === 1)
+    assert(CdcWriter.read(spark, s"${c.outDir}/users").count() === 1)
     val dlq = DeadLetter.read(spark, c.dlqDir).collect()
     assert(dlq.length === 1)
     assert(dlq.head.getAs[String]("table_name") === null)
@@ -138,7 +172,7 @@ class IngestPipelineSpec extends SparkTestBase {
   test("full reference pipeline: WAL source -> decode -> router -> lake table") {
     // S1→S8 through the REAL source: Debezium JSONL log, DSv2 LSN-offset
     // stream, declarative decode, per-table routing, day-partitioned
-    // parquet — the reference's whole ingest path in one wiring.
+    // commits — the reference's whole ingest path in one wiring.
     import graft.ingest.EnvelopeDecoder
     import graft.queries.CdcQueries
     val logDir = tmp("graft-wal-e2e")
@@ -154,12 +188,12 @@ class IngestPipelineSpec extends SparkTestBase {
     val c = cfg(tmp("graft-out"))
     IngestPipeline.start(envelope, c, availableNow = true).awaitTermination()
 
-    val written = spark.read.parquet(s"${c.outDir}/events")
+    val written = CdcWriter.read(spark, s"${c.outDir}/events")
     assert(written.count() === n)
     // exactly-once at the row level: every WAL LSN landed exactly once
     assert(written.select(countDistinct(col("_cdc_lsn"))).collect()(0).getLong(0) === n)
     // the lake layout is the pruning-friendly day partitioning
-    assert(written.select("_cdc_date").distinct().count() > 1)
+    assert(manifestDays(s"${c.outDir}/events").size > 1)
     // typed payload survived the wire format
     assert(written.schema.fieldNames.contains("user_id"))
     assert(written.filter(col("user_id").isNull).count() === 0)

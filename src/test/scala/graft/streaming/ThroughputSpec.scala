@@ -46,8 +46,8 @@ class ThroughputSpec extends SparkTestBase {
     info(f"ingested $n events in $sec%.2f s = $rate%.0f events/s " +
       f"(reference ceiling ~200/s/worker)")
     // all events landed exactly once
-    val landed = spark.read.parquet(s"${cfg.outDir}/users").count() +
-      spark.read.parquet(s"${cfg.outDir}/orders").count()
+    val landed = graft.ingest.CdcWriter.read(spark, s"${cfg.outDir}/users").count() +
+      graft.ingest.CdcWriter.read(spark, s"${cfg.outDir}/orders").count()
     assert(landed === n)
     assert(rate >= 400.0, f"ingest rate $rate%.0f events/s below 2x reference ceiling")
   }
