@@ -24,9 +24,26 @@ import org.apache.spark.sql.DataFrame
   *
   * The previous value is restored on exit so the streaming engine's own
   * per-batch planning (which happens between body invocations) always
-  * sees the conf exactly as it configured it. */
+  * sees the conf exactly as it configured it.
+  *
+  * Cached intermediates need a second switch. `Dataset.persist()` makes
+  * the `CacheManager` plan the cached query on the spot, and while
+  * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is false
+  * (the default) it plans it with AQE's final-stage shuffle
+  * optimizations off, so a cached shuffled plan keeps every one of
+  * `spark.sql.shuffle.partitions` output partitions — whatever its
+  * size. Every consumer of the cache then runs one task per partition:
+  * a 640-row merge delta under a 32-partition deployment cost five
+  * 32-task stages per micro-batch. [[persistAdaptive]] flips that switch
+  * for the one `persist()` call only. The conf is read once, when the
+  * `InMemoryRelation` is built, so nothing outside that call needs it;
+  * a flip around the whole [[withAqe]] body would also reach every other
+  * persist that runs inside it, concurrent sinks' micro-batch caches
+  * included. */
 object BatchExec {
   private val Key = "spark.sql.adaptive.enabled"
+  private val CachedPartitioningKey =
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 
   /** Reentrancy state per session: depth + the conf value the OUTERMOST
     * entrant saw. Session conf is session-global (not thread-local), and
@@ -100,11 +117,35 @@ object BatchExec {
       entry.depth -= 1
       if (entry.depth == 0) {
         entries.remove(session)
-        entry.prev match {
-          case Some(v) => conf.set(Key, v)
-          case None    => conf.unset(Key)
-        }
+        restore(conf, Key, entry.prev)
       }
     }
+  }
+
+  /** Persist `df` with its output partitioning sized by AQE: the cached
+    * plan's final shuffle coalesces to what its bytes need (one
+    * partition for a few hundred rows, at least `defaultParallelism`
+    * for a large input under the default `parallelismFirst`) instead of
+    * keeping `spark.sql.shuffle.partitions` partitions. Use it for
+    * cached plans that hold a shuffle `Exchange`; a plan without one
+    * caches the same either way. The set, persist and restore run under
+    * the same lock as [[withAqe]]'s entry bookkeeping, so concurrent
+    * merges on one session never see each other's flip or restore the
+    * wrong value. A later re-cache of the entry (after a refresh of a
+    * table it reads) plans under the session's own value again. */
+  def persistAdaptive(df: DataFrame): DataFrame = {
+    val conf = df.sparkSession.conf
+    entries.synchronized {
+      val prev = conf.getOption(CachedPartitioningKey)
+      conf.set(CachedPartitioningKey, "true")
+      try df.persist()
+      finally restore(conf, CachedPartitioningKey, prev)
+    }
+  }
+
+  private def restore(conf: org.apache.spark.sql.RuntimeConfig, key: String,
+                      prev: Option[String]): Unit = prev match {
+    case Some(v) => conf.set(key, v)
+    case None    => conf.unset(key)
   }
 }

@@ -135,8 +135,11 @@ object CdcWriter {
         deltasP.filter(col(Cdc.OpColumn) =!= "TRUNCATE" && col(Cdc.LsnColumn) > t))
       // the collapsed batch feeds four consumers (key probe, new-day scan,
       // upsert union, anti-join key set) — persist so the latest-per-key
-      // window runs once, not four times
-      val deltaLatest = Cdc.latestVersions(effective, keyCols).persist()
+      // window runs once, not four times, and persist it adaptively so
+      // the cache holds as many partitions as its bytes need (one for a
+      // small batch), not spark.sql.shuffle.partitions: each consumer
+      // runs one task per cached partition
+      val deltaLatest = BatchExec.persistAdaptive(Cdc.latestVersions(effective, keyCols))
       try graft.lake.SnapshotLog.withTableLock(tableDir) {
         merge0(spark, tableDir, deltaLatest, keyCols, truncLsn, pcol)
       } finally deltaLatest.unpersist(blocking = true)
@@ -313,7 +316,9 @@ object CdcWriter {
       max(when(col(Cdc.OpColumn) === "TRUNCATE", col(Cdc.LsnColumn)))).collect()(0).isNullAt(0)
     require(!hasTrunc,
       s"TRUNCATE markers in a MOR delta for $tableDir — route resets through merge()")
-    val deltaLatest = Cdc.latestVersions(deltas, keyCols).persist()
+    // read by the data write and the delete-key write: the window runs
+    // once, into a cache sized by its bytes (see merge)
+    val deltaLatest = BatchExec.persistAdaptive(Cdc.latestVersions(deltas, keyCols))
     try SnapshotLog.withTableLock(tableDir) {
       val cur = SnapshotLog.currentSnapshot(spark, tableDir)
       val upserts = withPartitionColumn(

@@ -1565,10 +1565,12 @@ object SnapshotLog {
       require(partitionCol.isDefined || cur.files.forall(_.partition.isEmpty),
         s"$tableDir is partitioned; pass partitionCol so replacement " +
           "rows keep their partition value")
-      // same manifest-pruning contract as [[deleteWhere]]
-      val matched = readCore(spark, tableDir,
+      // same manifest-pruning contract as [[deleteWhere]]; adaptive
+      // persist: a mass delete set shuffle-hash-joins inside readCore,
+      // and a fixed cached plan would keep every shuffle partition
+      val matched = graft.ingest.BatchExec.persistAdaptive(readCore(spark, tableDir,
         cur.copy(files = cur.files.filter(keep)), None, keepLineage = true)
-        .filter(predicate).persist()
+        .filter(predicate))
       try {
         val slots = writePosFile(spark, tableDir, slotsOf(spark, tableDir, matched))
         if (slots.isEmpty) return None
@@ -1747,7 +1749,9 @@ object SnapshotLog {
       // the source is evaluated ONCE (persisted for the whole merge): a
       // nondeterministic source re-evaluated per leg could pass the
       // cardinality check yet join duplicates, and an expensive one
-      // would be recomputed for the insert leg
+      // would be recomputed for the insert leg. A plain persist: a source
+      // that shuffles on the keys keeps that partitioning for the
+      // shuffle-hash join below, which an adaptive cache would drop
       val src = source.select(source.columns.toSeq.map(c =>
         if (onCols.contains(c)) col(c) else col(c).as(s"_src_$c")): _*)
         .persist()
@@ -1775,8 +1779,11 @@ object SnapshotLog {
       // stored table. The old shape (persist the whole LEFT join) cached
       // an entire 100 TB table to save the by-source anti-join's second
       // scan — a scan is cheap, a table-sized cache is a cluster-killer.
-      val matched = live.join(sizeGated(spark, src, srcBytes), onCols, "inner")
-        .persist()
+      // Adaptive persist: a bulk source shuffle-hash-joins, and a fixed
+      // cached plan would keep every shuffle partition for the consumers
+      // below, none of which reuses the join's key partitioning.
+      val matched = graft.ingest.BatchExec.persistAdaptive(
+        live.join(sizeGated(spark, src, srcBytes), onCols, "inner"))
       var bsPersisted: Option[DataFrame] = None
       try {
         // first-clause-wins action resolution, encoded as one expression
@@ -1826,11 +1833,11 @@ object SnapshotLog {
             // stored table is biggest
             val keyBytes = keyWidthEstimate(srcBytes, src.columns.length,
               onCols.size)
-            val bs = live.join(sizeGated(spark, srcKeys, keyBytes),
-              onCols, "left_anti")
-              .withColumn(MergeActionCol, firstWins(bySourceClauses))
-              .filter(col(MergeActionCol).isNotNull)
-              .persist()
+            // adaptive persist, as for matched
+            val bs = graft.ingest.BatchExec.persistAdaptive(
+              live.join(sizeGated(spark, srcKeys, keyBytes), onCols, "left_anti")
+                .withColumn(MergeActionCol, firstWins(bySourceClauses))
+                .filter(col(MergeActionCol).isNotNull))
             bsPersisted = Some(bs)
             Some(bs)
           }

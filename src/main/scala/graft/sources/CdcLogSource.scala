@@ -45,10 +45,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[graft.ingest.EnvelopeDecoder]] so the decode stays declarative and
   * codegen'd.
   *
-  * Driver-side admission works off a cached sorted LSN index (rebuilt
-  * only when the log's file signature changes — see [[CdcLog.lsnIndex]]),
-  * so a trigger costs two binary searches, not a log re-parse; the
-  * executor-side reader streams lines without materializing the file.
+  * Driver-side admission works off a cached sorted LSN index (only a
+  * new or changed file is re-scanned — see [[CdcLog.lsnIndex]]), so a
+  * trigger costs two binary searches, not a log re-parse; the
+  * executor-side reader opens only the files whose LSN bounds overlap
+  * its range.
   */
 object CdcLog {
 
@@ -104,50 +105,83 @@ object CdcLog {
     else Seq.empty
   }
 
-  /** Stream (lsn, line) pairs of every well-formed log line. Files are
-    * read eagerly one at a time (read-and-close — no handle leaks across
-    * the lazily-consumed iterator; a real WAL source tails a socket and
-    * never touches files). */
-  def scan(path: String): Iterator[(Long, String)] =
-    logFiles(path).iterator.flatMap { f =>
-      java.nio.file.Files.readAllLines(f, java.nio.charset.StandardCharsets.UTF_8)
-        .asScala
-    }.filter(_.nonEmpty).flatMap { line =>
-      val lsn = lineLsn(line)
-      if (lsn >= 0) Some(lsn -> line)
-      else { System.err.println(s"[cdc-log] skipping malformed line"); None }
-    }
+  /** (lsn, line) pairs of one file's well-formed lines. The file is read
+    * eagerly and closed (no handle leaks across the lazily-consumed
+    * iterator; a real WAL source tails a socket and never touches
+    * files). */
+  private def fileLines(f: java.nio.file.Path): Iterator[(Long, String)] =
+    java.nio.file.Files.readAllLines(f, java.nio.charset.StandardCharsets.UTF_8)
+      .asScala.iterator.filter(_.nonEmpty).flatMap { line =>
+        val lsn = lineLsn(line)
+        if (lsn >= 0) Some(lsn -> line)
+        else { System.err.println(s"[cdc-log] skipping malformed line"); None }
+      }
 
-  // ---- driver-side LSN index: the replication-slot bookkeeping.
+  // ---- LSN index: the replication-slot bookkeeping.
   // Admission decisions (batch-end LSN, latest offset) only need the
   // LSNs, not the payloads — re-reading and re-parsing the whole log on
   // EVERY trigger is O(triggers × log), which no real WAL tailer does
   // (a slot advances a confirmed position; it never re-reads history).
-  // The index is a sorted LSN array cached per path and invalidated by
-  // the log's (name, size, mtime) signature, so an appended file
-  // rebuilds it while an idle tick costs three stat calls.
+  // The index keeps each file's sorted LSNs keyed by its (name, size,
+  // mtime), so an appended or new file costs a scan of that file alone
+  // and an idle tick costs one stat per file. The per-file bounds also
+  // let a reader open only the files that can hold its range.
 
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Array[Long])]()
+  /** One log file's LSNs, sorted, as of its `size` and `mtime`. */
+  private final case class FileLsns(size: Long, mtime: Long, lsns: Array[Long]) {
+    /** Can the file hold an LSN in `(lo, hi]`? Files need not be
+      * LSN-disjoint; only their own bounds matter. */
+    def overlaps(lo: Long, hi: Long): Boolean =
+      lsns.nonEmpty && lsns(lsns.length - 1) > lo && lsns(0) <= hi
+  }
 
-  private def logSignature(path: String): String =
-    logFiles(path).map { f =>
-      s"${f.getFileName}:${java.nio.file.Files.size(f)}:" +
-        s"${java.nio.file.Files.getLastModifiedTime(f).toMillis}"
-    }.mkString("|")
+  /** A log's files in name order, and all their LSNs merged and sorted. */
+  private final case class LogIndex(files: Seq[(java.nio.file.Path, FileLsns)],
+                                    lsns: Array[Long])
 
-  /** Sorted LSNs of the log as of now (cached; see above). */
-  def lsnIndex(path: String): Array[Long] = {
-    val sig = logSignature(path)
+  private val indexCache = new java.util.concurrent.ConcurrentHashMap[String, LogIndex]()
+
+  /** The log's index as of now: unchanged files reuse their cached
+    * entry, changed or new ones are scanned, removed ones drop out. */
+  private def index(path: String): LogIndex = {
     val cached = indexCache.get(path)
-    if (cached != null && cached._1 == sig) cached._2
+    val prev = if (cached == null) Map.empty[java.nio.file.Path, FileLsns]
+               else cached.files.toMap
+    val files = logFiles(path).map { f =>
+      val a = java.nio.file.Files.readAttributes(f,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      val (size, mtime) = (a.size, a.lastModifiedTime.toMillis)
+      f -> prev.get(f).filter(e => e.size == size && e.mtime == mtime).getOrElse {
+        val lsns = fileLines(f).map(_._1).toArray
+        java.util.Arrays.sort(lsns)
+        FileLsns(size, mtime, lsns)
+      }
+    }
+    // equal only when no file was (re)scanned: a rescan is a new array
+    if (cached != null && cached.files == files) cached
     else {
-      val arr = scan(path).map(_._1).toArray
-      java.util.Arrays.sort(arr)
-      indexCache.put(path, (sig, arr))
-      arr
+      val all = new Array[Long](files.map(_._2.lsns.length).sum)
+      files.foldLeft(0) { case (at, (_, e)) =>
+        System.arraycopy(e.lsns, 0, all, at, e.lsns.length)
+        at + e.lsns.length
+      }
+      java.util.Arrays.sort(all)
+      val ix = LogIndex(files, all)
+      indexCache.put(path, ix)
+      ix
     }
   }
+
+  /** Sorted LSNs of the log as of now (cached; see above). */
+  def lsnIndex(path: String): Array[Long] = index(path).lsns
+
+  /** (lsn, line) pairs with `startLsn < lsn <= endLsn`, read only from
+    * the files whose LSN bounds overlap that range. */
+  def scanRange(path: String, startLsn: Long, endLsn: Long): Iterator[(Long, String)] =
+    index(path).files.iterator
+      .collect { case (f, e) if e.overlaps(startLsn, endLsn) => f }
+      .flatMap(fileLines)
+      .filter { case (l, _) => l > startLsn && l <= endLsn }
 
   /** First index with value > x (insertion point over duplicates). */
   def upperBound(arr: Array[Long], x: Long): Int = {
@@ -319,8 +353,7 @@ object CdcLogReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CdcLogPartition]
     new PartitionReader[InternalRow] {
-      private val it = CdcLog.scan(p.path)
-        .filter { case (l, _) => l > p.startLsn && l <= p.endLsn }
+      private val it = CdcLog.scanRange(p.path, p.startLsn, p.endLsn)
       private var current: (Long, String) = _
       override def next(): Boolean = { val h = it.hasNext; if (h) current = it.next(); h }
       override def get(): InternalRow = new GenericInternalRow(Array[Any](

@@ -4,6 +4,8 @@ import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Pins the r22 micro-batch job-structure optimization: an UPDATE merge
   * (no TRUNCATE) runs exactly THREE driver actions —
   *   1. the truncate-marker probe aggregate,
@@ -13,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Before the fusion the day probe was three independent actions (the
   * per-batch job count is the streaming sinks' fixed overhead, guide
   * §1.2); a regression re-splitting it shows up here as extra actions,
-  * not as a silent slowdown. */
+  * not as a silent slowdown. The second test pins the task count of a
+  * small merge: no stage may be sized by `spark.sql.shuffle.partitions`. */
 class MergeActionCountSpec extends AnyFunSuite with SparkTestBase {
 
   private def envelope(ids: Seq[Long], lsnBase: Int) = {
@@ -26,12 +29,10 @@ class MergeActionCountSpec extends AnyFunSuite with SparkTestBase {
       Cdc.OpColumn, Cdc.TsColumn, Cdc.LsnColumn)
   }
 
-  test("update merge runs exactly 3 actions: marker probe, fused day probe, write") {
-    val dir = java.nio.file.Files.createTempDirectory("mergeactions").toString
-    // bootstrap commit (not measured: the first merge has extra
-    // import/bootstrap structure)
-    CdcWriter.merge(spark, s"$dir/t", envelope(1L to 9L, 100), Seq("user_id"))
-
+  /** Driver actions (`QueryExecutionListener` successes) that `body`
+    * runs, waiting up to 15 s for three to land. The listener sees the
+    * whole session, so nothing else may run on it meanwhile. */
+  private def countActions(body: => Unit): Int = {
     val actions = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -49,20 +50,93 @@ class MergeActionCountSpec extends AnyFunSuite with SparkTestBase {
     Thread.sleep(500)
     spark.listenerManager.register(listener)
     try {
-      // an update batch touching a subset of keys, no TRUNCATE marker
-      CdcWriter.merge(spark, s"$dir/t", envelope(Seq(2L, 5L), 200), Seq("user_id"))
+      body
       // listener events post asynchronously; poll-bounded drain
       val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
       while (actions.get < 3 && System.nanoTime() < deadline) Thread.sleep(25)
       Thread.sleep(300) // catch any EXTRA action still in flight
-      assert(actions.get == 3,
-        s"expected 3 actions (marker probe, fused day probe, write), got ${actions.get}")
+      actions.get
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** Task count of every stage `body` submits. Stages are matched by a
+    * local property set on the calling thread, which Spark copies into
+    * every job the call starts (broadcast and AQE stage jobs included). */
+  private def stageTasks(body: => Unit): Seq[Int] = {
+    val tag = "graft.test.measured"
+    val label = java.util.UUID.randomUUID().toString
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.properties != null && e.properties.getProperty(tag) == label)
+          tasks.add(e.stageInfo.numTasks): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setLocalProperty(tag, label)
+    try {
+      body
+      Thread.sleep(500) // stage-submitted events post asynchronously
+    } finally {
+      spark.sparkContext.setLocalProperty(tag, null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    tasks.asScala.toSeq
+  }
+
+  test("update merge runs exactly 3 actions: marker probe, fused day probe, write") {
+    val dir = java.nio.file.Files.createTempDirectory("mergeactions").toString
+    // bootstrap commit (not measured: the first merge has extra
+    // import/bootstrap structure)
+    CdcWriter.merge(spark, s"$dir/t", envelope(1L to 9L, 100), Seq("user_id"))
+    // an update batch touching a subset of keys, no TRUNCATE marker
+    val actions = countActions(
+      CdcWriter.merge(spark, s"$dir/t", envelope(Seq(2L, 5L), 200), Seq("user_id")))
+    assert(actions == 3,
+      s"expected 3 actions (marker probe, fused day probe, write), got $actions")
 
     // and the merge result stays exact
     val got = CdcWriter.read(spark, s"$dir/t")
       .select("user_id").as[Long](spark.implicits.newLongEncoder)
       .collect().sorted
     assert(got.toSeq == (1L to 9L))
+  }
+
+  test("a small merge runs no stage sized by spark.sql.shuffle.partitions") {
+    // The merges cache the latest-per-key delta. A cache planned with a
+    // fixed output partitioning keeps every shuffle partition, and each
+    // of its consumers then runs that many tasks over a few rows. P sits
+    // above anything the batch itself justifies: writeData pins its
+    // repartition to defaultParallelism, so that many write tasks are
+    // legitimate on any host.
+    val p = 4 * spark.sparkContext.defaultParallelism + 1
+    val dir = java.nio.file.Files.createTempDirectory("mergetasks").toString
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, p.toString)
+    try {
+      CdcWriter.merge(spark, s"$dir/cow", envelope(1L to 9L, 100), Seq("user_id"))
+      CdcWriter.morMerge(spark, s"$dir/mor", envelope(1L to 9L, 100), Seq("user_id"))
+      var actions = 0
+      val cow = stageTasks {
+        actions = countActions(
+          CdcWriter.merge(spark, s"$dir/cow", envelope(Seq(2L, 5L), 200), Seq("user_id")))
+      }
+      val mor = stageTasks(
+        CdcWriter.morMerge(spark, s"$dir/mor", envelope(Seq(2L, 5L), 200), Seq("user_id")))
+      assert(cow.nonEmpty && mor.nonEmpty)
+      assert(cow.forall(_ < p), s"merge stages at $p shuffle partitions: $cow")
+      assert(mor.forall(_ < p), s"morMerge stages at $p shuffle partitions: $mor")
+      assert(actions == 3, s"expected 3 merge actions, got $actions")
+      for (t <- Seq("cow", "mor")) {
+        val got = CdcWriter.read(spark, s"$dir/$t")
+          .select("user_id").as[Long](spark.implicits.newLongEncoder)
+          .collect().sorted
+        assert(got.toSeq == (1L to 9L), t)
+      }
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
   }
 }

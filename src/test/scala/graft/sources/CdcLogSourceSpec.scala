@@ -78,6 +78,63 @@ class CdcLogSourceSpec extends SparkTestBase {
       Seq("0000000000000007", "0000000000000009"))
   }
 
+  /** A fixed-width Debezium line, so two lines of different LSNs have
+    * the same length. */
+  private def walLine(lsn: Long): String =
+    f"""{"op":"c","after":{"id":$lsn%6d},"source":{"table":"t","lsn":$lsn%6d}}"""
+
+  private def writeLog(f: java.nio.file.Path, lsns: Seq[Long]): Unit =
+    Files.writeString(f, lsns.map(walLine).mkString("", "\n", "\n")): Unit
+
+  test("a range inside one file of a multi-file log reads exactly that file's rows") {
+    val dir = Files.createTempDirectory("graft-wal-range")
+    writeLog(dir.resolve("a.json"), 1L to 10L)
+    writeLog(dir.resolve("b.json"), 11L to 20L)
+    writeLog(dir.resolve("c.json"), 21L to 30L)
+    val path = dir.toString
+    assert(CdcLog.lsnIndex(path).toSeq === (1L to 30L))
+    // rewrite a and c in place with lines INSIDE b's range, keeping their
+    // size and mtime: the index still holds their old bounds, so a reader
+    // that opened them would return these extra rows
+    for (f <- Seq(dir.resolve("a.json"), dir.resolve("c.json"))) {
+      val mtime = Files.getLastModifiedTime(f)
+      writeLog(f, Seq.fill(10)(15L))
+      Files.setLastModifiedTime(f, mtime)
+    }
+    assert(CdcLog.scanRange(path, 12L, 17L).map(_._2).toSeq ===
+      (13L to 17L).map(walLine))
+    assert(CdcLog.scanRange(path, 10L, 20L).map(_._2).toSeq ===
+      (11L to 20L).map(walLine))
+    // files need not be LSN-disjoint: one whose bounds straddle the range
+    // is opened and filtered
+    writeLog(dir.resolve("d.json"), Seq(2L, 14L, 40L))
+    assert(CdcLog.scanRange(path, 12L, 17L).map(_._1).toSeq.sorted ===
+      Seq(13L, 14L, 14L, 15L, 16L, 17L))
+  }
+
+  test("the LSN index after an append equals a from-scratch rebuild") {
+    val dir = Files.createTempDirectory("graft-wal-append")
+    writeLog(dir.resolve("a.json"), 1L to 10L)
+    writeLog(dir.resolve("b.json"), 11L to 20L)
+    val path = dir.toString
+    assert(CdcLog.lsnIndex(path).toSeq === (1L to 20L))
+    // grow one file, add an overlapping one, drop none
+    Files.writeString(dir.resolve("b.json"), (21L to 25L).map(walLine).mkString("", "\n", "\n"),
+      java.nio.file.StandardOpenOption.APPEND)
+    writeLog(dir.resolve("c.json"), Seq(5L, 26L, 27L))
+    val incremental = CdcLog.lsnIndex(path).toSeq
+    // a path string never indexed before starts from nothing
+    val fresh = CdcLog.lsnIndex(s"$path/.").toSeq
+    val direct = Files.list(dir).iterator().asScala.toSeq
+      .flatMap(f => Files.readAllLines(f).asScala.map(CdcLog.lineLsn)).sorted
+    assert(incremental === fresh)
+    assert(incremental === direct)
+    assert(incremental === ((1L to 27L) :+ 5L).sorted)
+    // and a removed file leaves the index
+    Files.delete(dir.resolve("c.json"))
+    assert(CdcLog.lsnIndex(path).toSeq === (1L to 25L))
+  }
+
   test("admission-bounded micro-batches, exactly-once resume across restart") {
     val logDir = Files.createTempDirectory("graft-wal-log")
     val out = Files.createTempDirectory("graft-wal-out").toString
