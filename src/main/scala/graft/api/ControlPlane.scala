@@ -457,12 +457,24 @@ final class ControlPlane(val metaDir: String,
 
   // ---- persistence: one JSON file per kind, temp + atomic rename
 
+  /** Durable replace: the temp file's bytes reach the disk before the
+    * rename publishes them, and the directory is synced after it, so a
+    * crash leaves either the old file or the whole new one. */
   private def writeFile(name: String, json: JValue): Unit = {
+    import java.nio.channels.FileChannel
+    import java.nio.file.{StandardOpenOption => O}
     val tmp = dir.resolve(s".$name.tmp")
-    Files.write(tmp,
-      JsonMethods.compact(JsonMethods.render(json)).getBytes(UTF_8))
+    val ch = FileChannel.open(tmp, O.CREATE, O.WRITE, O.TRUNCATE_EXISTING)
+    try {
+      val buf = java.nio.ByteBuffer.wrap(
+        JsonMethods.compact(JsonMethods.render(json)).getBytes(UTF_8))
+      while (buf.hasRemaining) ch.write(buf)
+      ch.force(true)
+    } finally ch.close()
     Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+    val d = FileChannel.open(dir, O.READ)
+    try d.force(true) finally d.close()
   }
 
   private def readFile(name: String): Option[JValue] = {
