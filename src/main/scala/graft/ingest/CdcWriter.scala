@@ -24,10 +24,14 @@ import org.apache.spark.sql.functions._
   */
 object CdcWriter {
 
-  /** Derived day-partition column (ref schema.go:106-135: `_cdc_date`). */
+  /** The day an envelope row lands in (ref schema.go:106-135:
+    * `_cdc_date`) — the one definition the write and the ingest router's
+    * per-table day count share. */
+  def dayOf: Column = date_format(col(Cdc.TsColumn), "yyyy-MM-dd")
+
+  /** Derived day-partition column. */
   def withPartitionColumn(envelope: DataFrame): DataFrame =
-    envelope.withColumn(SchemaBuilder.partitionColumn,
-      date_format(col(Cdc.TsColumn), "yyyy-MM-dd"))
+    envelope.withColumn(SchemaBuilder.partitionColumn, dayOf)
 
   /** Append a batch through the commit log WITHOUT merging — the
     * reference writer's flush path (one immutable file per day per
@@ -36,15 +40,19 @@ object CdcWriter {
     * receiving k batches holds k files until
     * [[graft.lake.SnapshotLog.compact]] folds them. New entries join the
     * carried manifest under an "append" snapshot; a missing log
-    * bootstraps the table. */
+    * bootstraps the table. `days`, when the caller already knows it, is
+    * the batch's distinct [[dayOf]] count (see
+    * [[graft.lake.SnapshotLog.writeData]]'s `partitionValues`). */
   def appendCommit(spark: SparkSession, tableDir: String,
-                   envelope: DataFrame): graft.lake.SnapshotLog.Snapshot = {
+                   envelope: DataFrame,
+                   days: Option[Int] = None): graft.lake.SnapshotLog.Snapshot = {
     import graft.lake.SnapshotLog
     val pcol = SchemaBuilder.partitionColumn
     val df = withPartitionColumn(envelope)
     SnapshotLog.withTableLock(tableDir) {
       val cur = SnapshotLog.currentSnapshot(spark, tableDir)
-      val files = SnapshotLog.writeData(spark, tableDir, df, Some(pcol))
+      val files = SnapshotLog.writeData(spark, tableDir, df, Some(pcol),
+        partitionValues = days)
       // optimistic append: a cross-process writer racing this commit
       // triggers a rebase (manifest-only retry), never a lost batch
       SnapshotLog.appendFiles(spark, tableDir, files, df.schema,
@@ -223,7 +231,9 @@ object CdcWriter {
     // schema evolution) widens the table; survivors surface it as null,
     // and union coercion widens TYPES (long+double → double)
     val merged = survivors.unionByName(upserts, allowMissingColumns = true)
-    val newFiles = SnapshotLog.writeData(spark, tableDir, merged, Some(pcol))
+    // survivors and upserts both hold only touched days
+    val newFiles = SnapshotLog.writeData(spark, tableDir, merged, Some(pcol),
+      partitionValues = Some(touched.size))
     val untouched = cur.toSeq.flatMap(_.files.filterNot(f => touchedSet(f.partition)))
     // Type promotion (ref schema/schema.go:149-174 + writer/writer.go:
     // 197-253): when coercion widened a column past what a parquet scan

@@ -1398,25 +1398,37 @@ object SnapshotLog {
     * With `partitionCol` set, the frame keeps the column INLINE (so file
     * lists read back without basePath tricks) and is ALSO dir-partitioned
     * by a `_pday` copy, which yields the exact per-file partition value
-    * for manifest pruning. `statsCol` feeds per-file min/max bounds. */
+    * for manifest pruning. `statsCol` feeds per-file min/max bounds.
+    * `partitionValues` is the caller-known count of distinct
+    * `partitionCol` values in `df`, if the caller already knows it. */
   def writeData(spark: SparkSession, tableDir: String, df: DataFrame,
                 partitionCol: Option[String],
                 statsCol: String = graft.ingest.Cdc.LsnColumn,
                 spec: Option[String] = None,
-                extraStatsCols: Seq[String] = Nil): Seq[DataFile] = {
+                extraStatsCols: Seq[String] = Nil,
+                partitionValues: Option[Int] = None): Seq[DataFile] = {
     val (fs, root) = fsOf(spark, tableDir)
     val rel = s"data/${java.util.UUID.randomUUID()}"
     val dest = new Path(root, rel)
     partitionCol match {
       case Some(pc) =>
-        // PINNED partition count: an unpinned repartition is
-        // AQE-coalesced to one task on small batches, serializing every
-        // day's file write behind a single core (measured: ~0.55 s
-        // per-table write jobs on the streaming queries). Each day still
-        // hashes to exactly one task (one file per day per commit).
-        df.withColumn("_pday", col(pc))
-          .repartition(df.sparkSession.sparkContext.defaultParallelism, col(pc))
-          .write.partitionBy("_pday").parquet(dest.toString)
+        // One file per partition value per commit: partitionBy splits
+        // rows by value inside each task, and every value must sit in
+        // one task. A single value (the append sink's usual slice, a
+        // one-day merge) needs no shuffle for that: coalesce(1) writes it
+        // in one task, as the hash pin below would, minus the
+        // shuffle-map job and the empty tasks. Several values (or an
+        // unknown count) keep a PINNED hash repartition, so days write
+        // in parallel: an unpinned one is AQE-coalesced to one task on
+        // small batches, serializing every day's file behind a single
+        // core (measured: ~0.55 s per-table write jobs on the streaming
+        // queries). A wrong count costs parallelism, never layout.
+        val tagged = df.withColumn("_pday", col(pc))
+        val placed =
+          if (partitionValues.exists(_ <= 1)) tagged.coalesce(1)
+          else tagged.repartition(
+            df.sparkSession.sparkContext.defaultParallelism, col(pc))
+        placed.write.partitionBy("_pday").parquet(dest.toString)
       case None =>
         df.write.parquet(dest.toString)
     }

@@ -78,17 +78,25 @@ object IngestPipeline {
       // on the driver either way, but every extra action here is a full
       // pass over the (cached) batch — and at a real trigger cadence the
       // per-batch job count is the pipeline's fixed overhead.
+      // It groups by (table, day), so the same job also yields each
+      // table's day count, which lets a one-day slice write without a
+      // shuffle (SnapshotLog.writeData); rows, newest timestamp and day
+      // count per table fold from the groups on the driver.
       // A nullable table column yields a null group key; sort via Option
       // so it can't NPE the ordering, and route it like any other
       // malformed identifier below.
-      val tableAggs = batch.groupBy(col(cfg.tableCol))
-        .agg(count(lit(1)).as("n"),
-          max(if (hasTs) col(graft.ingest.Cdc.TsColumn)
-              else lit(null).cast("timestamp")).as("max_ts"))
+      val ts = if (hasTs) col(graft.ingest.Cdc.TsColumn) else lit(null).cast("timestamp")
+      val day = if (hasTs) CdcWriter.dayOf else lit(null).cast("string")
+      val tableAggs = batch.groupBy(col(cfg.tableCol), day)
+        .agg(count(lit(1)).as("n"), max(ts).as("max_ts"))
         .collect()
-        .map(r => (if (r.isNullAt(0)) null else r.getString(0)) ->
-          (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getTimestamp(2))))
-        .sortBy(p => Option(p._1))
+        .groupBy(r => if (r.isNullAt(0)) null else r.getString(0))
+        .map { case (t, days) =>
+          val maxTs = days.flatMap(r => Option(r.getTimestamp(3)))
+            .maxByOption(_.getTime)
+          t -> (days.map(_.getLong(2)).sum, maxTs, days.length)
+        }
+        .toSeq.sortBy(p => Option(p._1))
       // per-table slices commit to DISJOINT tables and the batch is cached:
       // submit them CONCURRENTLY so one table's write tail back-fills
       // with the next table's tasks (guide §2.6 — the same overlap
@@ -97,7 +105,7 @@ object IngestPipeline {
       // metrics registry is atomic, and per-table failure isolation is
       // unchanged — each slice's try/catch is its own.
       import scala.collection.parallel.CollectionConverters._
-      tableAggs.par.foreach { case (t, (nRows, maxTsOpt)) =>
+      tableAggs.par.foreach { case (t, (nRows, maxTsOpt, nDays)) =>
         val slice =
           if (t == null) batch.filter(col(cfg.tableCol).isNull)
           else batch.filter(col(cfg.tableCol) === t)
@@ -108,7 +116,8 @@ object IngestPipeline {
           require(t != null && graft.model.Identifiers.isValid(t),
             s"invalid table name: '$t'")
           val snap = Retry.execute(cfg.retry) { () =>
-            CdcWriter.appendCommit(slice.sparkSession, s"${cfg.outDir}/$t", slice)
+            CdcWriter.appendCommit(slice.sparkSession, s"${cfg.outDir}/$t", slice,
+              days = Some(nDays))
           }
           cfg.metrics.inc("iceberg", "commits_total")
           // per-table series (exposition-label names — the

@@ -16,7 +16,9 @@ import scala.jdk.CollectionConverters._
   * per-batch job count is the streaming sinks' fixed overhead, guide
   * §1.2); a regression re-splitting it shows up here as extra actions,
   * not as a silent slowdown. The second test pins the task count of a
-  * small merge: no stage may be sized by `spark.sql.shuffle.partitions`. */
+  * small merge: no stage may be sized by `spark.sql.shuffle.partitions`.
+  * The third pins the append sink's write fan-out: a one-day batch
+  * writes each table in one task, with no shuffle in front of it. */
 class MergeActionCountSpec extends AnyFunSuite with SparkTestBase {
 
   private def envelope(ids: Seq[Long], lsnBase: Int) = {
@@ -59,29 +61,56 @@ class MergeActionCountSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  /** Task count of every stage `body` submits. Stages are matched by a
-    * local property set on the calling thread, which Spark copies into
-    * every job the call starts (broadcast and AQE stage jobs included). */
-  private def stageTasks(body: => Unit): Seq[Int] = {
+  /** A submitted stage: its task count, whether it ran for a file write
+    * (a SQL execution of `InsertIntoHadoopFsRelationCommand`) and the
+    * shuffle records it wrote (0 for a stage that feeds no shuffle). */
+  private case class Stage(tasks: Int, write: Boolean, shuffleRecords: Long)
+
+  /** Every stage `body` submits. Stages are matched by a local property
+    * set on the calling thread, which Spark copies into every job the
+    * call starts (broadcast and AQE stage jobs included). Jobs that
+    * `body` starts from pooled threads (a parallel collection's workers)
+    * need not carry it: `wholeSession` takes every stage submitted while
+    * `body` runs instead, so nothing else may run on the session. */
+  private def stageTasks(body: => Unit, wholeSession: Boolean = false): Seq[Stage] = {
+    import org.apache.spark.scheduler._
     val tag = "graft.test.measured"
     val label = java.util.UUID.randomUUID().toString
-    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(
-          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        if (e.properties != null && e.properties.getProperty(tag) == label)
-          tasks.add(e.stageInfo.numTasks): Unit
+    val writeExecs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val submitted = new java.util.concurrent.ConcurrentHashMap[Int, Stage]()
+    val shuffled = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          writeExecs.add(s.executionId.toString): Unit
+        case _ =>
+      }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (wholeSession ||
+          (e.properties != null && e.properties.getProperty(tag) == label)) {
+          val exec = Option(e.properties).map(_.getProperty("spark.sql.execution.id"))
+          submitted.put(e.stageInfo.stageId, Stage(e.stageInfo.numTasks,
+            exec.exists(writeExecs.contains), 0L)): Unit
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Option(e.stageInfo.taskMetrics).foreach(m => shuffled.put(
+          e.stageInfo.stageId, m.shuffleWriteMetrics.recordsWritten))
     }
+    // as in countActions: let earlier stage events land first
+    if (wholeSession) Thread.sleep(500)
     spark.sparkContext.addSparkListener(listener)
     spark.sparkContext.setLocalProperty(tag, label)
     try {
       body
-      Thread.sleep(500) // stage-submitted events post asynchronously
+      Thread.sleep(500) // stage events post asynchronously
     } finally {
       spark.sparkContext.setLocalProperty(tag, null)
       spark.sparkContext.removeSparkListener(listener)
     }
-    tasks.asScala.toSeq
+    submitted.asScala.toSeq.sortBy(_._1).map { case (id, st) =>
+      st.copy(shuffleRecords = shuffled.getOrDefault(id, 0L))
+    }
   }
 
   test("update merge runs exactly 3 actions: marker probe, fused day probe, write") {
@@ -95,11 +124,17 @@ class MergeActionCountSpec extends AnyFunSuite with SparkTestBase {
     assert(actions == 3,
       s"expected 3 actions (marker probe, fused day probe, write), got $actions")
 
-    // and the merge result stays exact
+    // and the merge result stays exact: the update touches one day, so
+    // its write is the single-task one, and the layout is still one
+    // file per day
     val got = CdcWriter.read(spark, s"$dir/t")
-      .select("user_id").as[Long](spark.implicits.newLongEncoder)
+      .select("user_id", "event_id").as[(Long, Long)](
+        spark.implicits.newProductEncoder[(Long, Long)])
       .collect().sorted
-    assert(got.toSeq == (1L to 9L))
+    assert(got.toSeq == (1L to 9L).map(id => (id, id * 10)))
+    val days = graft.lake.SnapshotLog.currentSnapshot(spark, s"$dir/t").get
+      .files.map(_.partition)
+    assert(days.sorted == Seq("2024-01-01", "2024-01-02", "2024-01-03"))
   }
 
   test("a small merge runs no stage sized by spark.sql.shuffle.partitions") {
@@ -125,8 +160,8 @@ class MergeActionCountSpec extends AnyFunSuite with SparkTestBase {
       val mor = stageTasks(
         CdcWriter.morMerge(spark, s"$dir/mor", envelope(Seq(2L, 5L), 200), Seq("user_id")))
       assert(cow.nonEmpty && mor.nonEmpty)
-      assert(cow.forall(_ < p), s"merge stages at $p shuffle partitions: $cow")
-      assert(mor.forall(_ < p), s"morMerge stages at $p shuffle partitions: $mor")
+      assert(cow.forall(_.tasks < p), s"merge stages at $p shuffle partitions: $cow")
+      assert(mor.forall(_.tasks < p), s"morMerge stages at $p shuffle partitions: $mor")
       assert(actions == 3, s"expected 3 merge actions, got $actions")
       for (t <- Seq("cow", "mor")) {
         val got = CdcWriter.read(spark, s"$dir/$t")
@@ -138,5 +173,45 @@ class MergeActionCountSpec extends AnyFunSuite with SparkTestBase {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
     }
+  }
+
+  test("a one-day append batch writes each table in one task, without a shuffle") {
+    // The append sink's slices usually hold one day. Hash-pinning such a
+    // slice to defaultParallelism ran a shuffle-map job and a write job
+    // of defaultParallelism tasks, all but one of them empty, per table.
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("appendtasks").toString
+    val tables = Seq("t_a", "t_b", "t_c", "t_d")
+    val batch = tables.zipWithIndex.flatMap { case (t, i) =>
+      (0 until 6).map { j =>
+        val id = 10L * i + j
+        (id, id * 10, 1.0, "INSERT",
+          java.sql.Timestamp.valueOf(f"2024-01-05 ${j + 1}%02d:00:00"),
+          f"$id%016d", t)
+      }
+    }.toDF("user_id", "event_id", "value",
+      Cdc.OpColumn, Cdc.TsColumn, Cdc.LsnColumn, "_cdc_table")
+      .repartition(spark.sparkContext.defaultParallelism)
+      .persist()
+    try {
+      batch.count()
+      val cfg = graft.streaming.IngestConfig(outDir = s"$dir/lake",
+        dlqDir = s"$dir/dlq", checkpointDir = s"$dir/ckpt",
+        metrics = new graft.observe.Metrics.Registry)
+      val stages = stageTasks(
+        graft.streaming.IngestPipeline.processBatch(cfg)(batch, 0L),
+        wholeSession = true)
+      val writes = stages.filter(_.write)
+      assert(writes.size == tables.size && writes.forall(_.tasks == 1),
+        s"expected one 1-task write stage per table, got $stages")
+      assert(writes.forall(_.shuffleRecords == 0L),
+        s"a one-day write ran a shuffle-map stage: $stages")
+      for (t <- tables) {
+        val snap = graft.lake.SnapshotLog.currentSnapshot(spark, s"$dir/lake/$t").get
+        assert(snap.files.map(_.partition) == Seq("2024-01-05"), t)
+        assert(CdcWriter.read(spark, s"$dir/lake/$t").count() == 6L, t)
+      }
+      assert(cfg.metrics.counter("iceberg", "commits_total") == tables.size)
+    } finally batch.unpersist(blocking = true)
   }
 }

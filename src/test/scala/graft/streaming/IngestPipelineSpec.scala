@@ -79,6 +79,57 @@ class IngestPipelineSpec extends SparkTestBase {
     assert(registry.counter("iceberg", "commits_total") === snapshots.toLong)
   }
 
+  test("the (table, day) routing aggregate folds to per-table counts, lag and days") {
+    import spark.implicits._
+    val registry = new graft.observe.Metrics.Registry
+    val c = cfg(tmp("graft-out")).copy(metrics = registry)
+    def at(day: Int, hour: Int) =
+      java.sql.Timestamp.valueOf(f"2024-01-$day%02d $hour%02d:00:00")
+    // table -> (event id, timestamp): 3, 2 and 3 days, newest rows at
+    // different hours, plus an invalid and a null table name
+    val rows: Seq[(Long, java.sql.Timestamp, Option[String])] = Seq(
+      (1L, at(1, 3), Some("alpha")), (2L, at(2, 5), Some("alpha")),
+      (3L, at(3, 7), Some("alpha")), (4L, at(3, 1), Some("alpha")),
+      (5L, at(1, 2), Some("beta")), (6L, at(2, 9), Some("beta")),
+      (7L, at(2, 4), Some("beta")),
+      (8L, at(4, 6), Some("gamma")), (9L, at(5, 8), Some("gamma")),
+      (10L, at(6, 11), Some("gamma")), (11L, at(6, 10), Some("gamma")),
+      (12L, at(1, 1), Some("not a name")), (13L, at(2, 2), None))
+    val batch = rows.map { case (id, ts, t) =>
+      (id, id, id * 1.0, "INSERT", ts, f"$id%016d", t)
+    }.toDF("user_id", "event_id", "value", "_cdc_operation",
+      "_cdc_timestamp", "_cdc_lsn", "_cdc_table")
+    val valid = Seq("alpha", "beta", "gamma")
+    val before = registry.counter("iceberg", "commits_total")
+    val t0 = System.currentTimeMillis()
+    IngestPipeline.processBatch(c)(batch, 0L)
+    val t1 = System.currentTimeMillis()
+    assert(registry.counter("iceberg", "commits_total") === before + valid.size)
+    val gauges = registry.gaugesSnapshot()
+    for (t <- valid) {
+      val mine = rows.filter(_._3.contains(t))
+      assert(registry.counter("cdc", s"""events_total{table="$t"}""") === mine.size.toLong, t)
+      val newest = mine.map(_._2.getTime).max
+      val lag = gauges(graft.observe.Metrics.counterName("cdc", s"""lag_seconds{table="$t"}"""))
+      assert(lag >= (t0 - newest) / 1000.0 && lag <= (t1 - newest) / 1000.0, t)
+      // one file per day, each holding exactly the rows of its day
+      val dir = s"${c.outDir}/$t"
+      val snap = SnapshotLog.currentSnapshot(spark, dir).get
+      val days = mine.map(r => r._2.toString.take(10)).distinct.sorted
+      assert(snap.files.map(_.partition).sorted === days, t)
+      for (f <- snap.files) {
+        val fileDays = spark.read.parquet(s"$dir/${f.path}")
+          .select("_cdc_date").distinct().as[String].collect().toSeq
+        assert(fileDays === Seq(f.partition), s"$t ${f.path}")
+      }
+      assert(CdcWriter.read(spark, dir).count() === mine.size.toLong, t)
+    }
+    val dlq = DeadLetter.read(spark, c.dlqDir).collect()
+    assert(dlq.map(r => Option(r.getAs[String]("table_name"))).toSet ===
+      Set(Some("not a name"), None))
+    assert(dlq.forall(_.getAs[String]("error_type") == "validation"))
+  }
+
   test("restart from checkpoint ingests only new data (exactly-once files)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
