@@ -1,10 +1,9 @@
 package graft.api
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 /** The control-plane entity layer: Source / Pipeline / TableMapping CRUD
   * with the reference's exact service semantics (ref
@@ -21,13 +20,35 @@ import org.json4s.jackson.JsonMethods
   *     a running pipeline (or stop on a stopped one) conflicts;
   *   - duplicate table mappings (same schema.table) conflict.
   *
-  * Persistence is the engine's own durability idiom instead of the
-  * reference's Postgres control tables: each entity kind serializes to
-  * one JSON file under `metaDir`, written temp-then-atomic-rename, so a
-  * crash never leaves a torn store and a restarted control plane reads
-  * the last committed state (control-plane metadata is KB-sized — one
-  * file per kind is the scale-correct shape; the 100 TB data plane
-  * never flows through here).
+  * Persistence replaces the reference's Postgres control tables with
+  * one JSON file per entity kind under `metaDir` (19 files;
+  * control-plane metadata is KB-sized, and the data plane never flows
+  * through here). Every kind is one [[Collection]] — or, for the
+  * per-policy scaling and idle state maps, one [[Store]]: a file name,
+  * a codec, and the in-memory value, loaded once at construction and
+  * replaced by an fsynced temp-then-atomic-rename write, so a crash
+  * never leaves a torn file. A kind's stored row is its API view plus
+  * its secret fields, which are sealed at rest by [[CredentialCrypto]]
+  * where they are credentials. All writes, and the cross-kind rules (a
+  * source with pipelines cannot be deleted; deleting a scaling policy
+  * drops its state and idle row), run under one ControlPlane-wide lock.
+  *
+  * Decoding is strict ([[Row]]): a missing or mistyped field, or a file
+  * of the wrong JSON shape, refuses the load with an
+  * `IllegalStateException` naming the file, the entity and the field.
+  * The tolerated legacy forms are exactly these:
+  *   - `default_role` (OIDC providers) may be absent and reads as
+  *     `viewer`; `is_active` (users) may be absent and reads as true;
+  *   - the users' `oidc_provider_id`, `oidc_subject` and `oidc_groups`
+  *     may be absent (no OIDC link), and so may `routes`, `tables`,
+  *     `scopes`, `role_mapping`, `matchers` and `pending_since` (empty);
+  *   - the nullable `*_at_ms` fields (and `current_value`, `value`,
+  *     `wake_reason`) read `null` as None;
+  *   - a numeric `threshold` may be an integer, a double or a decimal;
+  *   - a pipeline stored running, starting or stopping reloads as
+  *     stopped (that process is gone);
+  *   - an OIDC login state that has expired, or whose sealed nonce or
+  *     verifier no longer decrypts, is dropped.
   *
   * Where the reference's Start/Stop are explicit TODO stubs that only
   * flip the status column (pipeline.go:177-181, 208-212), this layer
@@ -77,6 +98,7 @@ object ControlPlane {
                           sslMode: String,
                           slotName: String, publicationName: String,
                           createdAtMs: Long, updatedAtMs: Long)
+    extends Named
 
   final case class TableMapping(id: String, sourceSchema: String,
                                 sourceTable: String, enabled: Boolean)
@@ -87,6 +109,7 @@ object ControlPlane {
                             createdAtMs: Long, updatedAtMs: Long,
                             startedAtMs: Option[Long],
                             stoppedAtMs: Option[Long])
+    extends Named
 
   /** One rule→channel delivery route (ref internal/alerting/types.go:
     * 266-276 AlertRoute — channel id, repeat interval, enabled; the
@@ -106,6 +129,7 @@ object ControlPlane {
                              durationSeconds: Long, severity: String,
                              enabled: Boolean, routes: Seq[AlertRoute],
                              createdAtMs: Long, updatedAtMs: Long)
+    extends Named
 
   /** One notification channel (ref internal/alerting/types.go:256-264
     * NotificationChannel): a named delivery target alert routes
@@ -113,6 +137,7 @@ object ControlPlane {
   final case class Channel(id: String, name: String, typ: String,
                            enabled: Boolean, config: Map[String, String],
                            createdAtMs: Long, updatedAtMs: Long)
+    extends Named
 
   /** One OIDC identity provider (ref internal/api/models/oidc.go:38-54
     * OIDCProvider): a configured issuer whose RS256-signed tokens the
@@ -130,6 +155,7 @@ object ControlPlane {
                                 defaultRole: String, enabled: Boolean,
                                 autoCreateUsers: Boolean,
                                 createdAtMs: Long, updatedAtMs: Long)
+    extends Named
 
   /** One in-flight interactive login (ref internal/api/models/oidc.go:
     * 56-66 OIDCState): the `state` round-trips through the IdP and
@@ -140,6 +166,7 @@ object ControlPlane {
                              codeVerifier: String, providerId: String,
                              redirectUri: String,
                              createdAtMs: Long, expiresAtMs: Long)
+    extends Entity
 
   /** ID-token identity as the callback path consumes it (ref
     * models/oidc.go:322-331 OIDCUserInfo). */
@@ -170,6 +197,18 @@ object ControlPlane {
                                  scaleUpRules: Seq[ScalingRule],
                                  scaleDownRules: Seq[ScalingRule],
                                  createdAtMs: Long, updatedAtMs: Long)
+    extends ScalingBounds {
+    def ruleIds: Set[String] = (scaleUpRules ++ scaleDownRules).map(_.id).toSet
+  }
+
+  /** What the two scaling families share: replica bounds, and the rule
+    * ids pending clocks may key on. */
+  sealed trait ScalingBounds extends Named {
+    def minReplicas: Int
+    def maxReplicas: Int
+    def scaleToZero: Boolean
+    def ruleIds: Set[String]
+  }
 
   /** Per-policy evaluation state (ref scaling/types.go:300-332):
     * current width, cooldown clock, and each rule's for-duration
@@ -184,6 +223,7 @@ object ControlPlane {
                                 action: String, fromReplicas: Int,
                                 toReplicas: Int, reason: String,
                                 triggeredBy: String, atMs: Long)
+    extends Entity
 
   /** Idle/wake state for one scaling policy (ref scaling/types.go:
     * 389-401 IdleState) — maintained by activity recording, wake, the
@@ -237,6 +277,9 @@ object ControlPlane {
                                       runningThreshold: Int,
                                       latencyThresholdSeconds: Int,
                                       createdAtMs: Long, updatedAtMs: Long)
+    extends ScalingBounds {
+    def ruleIds: Set[String] = Set.empty
+  }
 
   /** One alert instance (ref types.go:169-187 AlertInstance): the
     * LIVE state of a (rule, fingerprint) pair — firing or resolved,
@@ -250,6 +293,7 @@ object ControlPlane {
                                  acknowledgedAtMs: Option[Long],
                                  acknowledgedBy: String,
                                  createdAtMs: Long, updatedAtMs: Long)
+    extends Entity
 
   /** One audit-trail row (ref types.go:214-223 AlertHistory):
     * fired / resolved / acknowledged / notification_sent. */
@@ -258,6 +302,7 @@ object ControlPlane {
                                      message: String,
                                      value: Option[Double],
                                      createdAtMs: Long)
+    extends Entity
 
   /** One temporary suppression (ref types.go:227-253 AlertSilence):
     * matchers are exact label equalities; a notification whose labels
@@ -265,7 +310,8 @@ object ControlPlane {
   final case class AlertSilence(id: String, matchers: Map[String, String],
                                 startsAtMs: Long, endsAtMs: Long,
                                 createdBy: String, comment: String,
-                                createdAtMs: Long, updatedAtMs: Long) {
+                                createdAtMs: Long, updatedAtMs: Long)
+    extends Entity {
     def activeAt(nowMs: Long): Boolean =
       nowMs > startsAtMs && nowMs < endsAtMs
     def matches(labels: Map[String, String]): Boolean =
@@ -281,6 +327,7 @@ object ControlPlane {
                           hash: String, expiresAtMs: Option[Long],
                           revokedAtMs: Option[Long],
                           createdAtMs: Long, updatedAtMs: Long)
+    extends Named
 
   private[api] def hashApiKey(plaintext: String): String =
     java.security.MessageDigest.getInstance("SHA-256")
@@ -306,6 +353,7 @@ object ControlPlane {
                         oidcProviderId: Option[String] = None,
                         oidcSubject: Option[String] = None,
                         oidcGroups: Seq[String] = Nil)
+    extends Named
 
   /** One minted login session: the bearer plaintext exists only in
     * the login response; the store keeps its SHA-256 and the expiry
@@ -314,6 +362,7 @@ object ControlPlane {
     * and keep no signing secret on disk). */
   final case class Session(id: String, userId: String, tokenHash: String,
                            expiresAtMs: Long, createdAtMs: Long)
+    extends Entity
 
   /** ref config.go: PHILOTES_AUTH_JWT_EXPIRATION default 24h. */
   private[api] val DefaultSessionTtlMs: Long = 24L * 3600 * 1000
@@ -423,116 +472,39 @@ final class ControlPlane(val metaDir: String,
                            ControlPlane.envCredentialKey()) {
 
   import ControlPlane._
+  import Json._
 
   private val dir: Path = Paths.get(metaDir)
   Files.createDirectories(dir)
 
   private val lock = new Object
-  private var sources: Vector[Source] = loadSources()
-  private var pipelines: Vector[Pipeline] = loadPipelines()
-  private var alertRules: Vector[AlertRule] = loadAlertRules()
-  private var apiKeys: Vector[ApiKey] = loadApiKeys()
-  private var channels: Vector[Channel] = loadChannels()
-  private var alertInstances: Vector[AlertInstance] = loadAlertInstances()
-  private var alertHistory: Vector[AlertHistoryEntry] = loadAlertHistory()
-  private var alertSilences: Vector[AlertSilence] = loadAlertSilences()
-  private var oidcProviders: Vector[OidcProvider] = loadOidcProviders()
-  private var oidcStates: Vector[OidcState] = loadOidcStates()
-  private var scalingPolicies: Vector[ScalingPolicy] = loadScalingPolicies()
-  private var scalingStates: Map[String, ScalingPolicyState] = loadScalingStates()
-  private var scalingHistory: Vector[ScalingEvent] = loadScalingHistory()
-  private var idleStates: Map[String, IdleState] = loadIdleStates()
-  private var users: Vector[User] = loadUsers()
-  private var sessions: Vector[Session] = loadSessions()
-  private val sessionTtlMs: Long = ControlPlane.DefaultSessionTtlMs
-  private var queryScalingPolicies: Vector[QueryScalingPolicy] =
-    loadQueryScalingPolicies()
-  private var queryScalingStates: Map[String, ScalingPolicyState] =
-    loadQueryScalingStates()
-  private var queryScalingHistory: Vector[ScalingEvent] =
-    loadQueryScalingHistory()
   private val secureRandom = new java.security.SecureRandom()
+  private val sessionTtlMs: Long = ControlPlane.DefaultSessionTtlMs
 
   private def newId(): String = java.util.UUID.randomUUID().toString
 
-  // ---- persistence: one JSON file per kind, temp + atomic rename
+  // ---- secrets at rest ----------------------------------------------
 
-  /** Durable replace: the temp file's bytes reach the disk before the
-    * rename publishes them, and the directory is synced after it, so a
-    * crash leaves either the old file or the whole new one. */
-  private def writeFile(name: String, json: JValue): Unit = {
-    import java.nio.channels.FileChannel
-    import java.nio.file.{StandardOpenOption => O}
-    val tmp = dir.resolve(s".$name.tmp")
-    val ch = FileChannel.open(tmp, O.CREATE, O.WRITE, O.TRUNCATE_EXISTING)
-    try {
-      val buf = java.nio.ByteBuffer.wrap(
-        JsonMethods.compact(JsonMethods.render(json)).getBytes(UTF_8))
-      while (buf.hasRemaining) ch.write(buf)
-      ch.force(true)
-    } finally ch.close()
-    Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    val d = FileChannel.open(dir, O.READ)
-    try d.force(true) finally d.close()
+  /** The stored form of a secret: encrypted when a key is configured
+    * ([[CredentialCrypto]], the reference's internal/crypto
+    * construction). Keyless values that COLLIDE with a format marker
+    * escape behind [[ControlPlane.PlainMarker]] — otherwise a real
+    * password beginning with the literal `enc:v1:` would be
+    * misclassified as ciphertext on reload and brick the store. Legacy
+    * plaintext stores are self-identifying and re-encrypt on the next
+    * persist. */
+  private def seal(v: String): String = credentialKey match {
+    case Some(k) if v.nonEmpty => CredentialCrypto.encrypt(k, v)
+    case _ if CredentialCrypto.isEncrypted(v) || v.startsWith(PlainMarker) =>
+      PlainMarker + v
+    case _ => v
   }
 
-  private def readFile(name: String): Option[JValue] = {
-    val p = dir.resolve(name)
-    if (!Files.exists(p)) None
-    else Some(JsonMethods.parse(new String(Files.readAllBytes(p), UTF_8)))
-  }
-
-  private def str(v: JValue): String =
-    v match { case JString(s) => s; case _ => "" }
-  private def num(v: JValue): Long = v match {
-    case JInt(n) => n.toLong; case JLong(n) => n; case _ => 0L
-  }
-
-  private def persistSources(): Unit =
-    writeFile("sources.json", JArray(sources.toList.map(sourceStoreJson)))
-  private def persistPipelines(): Unit =
-    writeFile("pipelines.json", JArray(pipelines.toList.map(pipelineJson)))
-
-  /** API response shape: the password NEVER renders here. */
-  private[api] def sourceJson(s: Source): JObject = JObject(
-    "id" -> JString(s.id), "name" -> JString(s.name),
-    "type" -> JString(s.typ), "host" -> JString(s.host),
-    "port" -> JInt(BigInt(s.port)),
-    "database_name" -> JString(s.databaseName),
-    "username" -> JString(s.username), "ssl_mode" -> JString(s.sslMode),
-    "slot_name" -> JString(s.slotName),
-    "publication_name" -> JString(s.publicationName),
-    "created_at_ms" -> JInt(BigInt(s.createdAtMs)),
-    "updated_at_ms" -> JInt(BigInt(s.updatedAtMs)))
-
-  /** Persistence shape: the credential rides with the entity, exactly
-    * like the reference's control DB row — encrypted at rest when a
-    * key is configured ([[CredentialCrypto]], the reference's
-    * internal/crypto construction). Legacy plaintext stores are
-    * self-identifying and re-encrypt on the next persist. */
-  /** Keyless values that COLLIDE with a format marker escape behind
-    * `plain:` — otherwise a real password beginning with the literal
-    * `enc:v1:` would be misclassified as ciphertext on reload and
-    * brick the store (in-band signaling needs an escape hatch). */
-  private def markerCollision(pw: String): Boolean =
-    CredentialCrypto.isEncrypted(pw) || pw.startsWith(ControlPlane.PlainMarker)
-
-  private def sourceStoreJson(s: Source): JObject = {
-    val stored = credentialKey match {
-      case Some(k) if s.password.nonEmpty => CredentialCrypto.encrypt(k, s.password)
-      case _ if markerCollision(s.password) => ControlPlane.PlainMarker + s.password
-      case _                              => s.password
-    }
-    JObject(sourceJson(s).obj :+ ("password" -> (JString(stored): JValue)))
-  }
-
-  /** Resolve a stored credential: decrypt with the configured key;
-    * an encrypted value with NO key refuses loudly (serving the
-    * ciphertext as a password would fail opaque and late). */
-  private def storedPassword(stored: String): String =
-    if (stored.startsWith(ControlPlane.PlainMarker))
-      stored.substring(ControlPlane.PlainMarker.length)
+  /** Resolve a stored secret: decrypt with the configured key; an
+    * encrypted value with NO key refuses loudly (serving the ciphertext
+    * as a password would fail opaque and late). */
+  private def unseal(stored: String): String =
+    if (stored.startsWith(PlainMarker)) stored.substring(PlainMarker.length)
     else if (!CredentialCrypto.isEncrypted(stored)) stored
     else credentialKey match {
       case Some(k) => CredentialCrypto.decrypt(k, stored)
@@ -541,58 +513,385 @@ final class ControlPlane(val metaDir: String,
           "set GRAFT_ENCRYPTION_KEY")
     }
 
-  private[api] def pipelineJson(p: Pipeline): JObject = JObject(
-    "id" -> JString(p.id), "name" -> JString(p.name),
-    "source_id" -> JString(p.sourceId), "status" -> JString(p.status),
-    "error_message" -> JString(p.errorMessage),
-    "tables" -> JArray(p.tables.toList.map(m => JObject(
-      "id" -> JString(m.id), "source_schema" -> JString(m.sourceSchema),
-      "source_table" -> JString(m.sourceTable),
-      "enabled" -> JBool(m.enabled)))),
-    "created_at_ms" -> JInt(BigInt(p.createdAtMs)),
-    "updated_at_ms" -> JInt(BigInt(p.updatedAtMs)),
-    "started_at_ms" -> p.startedAtMs.map(t => JInt(BigInt(t)): JValue)
-      .getOrElse(JNull),
-    "stopped_at_ms" -> p.stoppedAtMs.map(t => JInt(BigInt(t)): JValue)
-      .getOrElse(JNull))
+  private def extend(o: JObject, secrets: JField*): JObject =
+    JObject(o.obj ++ secrets)
 
-  private def loadSources(): Vector[Source] =
-    readFile("sources.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        Source(str(o \ "id"), str(o \ "name"), str(o \ "type"),
-          str(o \ "host"), num(o \ "port").toInt, str(o \ "database_name"),
-          str(o \ "username"), storedPassword(str(o \ "password")),
-          str(o \ "ssl_mode"),
-          str(o \ "slot_name"), str(o \ "publication_name"),
-          num(o \ "created_at_ms"), num(o \ "updated_at_ms"))
+  // ---- API views; each kind's stored row is its view plus any secret
+
+  /** The password NEVER renders. */
+  private[api] def sourceJson(s: Source): JObject = obj(
+    "id" := s.id, "name" := s.name, "type" := s.typ, "host" := s.host,
+    "port" := s.port, "database_name" := s.databaseName,
+    "username" := s.username, "ssl_mode" := s.sslMode,
+    "slot_name" := s.slotName, "publication_name" := s.publicationName,
+    "created_at_ms" := s.createdAtMs, "updated_at_ms" := s.updatedAtMs)
+
+  private[api] def pipelineJson(p: Pipeline): JObject = obj(
+    "id" := p.id, "name" := p.name, "source_id" := p.sourceId,
+    "status" := p.status, "error_message" := p.errorMessage,
+    "tables" := arr(p.tables)(m => obj("id" := m.id,
+      "source_schema" := m.sourceSchema, "source_table" := m.sourceTable,
+      "enabled" := m.enabled)),
+    "created_at_ms" := p.createdAtMs, "updated_at_ms" := p.updatedAtMs,
+    "started_at_ms" := p.startedAtMs, "stopped_at_ms" := p.stoppedAtMs)
+
+  private[api] def alertRuleJson(r: AlertRule): JObject = obj(
+    "id" := r.id, "name" := r.name, "description" := r.description,
+    "metric_name" := r.metricName, "operator" := r.op,
+    "threshold" := r.threshold, "duration_seconds" := r.durationSeconds,
+    "severity" := r.severity, "enabled" := r.enabled,
+    "routes" := arr(r.routes)(rt => obj("id" := rt.id,
+      "channel_id" := rt.channel, "enabled" := rt.enabled,
+      "repeat_interval_seconds" := rt.repeatIntervalSeconds)),
+    "created_at_ms" := r.createdAtMs, "updated_at_ms" := r.updatedAtMs)
+
+  private[api] def channelJson(c: Channel): JObject = obj(
+    "id" := c.id, "name" := c.name, "type" := c.typ, "enabled" := c.enabled,
+    "config" := c.config,
+    "created_at_ms" := c.createdAtMs, "updated_at_ms" := c.updatedAtMs)
+
+  /** The client secret NEVER renders (the reference's `json:"-"` on
+    * ClientSecretEncrypted). */
+  private[api] def oidcProviderJson(p: OidcProvider): JObject = obj(
+    "id" := p.id, "name" := p.name, "display_name" := p.displayName,
+    "provider_type" := p.providerType, "issuer_url" := p.issuerUrl,
+    "client_id" := p.clientId, "scopes" := p.scopes,
+    "groups_claim" := p.groupsClaim, "role_mapping" := p.roleMapping,
+    "default_role" := p.defaultRole, "enabled" := p.enabled,
+    "auto_create_users" := p.autoCreateUsers,
+    "created_at_ms" := p.createdAtMs, "updated_at_ms" := p.updatedAtMs)
+
+  /** The login page's PRE-AUTH listing (ref ListEnabledProviders →
+    * OIDCProviderSummary): identity and display fields only. */
+  private[api] def oidcProviderSummaryJson(p: OidcProvider): JObject = obj(
+    "id" := p.id, "name" := p.name, "display_name" := p.displayName,
+    "provider_type" := p.providerType)
+
+  private def scalingRuleJson(r: ScalingRule): JValue = obj(
+    "id" := r.id, "metric" := r.metric, "operator" := r.op,
+    "threshold" := r.threshold, "duration_seconds" := r.durationSeconds,
+    "scale_by" := r.scaleBy)
+
+  private[api] def scalingPolicyJson(p: ScalingPolicy): JObject = obj(
+    "id" := p.id, "name" := p.name, "target_type" := p.targetType,
+    "min_replicas" := p.minReplicas, "max_replicas" := p.maxReplicas,
+    "cooldown_seconds" := p.cooldownSeconds,
+    "scale_to_zero" := p.scaleToZero, "enabled" := p.enabled,
+    "scale_up_rules" := arr(p.scaleUpRules)(scalingRuleJson),
+    "scale_down_rules" := arr(p.scaleDownRules)(scalingRuleJson),
+    "created_at_ms" := p.createdAtMs, "updated_at_ms" := p.updatedAtMs)
+
+  private[api] def queryScalingPolicyJson(p: QueryScalingPolicy): JObject = obj(
+    "id" := p.id, "name" := p.name, "query_engine" := p.queryEngine,
+    "enabled" := p.enabled, "min_replicas" := p.minReplicas,
+    "max_replicas" := p.maxReplicas, "cooldown_seconds" := p.cooldownSeconds,
+    "scale_to_zero" := p.scaleToZero,
+    "queued_queries_threshold" := p.queuedThreshold,
+    "running_queries_threshold" := p.runningThreshold,
+    "latency_threshold_seconds" := p.latencyThresholdSeconds,
+    "created_at_ms" := p.createdAtMs, "updated_at_ms" := p.updatedAtMs)
+
+  private[api] def scalingEventJson(e: ScalingEvent): JObject = obj(
+    "id" := e.id, "policy_id" := e.policyId, "action" := e.action,
+    "from_replicas" := e.fromReplicas, "to_replicas" := e.toReplicas,
+    "reason" := e.reason, "triggered_by" := e.triggeredBy, "at_ms" := e.atMs)
+
+  /** The API view (ref models/wake.go IdleStateResponse — duration is
+    * computed at read time off the injected clock). */
+  private[api] def idleStateJson(s: IdleState): JObject = obj(
+    "policy_id" := s.policyId, "last_activity_at_ms" := s.lastActivityAtMs,
+    "idle_since_ms" := s.idleSinceMs,
+    "idle_duration_secs" := math.max(0L, clock() - s.lastActivityAtMs) / 1000L,
+    "is_scaled_to_zero" := s.isScaledToZero,
+    "scaled_to_zero_at_ms" := s.scaledToZeroAtMs,
+    "last_wake_at_ms" := s.lastWakeAtMs, "wake_reason" := s.wakeReason)
+
+  private[api] def alertInstanceJson(a: AlertInstance): JObject = obj(
+    "id" := a.id, "rule_id" := a.ruleId, "fingerprint" := a.fingerprint,
+    "status" := a.status, "current_value" := a.currentValue,
+    "fired_at_ms" := a.firedAtMs, "resolved_at_ms" := a.resolvedAtMs,
+    "acknowledged_at_ms" := a.acknowledgedAtMs,
+    "acknowledged_by" := a.acknowledgedBy,
+    "created_at_ms" := a.createdAtMs, "updated_at_ms" := a.updatedAtMs)
+
+  private[api] def alertHistoryJson(h: AlertHistoryEntry): JObject = obj(
+    "id" := h.id, "alert_id" := h.alertId, "rule_id" := h.ruleId,
+    "event_type" := h.eventType, "message" := h.message, "value" := h.value,
+    "created_at_ms" := h.createdAtMs)
+
+  private[api] def silenceJson(s: AlertSilence): JObject = obj(
+    "id" := s.id, "matchers" := s.matchers,
+    "starts_at_ms" := s.startsAtMs, "ends_at_ms" := s.endsAtMs,
+    "created_by" := s.createdBy, "comment" := s.comment,
+    "created_at_ms" := s.createdAtMs, "updated_at_ms" := s.updatedAtMs)
+
+  /** The hash never renders; the plaintext exists only in the create
+    * call's return value. */
+  private[api] def apiKeyJson(k: ApiKey): JObject = obj(
+    "id" := k.id, "name" := k.name, "key_prefix" := k.prefix,
+    "expires_at_ms" := k.expiresAtMs, "revoked" := k.revokedAtMs.isDefined,
+    "revoked_at_ms" := k.revokedAtMs,
+    "created_at_ms" := k.createdAtMs, "updated_at_ms" := k.updatedAtMs)
+
+  /** Hash, salt, and iteration count NEVER render. The OIDC link
+    * renders only when present (ref models/auth.go:75-77 omitempty). */
+  private[api] def userJson(u: User): JObject = JObject(List(
+    "id" := u.id, "email" := u.email, "name" := u.name, "role" := u.role,
+    "is_active" := u.isActive, "last_login_at_ms" := u.lastLoginAtMs,
+    "created_at_ms" := u.createdAtMs, "updated_at_ms" := u.updatedAtMs) ++
+    u.oidcProviderId.map("oidc_provider_id" := _) ++
+    u.oidcSubject.map("oidc_subject" := _) ++
+    (if (u.oidcGroups.isEmpty) Nil else List("oidc_groups" := u.oidcGroups)))
+
+  // ---- the stores: one file per kind ---------------------------------
+
+  private val sources = Collection[Source](dir, "sources.json", "source",
+    "source")(s => extend(sourceJson(s), "password" := seal(s.password))) { r =>
+    Source(r.str("id"), r.str("name"), r.str("type"), r.str("host"),
+      r.int("port"), r.str("database_name"), r.str("username"),
+      unseal(r.str("password")), r.str("ssl_mode"), r.str("slot_name"),
+      r.str("publication_name"), r.long("created_at_ms"), r.long("updated_at_ms"))
+  }
+
+  private val pipelines = Collection[Pipeline](dir, "pipelines.json",
+    "pipeline", "pipeline")(pipelineJson) { r =>
+    // a pipeline recorded running/starting by a PREVIOUS process is
+    // not running in THIS one — surface the truth, never a stale lie
+    val status = r.str("status") match {
+      case "running" | "starting" | "stopping" => "stopped"
+      case s => s
+    }
+    Pipeline(r.str("id"), r.str("name"), r.str("source_id"), status,
+      r.str("error_message"),
+      r.rows("tables").map(t => TableMapping(t.str("id"),
+        t.str("source_schema"), t.str("source_table"), t.bool("enabled"))),
+      r.long("created_at_ms"), r.long("updated_at_ms"),
+      r.optLong("started_at_ms"), r.optLong("stopped_at_ms"))
+  }
+
+  private val alertRules = Collection[AlertRule](dir, "alerts.json",
+    "alert_rule", "alert rule")(alertRuleJson) { r =>
+    AlertRule(r.str("id"), r.str("name"), r.str("description"),
+      r.str("metric_name"), r.str("operator"), r.double("threshold"),
+      r.long("duration_seconds"), r.str("severity"), r.bool("enabled"),
+      r.rows("routes").map(rt => AlertRoute(rt.str("id"),
+        rt.str("channel_id"), rt.bool("enabled"),
+        rt.long("repeat_interval_seconds"))),
+      r.long("created_at_ms"), r.long("updated_at_ms"))
+  }
+
+  private val apiKeys = Collection[ApiKey](dir, "api_keys.json", "api_key")(
+    k => extend(apiKeyJson(k), "key_hash" := k.hash)) { r =>
+    ApiKey(r.str("id"), r.str("name"), r.str("key_prefix"), r.str("key_hash"),
+      r.optLong("expires_at_ms"), r.optLong("revoked_at_ms"),
+      r.long("created_at_ms"), r.long("updated_at_ms"))
+  }
+
+  private val channels = Collection[Channel](dir, "channels.json", "channel",
+    "channel")(channelJson) { r =>
+    Channel(r.str("id"), r.str("name"), r.str("type"), r.bool("enabled"),
+      r.strMap("config"), r.long("created_at_ms"), r.long("updated_at_ms"))
+  }
+
+  private val alertInstances = Collection[AlertInstance](dir,
+    "alert_instances.json", "alert")(alertInstanceJson) { r =>
+    AlertInstance(r.str("id"), r.str("rule_id"), r.str("fingerprint"),
+      r.str("status"), r.optDouble("current_value"), r.long("fired_at_ms"),
+      r.optLong("resolved_at_ms"), r.optLong("acknowledged_at_ms"),
+      r.str("acknowledged_by"), r.long("created_at_ms"), r.long("updated_at_ms"))
+  }
+
+  private val alertHistory = Collection[AlertHistoryEntry](dir,
+    "alert_history.json")(alertHistoryJson) { r =>
+    AlertHistoryEntry(r.str("id"), r.str("alert_id"), r.str("rule_id"),
+      r.str("event_type"), r.str("message"), r.optDouble("value"),
+      r.long("created_at_ms"))
+  }
+
+  private val alertSilences = Collection[AlertSilence](dir,
+    "alert_silences.json", "silence")(silenceJson) { r =>
+    AlertSilence(r.str("id"), r.strMap("matchers"), r.long("starts_at_ms"),
+      r.long("ends_at_ms"), r.str("created_by"), r.str("comment"),
+      r.long("created_at_ms"), r.long("updated_at_ms"))
+  }
+
+  private val oidcProviders = Collection[OidcProvider](dir,
+    "oidc_providers.json", "oidc_provider", "OIDC provider")(p =>
+    extend(oidcProviderJson(p), "client_secret" := seal(p.clientSecret))) { r =>
+    OidcProvider(r.str("id"), r.str("name"), r.str("display_name"),
+      r.str("provider_type"), r.str("issuer_url"), r.str("client_id"),
+      unseal(r.str("client_secret")), r.strs("scopes"), r.str("groups_claim"),
+      r.strMap("role_mapping"), r.str("default_role"), r.bool("enabled"),
+      r.bool("auto_create_users"), r.long("created_at_ms"),
+      r.long("updated_at_ms"))
+  }
+
+  /** In-flight logins survive a restart (the reference stores OIDCState
+    * rows in its control DB); the nonce and PKCE verifier are REDEEMING
+    * secrets, sealed like source passwords, while the state is the
+    * front-channel handle and stays plain. Expired or undecryptable
+    * rows are dropped on load: a 10-minute login the user can retry
+    * must not brick the whole control plane. */
+  private val oidcStates = new Collection[OidcState](dir, "oidc_states.json",
+    "", "", s => obj("id" := s.id, "state" := s.state,
+      "nonce" := seal(s.nonce), "code_verifier" := seal(s.codeVerifier),
+      "provider_id" := s.providerId, "redirect_uri" := s.redirectUri,
+      "created_at_ms" := s.createdAtMs, "expires_at_ms" := s.expiresAtMs),
+    rows => {
+      val now = clock()
+      rows.flatMap { r =>
+        val s = OidcState(r.str("id"), r.str("state"), r.str("nonce"),
+          r.str("code_verifier"), r.str("provider_id"), r.str("redirect_uri"),
+          r.long("created_at_ms"), r.long("expires_at_ms"))
+        if (s.expiresAtMs <= now) None
+        else scala.util.Try(s.copy(nonce = unseal(s.nonce),
+          codeVerifier = unseal(s.codeVerifier))).toOption
       }
-      case _ => Vector.empty
+    })
+
+  private def scalingRule(r: Row): ScalingRule =
+    ScalingRule(r.str("id"), r.str("metric"), r.str("operator"),
+      r.double("threshold"), r.long("duration_seconds"), r.int("scale_by"))
+
+  private val scaling = new ScalingFamily(Collection[ScalingPolicy](dir,
+    "scaling_policies.json", "scaling_policy", "scaling policy")(
+    scalingPolicyJson) { r =>
+    ScalingPolicy(r.str("id"), r.str("name"), r.str("target_type"),
+      r.int("min_replicas"), r.int("max_replicas"), r.long("cooldown_seconds"),
+      r.bool("scale_to_zero"), r.bool("enabled"),
+      r.rows("scale_up_rules").map(scalingRule),
+      r.rows("scale_down_rules").map(scalingRule),
+      r.long("created_at_ms"), r.long("updated_at_ms"))
+  }, "scaling_state.json", "scaling_history.json")
+
+  /** Keyed by policy id, stored as an array of rows. */
+  private val idleStates = new Store[Map[String, IdleState]](dir,
+    "idle_state.json", m => arr(m.values.toSeq)(s => obj(
+      "policy_id" := s.policyId, "last_activity_at_ms" := s.lastActivityAtMs,
+      "idle_since_ms" := s.idleSinceMs,
+      "scaled_to_zero_at_ms" := s.scaledToZeroAtMs,
+      "last_wake_at_ms" := s.lastWakeAtMs, "wake_reason" := s.wakeReason,
+      "is_scaled_to_zero" := s.isScaledToZero,
+      "created_at_ms" := s.createdAtMs, "updated_at_ms" := s.updatedAtMs)),
+    v => Row.rows("idle_state.json", v).map { r =>
+      r.str("policy_id") -> IdleState(r.str("policy_id"),
+        r.long("last_activity_at_ms"), r.optLong("idle_since_ms"),
+        r.optLong("scaled_to_zero_at_ms"), r.optLong("last_wake_at_ms"),
+        r.optStr("wake_reason"), r.bool("is_scaled_to_zero"),
+        r.long("created_at_ms"), r.long("updated_at_ms"))
+    }.toMap, Map.empty)
+
+  private val users = Collection[User](dir, "users.json", "user")(u =>
+    extend(userJson(u), "password_hash" := u.passwordHash,
+      "password_salt" := u.passwordSalt, "kdf_iterations" := u.kdfIterations)) { r =>
+    User(r.str("id"), r.str("email"), r.str("name"), r.str("role"),
+      r.bool("is_active"), r.optLong("last_login_at_ms"),
+      r.str("password_hash"), r.str("password_salt"), r.int("kdf_iterations"),
+      r.long("created_at_ms"), r.long("updated_at_ms"),
+      r.optStr("oidc_provider_id"), r.optStr("oidc_subject"),
+      r.strs("oidc_groups"))
+  }
+
+  private val sessions = Collection[Session](dir, "sessions.json")(s => obj(
+    "id" := s.id, "user_id" := s.userId, "token_hash" := s.tokenHash,
+    "expires_at_ms" := s.expiresAtMs, "created_at_ms" := s.createdAtMs)) { r =>
+    Session(r.str("id"), r.str("user_id"), r.str("token_hash"),
+      r.long("expires_at_ms"), r.long("created_at_ms"))
+  }
+
+  private val queryScaling = new ScalingFamily(
+    Collection[QueryScalingPolicy](dir, "query_scaling_policies.json",
+      "query_scaling_policy", "query scaling policy")(queryScalingPolicyJson) { r =>
+      QueryScalingPolicy(r.str("id"), r.str("name"), r.str("query_engine"),
+        r.bool("enabled"), r.int("min_replicas"), r.int("max_replicas"),
+        r.long("cooldown_seconds"), r.bool("scale_to_zero"),
+        r.int("queued_queries_threshold"), r.int("running_queries_threshold"),
+        r.int("latency_threshold_seconds"), r.long("created_at_ms"),
+        r.long("updated_at_ms"))
+    }, "query_scaling_state.json", "query_scaling_history.json")
+
+  /** One scaling family: its policies, per-policy evaluation state and
+    * capped decision history, three files. The generic and the
+    * query-engine families are two instances of this code. */
+  private final class ScalingFamily[P <: ScalingBounds](
+      val policies: Collection[P], stateFile: String, historyFile: String) {
+
+    val states = new Store[Map[String, ScalingPolicyState]](dir, stateFile,
+      m => JObject(m.toList.map { case (id, st) => id -> JObject(
+        List("current_replicas" := st.currentReplicas,
+          "last_scale_at_ms" := st.lastScaleAtMs) ++
+          (if (st.pendingSince.isEmpty) Nil
+           else List("pending_since" := st.pendingSince)))
+      }),
+      v => Row.keyed(stateFile, v).map { case (id, r) =>
+        id -> ScalingPolicyState(r.int("current_replicas"),
+          r.optLong("last_scale_at_ms"), r.longMap("pending_since"))
+      }.toMap, Map.empty)
+
+    val history = Collection[ScalingEvent](dir, historyFile)(scalingEventJson) { r =>
+      ScalingEvent(r.str("id"), r.str("policy_id"), r.str("action"),
+        r.int("from_replicas"), r.int("to_replicas"), r.str("reason"),
+        r.str("triggered_by"), r.long("at_ms"))
     }
 
-  private def loadPipelines(): Vector[Pipeline] =
-    readFile("pipelines.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        val tables = o \ "tables" match {
-          case JArray(ts) => ts.map(t => TableMapping(str(t \ "id"),
-            str(t \ "source_schema"), str(t \ "source_table"),
-            (t \ "enabled") == JBool(true)))
-          case _ => Nil
-        }
-        // a pipeline recorded running/starting by a PREVIOUS process is
-        // not running in THIS one — surface the truth, never a stale lie
-        val status0 = str(o \ "status")
-        val status = if (status0 == "running" || status0 == "starting" ||
-          status0 == "stopping") "stopped" else status0
-        Pipeline(str(o \ "id"), str(o \ "name"), str(o \ "source_id"),
-          status, str(o \ "error_message"), tables,
-          num(o \ "created_at_ms"), num(o \ "updated_at_ms"),
-          o \ "started_at_ms" match {
-            case JNull | JNothing => None; case v => Some(num(v)) },
-          o \ "stopped_at_ms" match {
-            case JNull | JNothing => None; case v => Some(num(v)) })
-      }
-      case _ => Vector.empty
+    /** The ONE missing-state fallback — the state endpoint and the
+      * evaluator never disagree about a width. Something runs before
+      * the first decision: the policy floor, but at least one replica
+      * even for scale-to-zero policies (zero is a DECISION, never the
+      * starting assumption). */
+    def initial(p: P): ScalingPolicyState =
+      ScalingPolicyState(math.max(p.minReplicas, 1), None, Map.empty)
+
+    def stateOf(p: P): ScalingPolicyState =
+      states.value.getOrElse(p.id, initial(p))
+
+    def create(p: P): P = {
+      policies.add(p)
+      states.set(states.value + (p.id -> initial(p)))
+      p
     }
+
+    /** Replace the policy and reconcile its state with it: clamp the
+      * width into the new bounds (a lowered ceiling must not leave the
+      * policy permanently above its own declared maximum — no rule can
+      * move it back inside) and drop pending clocks for rule ids that
+      * no longer exist (the evaluator only clears clocks for rules it
+      * reaches, so orphans would otherwise persist forever). */
+    def update(next: P): P = {
+      policies.replace(next)
+      val st = stateOf(next)
+      val lo = if (next.scaleToZero) 0 else next.minReplicas
+      states.set(states.value + (next.id -> st.copy(
+        currentReplicas =
+          math.max(lo, math.min(next.maxReplicas, st.currentReplicas)),
+        pendingSince = st.pendingSince.filter(kv => next.ruleIds(kv._1)))))
+      next
+    }
+
+    def delete(id: String): Unit = {
+      policies.remove(policies.get(id).id)
+      states.set(states.value - id)
+    }
+
+    /** A state identical to the stored one skips the file rewrite — the
+      * evaluation loop must not be a permanent background disk load. */
+    def putState(id: String, st: ScalingPolicyState): Unit =
+      if (!states.value.get(id).contains(st))
+        states.set(states.value + (id -> st))
+
+    /** Append + retention cap + persist — the ONE history write path.
+      * The cap exists because the loop makes growth autonomous and
+      * every append rewrites the whole file. */
+    def append(e: ScalingEvent): Unit =
+      history.set((history.value :+ e).takeRight(ScalingHistoryCap))
+
+    /** History is deliberately retained past policy deletion (it is the
+      * audit trail) — the per-policy view filters WITHOUT an existence
+      * check, so a deleted policy's rows stay fetchable both here and
+      * in the global listing; the two views never disagree. */
+    def historyOf(policyId: Option[String]): Seq[ScalingEvent] =
+      policyId.fold(history.value)(id => history.value.filter(_.policyId == id))
+  }
 
   private def validName(name: String): Unit = {
     if (name.isEmpty || name.length > 255)
@@ -602,47 +901,6 @@ final class ControlPlane(val metaDir: String,
   // ---- alert rules (ref internal/api/handlers/alerts.go:28-32 +
   // alert_repository.go — the reference persists rules and serves them
   // over /alerts/rules; evaluation reads the SAME store) --------------
-
-  private[api] def alertRuleJson(r: AlertRule): JObject = JObject(
-    "id" -> JString(r.id), "name" -> JString(r.name),
-    "description" -> JString(r.description),
-    "metric_name" -> JString(r.metricName),
-    "operator" -> JString(r.op),
-    "threshold" -> JDouble(r.threshold),
-    "duration_seconds" -> JInt(BigInt(r.durationSeconds)),
-    "severity" -> JString(r.severity),
-    "enabled" -> JBool(r.enabled),
-    "routes" -> JArray(r.routes.toList.map(rt => JObject(
-      "id" -> JString(rt.id), "channel_id" -> JString(rt.channel),
-      "enabled" -> JBool(rt.enabled),
-      "repeat_interval_seconds" -> JInt(BigInt(rt.repeatIntervalSeconds))))),
-    "created_at_ms" -> JInt(BigInt(r.createdAtMs)),
-    "updated_at_ms" -> JInt(BigInt(r.updatedAtMs)))
-
-  private def persistAlertRules(): Unit =
-    writeFile("alerts.json", JArray(alertRules.toList.map(alertRuleJson)))
-
-  private def loadAlertRules(): Vector[AlertRule] =
-    readFile("alerts.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        val routes = o \ "routes" match {
-          case JArray(rs) => rs.map(rt => AlertRoute(str(rt \ "id"),
-            str(rt \ "channel_id"), (rt \ "enabled") == JBool(true),
-            num(rt \ "repeat_interval_seconds")))
-          case _ => Nil
-        }
-        AlertRule(str(o \ "id"), str(o \ "name"), str(o \ "description"),
-          str(o \ "metric_name"), str(o \ "operator"),
-          o \ "threshold" match {
-            case JDouble(x) => x; case JInt(n) => n.toDouble
-            case JDecimal(x) => x.toDouble; case _ => 0.0
-          },
-          num(o \ "duration_seconds"), str(o \ "severity"),
-          (o \ "enabled") == JBool(true), routes,
-          num(o \ "created_at_ms"), num(o \ "updated_at_ms"))
-      }
-      case _ => Vector.empty
-    }
 
   private val AlertOps = Set("gt", "gte", "lt", "lte", "eq")
 
@@ -663,9 +921,7 @@ final class ControlPlane(val metaDir: String,
     if (routes.exists(_._3 < 0))
       throw Invalid("repeat_interval_seconds must be >= 0")
     // the reference's FK: routes reference REGISTERED channels
-    routes.map(_._1).distinct.foreach { ch =>
-      if (!channels.exists(_.id == ch)) throw NotFound("channel", ch)
-    }
+    routes.map(_._1).distinct.foreach(channels.get)
   }
 
   def createAlertRule(name: String, metricName: String, op: String,
@@ -678,21 +934,16 @@ final class ControlPlane(val metaDir: String,
       validAlertRuleName(name)
       validAlertFields(op, durationSeconds, routes)
       if (metricName.isEmpty) throw Invalid("metric_name is required")
-      if (alertRules.exists(_.name == name))
-        throw Conflict("alert rule with this name already exists")
+      alertRules.requireFreeName(name)
       val now = clock()
-      val r = AlertRule(newId(), name, description, metricName, op, threshold,
-        durationSeconds, severity, enabled,
-        routes.map(rt => AlertRoute(newId(), rt._1, rt._2, rt._3)), now, now)
-      alertRules :+= r
-      persistAlertRules()
-      r
+      alertRules.add(AlertRule(newId(), name, description, metricName, op,
+        threshold, durationSeconds, severity, enabled,
+        routes.map(rt => AlertRoute(newId(), rt._1, rt._2, rt._3)), now, now))
     }
 
-  def listAlertRules(): Seq[AlertRule] = lock.synchronized(alertRules)
+  def listAlertRules(): Seq[AlertRule] = lock.synchronized(alertRules.value)
 
-  def getAlertRule(id: String): AlertRule = lock.synchronized(
-    alertRules.find(_.id == id).getOrElse(throw NotFound("alert_rule", id)))
+  def getAlertRule(id: String): AlertRule = lock.synchronized(alertRules.get(id))
 
   /** Full update, the reference's PUT semantics: every field replaces.
     * Routes keep their ids when (channel, interval) survive unchanged —
@@ -706,9 +957,8 @@ final class ControlPlane(val metaDir: String,
       validAlertRuleName(name)
       validAlertFields(op, durationSeconds, routes)
       if (metricName.isEmpty) throw Invalid("metric_name is required")
-      val r = getAlertRule(id)
-      if (alertRules.exists(x => x.name == name && x.id != id))
-        throw Conflict("alert rule with this name already exists")
+      val r = alertRules.get(id)
+      alertRules.requireFreeName(name, except = id)
       // each surviving route id is consumed at most once — a PUT
       // carrying two routes with the same (channel, interval) gets one
       // re-keyed id and one fresh one, never the same id twice
@@ -720,19 +970,14 @@ final class ControlPlane(val metaDir: String,
           case i  => remaining.remove(i).copy(enabled = rt._2)
         }
       }
-      val next = r.copy(name = name, description = description,
+      alertRules.replace(r.copy(name = name, description = description,
         metricName = metricName, op = op, threshold = threshold,
         durationSeconds = durationSeconds, severity = severity,
-        enabled = enabled, routes = nextRoutes, updatedAtMs = clock())
-      alertRules = alertRules.map(x => if (x.id == id) next else x)
-      persistAlertRules()
-      next
+        enabled = enabled, routes = nextRoutes, updatedAtMs = clock()))
     }
 
   def deleteAlertRule(id: String): Unit = lock.synchronized {
-    val r = getAlertRule(id)
-    alertRules = alertRules.filterNot(_.id == r.id)
-    persistAlertRules()
+    alertRules.remove(alertRules.get(id).id)
   }
 
   /** The evaluator wiring: the store's ENABLED rules in
@@ -741,7 +986,7 @@ final class ControlPlane(val metaDir: String,
     * rule set from the repository each cycle. */
   def evaluatorRules(): (Seq[graft.observe.Alerts.Rule],
                          Seq[graft.observe.Alerts.Route]) = lock.synchronized {
-    val enabled = alertRules.filter(_.enabled)
+    val enabled = alertRules.value.filter(_.enabled)
     (enabled.map(r => graft.observe.Alerts.Rule(r.name, r.op, r.threshold)),
       enabled.flatMap(r => r.routes.map(rt => graft.observe.Alerts.Route(
         r.name, rt.channel, rt.enabled, rt.repeatIntervalSeconds * 1000L))))
@@ -752,78 +997,42 @@ final class ControlPlane(val metaDir: String,
 
   private val ChannelTypes = Set("email", "slack", "webhook", "pagerduty")
 
-  private[api] def channelJson(c: Channel): JObject = JObject(
-    "id" -> JString(c.id), "name" -> JString(c.name),
-    "type" -> JString(c.typ), "enabled" -> JBool(c.enabled),
-    "config" -> JObject(c.config.toList.sortBy(_._1)
-      .map { case (k, v) => k -> (JString(v): JValue) }),
-    "created_at_ms" -> JInt(BigInt(c.createdAtMs)),
-    "updated_at_ms" -> JInt(BigInt(c.updatedAtMs)))
-
-  private def persistChannels(): Unit =
-    writeFile("channels.json", JArray(channels.toList.map(channelJson)))
-
-  private def loadChannels(): Vector[Channel] =
-    readFile("channels.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        val config = o \ "config" match {
-          case JObject(fields) => fields.collect {
-            case (k, JString(v)) => k -> v
-          }.toMap
-          case _ => Map.empty[String, String]
-        }
-        Channel(str(o \ "id"), str(o \ "name"), str(o \ "type"),
-          (o \ "enabled") == JBool(true), config,
-          num(o \ "created_at_ms"), num(o \ "updated_at_ms"))
-      }
-      case _ => Vector.empty
-    }
+  private def validChannelType(typ: String): Unit =
+    if (!ChannelTypes.contains(typ))
+      throw Invalid(s"channel type must be one of " +
+        ChannelTypes.toSeq.sorted.mkString("/"))
 
   def createChannel(name: String, typ: String, enabled: Boolean = true,
                     config: Map[String, String] = Map.empty): Channel =
     lock.synchronized {
       validName(name)
-      if (!ChannelTypes.contains(typ))
-        throw Invalid(s"channel type must be one of " +
-          ChannelTypes.toSeq.sorted.mkString("/"))
-      if (channels.exists(_.name == name))
-        throw Conflict("channel with this name already exists")
+      validChannelType(typ)
+      channels.requireFreeName(name)
       val now = clock()
-      val c = Channel(newId(), name, typ, enabled, config, now, now)
-      channels :+= c
-      persistChannels()
-      c
+      channels.add(Channel(newId(), name, typ, enabled, config, now, now))
     }
 
-  def listChannels(): Seq[Channel] = lock.synchronized(channels)
+  def listChannels(): Seq[Channel] = lock.synchronized(channels.value)
 
-  def getChannel(id: String): Channel = lock.synchronized(
-    channels.find(_.id == id).getOrElse(throw NotFound("channel", id)))
+  def getChannel(id: String): Channel = lock.synchronized(channels.get(id))
 
   def updateChannel(id: String, name: String, typ: String,
                     enabled: Boolean, config: Map[String, String]): Channel =
     lock.synchronized {
       validName(name)
-      if (!ChannelTypes.contains(typ))
-        throw Invalid(s"channel type must be one of " +
-          ChannelTypes.toSeq.sorted.mkString("/"))
-      val c = getChannel(id)
-      if (channels.exists(x => x.name == name && x.id != id))
-        throw Conflict("channel with this name already exists")
-      val next = c.copy(name = name, typ = typ, enabled = enabled,
-        config = config, updatedAtMs = clock())
-      channels = channels.map(x => if (x.id == id) next else x)
-      persistChannels()
-      next
+      validChannelType(typ)
+      val c = channels.get(id)
+      channels.requireFreeName(name, except = id)
+      channels.replace(c.copy(name = name, typ = typ, enabled = enabled,
+        config = config, updatedAtMs = clock()))
     }
 
   /** The reference's FK: a channel a rule still routes to cannot go. */
   def deleteChannel(id: String): Unit = lock.synchronized {
-    val c = getChannel(id)
-    if (alertRules.exists(_.routes.exists(_.channel == c.id)))
+    val c = channels.get(id)
+    if (alertRules.value.exists(_.routes.exists(_.channel == c.id)))
       throw Conflict("cannot delete a channel referenced by alert routes")
-    channels = channels.filterNot(_.id == c.id)
-    persistChannels()
+    channels.remove(c.id)
   }
 
   // ---- OIDC providers (ref internal/api/handlers/oidc.go:160-360 —
@@ -835,124 +1044,6 @@ final class ControlPlane(val metaDir: String,
 
   private val OidcProviderTypes =
     Set("google", "azure", "okta", "auth0", "generic")
-
-  /** Response shape: the client secret NEVER renders (the reference's
-    * `json:"-"` on ClientSecretEncrypted). */
-  private[api] def oidcProviderJson(p: OidcProvider): JObject = JObject(
-    "id" -> JString(p.id), "name" -> JString(p.name),
-    "display_name" -> JString(p.displayName),
-    "provider_type" -> JString(p.providerType),
-    "issuer_url" -> JString(p.issuerUrl),
-    "client_id" -> JString(p.clientId),
-    "scopes" -> JArray(p.scopes.toList.map(JString(_))),
-    "groups_claim" -> JString(p.groupsClaim),
-    "role_mapping" -> JObject(p.roleMapping.toList.sortBy(_._1)
-      .map { case (g, r) => g -> (JString(r): JValue) }),
-    "default_role" -> JString(p.defaultRole),
-    "enabled" -> JBool(p.enabled),
-    "auto_create_users" -> JBool(p.autoCreateUsers),
-    "created_at_ms" -> JInt(BigInt(p.createdAtMs)),
-    "updated_at_ms" -> JInt(BigInt(p.updatedAtMs)))
-
-  /** The login page's PRE-AUTH listing (ref ListEnabledProviders →
-    * OIDCProviderSummary): identity and display fields only. */
-  private[api] def oidcProviderSummaryJson(p: OidcProvider): JObject = JObject(
-    "id" -> JString(p.id), "name" -> JString(p.name),
-    "display_name" -> JString(p.displayName),
-    "provider_type" -> JString(p.providerType))
-
-  private def oidcProviderStoreJson(p: OidcProvider): JObject = {
-    val stored = credentialKey match {
-      case Some(k) if p.clientSecret.nonEmpty =>
-        CredentialCrypto.encrypt(k, p.clientSecret)
-      case _ if markerCollision(p.clientSecret) =>
-        ControlPlane.PlainMarker + p.clientSecret
-      case _ => p.clientSecret
-    }
-    JObject(oidcProviderJson(p).obj :+
-      ("client_secret" -> (JString(stored): JValue)))
-  }
-
-  private def persistOidcProviders(): Unit =
-    writeFile("oidc_providers.json",
-      JArray(oidcProviders.toList.map(oidcProviderStoreJson)))
-
-  private def loadOidcProviders(): Vector[OidcProvider] =
-    readFile("oidc_providers.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        OidcProvider(str(o \ "id"), str(o \ "name"),
-          str(o \ "display_name"), str(o \ "provider_type"),
-          str(o \ "issuer_url"), str(o \ "client_id"),
-          storedPassword(str(o \ "client_secret")),
-          o \ "scopes" match {
-            case JArray(ss) => ss.collect { case JString(x) => x }
-            case _          => Nil
-          },
-          str(o \ "groups_claim"),
-          o \ "role_mapping" match {
-            case JObject(fs) => fs.collect {
-              case (g, JString(r)) => g -> r
-            }.toMap
-            case _ => Map.empty[String, String]
-          },
-          // pre-role-mapping stores carry no default_role; the
-          // reference's ApplyDefaults picks viewer
-          str(o \ "default_role") match {
-            case "" => "viewer"
-            case r  => r
-          },
-          (o \ "enabled") == JBool(true),
-          (o \ "auto_create_users") == JBool(true),
-          num(o \ "created_at_ms"), num(o \ "updated_at_ms"))
-      }
-      case _ => Vector.empty
-    }
-
-  /** In-flight states persist so a restart keeps pending logins
-    * redeemable (the reference stores OIDCState rows in its control
-    * DB) — but the nonce and PKCE verifier are REDEEMING secrets: with
-    * them plus the state, a reader of the meta dir can complete an
-    * in-flight login within the TTL. They go through the same at-rest
-    * encryption as source passwords and client secrets; the state
-    * itself is the front-channel handle (it travels in the authorize
-    * URL) and stays plain. */
-  private def persistOidcStates(): Unit = {
-    def seal(v: String): String = credentialKey match {
-      case Some(k) if v.nonEmpty   => CredentialCrypto.encrypt(k, v)
-      case _ if markerCollision(v) => ControlPlane.PlainMarker + v
-      case _                       => v
-    }
-    writeFile("oidc_states.json", JArray(oidcStates.toList.map(s => JObject(
-      "id" -> JString(s.id), "state" -> JString(s.state),
-      "nonce" -> JString(seal(s.nonce)),
-      "code_verifier" -> JString(seal(s.codeVerifier)),
-      "provider_id" -> JString(s.providerId),
-      "redirect_uri" -> JString(s.redirectUri),
-      "created_at_ms" -> JInt(BigInt(s.createdAtMs)),
-      "expires_at_ms" -> JInt(BigInt(s.expiresAtMs))))))
-  }
-
-  /** Unlike source passwords — long-lived credentials that must refuse
-    * loudly when the store is encrypted and the key is gone — in-flight
-    * OIDC states are 10-minute ephemera: a state that is expired, or
-    * whose sealed nonce/verifier can no longer be decrypted (key unset
-    * or rotated), is safely discardable, and throwing here would brick
-    * the whole ControlPlane load over a login the user can just retry. */
-  private def loadOidcStates(): Vector[OidcState] =
-    readFile("oidc_states.json") match {
-      case Some(JArray(items)) =>
-        val now = clock()
-        items.toVector.flatMap { o =>
-          if (num(o \ "expires_at_ms") <= now) None
-          else scala.util.Try(OidcState(str(o \ "id"), str(o \ "state"),
-            storedPassword(str(o \ "nonce")),
-            storedPassword(str(o \ "code_verifier")),
-            str(o \ "provider_id"),
-            str(o \ "redirect_uri"),
-            num(o \ "created_at_ms"), num(o \ "expires_at_ms"))).toOption
-        }
-      case _ => Vector.empty
-    }
 
   private def validOidcFields(providerType: String, issuerUrl: String,
                               clientId: String): Unit = {
@@ -996,30 +1087,25 @@ final class ControlPlane(val metaDir: String,
       // ref ApplyDefaults: absent default_role = viewer
       val dRole = if (defaultRole.isEmpty) "viewer" else defaultRole
       validRoleMapping(roleMapping, dRole)
-      if (oidcProviders.exists(_.name == name))
-        throw Conflict("OIDC provider with this name already exists")
+      oidcProviders.requireFreeName(name)
       val now = clock()
       // the registry's defaults (ref internal/oidc/providers/
       // registry.go ApplyDefaults): the standard OIDC scopes when none
       // declared, the conventional groups claim
-      val p = OidcProvider(newId(), name,
+      oidcProviders.add(OidcProvider(newId(), name,
         if (displayName.isEmpty) name else displayName, providerType,
         issuerUrl.stripSuffix("/"), clientId, clientSecret,
         if (scopes.isEmpty) Seq("openid", "profile", "email") else scopes,
         if (groupsClaim.isEmpty) "groups" else groupsClaim,
         roleMapping, dRole,
-        enabled, autoCreateUsers, now, now)
-      oidcProviders :+= p
-      persistOidcProviders()
-      p
+        enabled, autoCreateUsers, now, now))
     }
 
   def listOidcProviders(): Seq[OidcProvider] =
-    lock.synchronized(oidcProviders)
+    lock.synchronized(oidcProviders.value)
 
-  def getOidcProvider(id: String): OidcProvider = lock.synchronized(
-    oidcProviders.find(_.id == id)
-      .getOrElse(throw NotFound("oidc_provider", id)))
+  def getOidcProvider(id: String): OidcProvider =
+    lock.synchronized(oidcProviders.get(id))
 
   /** Full update (the reference's PUT); an ABSENT client_secret keeps
     * the stored one — secrets round-trip write-only. */
@@ -1036,9 +1122,8 @@ final class ControlPlane(val metaDir: String,
       validOidcFields(providerType, issuerUrl, clientId)
       // boolean keep-if-absent resolves against the STORED row under
       // THIS lock — never against a row read in an earlier request
-      val p = getOidcProvider(id)
-      if (oidcProviders.exists(x => x.name == name && x.id != id))
-        throw Conflict("OIDC provider with this name already exists")
+      val p = oidcProviders.get(id)
+      oidcProviders.requireFreeName(name, except = id)
       val dRole = if (defaultRole.isEmpty) p.defaultRole else defaultRole
       val mapping = roleMapping.getOrElse(p.roleMapping)
       validRoleMapping(mapping, dRole)
@@ -1054,35 +1139,29 @@ final class ControlPlane(val metaDir: String,
         enabled = enabled.getOrElse(p.enabled),
         autoCreateUsers = autoCreateUsers.getOrElse(p.autoCreateUsers),
         updatedAtMs = clock())
-      oidcProviders = oidcProviders.map(x => if (x.id == id) next else x)
       // disabling an issuer is a security action: in-flight logins
       // minted while it was enabled must not complete (the callback
       // also re-checks enabled — defense in both layers)
-      if (p.enabled && !next.enabled &&
-        oidcStates.exists(_.providerId == id)) {
-        oidcStates = oidcStates.filterNot(_.providerId == id)
-        persistOidcStates()
-      }
-      persistOidcProviders()
-      next
+      if (p.enabled && !next.enabled) dropOidcStates(id)
+      oidcProviders.replace(next)
     }
 
   def deleteOidcProvider(id: String): Unit = lock.synchronized {
-    val p = getOidcProvider(id)
-    oidcProviders = oidcProviders.filterNot(_.id == p.id)
+    val p = oidcProviders.get(id)
     // in-flight logins against a deleted issuer must not complete
-    if (oidcStates.exists(_.providerId == p.id)) {
-      oidcStates = oidcStates.filterNot(_.providerId == p.id)
-      persistOidcStates()
-    }
-    persistOidcProviders()
+    dropOidcStates(p.id)
+    oidcProviders.remove(p.id)
   }
+
+  private def dropOidcStates(providerId: String): Unit =
+    if (oidcStates.value.exists(_.providerId == providerId))
+      oidcStates.set(oidcStates.value.filterNot(_.providerId == providerId))
 
   /** ref repositories/oidc.go GetProviderByName — the authorize
     * route addresses providers by NAME (the login page's handle),
     * not id. */
   def getOidcProviderByName(name: String): OidcProvider =
-    lock.synchronized(oidcProviders.find(_.name == name)
+    lock.synchronized(oidcProviders.value.find(_.name == name)
       .getOrElse(throw NotFound("oidc_provider", name)))
 
   // ---- OIDC login states (ref services/oidc.go:86-160
@@ -1107,9 +1186,8 @@ final class ControlPlane(val metaDir: String,
       val s = OidcState(newId(), randomToken(32), randomToken(32),
         randomToken(48), providerId, redirectUri,
         now, now + ControlPlane.OidcStateTtlMs)
-      oidcStates = (oidcStates.filter(_.expiresAtMs > now) :+ s)
-        .sortBy(_.createdAtMs).takeRight(ControlPlane.MaxOidcStates)
-      persistOidcStates()
+      oidcStates.set((oidcStates.value.filter(_.expiresAtMs > now) :+ s)
+        .sortBy(_.createdAtMs).takeRight(ControlPlane.MaxOidcStates))
       s
     }
 
@@ -1119,28 +1197,25 @@ final class ControlPlane(val metaDir: String,
     * an expired or unknown state is None. */
   def consumeOidcState(state: String): Option[OidcState] =
     lock.synchronized {
-      val found = oidcStates.find(_.state == state)
-      found.foreach { _ =>
-        oidcStates = oidcStates.filterNot(_.state == state)
-        persistOidcStates()
-      }
+      val found = oidcStates.value.find(_.state == state)
+      found.foreach(s => oidcStates.remove(s.id))
       found.filter(_.expiresAtMs > clock())
     }
 
   /** Snapshot of the in-flight login states (test hook). */
   private[api] def listOidcStates: Vector[OidcState] =
-    lock.synchronized(oidcStates)
+    lock.synchronized(oidcStates.value)
 
   /** ref services/oidc.go:410-419 CleanupExpiredStates. */
   def cleanupExpiredOidcStates(): Int = lock.synchronized {
     val now = clock()
-    val (live, dead) = oidcStates.partition(_.expiresAtMs > now)
-    if (dead.nonEmpty) { oidcStates = live; persistOidcStates() }
+    val (live, dead) = oidcStates.value.partition(_.expiresAtMs > now)
+    if (dead.nonEmpty) oidcStates.set(live)
     dead.size
   }
 
   private[api] def countOidcStates(): Int =
-    lock.synchronized(oidcStates.size)
+    lock.synchronized(oidcStates.value.size)
 
   // ---- scaling policies (ref internal/api/handlers/scaling.go:27-42
   // — the /scaling/policies CRUD + enable/disable/evaluate/state and
@@ -1152,151 +1227,6 @@ final class ControlPlane(val metaDir: String,
   private val ScalingTargetTypes =
     Set("cdc-worker", "trino", "risingwave", "nodes")
 
-  private def scalingRuleJson(r: ScalingRule): JObject = JObject(
-    "id" -> JString(r.id), "metric" -> JString(r.metric),
-    "operator" -> JString(r.op), "threshold" -> JDouble(r.threshold),
-    "duration_seconds" -> JInt(BigInt(r.durationSeconds)),
-    "scale_by" -> JInt(r.scaleBy))
-
-  private[api] def scalingPolicyJson(p: ScalingPolicy): JObject = JObject(
-    "id" -> JString(p.id), "name" -> JString(p.name),
-    "target_type" -> JString(p.targetType),
-    "min_replicas" -> JInt(p.minReplicas),
-    "max_replicas" -> JInt(p.maxReplicas),
-    "cooldown_seconds" -> JInt(BigInt(p.cooldownSeconds)),
-    "scale_to_zero" -> JBool(p.scaleToZero),
-    "enabled" -> JBool(p.enabled),
-    "scale_up_rules" -> JArray(p.scaleUpRules.toList.map(scalingRuleJson)),
-    "scale_down_rules" -> JArray(p.scaleDownRules.toList.map(scalingRuleJson)),
-    "created_at_ms" -> JInt(BigInt(p.createdAtMs)),
-    "updated_at_ms" -> JInt(BigInt(p.updatedAtMs)))
-
-  private[api] def scalingEventJson(e: ScalingEvent): JObject = JObject(
-    "id" -> JString(e.id), "policy_id" -> JString(e.policyId),
-    "action" -> JString(e.action),
-    "from_replicas" -> JInt(e.fromReplicas),
-    "to_replicas" -> JInt(e.toReplicas),
-    "reason" -> JString(e.reason),
-    "triggered_by" -> JString(e.triggeredBy),
-    "at_ms" -> JInt(BigInt(e.atMs)))
-
-  private def persistScalingPolicies(): Unit =
-    writeFile("scaling_policies.json",
-      JArray(scalingPolicies.toList.map(scalingPolicyJson)))
-
-  private def persistScalingStates(): Unit =
-    writeFile("scaling_state.json", JObject(scalingStates.toList.map {
-      case (id, st) => id -> (JObject(
-        "current_replicas" -> JInt(st.currentReplicas),
-        "last_scale_at_ms" -> st.lastScaleAtMs
-          .map(t => JInt(BigInt(t)): JValue).getOrElse(JNull),
-        "pending_since" -> JObject(st.pendingSince.toList.map {
-          case (k, v) => k -> (JInt(BigInt(v)): JValue)
-        })): JValue)
-    }))
-
-  private def persistScalingHistory(): Unit =
-    writeFile("scaling_history.json",
-      JArray(scalingHistory.toList.map(scalingEventJson)))
-
-  /** The API view (ref models/wake.go IdleStateResponse — duration is
-    * computed at read time off the injected clock). */
-  private[api] def idleStateJson(s: IdleState): JObject = JObject(
-    "policy_id" -> JString(s.policyId),
-    "last_activity_at_ms" -> JInt(BigInt(s.lastActivityAtMs)),
-    "idle_since_ms" -> optL(s.idleSinceMs),
-    "idle_duration_secs" ->
-      JInt(BigInt(math.max(0L, clock() - s.lastActivityAtMs) / 1000L)),
-    "is_scaled_to_zero" -> JBool(s.isScaledToZero),
-    "scaled_to_zero_at_ms" -> optL(s.scaledToZeroAtMs),
-    "last_wake_at_ms" -> optL(s.lastWakeAtMs),
-    "wake_reason" -> s.wakeReason.map(JString(_): JValue).getOrElse(JNull))
-
-  private def persistIdleStates(): Unit =
-    writeFile("idle_state.json", JArray(idleStates.values.toList.map(s =>
-      JObject(
-        "policy_id" -> JString(s.policyId),
-        "last_activity_at_ms" -> JInt(BigInt(s.lastActivityAtMs)),
-        "idle_since_ms" -> optL(s.idleSinceMs),
-        "scaled_to_zero_at_ms" -> optL(s.scaledToZeroAtMs),
-        "last_wake_at_ms" -> optL(s.lastWakeAtMs),
-        "wake_reason" -> s.wakeReason.map(JString(_): JValue).getOrElse(JNull),
-        "is_scaled_to_zero" -> JBool(s.isScaledToZero),
-        "created_at_ms" -> JInt(BigInt(s.createdAtMs)),
-        "updated_at_ms" -> JInt(BigInt(s.updatedAtMs))))))
-
-  private def loadIdleStates(): Map[String, IdleState] =
-    readFile("idle_state.json") match {
-      case Some(JArray(items)) => items.map { o =>
-        val s = IdleState(str(o \ "policy_id"),
-          num(o \ "last_activity_at_ms"),
-          loadOptL(o \ "idle_since_ms"),
-          loadOptL(o \ "scaled_to_zero_at_ms"),
-          loadOptL(o \ "last_wake_at_ms"),
-          o \ "wake_reason" match {
-            case JString(x) => Some(x); case _ => None },
-          (o \ "is_scaled_to_zero") == JBool(true),
-          num(o \ "created_at_ms"), num(o \ "updated_at_ms"))
-        s.policyId -> s
-      }.toMap
-      case _ => Map.empty
-    }
-
-  private def loadScalingRule(v: JValue): ScalingRule =
-    ScalingRule(str(v \ "id"), str(v \ "metric"), str(v \ "operator"),
-      v \ "threshold" match {
-        case JDouble(x) => x; case JInt(n) => n.toDouble
-        case JDecimal(x) => x.toDouble; case _ => 0.0
-      },
-      num(v \ "duration_seconds"),
-      (v \ "scale_by") match { case JInt(n) => n.toInt; case _ => 0 })
-
-  private def loadScalingPolicies(): Vector[ScalingPolicy] =
-    readFile("scaling_policies.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        def rules(k: String): Seq[ScalingRule] = o \ k match {
-          case JArray(rs) => rs.map(loadScalingRule)
-          case _          => Nil
-        }
-        ScalingPolicy(str(o \ "id"), str(o \ "name"),
-          str(o \ "target_type"),
-          num(o \ "min_replicas").toInt, num(o \ "max_replicas").toInt,
-          num(o \ "cooldown_seconds"),
-          (o \ "scale_to_zero") == JBool(true),
-          (o \ "enabled") == JBool(true),
-          rules("scale_up_rules"), rules("scale_down_rules"),
-          num(o \ "created_at_ms"), num(o \ "updated_at_ms"))
-      }
-      case _ => Vector.empty
-    }
-
-  private def loadScalingStates(): Map[String, ScalingPolicyState] =
-    readFile("scaling_state.json") match {
-      case Some(JObject(fields)) => fields.map { case (id, v) =>
-        id -> ScalingPolicyState(
-          num(v \ "current_replicas").toInt,
-          loadOptL(v \ "last_scale_at_ms"),
-          v \ "pending_since" match {
-            case JObject(ps) => ps.collect {
-              case (k, JInt(n)) => k -> n.toLong
-            }.toMap
-            case _ => Map.empty
-          })
-      }.toMap
-      case _ => Map.empty
-    }
-
-  private def loadScalingHistory(): Vector[ScalingEvent] =
-    readFile("scaling_history.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        ScalingEvent(str(o \ "id"), str(o \ "policy_id"),
-          str(o \ "action"), num(o \ "from_replicas").toInt,
-          num(o \ "to_replicas").toInt, str(o \ "reason"),
-          str(o \ "triggered_by"), num(o \ "at_ms"))
-      }
-      case _ => Vector.empty
-    }
-
   private def validScalingFields(targetType: String, minReplicas: Int,
                                  maxReplicas: Int, cooldownSeconds: Long,
                                  up: Seq[(String, String, Double, Long, Int)],
@@ -1305,11 +1235,7 @@ final class ControlPlane(val metaDir: String,
     if (!ScalingTargetTypes.contains(targetType))
       throw Invalid(s"target_type must be one of " +
         ScalingTargetTypes.toSeq.sorted.mkString("/"))
-    if (minReplicas < 0) throw Invalid("min_replicas must be >= 0")
-    if (maxReplicas < 1) throw Invalid("max_replicas must be >= 1")
-    if (minReplicas > maxReplicas)
-      throw Invalid("min_replicas cannot be greater than max_replicas")
-    if (cooldownSeconds < 0) throw Invalid("cooldown_seconds must be >= 0")
+    validReplicaBounds(minReplicas, maxReplicas, cooldownSeconds)
     (up ++ down).foreach { case (metric, op, _, dur, scaleBy) =>
       if (metric.isEmpty) throw Invalid("scaling rule requires a metric")
       if (!AlertOps.contains(op))
@@ -1321,6 +1247,15 @@ final class ControlPlane(val metaDir: String,
       // sign from which list the rule sits in
       if (scaleBy <= 0) throw Invalid("scale_by must be > 0")
     }
+  }
+
+  private def validReplicaBounds(minReplicas: Int, maxReplicas: Int,
+                                 cooldownSeconds: Long): Unit = {
+    if (minReplicas < 0) throw Invalid("min_replicas must be >= 0")
+    if (maxReplicas < 1) throw Invalid("max_replicas must be >= 1")
+    if (minReplicas > maxReplicas)
+      throw Invalid("min_replicas cannot be greater than max_replicas")
+    if (cooldownSeconds < 0) throw Invalid("cooldown_seconds must be >= 0")
   }
 
   /** Rule tuples: (metric, operator, threshold, durationSeconds,
@@ -1336,31 +1271,20 @@ final class ControlPlane(val metaDir: String,
     validName(name)
     validScalingFields(targetType, minReplicas, maxReplicas,
       cooldownSeconds, scaleUpRules, scaleDownRules)
-    if (scalingPolicies.exists(_.name == name))
-      throw Conflict("scaling policy with this name already exists")
+    scaling.policies.requireFreeName(name)
     val now = clock()
     def mk(rs: Seq[(String, String, Double, Long, Int)]): Seq[ScalingRule] =
       rs.map(r => ScalingRule(newId(), r._1, r._2, r._3, r._4, r._5))
-    val p = ScalingPolicy(newId(), name, targetType, minReplicas,
+    scaling.create(ScalingPolicy(newId(), name, targetType, minReplicas,
       maxReplicas, cooldownSeconds, scaleToZero, enabled,
-      mk(scaleUpRules), mk(scaleDownRules), now, now)
-    scalingPolicies :+= p
-    // initial width: something runs before the first decision — the
-    // policy floor, but at least one replica even for scale-to-zero
-    // policies (zero is a DECISION, never the starting assumption)
-    scalingStates += p.id ->
-      ScalingPolicyState(math.max(minReplicas, 1), None, Map.empty)
-    persistScalingPolicies(); persistScalingStates()
-    p
+      mk(scaleUpRules), mk(scaleDownRules), now, now))
   }
 
   def listScalingPolicies(enabledOnly: Boolean = false): Seq[ScalingPolicy] =
-    lock.synchronized(
-      if (enabledOnly) scalingPolicies.filter(_.enabled) else scalingPolicies)
+    lock.synchronized(scaling.policies.value.filter(p => !enabledOnly || p.enabled))
 
-  def getScalingPolicy(id: String): ScalingPolicy = lock.synchronized(
-    scalingPolicies.find(_.id == id)
-      .getOrElse(throw NotFound("scaling_policy", id)))
+  def getScalingPolicy(id: String): ScalingPolicy =
+    lock.synchronized(scaling.policies.get(id))
 
   /** Full update; rule ids survive for unchanged (metric, op,
     * threshold, duration, scaleBy) tuples, each consumed at most once
@@ -1378,9 +1302,8 @@ final class ControlPlane(val metaDir: String,
       cooldownSeconds, scaleUpRules, scaleDownRules)
     // boolean keep-if-absent resolves against the STORED row under
     // THIS lock — never against a row read in an earlier request
-    val p = getScalingPolicy(id)
-    if (scalingPolicies.exists(x => x.name == name && x.id != id))
-      throw Conflict("scaling policy with this name already exists")
+    val p = scaling.policies.get(id)
+    scaling.policies.requireFreeName(name, except = id)
     def rekey(existing: Seq[ScalingRule],
               rs: Seq[(String, String, Double, Long, Int)]): Seq[ScalingRule] = {
       val remaining = scala.collection.mutable.ArrayBuffer.from(existing)
@@ -1393,65 +1316,31 @@ final class ControlPlane(val metaDir: String,
         }
       }
     }
-    val next = p.copy(name = name, targetType = targetType,
+    scaling.update(p.copy(name = name, targetType = targetType,
       minReplicas = minReplicas, maxReplicas = maxReplicas,
       cooldownSeconds = cooldownSeconds,
       scaleToZero = scaleToZero.getOrElse(p.scaleToZero),
       enabled = enabled.getOrElse(p.enabled),
       scaleUpRules = rekey(p.scaleUpRules, scaleUpRules),
       scaleDownRules = rekey(p.scaleDownRules, scaleDownRules),
-      updatedAtMs = clock())
-    scalingPolicies = scalingPolicies.map(x => if (x.id == id) next else x)
-    // reconcile persisted state with the NEW policy: clamp the width
-    // into the new bounds (a lowered ceiling must not leave the policy
-    // permanently above its own declared maximum — no rule can move it
-    // back inside) and drop pending clocks for rule ids that no longer
-    // exist (the evaluator only clears clocks for rules it reaches, so
-    // orphans would otherwise persist forever)
-    val liveRuleIds =
-      (next.scaleUpRules ++ next.scaleDownRules).map(_.id).toSet
-    val st = scalingStates.getOrElse(id, defaultScalingState(next))
-    val lo = if (next.scaleToZero) 0 else next.minReplicas
-    scalingStates += id -> st.copy(
-      currentReplicas =
-        math.max(lo, math.min(next.maxReplicas, st.currentReplicas)),
-      pendingSince = st.pendingSince.filter(kv => liveRuleIds(kv._1)))
-    persistScalingPolicies(); persistScalingStates()
-    next
+      updatedAtMs = clock()))
   }
 
   def deleteScalingPolicy(id: String): Unit = lock.synchronized {
-    val p = getScalingPolicy(id)
-    scalingPolicies = scalingPolicies.filterNot(_.id == p.id)
-    scalingStates -= p.id
-    persistScalingPolicies(); persistScalingStates()
+    scaling.delete(id)
     // the idle row goes with the policy (ref detector.RemovePolicy) —
     // create/delete churn must not accrete orphans in idle_state.json
-    if (idleStates.contains(p.id)) {
-      idleStates -= p.id
-      persistIdleStates()
-    }
+    if (idleStates.value.contains(id)) idleStates.set(idleStates.value - id)
   }
 
   def setScalingPolicyEnabled(id: String, enabled: Boolean): ScalingPolicy =
     lock.synchronized {
-      val p = getScalingPolicy(id)
-      val next = p.copy(enabled = enabled, updatedAtMs = clock())
-      scalingPolicies = scalingPolicies.map(x => if (x.id == id) next else x)
-      persistScalingPolicies()
-      next
+      val p = scaling.policies.get(id)
+      scaling.policies.replace(p.copy(enabled = enabled, updatedAtMs = clock()))
     }
-
-  /** The ONE missing-state fallback — the state endpoint and the
-    * evaluator must never disagree about a policy's width. */
-  private def defaultScalingState(p: ScalingPolicy): ScalingPolicyState =
-    ScalingPolicyState(math.max(p.minReplicas, 1), None, Map.empty)
 
   def getScalingPolicyState(id: String): ScalingPolicyState =
-    lock.synchronized {
-      val p = getScalingPolicy(id)
-      scalingStates.getOrElse(id, defaultScalingState(p))
-    }
+    lock.synchronized(scaling.stateOf(scaling.policies.get(id)))
 
   /** One evaluation tick (the reference's POST .../evaluate → the
     * evaluator.go loop): run [[graft.observe.Scaling.evaluatePolicy]]
@@ -1464,7 +1353,7 @@ final class ControlPlane(val metaDir: String,
                             persist: Boolean = true)
   : graft.observe.Scaling.Decision = lock.synchronized {
     import graft.observe.Scaling
-    val p = getScalingPolicy(id)
+    val p = scaling.policies.get(id)
     if (!p.enabled) throw Conflict("scaling policy is disabled")
     def toRule(r: ScalingRule, up: Boolean): Scaling.Rule =
       Scaling.Rule(r.id, r.metric, Scaling.Op.parse(r.op), r.threshold,
@@ -1473,7 +1362,7 @@ final class ControlPlane(val metaDir: String,
       p.cooldownSeconds * 1000L, p.scaleToZero,
       p.scaleUpRules.map(toRule(_, up = true)),
       p.scaleDownRules.map(toRule(_, up = false)))
-    val st = scalingStates.getOrElse(p.id, defaultScalingState(p))
+    val st = scaling.stateOf(p)
     val now = clock()
     val d = Scaling.evaluatePolicy(pol,
       Scaling.State(st.currentReplicas, st.lastScaleAtMs, st.pendingSince),
@@ -1482,21 +1371,15 @@ final class ControlPlane(val metaDir: String,
     // width, cooldown, pending clocks, or history — with the loop as a
     // second writer, a what-if probe must never veto real decisions
     if (!persist) return d
-    val nextState = ScalingPolicyState(d.next.currentReplicas,
-      d.next.lastScaleTimeMs, d.next.pendingSinceMs)
-    // a no-op tick with byte-identical state skips the file rewrite —
-    // the 30s loop must not be a permanent background disk load
-    if (scalingStates.get(p.id) != Some(nextState)) {
-      scalingStates += p.id -> nextState
-      persistScalingStates()
-    }
+    scaling.putState(p.id, ScalingPolicyState(d.next.currentReplicas,
+      d.next.lastScaleTimeMs, d.next.pendingSinceMs))
     if (d.shouldExecute) {
       val action = d.action match {
         case Scaling.Action.ScaleUp   => "scale-up"
         case Scaling.Action.ScaleDown => "scale-down"
         case Scaling.Action.None      => "none"
       }
-      appendScalingEvent(ScalingEvent(newId(), p.id, action,
+      scaling.append(ScalingEvent(newId(), p.id, action,
         st.currentReplicas, d.desiredReplicas, d.reason,
         d.triggeredBy.getOrElse(""), now))
       // executed zero-width transitions keep the idle/wake state
@@ -1514,14 +1397,8 @@ final class ControlPlane(val metaDir: String,
     d
   }
 
-  /** History is deliberately retained past policy deletion (it is the
-    * audit trail) — the per-policy view filters WITHOUT an existence
-    * check, so a deleted policy's rows stay fetchable both here and in
-    * the global listing; the two views never disagree. */
   def listScalingHistory(policyId: Option[String] = None): Seq[ScalingEvent] =
-    lock.synchronized(
-      policyId.fold(scalingHistory)(id =>
-        scalingHistory.filter(_.policyId == id)))
+    lock.synchronized(scaling.historyOf(policyId))
 
   // ---- idle / wake / savings (ref internal/api/handlers/wake.go:
   // 27-38, scaling/wake/trigger.go, scaling/idle/detector.go — the
@@ -1533,15 +1410,14 @@ final class ControlPlane(val metaDir: String,
   private def idleUpsert(policyId: String)(f: IdleState => IdleState)
   : IdleState = {
     val now = clock()
-    val base = idleStates.getOrElse(policyId,
+    val base = idleStates.value.getOrElse(policyId,
       IdleState(policyId, now, None, None, None, None,
         isScaledToZero = false, now, now))
     val next0 = f(base)
-    if (idleStates.get(policyId).contains(next0)) next0
+    if (idleStates.value.get(policyId).contains(next0)) next0
     else {
       val next = next0.copy(updatedAtMs = now)
-      idleStates += policyId -> next
-      persistIdleStates()
+      idleStates.set(idleStates.value + (policyId -> next))
       next
     }
   }
@@ -1557,13 +1433,13 @@ final class ControlPlane(val metaDir: String,
     * harmless against a 30-minute idle threshold. */
   def recordScalingActivity(policyId: String): IdleState =
     lock.synchronized {
-      getScalingPolicy(policyId) // 404 on unknown policy
+      scaling.policies.get(policyId) // 404 on unknown policy
       val now = clock()
-      idleStates.get(policyId) match {
+      idleStates.value.get(policyId) match {
         case Some(prev) if prev.idleSinceMs.isEmpty && !prev.isScaledToZero &&
           now - prev.lastActivityAtMs < ControlPlane.ActivityPersistIntervalMs =>
           val next = prev.copy(lastActivityAtMs = now, updatedAtMs = now)
-          idleStates += policyId -> next // memory-only refresh
+          idleStates.value += policyId -> next // memory-only refresh
           next
         case _ =>
           idleUpsert(policyId)(s =>
@@ -1575,13 +1451,13 @@ final class ControlPlane(val metaDir: String,
     * activity/wake history (the reference 404s a missing idle_state
     * row the same way). */
   def getIdleState(policyId: String): IdleState = lock.synchronized {
-    getScalingPolicy(policyId)
-    idleStates.getOrElse(policyId, throw NotFound("idle_state", policyId))
+    scaling.policies.get(policyId)
+    idleStates.value.getOrElse(policyId, throw NotFound("idle_state", policyId))
   }
 
   /** ref wake.go ListScaledToZero, in policy-listing order. */
   def listScaledToZero(): Seq[IdleState] = lock.synchronized(
-    scalingPolicies.flatMap(p => idleStates.get(p.id))
+    scaling.policies.value.flatMap(p => idleStates.value.get(p.id))
       .filter(_.isScaledToZero))
 
   /** ref wake/trigger.go:120-241 Wake: an already-running policy is a
@@ -1593,26 +1469,29 @@ final class ControlPlane(val metaDir: String,
     * "manual" — the strict-field convention every other route keeps. */
   def wakeScalingPolicy(id: String, reason: String): WakeResult =
     lock.synchronized {
-      val p = getScalingPolicy(id)
-      if (!ControlPlane.WakeReasons.contains(reason))
-        throw Invalid("wake reason must be one of " +
-          ControlPlane.WakeReasons.toSeq.sorted.mkString("/"))
-      val st = scalingStates.getOrElse(id, defaultScalingState(p))
+      val p = scaling.policies.get(id)
+      validWakeReason(reason)
+      val st = scaling.stateOf(p)
       if (st.currentReplicas > 0)
         return WakeResult(id, st.currentReplicas, st.currentReplicas,
           reason, "completed", "policy is already running")
       val target = math.max(p.minReplicas, 1)
       val now = clock()
-      scalingStates += id -> ScalingPolicyState(target, Some(now), Map.empty)
-      persistScalingStates()
+      scaling.states.set(scaling.states.value +
+        (id -> ScalingPolicyState(target, Some(now), Map.empty)))
       idleUpsert(id)(s => s.copy(lastActivityAtMs = now,
         idleSinceMs = None, scaledToZeroAtMs = None,
         lastWakeAtMs = Some(now), wakeReason = Some(reason),
         isScaledToZero = false))
-      appendScalingEvent(ScalingEvent(newId(), id, "scale-up", 0, target,
+      scaling.append(ScalingEvent(newId(), id, "scale-up", 0, target,
         s"wake: $reason", reason, now))
       WakeResult(id, 0, target, reason, "completed", "policy woken")
     }
+
+  private def validWakeReason(reason: String): Unit =
+    if (!WakeReasons.contains(reason))
+      throw Invalid("wake reason must be one of " +
+        WakeReasons.toSeq.sorted.mkString("/"))
 
   /** ref wake.go WakeAll: the listed policies, or — with ids ABSENT —
     * every policy currently at zero width. An EXPLICIT empty list is a
@@ -1622,11 +1501,9 @@ final class ControlPlane(val metaDir: String,
     * 400 up front, not order-dependent on the target set. */
   def wakeScalingPolicies(ids: Option[Seq[String]], reason: String)
   : Seq[WakeResult] = lock.synchronized {
-    if (!ControlPlane.WakeReasons.contains(reason))
-      throw Invalid("wake reason must be one of " +
-        ControlPlane.WakeReasons.toSeq.sorted.mkString("/"))
-    val targets = ids.getOrElse(scalingPolicies.collect {
-      case p if scalingStates.get(p.id).exists(_.currentReplicas == 0) =>
+    validWakeReason(reason)
+    val targets = ids.getOrElse(scaling.policies.value.collect {
+      case p if scaling.states.value.get(p.id).exists(_.currentReplicas == 0) =>
         p.id
     })
     targets.map { id =>
@@ -1649,40 +1526,31 @@ final class ControlPlane(val metaDir: String,
       keepAliveWindowMs: Long = graft.observe.Scaling.DefaultKeepAliveWindowMs)
   : Seq[String] = lock.synchronized {
     val now = clock()
-    val zeroed = scalingPolicies.collect {
+    val states = scaling.states
+    val zeroed = scaling.policies.value.collect {
       case p if p.enabled && p.scaleToZero &&
-        scalingStates.get(p.id).exists(_.currentReplicas > 0) &&
+        states.value.get(p.id).exists(_.currentReplicas > 0) &&
         // the evaluator and this tick share the loop: a policy the
         // evaluator JUST scaled (possibly up, under live metric
         // pressure) is in cooldown — zeroing it here would bypass the
         // cooldown the evaluator started
-        !scalingStates.get(p.id).exists(_.lastScaleAtMs.exists(t =>
+        !states.value.get(p.id).exists(_.lastScaleAtMs.exists(t =>
           now - t < p.cooldownSeconds * 1000L)) &&
-        idleStates.get(p.id).exists(s =>
+        idleStates.value.get(p.id).exists(s =>
           graft.observe.Scaling.shouldScaleToZero(s.lastActivityAtMs,
             s.lastWakeAtMs, s.isScaledToZero, now,
             idleThresholdMs, keepAliveWindowMs)) =>
-        val st = scalingStates(p.id)
-        scalingStates += p.id -> ScalingPolicyState(0, Some(now), Map.empty)
+        val st = states.value(p.id)
+        states.value += p.id -> ScalingPolicyState(0, Some(now), Map.empty)
         idleUpsert(p.id)(s => s.copy(isScaledToZero = true,
           scaledToZeroAtMs = Some(now),
           idleSinceMs = s.idleSinceMs.orElse(Some(s.lastActivityAtMs))))
-        appendScalingEvent(ScalingEvent(newId(), p.id, "scale-to-zero",
+        scaling.append(ScalingEvent(newId(), p.id, "scale-to-zero",
           st.currentReplicas, 0, "idle threshold exceeded", "idle", now))
         p.id
     }
-    if (zeroed.nonEmpty) persistScalingStates()
+    if (zeroed.nonEmpty) states.persist()
     zeroed
-  }
-
-  /** Append + retention cap + persist — the ONE history write path.
-    * The cap exists because the loop makes growth autonomous and every
-    * append rewrites the whole file. */
-  private def appendScalingEvent(e: ScalingEvent): Unit = {
-    scalingHistory :+= e
-    if (scalingHistory.size > ControlPlane.ScalingHistoryCap)
-      scalingHistory = scalingHistory.takeRight(ControlPlane.ScalingHistoryCap)
-    persistScalingHistory()
   }
 
   /** Zero-width intervals (start, end, avoided width) derived from the
@@ -1693,7 +1561,7 @@ final class ControlPlane(val metaDir: String,
     * — derived savings say so rather than guessing. */
   private def zeroIntervals(policyId: String, nowMs: Long)
   : Seq[(Long, Long, Int)] = {
-    val evs = scalingHistory.filter(_.policyId == policyId).sortBy(_.atMs)
+    val evs = scaling.historyOf(Some(policyId)).sortBy(_.atMs)
     val out = Seq.newBuilder[(Long, Long, Int)]
     var open: Option[(Long, Int)] = None
     evs.foreach { e =>
@@ -1713,7 +1581,7 @@ final class ControlPlane(val metaDir: String,
     * never reaches the savings view. */
   private def idleIntervals(policyId: String, nowMs: Long)
   : Seq[(Long, Long)] =
-    idleStates.get(policyId).toSeq.flatMap { s =>
+    idleStates.value.get(policyId).toSeq.flatMap { s =>
       s.idleSinceMs match {
         case Some(start) =>
           val end = s.scaledToZeroAtMs.getOrElse(nowMs)
@@ -1762,7 +1630,7 @@ final class ControlPlane(val metaDir: String,
   def scalingCostSavings(id: String, days: Int = ControlPlane.DefaultSavingsDays,
                          hourlyCostCents: Int = ControlPlane.DefaultHourlyCostCents)
   : Seq[DailySavings] = lock.synchronized {
-    getScalingPolicy(id)
+    scaling.policies.get(id)
     if (days <= 0) throw Invalid("days must be > 0")
     if (hourlyCostCents < 0) throw Invalid("hourly_cost_cents must be >= 0")
     val now = clock()
@@ -1777,9 +1645,9 @@ final class ControlPlane(val metaDir: String,
   : Seq[PolicySavings] = lock.synchronized {
     if (hourlyCostCents < 0) throw Invalid("hourly_cost_cents must be >= 0")
     val now = clock()
-    scalingPolicies.toSeq.collect {
-      case p if idleStates.contains(p.id) ||
-        scalingHistory.exists(_.policyId == p.id) =>
+    scaling.policies.value.collect {
+      case p if idleStates.value.contains(p.id) ||
+        scaling.history.value.exists(_.policyId == p.id) =>
         val rows = dailySavingsRows(p.id, 0L, now, hourlyCostCents)
         PolicySavings(p.id, rows.map(_.idleSeconds).sum,
           rows.map(_.zeroSeconds).sum, rows.map(_.savingsCents).sum)
@@ -1794,74 +1662,6 @@ final class ControlPlane(val metaDir: String,
 
   private val QueryEngines = Set("trino", "risingwave")
 
-  private[api] def queryScalingPolicyJson(p: QueryScalingPolicy): JObject =
-    JObject(
-      "id" -> JString(p.id), "name" -> JString(p.name),
-      "query_engine" -> JString(p.queryEngine),
-      "enabled" -> JBool(p.enabled),
-      "min_replicas" -> JInt(p.minReplicas),
-      "max_replicas" -> JInt(p.maxReplicas),
-      "cooldown_seconds" -> JInt(BigInt(p.cooldownSeconds)),
-      "scale_to_zero" -> JBool(p.scaleToZero),
-      "queued_queries_threshold" -> JInt(p.queuedThreshold),
-      "running_queries_threshold" -> JInt(p.runningThreshold),
-      "latency_threshold_seconds" -> JInt(p.latencyThresholdSeconds),
-      "created_at_ms" -> JInt(BigInt(p.createdAtMs)),
-      "updated_at_ms" -> JInt(BigInt(p.updatedAtMs)))
-
-  private def persistQueryScalingPolicies(): Unit =
-    writeFile("query_scaling_policies.json",
-      JArray(queryScalingPolicies.toList.map(queryScalingPolicyJson)))
-
-  private def persistQueryScalingStates(): Unit =
-    writeFile("query_scaling_state.json",
-      JObject(queryScalingStates.toList.map { case (id, st) =>
-        id -> (JObject(
-          "current_replicas" -> JInt(st.currentReplicas),
-          "last_scale_at_ms" -> st.lastScaleAtMs
-            .map(t => JInt(BigInt(t)): JValue).getOrElse(JNull)): JValue)
-      }))
-
-  private def persistQueryScalingHistory(): Unit =
-    writeFile("query_scaling_history.json",
-      JArray(queryScalingHistory.toList.map(scalingEventJson)))
-
-  private def loadQueryScalingPolicies(): Vector[QueryScalingPolicy] =
-    readFile("query_scaling_policies.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        QueryScalingPolicy(str(o \ "id"), str(o \ "name"),
-          str(o \ "query_engine"), (o \ "enabled") == JBool(true),
-          num(o \ "min_replicas").toInt, num(o \ "max_replicas").toInt,
-          num(o \ "cooldown_seconds"),
-          (o \ "scale_to_zero") == JBool(true),
-          num(o \ "queued_queries_threshold").toInt,
-          num(o \ "running_queries_threshold").toInt,
-          num(o \ "latency_threshold_seconds").toInt,
-          num(o \ "created_at_ms"), num(o \ "updated_at_ms"))
-      }
-      case _ => Vector.empty
-    }
-
-  private def loadQueryScalingStates(): Map[String, ScalingPolicyState] =
-    readFile("query_scaling_state.json") match {
-      case Some(JObject(fields)) => fields.map { case (id, v) =>
-        id -> ScalingPolicyState(num(v \ "current_replicas").toInt,
-          loadOptL(v \ "last_scale_at_ms"), Map.empty)
-      }.toMap
-      case _ => Map.empty
-    }
-
-  private def loadQueryScalingHistory(): Vector[ScalingEvent] =
-    readFile("query_scaling_history.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        ScalingEvent(str(o \ "id"), str(o \ "policy_id"),
-          str(o \ "action"), num(o \ "from_replicas").toInt,
-          num(o \ "to_replicas").toInt, str(o \ "reason"),
-          str(o \ "triggered_by"), num(o \ "at_ms"))
-      }
-      case _ => Vector.empty
-    }
-
   private def validQueryScalingFields(queryEngine: String, minReplicas: Int,
                                       maxReplicas: Int, cooldownSeconds: Long,
                                       queued: Int, running: Int,
@@ -1869,11 +1669,7 @@ final class ControlPlane(val metaDir: String,
     if (!QueryEngines.contains(queryEngine))
       throw Invalid(s"query_engine must be one of " +
         QueryEngines.toSeq.sorted.mkString("/"))
-    if (minReplicas < 0) throw Invalid("min_replicas must be >= 0")
-    if (maxReplicas < 1) throw Invalid("max_replicas must be >= 1")
-    if (minReplicas > maxReplicas)
-      throw Invalid("min_replicas cannot be greater than max_replicas")
-    if (cooldownSeconds < 0) throw Invalid("cooldown_seconds must be >= 0")
+    validReplicaBounds(minReplicas, maxReplicas, cooldownSeconds)
     if (queued < 1) throw Invalid("queued_queries_threshold must be >= 1")
     if (running < 1) throw Invalid("running_queries_threshold must be >= 1")
     if (latency < 0) throw Invalid("latency_threshold_seconds must be >= 0")
@@ -1894,30 +1690,18 @@ final class ControlPlane(val metaDir: String,
     validQueryScalingFields(queryEngine, minReplicas, maxReplicas,
       cooldownSeconds, queuedThreshold, runningThreshold,
       latencyThresholdSeconds)
-    if (queryScalingPolicies.exists(_.name == name))
-      throw Conflict("query scaling policy with this name already exists")
+    queryScaling.policies.requireFreeName(name)
     val now = clock()
-    val p = QueryScalingPolicy(newId(), name, queryEngine, enabled,
+    queryScaling.create(QueryScalingPolicy(newId(), name, queryEngine, enabled,
       minReplicas, maxReplicas, cooldownSeconds, scaleToZero,
-      queuedThreshold, runningThreshold, latencyThresholdSeconds, now, now)
-    queryScalingPolicies :+= p
-    queryScalingStates += p.id ->
-      ScalingPolicyState(math.max(minReplicas, 1), None, Map.empty)
-    persistQueryScalingPolicies(); persistQueryScalingStates()
-    p
+      queuedThreshold, runningThreshold, latencyThresholdSeconds, now, now))
   }
 
-  /** The ONE missing-state fallback for query policies — state
-    * endpoint and evaluator must never disagree about the width. */
-  private def defaultQueryScalingState(p: QueryScalingPolicy): ScalingPolicyState =
-    ScalingPolicyState(math.max(p.minReplicas, 1), None, Map.empty)
-
   def listQueryScalingPolicies(): Seq[QueryScalingPolicy] =
-    lock.synchronized(queryScalingPolicies)
+    lock.synchronized(queryScaling.policies.value)
 
   def getQueryScalingPolicy(id: String): QueryScalingPolicy =
-    lock.synchronized(queryScalingPolicies.find(_.id == id)
-      .getOrElse(throw NotFound("query_scaling_policy", id)))
+    lock.synchronized(queryScaling.policies.get(id))
 
   /** Partial update resolved against the STORED row under this one
     * lock acquisition — keep-if-absent defaults must never come from
@@ -1935,52 +1719,33 @@ final class ControlPlane(val metaDir: String,
                                runningThreshold: Option[Int] = None,
                                latencyThresholdSeconds: Option[Int] = None)
   : QueryScalingPolicy = lock.synchronized {
-    val p = getQueryScalingPolicy(id)
+    val p = queryScaling.policies.get(id)
     val rName = name.getOrElse(p.name)
     validName(rName)
-    val rEngine = queryEngine.getOrElse(p.queryEngine)
-    val rMin = minReplicas.getOrElse(p.minReplicas)
-    val rMax = maxReplicas.getOrElse(p.maxReplicas)
-    val rCooldown = cooldownSeconds.getOrElse(p.cooldownSeconds)
-    val rQueued = queuedThreshold.getOrElse(p.queuedThreshold)
-    val rRunning = runningThreshold.getOrElse(p.runningThreshold)
-    val rLatency = latencyThresholdSeconds.getOrElse(p.latencyThresholdSeconds)
-    validQueryScalingFields(rEngine, rMin, rMax, rCooldown,
-      rQueued, rRunning, rLatency)
-    if (queryScalingPolicies.exists(x => x.name == rName && x.id != id))
-      throw Conflict("query scaling policy with this name already exists")
-    val next = p.copy(name = rName, queryEngine = rEngine,
-      minReplicas = rMin, maxReplicas = rMax,
-      cooldownSeconds = rCooldown,
+    val next = p.copy(name = rName,
+      queryEngine = queryEngine.getOrElse(p.queryEngine),
+      minReplicas = minReplicas.getOrElse(p.minReplicas),
+      maxReplicas = maxReplicas.getOrElse(p.maxReplicas),
+      cooldownSeconds = cooldownSeconds.getOrElse(p.cooldownSeconds),
       scaleToZero = scaleToZero.getOrElse(p.scaleToZero),
       enabled = enabled.getOrElse(p.enabled),
-      queuedThreshold = rQueued, runningThreshold = rRunning,
-      latencyThresholdSeconds = rLatency,
+      queuedThreshold = queuedThreshold.getOrElse(p.queuedThreshold),
+      runningThreshold = runningThreshold.getOrElse(p.runningThreshold),
+      latencyThresholdSeconds =
+        latencyThresholdSeconds.getOrElse(p.latencyThresholdSeconds),
       updatedAtMs = clock())
-    queryScalingPolicies =
-      queryScalingPolicies.map(x => if (x.id == id) next else x)
-    // clamp the persisted width into the new bounds, same rationale as
-    // the generic policies: nothing else can move it back inside
-    val st = queryScalingStates.getOrElse(id, defaultQueryScalingState(next))
-    val lo = if (next.scaleToZero) 0 else next.minReplicas
-    queryScalingStates += id -> st.copy(currentReplicas =
-      math.max(lo, math.min(next.maxReplicas, st.currentReplicas)))
-    persistQueryScalingPolicies(); persistQueryScalingStates()
-    next
+    validQueryScalingFields(next.queryEngine, next.minReplicas,
+      next.maxReplicas, next.cooldownSeconds, next.queuedThreshold,
+      next.runningThreshold, next.latencyThresholdSeconds)
+    queryScaling.policies.requireFreeName(rName, except = id)
+    queryScaling.update(next)
   }
 
-  def deleteQueryScalingPolicy(id: String): Unit = lock.synchronized {
-    val p = getQueryScalingPolicy(id)
-    queryScalingPolicies = queryScalingPolicies.filterNot(_.id == p.id)
-    queryScalingStates -= p.id
-    persistQueryScalingPolicies(); persistQueryScalingStates()
-  }
+  def deleteQueryScalingPolicy(id: String): Unit =
+    lock.synchronized(queryScaling.delete(id))
 
   def getQueryScalingState(id: String): ScalingPolicyState =
-    lock.synchronized {
-      val p = getQueryScalingPolicy(id)
-      queryScalingStates.getOrElse(id, defaultQueryScalingState(p))
-    }
+    lock.synchronized(queryScaling.stateOf(queryScaling.policies.get(id)))
 
   /** One evaluation tick against the supplied queue metrics — what the
     * reference's background evaluator does per poll; exposed the same
@@ -1990,7 +1755,7 @@ final class ControlPlane(val metaDir: String,
                                  persist: Boolean = true)
   : graft.observe.Scaling.QueryDecision = lock.synchronized {
     import graft.observe.Scaling
-    val p = getQueryScalingPolicy(id)
+    val p = queryScaling.policies.get(id)
     // the SERVICE contract matches the generic surface: evaluating a
     // disabled policy is the caller's error (409), not a quiet no-op
     // tick that rewrites the state file
@@ -1998,137 +1763,35 @@ final class ControlPlane(val metaDir: String,
     val pol = Scaling.QueryPolicy(p.id, p.enabled, p.minReplicas,
       p.maxReplicas, p.cooldownSeconds * 1000L, p.scaleToZero,
       p.queuedThreshold, p.runningThreshold, p.latencyThresholdSeconds)
-    val st = queryScalingStates.getOrElse(id, defaultQueryScalingState(p))
+    val st = queryScaling.stateOf(p)
     val now = clock()
     val d = Scaling.evaluateQueryPolicy(pol,
       Scaling.QueryState(st.currentReplicas, st.lastScaleAtMs), metrics, now)
     if (!persist) return d
-    val nextState = ScalingPolicyState(
-      d.next.currentReplicas, d.next.lastScaleTimeMs, Map.empty)
-    if (queryScalingStates.get(id) != Some(nextState)) {
-      queryScalingStates += id -> nextState
-      persistQueryScalingStates()
-    }
-    if (d.action != "none") {
+    queryScaling.putState(id, ScalingPolicyState(
+      d.next.currentReplicas, d.next.lastScaleTimeMs, Map.empty))
+    if (d.action != "none")
       // ONE action vocabulary across both scaling histories: the
       // model's underscore names render hyphenated like the generic
       // surface's rows, so a consumer filtering "scale-up" sees both
-      queryScalingHistory :+= ScalingEvent(newId(), id,
+      queryScaling.append(ScalingEvent(newId(), id,
         d.action.replace('_', '-'),
         st.currentReplicas, d.desiredReplicas, d.reason,
-        s"value:${d.triggerValue}", now)
-      if (queryScalingHistory.size > ControlPlane.ScalingHistoryCap)
-        queryScalingHistory =
-          queryScalingHistory.takeRight(ControlPlane.ScalingHistoryCap)
-      persistQueryScalingHistory()
-    }
+        s"value:${d.triggerValue}", now))
     d
   }
 
   def listQueryScalingHistory(policyId: Option[String] = None)
-  : Seq[ScalingEvent] = lock.synchronized(
-    policyId.fold(queryScalingHistory)(id =>
-      queryScalingHistory.filter(_.policyId == id)))
+  : Seq[ScalingEvent] = lock.synchronized(queryScaling.historyOf(policyId))
 
   // ---- alert instances / history / silences (ref handlers/alerts.go:
   // 35-44; types.go AlertInstance/AlertHistory/AlertSilence) ----------
 
-  private def optD(v: Option[Double]): JValue =
-    v.map(JDouble(_): JValue).getOrElse(JNull)
-  private def optL(v: Option[Long]): JValue =
-    v.map(t => JInt(BigInt(t)): JValue).getOrElse(JNull)
-  private def loadOptL(v: JValue): Option[Long] = v match {
-    case JNull | JNothing => None; case x => Some(num(x))
-  }
-  private def loadOptD(v: JValue): Option[Double] = v match {
-    case JDouble(x) => Some(x); case JInt(n) => Some(n.toDouble)
-    case JDecimal(x) => Some(x.toDouble); case _ => None
-  }
-
-  private[api] def alertInstanceJson(a: AlertInstance): JObject = JObject(
-    "id" -> JString(a.id), "rule_id" -> JString(a.ruleId),
-    "fingerprint" -> JString(a.fingerprint),
-    "status" -> JString(a.status),
-    "current_value" -> optD(a.currentValue),
-    "fired_at_ms" -> JInt(BigInt(a.firedAtMs)),
-    "resolved_at_ms" -> optL(a.resolvedAtMs),
-    "acknowledged_at_ms" -> optL(a.acknowledgedAtMs),
-    "acknowledged_by" -> JString(a.acknowledgedBy),
-    "created_at_ms" -> JInt(BigInt(a.createdAtMs)),
-    "updated_at_ms" -> JInt(BigInt(a.updatedAtMs)))
-
-  private[api] def alertHistoryJson(h: AlertHistoryEntry): JObject = JObject(
-    "id" -> JString(h.id), "alert_id" -> JString(h.alertId),
-    "rule_id" -> JString(h.ruleId), "event_type" -> JString(h.eventType),
-    "message" -> JString(h.message), "value" -> optD(h.value),
-    "created_at_ms" -> JInt(BigInt(h.createdAtMs)))
-
-  private[api] def silenceJson(s: AlertSilence): JObject = JObject(
-    "id" -> JString(s.id),
-    "matchers" -> JObject(s.matchers.toList.sortBy(_._1)
-      .map { case (k, v) => k -> (JString(v): JValue) }),
-    "starts_at_ms" -> JInt(BigInt(s.startsAtMs)),
-    "ends_at_ms" -> JInt(BigInt(s.endsAtMs)),
-    "created_by" -> JString(s.createdBy), "comment" -> JString(s.comment),
-    "created_at_ms" -> JInt(BigInt(s.createdAtMs)),
-    "updated_at_ms" -> JInt(BigInt(s.updatedAtMs)))
-
-  private def persistAlertInstances(): Unit =
-    writeFile("alert_instances.json",
-      JArray(alertInstances.toList.map(alertInstanceJson)))
-  private def persistAlertHistory(): Unit =
-    writeFile("alert_history.json",
-      JArray(alertHistory.toList.map(alertHistoryJson)))
-  private def persistAlertSilences(): Unit =
-    writeFile("alert_silences.json",
-      JArray(alertSilences.toList.map(silenceJson)))
-
-  private def loadAlertInstances(): Vector[AlertInstance] =
-    readFile("alert_instances.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        AlertInstance(str(o \ "id"), str(o \ "rule_id"),
-          str(o \ "fingerprint"), str(o \ "status"),
-          loadOptD(o \ "current_value"), num(o \ "fired_at_ms"),
-          loadOptL(o \ "resolved_at_ms"), loadOptL(o \ "acknowledged_at_ms"),
-          str(o \ "acknowledged_by"),
-          num(o \ "created_at_ms"), num(o \ "updated_at_ms"))
-      }
-      case _ => Vector.empty
-    }
-
-  private def loadAlertHistory(): Vector[AlertHistoryEntry] =
-    readFile("alert_history.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        AlertHistoryEntry(str(o \ "id"), str(o \ "alert_id"),
-          str(o \ "rule_id"), str(o \ "event_type"), str(o \ "message"),
-          loadOptD(o \ "value"), num(o \ "created_at_ms"))
-      }
-      case _ => Vector.empty
-    }
-
-  private def loadAlertSilences(): Vector[AlertSilence] =
-    readFile("alert_silences.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        val matchers = o \ "matchers" match {
-          case JObject(fields) => fields.collect {
-            case (k, JString(v)) => k -> v
-          }.toMap
-          case _ => Map.empty[String, String]
-        }
-        AlertSilence(str(o \ "id"), matchers, num(o \ "starts_at_ms"),
-          num(o \ "ends_at_ms"), str(o \ "created_by"), str(o \ "comment"),
-          num(o \ "created_at_ms"), num(o \ "updated_at_ms"))
-      }
-      case _ => Vector.empty
-    }
-
   private def appendHistory(alertId: String, ruleId: String, event: String,
                             message: String, value: Option[Double],
-                            atMs: Long): Unit = {
-    alertHistory :+= AlertHistoryEntry(newId(), alertId, ruleId, event,
-      message, value, atMs)
-    persistAlertHistory()
-  }
+                            atMs: Long): Unit =
+    alertHistory.add(AlertHistoryEntry(newId(), alertId, ruleId, event,
+      message, value, atMs))
 
   /** A fire transition from the evaluator's machine: creates the
     * instance or re-fires an existing one (the reference's fireAlert
@@ -2138,20 +1801,15 @@ final class ControlPlane(val metaDir: String,
   def recordAlertFired(ruleId: String, fingerprint: String,
                        value: Option[Double], atMs: Long): AlertInstance =
     lock.synchronized {
-      getAlertRule(ruleId) // 404 for an unknown rule
-      val next = alertInstances.find(a =>
+      alertRules.get(ruleId) // 404 for an unknown rule
+      val next = alertInstances.value.find(a =>
         a.fingerprint == fingerprint && a.status == "firing") match {
         case Some(a) =>
-          val u = a.copy(currentValue = value, updatedAtMs = atMs)
-          alertInstances = alertInstances.map(x => if (x.id == a.id) u else x)
-          u
+          alertInstances.replace(a.copy(currentValue = value, updatedAtMs = atMs))
         case None =>
-          val a = AlertInstance(newId(), ruleId, fingerprint, "firing",
-            value, atMs, None, None, "", atMs, atMs)
-          alertInstances :+= a
-          a
+          alertInstances.add(AlertInstance(newId(), ruleId, fingerprint,
+            "firing", value, atMs, None, None, "", atMs, atMs))
       }
-      persistAlertInstances()
       appendHistory(next.id, ruleId, "fired", s"alert fired", value, atMs)
       next
     }
@@ -2159,12 +1817,10 @@ final class ControlPlane(val metaDir: String,
   /** A resolution (series absence) — the machine's only resolve path. */
   def recordAlertResolved(fingerprint: String, atMs: Long): Option[AlertInstance] =
     lock.synchronized {
-      alertInstances.find(a =>
+      alertInstances.value.find(a =>
         a.fingerprint == fingerprint && a.status == "firing").map { a =>
-        val u = a.copy(status = "resolved", resolvedAtMs = Some(atMs),
-          updatedAtMs = atMs)
-        alertInstances = alertInstances.map(x => if (x.id == a.id) u else x)
-        persistAlertInstances()
+        val u = alertInstances.replace(a.copy(status = "resolved",
+          resolvedAtMs = Some(atMs), updatedAtMs = atMs))
         appendHistory(u.id, u.ruleId, "resolved", "alert resolved", None, atMs)
         u
       }
@@ -2175,11 +1831,10 @@ final class ControlPlane(val metaDir: String,
   def recordAlertNotification(fingerprint: String, channelId: String,
                               event: String, atMs: Long): Unit =
     lock.synchronized {
-      alertInstances.filter(_.fingerprint == fingerprint)
-        .sortBy(-_.updatedAtMs).headOption.foreach { a =>
-          appendHistory(a.id, a.ruleId, "notification_sent",
-            s"$event notification to channel $channelId", None, atMs)
-        }
+      latestInstance(fingerprint).foreach { a =>
+        appendHistory(a.id, a.ruleId, "notification_sent",
+          s"$event notification to channel $channelId", None, atMs)
+      }
     }
 
   /** A SUPPRESSED notification (active silence, disabled channel) —
@@ -2189,45 +1844,45 @@ final class ControlPlane(val metaDir: String,
   def recordAlertSuppressed(fingerprint: String, channelId: String,
                             event: String, reason: String, atMs: Long): Unit =
     lock.synchronized {
-      alertInstances.filter(_.fingerprint == fingerprint)
-        .sortBy(-_.updatedAtMs).headOption.foreach { a =>
-          appendHistory(a.id, a.ruleId, "notification_suppressed",
-            s"$event notification to channel $channelId suppressed: $reason",
-            None, atMs)
-        }
+      latestInstance(fingerprint).foreach { a =>
+        appendHistory(a.id, a.ruleId, "notification_suppressed",
+          s"$event notification to channel $channelId suppressed: $reason",
+          None, atMs)
+      }
     }
+
+  private def latestInstance(fingerprint: String): Option[AlertInstance] =
+    alertInstances.value.filter(_.fingerprint == fingerprint)
+      .sortBy(-_.updatedAtMs).headOption
 
   def acknowledgeAlert(id: String, by: String): AlertInstance =
     lock.synchronized {
-      val a = alertInstances.find(_.id == id)
-        .getOrElse(throw NotFound("alert", id))
+      val a = alertInstances.get(id)
       if (a.status != "firing")
         throw Conflict("only a firing alert can be acknowledged")
       val now = clock()
-      val u = a.copy(acknowledgedAtMs = Some(now), acknowledgedBy = by,
-        updatedAtMs = now)
-      alertInstances = alertInstances.map(x => if (x.id == id) u else x)
-      persistAlertInstances()
+      val u = alertInstances.replace(a.copy(acknowledgedAtMs = Some(now),
+        acknowledgedBy = by, updatedAtMs = now))
       appendHistory(u.id, u.ruleId, "acknowledged",
         s"acknowledged by $by", None, now)
       u
     }
 
   def listAlertInstances(status: Option[String] = None): Seq[AlertInstance] =
-    lock.synchronized(
-      status.fold(alertInstances)(st => alertInstances.filter(_.status == st)))
+    lock.synchronized(alertInstances.value.filter(a =>
+      status.forall(_ == a.status)))
 
-  def getAlertInstance(id: String): AlertInstance = lock.synchronized(
-    alertInstances.find(_.id == id).getOrElse(throw NotFound("alert", id)))
+  def getAlertInstance(id: String): AlertInstance =
+    lock.synchronized(alertInstances.get(id))
 
   /** Counts by status (the reference's GET /alerts/summary). */
   def alertSummary(): Map[String, Long] = lock.synchronized(
-    alertInstances.groupBy(_.status).map { case (k, v) => k -> v.size.toLong })
+    alertInstances.value.groupBy(_.status).map { case (k, v) => k -> v.size.toLong })
 
   def listAlertHistory(alertId: String): Seq[AlertHistoryEntry] =
     lock.synchronized {
-      getAlertInstance(alertId)
-      alertHistory.filter(_.alertId == alertId)
+      alertInstances.get(alertId)
+      alertHistory.value.filter(_.alertId == alertId)
     }
 
   def createSilence(matchers: Map[String, String], startsAtMs: Long,
@@ -2237,61 +1892,25 @@ final class ControlPlane(val metaDir: String,
     if (endsAtMs <= startsAtMs)
       throw Invalid("silence must end after it starts")
     val now = clock()
-    val s = AlertSilence(newId(), matchers, startsAtMs, endsAtMs,
-      createdBy, comment, now, now)
-    alertSilences :+= s
-    persistAlertSilences()
-    s
+    alertSilences.add(AlertSilence(newId(), matchers, startsAtMs, endsAtMs,
+      createdBy, comment, now, now))
   }
 
-  def listSilences(): Seq[AlertSilence] = lock.synchronized(alertSilences)
+  def listSilences(): Seq[AlertSilence] = lock.synchronized(alertSilences.value)
 
-  def getSilence(id: String): AlertSilence = lock.synchronized(
-    alertSilences.find(_.id == id).getOrElse(throw NotFound("silence", id)))
+  def getSilence(id: String): AlertSilence =
+    lock.synchronized(alertSilences.get(id))
 
   def deleteSilence(id: String): Unit = lock.synchronized {
-    val s = getSilence(id)
-    alertSilences = alertSilences.filterNot(_.id == s.id)
-    persistAlertSilences()
+    alertSilences.remove(alertSilences.get(id).id)
   }
 
   /** Is a notification with these labels suppressed right now? */
   def silenced(labels: Map[String, String], nowMs: Long): Boolean =
     lock.synchronized(
-      alertSilences.exists(s => s.activeAt(nowMs) && s.matches(labels)))
+      alertSilences.value.exists(s => s.activeAt(nowMs) && s.matches(labels)))
 
   // ---- API keys (ref internal/api/services/api_key.go) --------------
-
-  /** Response shape: hash never renders; the plaintext exists only in
-    * the create call's return value. */
-  private[api] def apiKeyJson(k: ApiKey): JObject = JObject(
-    "id" -> JString(k.id), "name" -> JString(k.name),
-    "key_prefix" -> JString(k.prefix),
-    "expires_at_ms" -> k.expiresAtMs.map(t => JInt(BigInt(t)): JValue)
-      .getOrElse(JNull),
-    "revoked" -> JBool(k.revokedAtMs.isDefined),
-    "revoked_at_ms" -> k.revokedAtMs.map(t => JInt(BigInt(t)): JValue)
-      .getOrElse(JNull),
-    "created_at_ms" -> JInt(BigInt(k.createdAtMs)),
-    "updated_at_ms" -> JInt(BigInt(k.updatedAtMs)))
-
-  private def persistApiKeys(): Unit =
-    writeFile("api_keys.json", JArray(apiKeys.toList.map(k =>
-      JObject(apiKeyJson(k).obj :+ ("key_hash" -> (JString(k.hash): JValue))))))
-
-  private def loadApiKeys(): Vector[ApiKey] =
-    readFile("api_keys.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        ApiKey(str(o \ "id"), str(o \ "name"), str(o \ "key_prefix"),
-          str(o \ "key_hash"),
-          o \ "expires_at_ms" match {
-            case JNull | JNothing => None; case v => Some(num(v)) },
-          o \ "revoked_at_ms" match {
-            case JNull | JNothing => None; case v => Some(num(v)) },
-          num(o \ "created_at_ms"), num(o \ "updated_at_ms"))
-      }
-      case _ => Vector.empty
-    }
 
   /** Mint a key: `graft_live_<256 random bits, base64url>` (the
     * reference's `<prefix>live_<random>` form, generateAPIKey). Returns
@@ -2307,34 +1926,25 @@ final class ControlPlane(val metaDir: String,
       val plaintext = "graft_live_" +
         java.util.Base64.getUrlEncoder.withoutPadding.encodeToString(raw)
       val now = clock()
-      val k = ApiKey(newId(), name, plaintext.take(10), hashApiKey(plaintext),
-        expiresAtMs, None, now, now)
-      apiKeys :+= k
-      persistApiKeys()
-      (k, plaintext)
+      (apiKeys.add(ApiKey(newId(), name, plaintext.take(10),
+        hashApiKey(plaintext), expiresAtMs, None, now, now)), plaintext)
     }
 
-  def listApiKeys(): Seq[ApiKey] = lock.synchronized(apiKeys)
+  def listApiKeys(): Seq[ApiKey] = lock.synchronized(apiKeys.value)
 
-  def getApiKey(id: String): ApiKey = lock.synchronized(
-    apiKeys.find(_.id == id).getOrElse(throw NotFound("api_key", id)))
+  def getApiKey(id: String): ApiKey = lock.synchronized(apiKeys.get(id))
 
   /** Soft revoke: the key stops authenticating, the row stays for
     * audit (the reference's Revoke vs Delete split). Idempotent. */
   def revokeApiKey(id: String): ApiKey = lock.synchronized {
-    val k = getApiKey(id)
-    val next =
+    val k = apiKeys.get(id)
+    apiKeys.replace(
       if (k.revokedAtMs.isDefined) k
-      else k.copy(revokedAtMs = Some(clock()), updatedAtMs = clock())
-    apiKeys = apiKeys.map(x => if (x.id == id) next else x)
-    persistApiKeys()
-    next
+      else k.copy(revokedAtMs = Some(clock()), updatedAtMs = clock()))
   }
 
   def deleteApiKey(id: String): Unit = lock.synchronized {
-    val k = getApiKey(id)
-    apiKeys = apiKeys.filterNot(_.id == k.id)
-    persistApiKeys()
+    apiKeys.remove(apiKeys.get(id).id)
   }
 
   /** Authenticate a presented plaintext: digest it, then compare the
@@ -2345,7 +1955,7 @@ final class ControlPlane(val metaDir: String,
   def validateApiKey(plaintext: String): Option[ApiKey] = lock.synchronized {
     val digest = hashApiKey(plaintext).getBytes(UTF_8)
     val now = clock()
-    apiKeys.find(k =>
+    apiKeys.value.find(k =>
       java.security.MessageDigest.isEqual(digest, k.hash.getBytes(UTF_8)) &&
         k.revokedAtMs.isEmpty && k.expiresAtMs.forall(_ > now))
   }
@@ -2381,13 +1991,11 @@ final class ControlPlane(val metaDir: String,
   def registerFirstAdmin(email: String, password: String, name: String = "")
   : (User, String, Session) = lock.synchronized {
     validUserFields(email, password)
-    if (users.exists(_.role == "admin"))
+    if (users.value.exists(_.role == "admin"))
       throw Conflict("admin user already exists; use login instead")
-    if (users.exists(_.email == email))
+    if (users.value.exists(_.email == email))
       throw Conflict("user with this email already exists")
-    val u = mkUser(email, password, name, "admin")
-    users :+= u
-    persistUsers()
+    val u = users.add(mkUser(email, password, name, "admin"))
     val (tok, session) = mintSession(u)
     (u, tok, session)
   }
@@ -2428,7 +2036,7 @@ final class ControlPlane(val metaDir: String,
           throw TooManyRequests(
             "too many failed login attempts; try again later")
       }
-      users.find(_.email == email)
+      users.value.find(_.email == email)
     }
     // the expensive KDF runs lock-free, under a bounded permit
     if (!kdfPermits.tryAcquire())
@@ -2474,12 +2082,11 @@ final class ControlPlane(val metaDir: String,
       loginFailures -= email
       // re-read the row: it may have changed while the KDF ran; a
       // concurrent deactivation must win over a stale snapshot
-      val u = snapshot.flatMap(s => users.find(_.id == s.id))
+      val u = snapshot.flatMap(s => users.find(s.id))
         .getOrElse(throw Unauthorized("invalid email or password"))
       if (!u.isActive) throw Forbidden("user account is inactive")
-      val updated = u.copy(lastLoginAtMs = Some(now), updatedAtMs = now)
-      users = users.map(x => if (x.id == u.id) updated else x)
-      persistUsers()
+      val updated =
+        users.replace(u.copy(lastLoginAtMs = Some(now), updatedAtMs = now))
       val (tok, session) = mintSession(updated)
       (updated, tok, session)
     }
@@ -2487,17 +2094,14 @@ final class ControlPlane(val metaDir: String,
 
   /** ref services/auth.go ListUsers — the admin listing (also what
     * specs read to assert provisioning outcomes). */
-  def listUsers(): Seq[User] = lock.synchronized(users)
+  def listUsers(): Seq[User] = lock.synchronized(users.value)
 
   /** ref services/auth.go:188-215 UpdateUser's is_active arm — the
     * deactivation hook: a deactivated user can neither log in (403)
     * nor use existing sessions ([[validateSession]] checks isActive). */
   def setUserActive(id: String, active: Boolean): User = lock.synchronized {
-    val u = users.find(_.id == id).getOrElse(throw NotFound("user", id))
-    val next = u.copy(isActive = active, updatedAtMs = clock())
-    users = users.map(x => if (x.id == id) next else x)
-    persistUsers()
-    next
+    val u = users.get(id)
+    users.replace(u.copy(isActive = active, updatedAtMs = clock()))
   }
 
   private def mintSession(u: User): (String, Session) = {
@@ -2512,12 +2116,11 @@ final class ControlPlane(val metaDir: String,
     // the newest [[ControlPlane.MaxSessionsPerUser]] — a
     // login-per-request client must not accrete a row per call for a
     // whole TTL (unbounded file rewrites + linear validate scans)
-    val (mine, others) = sessions.filter(_.expiresAtMs > now)
+    val (mine, others) = sessions.value.filter(_.expiresAtMs > now)
       .partition(_.userId == u.id)
-    sessions = others ++
+    sessions.set(others ++
       mine.sortBy(-_.createdAtMs)
-        .take(ControlPlane.MaxSessionsPerUser - 1) :+ s
-    persistSessions()
+        .take(ControlPlane.MaxSessionsPerUser - 1) :+ s)
     (plaintext, s)
   }
 
@@ -2528,10 +2131,10 @@ final class ControlPlane(val metaDir: String,
       val digest = ControlPlane.hashApiKey(plaintext).getBytes(UTF_8)
       val now = clock()
       for {
-        s <- sessions.find(s =>
+        s <- sessions.value.find(s =>
           java.security.MessageDigest.isEqual(digest,
             s.tokenHash.getBytes(UTF_8)) && s.expiresAtMs > now)
-        u <- users.find(u => u.id == s.userId && u.isActive)
+        u <- users.find(s.userId).filter(_.isActive)
       } yield (s, u)
     }
 
@@ -2565,14 +2168,14 @@ final class ControlPlane(val metaDir: String,
   def oidcLogin(providerId: String, info: OidcUserInfo)
   : (User, String, Session) = lock.synchronized {
     if (info.subject.isEmpty) throw Invalid("ID token has no subject")
-    val p = getOidcProvider(providerId)
+    val p = oidcProviders.get(providerId)
     val now = clock()
     val role = mapGroupsToRole(p, info.groups)
-    val bySubject = users.find(u =>
+    val bySubject = users.value.find(u =>
       u.oidcProviderId.contains(p.id) && u.oidcSubject.contains(info.subject))
     val existing = bySubject.orElse {
       if (info.email.isEmpty) None
-      else users.find(_.email == info.email) match {
+      else users.value.find(_.email == info.email) match {
         case None => None
         case Some(candidate) =>
           if (!info.emailVerified)
@@ -2609,91 +2212,13 @@ final class ControlPlane(val metaDir: String,
           passwordHash = "", passwordSalt = "", kdfIterations = 0,
           now, now, Some(p.id), Some(info.subject), info.groups)
     }
-    users = if (existing.isDefined)
-      users.map(x => if (x.id == u.id) u else x)
-    else users :+ u
-    persistUsers()
+    if (existing.isDefined) users.replace(u) else users.add(u)
     val (tok, session) = mintSession(u)
     (u, tok, session)
   }
 
   private def hexBytes(hex: String): Array[Byte] =
     hex.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
-
-  /** The API view — hash, salt, and iteration count NEVER render.
-    * The OIDC link renders only when present (ref models/auth.go:
-    * 75-77 omitempty). */
-  private[api] def userJson(u: User): JObject = JObject(
-    List(
-      "id" -> (JString(u.id): JValue), "email" -> JString(u.email),
-      "name" -> JString(u.name), "role" -> JString(u.role),
-      "is_active" -> JBool(u.isActive),
-      "last_login_at_ms" -> optL(u.lastLoginAtMs),
-      "created_at_ms" -> JInt(BigInt(u.createdAtMs)),
-      "updated_at_ms" -> JInt(BigInt(u.updatedAtMs))) ++
-      u.oidcProviderId.map(p => "oidc_provider_id" -> (JString(p): JValue)) ++
-      u.oidcSubject.map(s => "oidc_subject" -> (JString(s): JValue)) ++
-      (if (u.oidcGroups.isEmpty) Nil
-       else List("oidc_groups" ->
-         (JArray(u.oidcGroups.toList.map(JString(_))): JValue))))
-
-  private def persistUsers(): Unit =
-    writeFile("users.json", JArray(users.toList.map(u => JObject(
-      "id" -> JString(u.id), "email" -> JString(u.email),
-      "name" -> JString(u.name), "role" -> JString(u.role),
-      "is_active" -> JBool(u.isActive),
-      "last_login_at_ms" -> optL(u.lastLoginAtMs),
-      "password_hash" -> JString(u.passwordHash),
-      "password_salt" -> JString(u.passwordSalt),
-      "kdf_iterations" -> JInt(u.kdfIterations),
-      "created_at_ms" -> JInt(BigInt(u.createdAtMs)),
-      "updated_at_ms" -> JInt(BigInt(u.updatedAtMs)),
-      "oidc_provider_id" -> u.oidcProviderId
-        .map(p => JString(p): JValue).getOrElse(JNull),
-      "oidc_subject" -> u.oidcSubject
-        .map(s => JString(s): JValue).getOrElse(JNull),
-      "oidc_groups" -> JArray(u.oidcGroups.toList.map(JString(_)))))))
-
-  private def loadUsers(): Vector[User] =
-    readFile("users.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        User(str(o \ "id"), str(o \ "email"), str(o \ "name"),
-          str(o \ "role"), (o \ "is_active") != JBool(false),
-          loadOptL(o \ "last_login_at_ms"),
-          str(o \ "password_hash"), str(o \ "password_salt"),
-          num(o \ "kdf_iterations").toInt,
-          num(o \ "created_at_ms"), num(o \ "updated_at_ms"),
-          o \ "oidc_provider_id" match {
-            case JString(p) => Some(p)
-            case _          => None
-          },
-          o \ "oidc_subject" match {
-            case JString(s) => Some(s)
-            case _          => None
-          },
-          o \ "oidc_groups" match {
-            case JArray(gs) => gs.collect { case JString(g) => g }
-            case _          => Nil
-          })
-      }
-      case _ => Vector.empty
-    }
-
-  private def persistSessions(): Unit =
-    writeFile("sessions.json", JArray(sessions.toList.map(s => JObject(
-      "id" -> JString(s.id), "user_id" -> JString(s.userId),
-      "token_hash" -> JString(s.tokenHash),
-      "expires_at_ms" -> JInt(BigInt(s.expiresAtMs)),
-      "created_at_ms" -> JInt(BigInt(s.createdAtMs))))))
-
-  private def loadSessions(): Vector[Session] =
-    readFile("sessions.json") match {
-      case Some(JArray(items)) => items.toVector.map { o =>
-        Session(str(o \ "id"), str(o \ "user_id"), str(o \ "token_hash"),
-          num(o \ "expires_at_ms"), num(o \ "created_at_ms"))
-      }
-      case _ => Vector.empty
-    }
 
   // ---- sources ------------------------------------------------------
 
@@ -2705,28 +2230,22 @@ final class ControlPlane(val metaDir: String,
     validName(name)
     if (host.isEmpty || databaseName.isEmpty || username.isEmpty)
       throw Invalid("host, database_name and username are required")
-    if (sources.exists(_.name == name))
-      throw Conflict("source with this name already exists")
+    sources.requireFreeName(name)
     val now = clock()
-    val s = Source(newId(), name, if (typ.isEmpty) "postgres" else typ,
+    sources.add(Source(newId(), name, if (typ.isEmpty) "postgres" else typ,
       host, if (port == 0) 5432 else port, databaseName, username, password,
-      sslMode, slotName, publicationName, now, now)
-    sources :+= s
-    persistSources()
-    s
+      sslMode, slotName, publicationName, now, now))
   }
 
-  def listSources(): Seq[Source] = lock.synchronized(sources)
+  def listSources(): Seq[Source] = lock.synchronized(sources.value)
 
-  def getSource(id: String): Source = lock.synchronized(
-    sources.find(_.id == id).getOrElse(throw NotFound("source", id)))
+  def getSource(id: String): Source = lock.synchronized(sources.get(id))
 
   def deleteSource(id: String): Unit = lock.synchronized {
-    val s = getSource(id)
-    if (pipelines.exists(_.sourceId == id))
+    val s = sources.get(id)
+    if (pipelines.value.exists(_.sourceId == id))
       throw Conflict("cannot delete source with associated pipelines")
-    sources = sources.filterNot(_.id == s.id)
-    persistSources()
+    sources.remove(s.id)
   }
 
   /** Real connectivity probe (pluggable for tests). */
@@ -2739,33 +2258,22 @@ final class ControlPlane(val metaDir: String,
                      tables: Seq[(String, String, Boolean)]): Pipeline =
     lock.synchronized {
       validName(name)
-      getSource(sourceId) // 404 when absent — same order as the reference
-      if (pipelines.exists(_.name == name))
-        throw Conflict("pipeline with this name already exists")
+      sources.get(sourceId) // 404 when absent — same order as the reference
+      pipelines.requireFreeName(name)
       val keys = tables.map(t => (t._1, t._2))
       if (keys.distinct.size != keys.size)
         throw Conflict("duplicate table mapping in request")
       if (tables.exists(_._2.isEmpty))
         throw Invalid("table mapping requires a table name")
       val now = clock()
-      val p = Pipeline(newId(), name, sourceId, "stopped", "",
+      pipelines.add(Pipeline(newId(), name, sourceId, "stopped", "",
         tables.map(t => TableMapping(newId(), t._1, t._2, t._3)),
-        now, now, None, None)
-      pipelines :+= p
-      persistPipelines()
-      p
+        now, now, None, None))
     }
 
-  def listPipelines(): Seq[Pipeline] = lock.synchronized(pipelines)
+  def listPipelines(): Seq[Pipeline] = lock.synchronized(pipelines.value)
 
-  def getPipeline(id: String): Pipeline = lock.synchronized(
-    pipelines.find(_.id == id).getOrElse(throw NotFound("pipeline", id)))
-
-  private def put(p: Pipeline): Pipeline = {
-    pipelines = pipelines.map(x => if (x.id == p.id) p else x)
-    persistPipelines()
-    p
-  }
+  def getPipeline(id: String): Pipeline = lock.synchronized(pipelines.get(id))
 
   private def requireStopped(p: Pipeline, action: String): Unit =
     if (p.status == "running" || p.status == "starting")
@@ -2775,16 +2283,14 @@ final class ControlPlane(val metaDir: String,
     validName(name)
     val p = getPipeline(id)
     requireStopped(p, "update")
-    if (pipelines.exists(x => x.name == name && x.id != id))
-      throw Conflict("pipeline with this name already exists")
-    put(p.copy(name = name, updatedAtMs = clock()))
+    pipelines.requireFreeName(name, except = id)
+    pipelines.replace(p.copy(name = name, updatedAtMs = clock()))
   }
 
   def deletePipeline(id: String): Unit = lock.synchronized {
     val p = getPipeline(id)
     requireStopped(p, "delete")
-    pipelines = pipelines.filterNot(_.id == p.id)
-    persistPipelines()
+    pipelines.remove(p.id)
   }
 
   def addTableMapping(id: String, schema: String, table: String,
@@ -2793,7 +2299,8 @@ final class ControlPlane(val metaDir: String,
     if (table.isEmpty) throw Invalid("table mapping requires a table name")
     if (p.tables.exists(m => m.sourceSchema == schema && m.sourceTable == table))
       throw Conflict("table mapping already exists")
-    put(p.copy(tables = p.tables :+ TableMapping(newId(), schema, table, enabled),
+    pipelines.replace(p.copy(
+      tables = p.tables :+ TableMapping(newId(), schema, table, enabled),
       updatedAtMs = clock()))
   }
 
@@ -2802,7 +2309,7 @@ final class ControlPlane(val metaDir: String,
       val p = getPipeline(id)
       if (!p.tables.exists(_.id == mappingId))
         throw NotFound("table_mapping", mappingId)
-      put(p.copy(tables = p.tables.filterNot(_.id == mappingId),
+      pipelines.replace(p.copy(tables = p.tables.filterNot(_.id == mappingId),
         updatedAtMs = clock()))
     }
 
@@ -2818,18 +2325,18 @@ final class ControlPlane(val metaDir: String,
       if (p.status == "running" || p.status == "starting")
         throw Conflict("pipeline is already running")
       val src = getSource(p.sourceId)
-      put(p.copy(status = "starting", updatedAtMs = clock()))
+      pipelines.replace(p.copy(status = "starting", updatedAtMs = clock()))
       (p, src)
     }
     try {
       runner.start(p, src)
-      lock.synchronized(put(getPipeline(id).copy(status = "running",
-        errorMessage = "", startedAtMs = Some(clock()),
+      lock.synchronized(pipelines.replace(getPipeline(id).copy(
+        status = "running", errorMessage = "", startedAtMs = Some(clock()),
         updatedAtMs = clock())))
     } catch {
       case e: Exception =>
-        lock.synchronized(put(getPipeline(id).copy(status = "error",
-          errorMessage = String.valueOf(e.getMessage),
+        lock.synchronized(pipelines.replace(getPipeline(id).copy(
+          status = "error", errorMessage = String.valueOf(e.getMessage),
           updatedAtMs = clock())))
         throw Conflict(s"pipeline failed to start: ${e.getMessage}")
     }
@@ -2846,12 +2353,12 @@ final class ControlPlane(val metaDir: String,
         throw Conflict("pipeline is already stopped")
       if (p.status == "starting")
         throw Conflict("pipeline is starting — retry once it settles")
-      put(p.copy(status = "stopping", updatedAtMs = clock()))
+      pipelines.replace(p.copy(status = "stopping", updatedAtMs = clock()))
       p
     }
     try runner.stop(p) catch { case _: Exception => () } // best-effort
-    lock.synchronized(put(getPipeline(id).copy(status = "stopped",
-      stoppedAtMs = Some(clock()), updatedAtMs = clock())))
+    lock.synchronized(pipelines.replace(getPipeline(id).copy(
+      status = "stopped", stoppedAtMs = Some(clock()), updatedAtMs = clock())))
   }
 
   /** The status surface's read: consult the RUNNER for a pipeline the
@@ -2863,8 +2370,8 @@ final class ControlPlane(val metaDir: String,
     else runner.health(p) match {
       case None => p
       case Some(errMsg) => lock.synchronized(
-        put(getPipeline(id).copy(status = "error", errorMessage = errMsg,
-          updatedAtMs = clock())))
+        pipelines.replace(getPipeline(id).copy(status = "error",
+          errorMessage = errMsg, updatedAtMs = clock())))
     }
   }
 }

@@ -848,9 +848,12 @@ final class RestCatalogServer(spark: SparkSession, warehouseDir: String,
         case _ => halt(400, s"data file $path missing record-count",
           "BadRequestException")
       }
+      // required by Iceberg, and checked against the file below: the
+      // scan plans its splits from this size
       val size = j \ "file-size-in-bytes" match {
         case JInt(n) if n >= 0 => n.toLong
-        case _                 => 0L
+        case _ => halt(400, s"data file $path missing file-size-in-bytes",
+          "BadRequestException")
       }
       // resolve INSIDE the table location only — never a foreign path.
       // ANY scheme marks the path absolute (`file:/x` carries no `://`
@@ -956,9 +959,11 @@ final class RestCatalogServer(spark: SparkSession, warehouseDir: String,
       val p = new Path(dir, f.path)
       val wantCols = (graft.ingest.Cdc.LsnColumn +:
         pf.declaredVals.map(_._1.sourceName)).distinct
-      val (rows, bounds) =
-        try SnapshotLog.footerStatsMulti(hconf, p, wantCols)
-        catch {
+      val (rows, bounds, length) =
+        try {
+          val (r, b) = SnapshotLog.footerStatsMulti(hconf, p, wantCols)
+          (r, b, p.getFileSystem(hconf).getFileStatus(p).getLen)
+        } catch {
           case NonFatal(_) => halt(400,
             s"data file ${f.path} is missing or not readable parquet",
             "BadRequestException")
@@ -966,6 +971,9 @@ final class RestCatalogServer(spark: SparkSession, warehouseDir: String,
       if (rows != f.rows)
         halt(400, s"data file ${f.path} declares ${f.rows} rows but its " +
           s"footer records $rows", "BadRequestException")
+      if (length != f.sizeBytes)
+        halt(400, s"data file ${f.path} declares file-size-in-bytes " +
+          s"${f.sizeBytes} but is $length bytes", "BadRequestException")
       pf.declaredVals.foreach { case (d, v) =>
         checkAgainstFooter(f.path, d, v, bounds.get(d.sourceName))
       }

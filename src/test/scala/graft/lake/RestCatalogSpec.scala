@@ -846,4 +846,49 @@ class RestCatalogSpec extends SparkTestBase {
         .collect().map(_.getString(0)).sorted.toSeq === Seq("a.b", "a.c"))
     } finally { srv.close(); cli.close() }
   }
+
+  test("commits verify file-size-in-bytes against the file: a wrong or missing size is 400") {
+    val (srv, cli, _) = fixture()
+    try {
+      cli.createTable(Seq("db"), "t", schema,
+        partitionSpec = Seq(Day -> "identity"))
+      val loc = cli.loadTable(Seq("db"), "t").location
+      val head = cli.loadTable(Seq("db"), "t").currentSnapshotId
+      val f = writeFile(loc, "d1.parquet",
+        Seq((1L, 1.0, "2024-01-01"), (2L, 2.0, "2024-01-01")))
+      // a zero-size entry plans no split, a short one truncates the
+      // scan: the catalog would serve fewer rows than the manifest counts
+      Seq(0L, f.sizeBytes - 1, f.sizeBytes + 1).foreach { declared =>
+        val e = intercept[RestCatalogError] {
+          cli.commitAppend(Seq("db"), "t", Seq(f.copy(sizeBytes = declared)))
+        }
+        assert(e.getMessage.contains("file-size-in-bytes") ||
+          e.getMessage.contains("bytes"), e.getMessage)
+      }
+      // Iceberg's file-size-in-bytes is required: absent is 400 too
+      val http = HttpClient.newHttpClient()
+      val body = s"""{"requirements":[],"updates":[{"action":"append",""" +
+        s""""append":{"data-files":[{"file-path":"${f.path}",""" +
+        s""""file-format":"parquet","record-count":2,""" +
+        s""""partition":{"$Day":"2024-01-01"}}]}}]}"""
+      val req = HttpRequest.newBuilder(
+        URI.create(s"${srv.baseUri}/catalog/v1/lake/namespaces/db/tables/t"))
+        .header("Authorization", "Bearer s3cr3t")
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build()
+      assert(http.send(req, HttpResponse.BodyHandlers.ofString())
+        .statusCode() === 400)
+      // nothing was committed by the refused attempts
+      assert(cli.loadTable(Seq("db"), "t").currentSnapshotId === head)
+      assert(SnapshotLog.currentSnapshot(spark, loc).forall(_.files.isEmpty))
+      // the honest commit lands, and the catalog's scan returns its rows
+      cli.commitAppend(Seq("db"), "t", Seq(f))
+      val cat = "rtest_size"
+      spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftRestCatalog].getName)
+      spark.conf.set(s"spark.sql.catalog.$cat.uri", srv.baseUri)
+      spark.conf.set(s"spark.sql.catalog.$cat.prefix", "lake")
+      spark.conf.set(s"spark.sql.catalog.$cat.token", "s3cr3t")
+      assert(spark.sql(s"SELECT id FROM $cat.db.t").collect()
+        .map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L))
+    } finally { srv.close(); cli.close() }
+  }
 }
