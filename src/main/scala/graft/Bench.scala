@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: measures every registered query at
   * `SPARK_GRAFT_SF_DIR`, emits ONE stdout JSON line for the driver.
@@ -111,29 +110,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // testdata tables are single ~50 MB parquet files; the 128 MB
-      // default makes every scan one task. Smaller splits keep all
-      // cores busy at these SFs (at 100 TB the default is fine).
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // local-FS open cost: the 4 MB default models object-store opens
-      // and caps packing at 2 files per 8 MB split — every freshly
-      // written lake's read-back (60-150 KB-sized day files) then pays
-      // ~file-count/2 scheduled tasks for KBs of data (measured: a 90-
-      // file read-back = 90 tasks, 0.55 s). 128 KB reflects a local-FS
-      // open and packs those scans to a handful of tasks; single-file
-      // table scans are unaffected (at 100 TB on an object store the
-      // default is right — this is split-packing, not a plan change).
-      .config("spark.sql.files.openCostInBytes", (128L * 1024).toString)
-      // filterless COUNT/MIN/MAX answered from parquet footer stats
-      // (exact; Spark refuses the pushdown where NaN could lie)
-      .config("spark.sql.parquet.aggregatePushDown", "true")
-      .config("spark.sql.extensions", "graft.lake.GraftSqlExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = LocalSession.cpus
+    val spark = LocalSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // Warmup: NON-measured work only (the sf0.001 flagship), so all

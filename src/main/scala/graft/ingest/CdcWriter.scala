@@ -257,15 +257,14 @@ object CdcWriter {
         val targetTypes = merged.schema.fields.map(f => f.name -> f.dataType).toMap
         val rewriteCols = cur.toSeq.flatMap(_.schema.fields.collect {
           case f if targetTypes.get(f.name).exists(tt =>
-            f.dataType != tt && !readableAs(f.dataType, tt)) => f.name
+            f.dataType != tt && !SnapshotLog.widensTo(f.dataType, tt)) => f.name
         })
         val delKeyCols = cur.toSeq.flatMap(_.deletes).flatMap(_.eqCols).distinct
         val clash = rewriteCols.intersect(delKeyCols)
         require(clash.isEmpty,
           s"widening merge would rewrite delete key column(s) ${clash.mkString(", ")} " +
             s"past their stored physical type in $tableDir — run foldDeletes first")
-        rewriteNarrow(spark, tableDir, untouched, merged.schema, pcol,
-          cur.toSeq.flatMap(_.deletes), cur.toSeq.flatMap(_.posDeletes))
+        rewriteNarrow(spark, tableDir, cur.get, untouched, merged.schema, pcol)
       }
     SnapshotLog.commit(spark, tableDir,
       if (truncLsn.isDefined) "truncate-merge" else "merge",
@@ -345,9 +344,9 @@ object CdcWriter {
           val widened = s.schema.fields.map { f =>
             upserts.schema.fields.find(_.name == f.name) match {
               case Some(uf) if uf.dataType == f.dataType => f
-              case Some(uf) if readableAs(f.dataType, uf.dataType) =>
+              case Some(uf) if SnapshotLog.widensTo(f.dataType, uf.dataType) =>
                 f.copy(dataType = uf.dataType)
-              case Some(uf) if readableAs(uf.dataType, f.dataType) => f
+              case Some(uf) if SnapshotLog.widensTo(uf.dataType, f.dataType) => f
               case Some(uf) => throw new IllegalArgumentException(
                 s"MOR cannot reconcile ${f.name}: ${f.dataType} vs ${uf.dataType} " +
                   "needs a physical rewrite — use merge()")
@@ -372,35 +371,13 @@ object CdcWriter {
     } finally deltaLatest.unpersist(blocking = true)
   }
 
-  /** A parquet file column written as `ft` is readable under a scan
-    * schema declaring `tt`: Spark 4's widening parquet reads cover
-    * int→long, int→double and float→double; long→double is not covered
-    * and needs a physical rewrite. */
-  private def readableAs(ft: org.apache.spark.sql.types.DataType,
-                         tt: org.apache.spark.sql.types.DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    (ft, tt) match {
-      case (a, b) if a == b                     => true
-      case (IntegerType, LongType | DoubleType) => true
-      case (FloatType, DoubleType)              => true
-      case _                                    => false
-    }
-  }
-
   private def needsPromotionCheck(stored: org.apache.spark.sql.types.StructType,
                                   target: org.apache.spark.sql.types.StructType): Boolean = {
     val targetTypes = target.fields.map(f => f.name -> f.dataType).toMap
     stored.fields.exists(f => targetTypes.get(f.name).exists(tt =>
-      f.dataType != tt && !readableAs(f.dataType, tt)))
+      f.dataType != tt && !graft.lake.SnapshotLog.widensTo(f.dataType, tt)))
   }
 
-  /** Cast-and-rewrite carried files whose PHYSICAL column types cannot be
-    * read under `target` (see [[needsPromotionCheck]]); files already
-    * readable (including pre-evolution files missing the column entirely)
-    * keep their manifest entries untouched. Footer schema checks are
-    * driver-side metadata reads, O(carried files), only on widening
-    * merges; the rewrite reads exactly the narrow files, grouped by
-    * physical schema so each group scans under its own types. */
   /** Physical file schema from the parquet footer — a driver-side
     * metadata read, not a per-file DataFrame analysis (each
     * `spark.read.parquet(file).schema` pays listing + analysis; over N
@@ -418,15 +395,21 @@ object CdcWriter {
     finally reader.close()
   }
 
+  /** Cast-and-rewrite carried files whose PHYSICAL column types cannot be
+    * read under `target` (see [[needsPromotionCheck]]); files already
+    * readable (including pre-evolution files missing the column entirely)
+    * keep their manifest entries untouched. Footer schema checks are
+    * driver-side metadata reads, O(carried files), only on widening
+    * merges; the rewrite reads exactly the narrow files, in one scan. */
   private def rewriteNarrow(spark: SparkSession, tableDir: String,
+                            cur: graft.lake.SnapshotLog.Snapshot,
                             carried: Seq[graft.lake.SnapshotLog.DataFile],
                             target: org.apache.spark.sql.types.StructType,
-                            pcol: String,
-                            liveDeletes: Seq[graft.lake.SnapshotLog.DeleteFile],
-                            livePosDeletes: Seq[graft.lake.SnapshotLog.PosDeleteFile] = Nil)
+                            pcol: String)
   : Seq[graft.lake.SnapshotLog.DataFile] = {
     import graft.lake.SnapshotLog
-    import org.apache.spark.sql.types.StructType
+    import graft.model.FieldIds
+    import org.apache.spark.sql.types.{DataType, StructType}
     val targetTypes = target.fields.map(f => f.name -> f.dataType).toMap
     // footer opens are independent driver-side metadata reads — do them
     // in parallel (same treatment as SnapshotLog.writeData's stats pass);
@@ -438,28 +421,35 @@ object CdcWriter {
         f -> footerSchema(spark, new org.apache.hadoop.fs.Path(s"$tableDir/${f.path}"))
       }.seq.toMap
     }
-    val (narrow, fine) = carried.partition(f => schemaOf(f).fields.exists(ff =>
-      targetTypes.get(ff.name).exists(tt => !readableAs(ff.dataType, tt))))
+    // the current column a footer column holds: by field id through the
+    // file's write-era schema, so a renamed column's bytes are checked
+    // against the type of the column they now serve
+    val eras = cur.schemasById.map { case (k, j) =>
+      k -> DataType.fromJson(j).asInstanceOf[StructType] }
+    def heldAs(f: SnapshotLog.DataFile, physical: String): Option[String] =
+      eras.get(f.schemaId).flatMap(_.fields.find(_.name == physical))
+        .flatMap(FieldIds.idOf) match {
+        case Some(id) => FieldIds.fieldById(cur.schema, id).map(_.name)
+        case None     => Some(physical)
+      }
+    val narrow = carried.filter(f => schemaOf(f).fields.exists(ff =>
+      heldAs(f, ff.name).flatMap(targetTypes.get)
+        .exists(tt => !SnapshotLog.widensTo(ff.dataType, tt))))
     if (narrow.isEmpty) return carried
-    val rewritten = narrow.groupBy(schemaOf).toSeq.flatMap { case (fsch, files) =>
-      // read THESE files under their own physical types (target's field
-      // set, the file's type where the file has the field), then cast up.
-      // Live equality AND positional deletes apply DURING the rewrite:
-      // the rewritten files get this commit's seq (outranking every live
-      // eq delete) and fresh paths (missing every positional delete) —
-      // rewriting a doomed row without dropping it here would resurrect
-      // it (the carried delete no longer applies to the new file)
-      val readSchema = StructType(target.fields.map(tf =>
-        fsch.find(_.name == tf.name).map(ff => tf.copy(dataType = ff.dataType))
-          .getOrElse(tf)))
-      val snapLike = SnapshotLog.Snapshot(0L, None, 0L, "rewrite",
-        readSchema.json, files, liveDeletes, livePosDeletes)
-      val casted = SnapshotLog.read(spark, tableDir, snapLike)
-        .select(target.fields.toSeq.map(tf =>
-          col(tf.name).cast(tf.dataType).as(tf.name)): _*)
+    // every committed file reads under its snapshot's schema (by field
+    // id), so THESE files read there and cast up. Live equality AND
+    // positional deletes apply DURING the rewrite: the rewritten files
+    // get this commit's seq (outranking every live eq delete) and fresh
+    // paths (missing every positional delete) — rewriting a doomed row
+    // without dropping it here would resurrect it (the carried delete no
+    // longer applies to the new file)
+    val stored = cur.schema.fieldNames.toSet
+    val casted = SnapshotLog.read(spark, tableDir, cur.copy(files = narrow))
+      .select(target.fields.toSeq.map(tf =>
+        (if (stored.contains(tf.name)) col(tf.name) else lit(null))
+          .cast(tf.dataType).as(tf.name)): _*)
+    carried.filterNot(narrow.toSet) ++
       SnapshotLog.writeData(spark, tableDir, casted, Some(pcol))
-    }
-    fine ++ rewritten
   }
 
   /** Bounded merge cadence — the COW-amplification lever for streams whose

@@ -18,8 +18,8 @@ import org.apache.spark.broadcast.Broadcast
   * delete era on the same key positions shares one broadcast.
   *
   * The canonicalized mode normalizes attribute ids to positions —
-  * callers that alias the frame's columns differently (the V1 and MOR
-  * paths use different lineage names) still share, while a different
+  * callers that alias the frame's columns differently still share,
+  * while a different
   * key extraction builds its own entry. Content addressing comes from
   * the frame key itself (delete paths + sizes + key schema), so a new
   * delete era can never serve a stale relation.

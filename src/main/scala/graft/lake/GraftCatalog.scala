@@ -38,18 +38,19 @@ import graft.lake.SnapshotLog.{DataFile, Snapshot}
   *     `.refs`, ref sample-queries.sql:55-61);
   *   - filters pushed by Spark prune MANIFEST entries before any footer
   *     is opened (partition value under each file's own spec transform +
-  *     recorded stats bounds), then flow into the inner parquet scan for
+  *     recorded stats bounds), then flow into the parquet readers for
   *     ordinary row-group pushdown. Merge-on-read semantics (equality +
-  *     positional deletes) apply transparently via [[SnapshotLog.read]]'s
-  *     broadcast collapse — SQL reads of a MOR table never shuffle the
+  *     positional deletes) apply through [[GraftMorScan.applyDeletes]]'s
+  *     size-gated joins — SQL reads of a MOR table never shuffle the
   *     stored side.
   *
-  * At 100 TB the scan cost model is the same as the programmatic read
-  * path: O(1) manifest resolution, driver-side pruning over manifest
-  * entries (thousands, not billions), and a parquet multi-path scan of
-  * only the surviving files. The catalog holds no state of its own —
-  * every query re-resolves the manifest, so readers always see the
-  * latest committed snapshot and never a partial commit. */
+  * The programmatic reads ([[SnapshotLog.read]]) plan the same relation,
+  * so at 100 TB there is one scan cost model: O(1) manifest resolution,
+  * driver-side pruning over manifest entries (thousands, not billions),
+  * and splits of only the surviving files — no directory listing. The
+  * catalog holds no state of its own — every query re-resolves the
+  * manifest, so readers always see the latest committed snapshot and
+  * never a partial commit. */
 class GraftCatalog extends TableCatalog with SupportsNamespaces
   with org.apache.spark.sql.connector.catalog.ProcedureCatalog {
 
@@ -336,8 +337,8 @@ private[lake] final class GraftTable(tableName: String, tableDir: String,
   /** Table root on disk — the handle [[GraftDmlRule]] lowers DML onto. */
   private[lake] def dir: String = tableDir
 
-  /** The pinned snapshot — [[GraftMorScanRule]] reads its delete sets to
-    * decide (and build) the columnar MOR rewrite. */
+  /** The pinned snapshot — [[GraftMorScan.applyDeletes]] reads its
+    * delete sets to compose the MOR read. */
   private[lake] def snapshot: Snapshot = snap
 
   override def name(): String = tableName
@@ -419,13 +420,12 @@ private[lake] final class GraftScanBuilder(tableDir: String, snap: Snapshot,
     * exact), so `SELECT * FROM t LIMIT 10` on an 800k-file table plans
     * ONE file. Always PARTIAL — Spark re-applies the limit above the
     * scan, so the truncation is safe exactly like every other manifest
-    * pruning decision. Only taken on the batch-eligible path: the MOR
-    * read applies deletes, where per-file row counts are upper bounds
-    * and a truncated file set could under-produce. */
+    * pruning decision. Never taken on the MOR data relation: per-file
+    * row counts are upper bounds once the joins above apply deletes, so
+    * n raw rows do not guarantee n LIVE rows (and Spark only pushes a
+    * limit sitting directly above a scan, which a composed MOR read
+    * never has). */
   override def pushLimit(n: Int): Boolean = {
-    // never truncate the MOR data relation: per-file row counts are
-    // upper bounds once the joins above apply deletes — n raw rows do
-    // not guarantee n LIVE rows
     if (morData) return false
     limit = Some(n)
     true
@@ -592,25 +592,6 @@ private[lake] final class GraftScanBuilder(tableDir: String, snap: Snapshot,
         }
     }
 
-  /** The native DSv2 Batch path applies when a plain multi-file parquet
-    * scan IS the correct read: no live deletes (MOR application needs
-    * the join in [[SnapshotLog.read]]) and every file's write-era schema readable BY NAME under the current
-    * schema (rename/drop evolution needs the per-era by-id projection).
-    * Everything else falls back to the V1 bridge, which builds the full
-    * DataFrame read. The batch path is what unlocks plan-time
-    * statistics (V1ScanWrapper drops SupportsReportStatistics) and
-    * runtime (DPP) filtering — both are file-list decisions the
-    * manifest answers. */
-  private def batchEligible: Boolean =
-    (morData || (snap.deletes.isEmpty && snap.posDeletes.isEmpty)) &&
-      snap.planMemoized("batchEraByName") {
-        GraftFoldStats.record()
-        val eras = SnapshotLog.parsedSchemas(snap)
-        snap.files.forall(f => f.schemaId == 0 ||
-          eras.get(f.schemaId).forall(ws =>
-            GraftEras.readable(ws, snap.schema)))
-      }
-
   override def build(): Scan = pushedAgg match {
     case Some(agg) =>
       // fold only the files the claimed day conjuncts keep — identity
@@ -618,26 +599,20 @@ private[lake] final class GraftScanBuilder(tableDir: String, snap: Snapshot,
       GraftAggScan.build(tableDir,
         snap.copy(files = snap.files.filter(
           GraftPruning.filePredicate(claimed, snap))), agg)
-    case None if batchEligible =>
+    case None =>
       new GraftBatchScan(SparkSession.active, tableDir, snap, required,
         filters, limit, morData,
         filtersExact = filters.nonEmpty && residual.isEmpty)
-    case None =>
-      // the MOR data relation has no V1 shape (its lineage columns only
-      // exist on the batch path); GraftMorScanRule pre-checks
-      // eligibility, so this is unreachable unless that check drifts
-      require(!morData,
-        s"MOR data relation for $tableDir lost batch eligibility")
-      new GraftScan(tableDir, snap, required, filters)
   }
 }
 
-/** The native DSv2 batch scan over a snapshot's pruned file set —
+/** The one scan of a snapshot's data files, over its pruned file set —
   * planned as a BatchScanExec (columnar parquet readers, whole-stage
-  * codegen), no V1 bridge. Two capabilities the bridge cannot offer:
+  * codegen) from manifest entries alone, with no file listing. Every
+  * snapshot read takes it: SQL reads and [[SnapshotLog.read]] alike.
+  * Two capabilities it brings to the optimizer:
   *
-  *  - `SupportsReportStatistics` actually reaches the optimizer
-  *    (V1ScanWrapper drops it), so broadcast decisions see manifest-
+  *  - `SupportsReportStatistics`, so broadcast decisions see manifest-
   *    measured sizes at PLAN time, before AQE;
   *  - `SupportsRuntimeFiltering`: a join against a filtered dimension
   *    hands the scan its runtime join-key filters (Spark's dynamic
@@ -668,7 +643,8 @@ private[lake] final class GraftBatchScan(spark: SparkSession,
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
 
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
-  import GraftMorScan.{AbsCol, PosCol, SeqCol}
+
+  private val lineage = GraftMorScan.lineageOf(snap.schema)
 
   @volatile private var runtimeFilters: Array[Filter] = Array.empty
   @volatile private var keptCache: Seq[DataFile] = null
@@ -678,19 +654,22 @@ private[lake] final class GraftBatchScan(spark: SparkSession,
     * vector per file) and `_pos` the parquet readers' row-index column —
     * `readSchema` reorders to the reader's physical layout (data
     * columns, then the in-file `_pos`, then the appended constants). */
-  private lazy val constSchema: StructType = StructType(Seq(
-    org.apache.spark.sql.types.StructField(AbsCol, StringType, nullable = false),
-    org.apache.spark.sql.types.StructField(SeqCol, LongType, nullable = false))
-    .filter(f => required.fieldNames.contains(f.name)))
+  private lazy val constSchema: StructType =
+    if (!morData) new StructType()
+    else StructType(Seq(
+      org.apache.spark.sql.types.StructField(lineage.abs, StringType, nullable = false),
+      org.apache.spark.sql.types.StructField(lineage.seq, LongType, nullable = false))
+      .filter(f => required.fieldNames.contains(f.name)))
+
+  /** The data columns the files serve (lineage excluded). */
+  private lazy val dataFields: Seq[org.apache.spark.sql.types.StructField] =
+    if (!morData) required.fields.toSeq
+    else required.fields.toSeq.filterNot(f => lineage.names.contains(f.name))
 
   private lazy val outSchema: StructType =
     if (!morData) required
-    else {
-      val data = required.fields.filterNot(f =>
-        GraftMorScan.LineageCols.contains(f.name))
-      val pos = required.fields.filter(_.name == PosCol)
-      StructType(data ++ pos ++ constSchema.fields)
-    }
+    else StructType(dataFields ++
+      required.fields.filter(_.name == lineage.pos) ++ constSchema.fields)
 
   private lazy val qualRoot: Path = {
     val p = new Path(tableDir)
@@ -698,7 +677,18 @@ private[lake] final class GraftBatchScan(spark: SparkSession,
   }
 
   override def readSchema(): StructType = outSchema
-  override def toBatch: org.apache.spark.sql.connector.read.Batch = this
+
+  /** Live deletes are applied by the joins [[GraftMorScan.applyDeletes]]
+    * puts above the MOR data relation. A plain scan of such a snapshot
+    * may be BUILT (the pushdown visits a `DELETE FROM` target, which
+    * never executes as a scan) but must never read: it escaped the
+    * composition and would return dead rows. */
+  override def toBatch: org.apache.spark.sql.connector.read.Batch = {
+    require(morData || !GraftMorScan.hasLiveDeletes(snap),
+      s"scan of $tableDir snapshot ${snap.id} has live deletes but no " +
+        "delete composition (GraftMorScan.applyDeletes)")
+    this
+  }
 
   private def keptFiles: Seq[DataFile] = {
     var k = keptCache
@@ -770,14 +760,12 @@ private[lake] final class GraftBatchScan(spark: SparkSession,
           // URI-escaped partition values (hour specs' space) and
           // filesystem authorities diverge between the two, and the
           // delete joins above key on the lineage form
-          val consts =
-            if (!morData) Array.empty[Any]
-            else constSchema.fieldNames.map[Any] {
-              case AbsCol =>
-                org.apache.spark.unsafe.types.UTF8String
-                  .fromString(SnapshotLog.absKey(qualRoot, f.path))
-              case SeqCol => f.seq
-            }.toArray
+          val consts = constSchema.fieldNames.map[Any] { n =>
+            if (n == lineage.abs)
+              org.apache.spark.unsafe.types.UTF8String
+                .fromString(SnapshotLog.absKey(qualRoot, f.path))
+            else f.seq
+          }
           (s"$tableDir/${f.path}", f.sizeBytes,
             if (consts.isEmpty) org.apache.spark.sql.catalyst.InternalRow.empty
             else new org.apache.spark.sql.catalyst.expressions
@@ -819,17 +807,13 @@ private[lake] final class GraftBatchScan(spark: SparkSession,
     * column's statistics. Manifest pruning already enforced the claimed
     * conjuncts; everything else Spark re-evaluates. */
   private def factoryFor(era: Int): PartitionReaderFactory = {
-    // lineage columns are plan-served ONLY in morData mode; a plain
-    // table may legally carry user columns named _abs/_pos/_seq and
-    // they must read from the files like any other
-    val dataFields =
-      if (!morData) outSchema.fields.toSeq
-      else outSchema.fields
-        .filterNot(f => GraftMorScan.LineageCols.contains(f.name)).toSeq
     val (reqData, pushNames, fileSchema) =
       if (era == 0) (dataFields, dataFields.map(_.name).toSet, snap.schema)
       else {
         val ws = eraSchemas(era)
+        require(GraftEras.projectable(ws, snap.schema),
+          s"$tableDir: files of schema id $era hold a column type the " +
+            "widening lattice cannot read as the current type")
         val req = dataFields.map(tf => GraftEras.eraField(ws, tf))
         (req,
           GraftEras.stableNames(ws, snap.schema)
@@ -841,7 +825,7 @@ private[lake] final class GraftBatchScan(spark: SparkSession,
     // must be NULLABLE or the vectorized reader treats it as a missing
     // REQUIRED parquet column and fails the read
     val readData = StructType(reqData ++
-      (if (morData && required.fieldNames.contains(PosCol))
+      (if (morData && required.fieldNames.contains(lineage.pos))
         Seq(org.apache.spark.sql.types.StructField(
           org.apache.spark.sql.GraftScanSupport.rowIndexColumn,
           LongType, nullable = true))
@@ -849,7 +833,7 @@ private[lake] final class GraftBatchScan(spark: SparkSession,
     org.apache.spark.sql.GraftScanSupport.parquetReaderFactory(spark,
       fileSchema, readData,
       filters.filter(_.references.forall(pushNames.contains)),
-      if (morData) constSchema else new StructType())
+      constSchema)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -884,75 +868,6 @@ private[lake] final class GraftBatchScan(spark: SparkSession,
       s"PushedFilters=[$pushedRendered] " +
       limit.map(n => s"PushedLimit=$n ").getOrElse("") +
       s"RuntimeFilterAttrs=[${filterAttrNames.mkString(", ")}]"
-}
-
-private[lake] final class GraftScan(tableDir: String, snap: Snapshot,
-                                    required: StructType, filters: Array[Filter])
-  extends V1Scan
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-
-  override def readSchema(): StructType = required
-
-  /** Manifest-measured statistics for the PRUNED file set — footer row
-    * counts and byte sizes recorded at commit time, zero I/O here.
-    * Deletes make the numbers upper bounds — the safe direction for
-    * broadcast decisions (never under-reports). NOTE: Spark's
-    * V1ScanWrapper does not currently forward this interface to the
-    * static optimizer, so plan-time stats stay conservative on the V1
-    * bridge; AQE's runtime re-plan covers the broadcast decision from
-    * TRUE sizes (spec-pinned), and the estimate is ready for the day
-    * the wrapper (or a native Batch implementation) surfaces it. */
-  override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val keep = GraftPruning.filePredicate(filters, snap)
-    val kept = snap.files.filter(keep)
-    val rows = kept.map(_.rows).sum
-    val bytes = kept.map(_.sizeBytes).sum
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.of(rows)
-    }
-  }
-
-  override def description(): String = {
-    val kept = snap.files.count(GraftPruning.filePredicate(filters, snap))
-    s"GraftSnapshotScan $tableDir snapshot=${snap.id} " +
-      s"files=$kept/${snap.files.size} columns=${required.fieldNames.mkString(",")}"
-  }
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new GraftRelation(context, tableDir, snap, required, filters)
-      .asInstanceOf[T]
-}
-
-/** The V1 bridge relation: builds the snapshot read (delete application
-  * included), applies the translatable predicates INSIDE the inner plan
-  * (so parquet row-group pushdown still happens past the RDD boundary),
-  * and projects to the pruned schema. */
-private[lake] final class GraftRelation(ctx: SQLContext, tableDir: String,
-                                        snap: Snapshot, required: StructType,
-                                        filters: Array[Filter])
-  extends BaseRelation with TableScan {
-
-  override def sqlContext: SQLContext = ctx
-  override def schema: StructType = required
-
-  /** Rendered into EXPLAIN's `Scan <relation>` line. */
-  override def toString: String = s"GraftSnapshot(snapshot=${snap.id})"
-
-  override def buildScan(): RDD[Row] = {
-    val spark = ctx.sparkSession
-    val keep = GraftPruning.filePredicate(filters, snap)
-    GraftScanStats.record(tableDir, snap.files.count(keep), snap.files.size)
-    val base = SnapshotLog.readPruned(spark, tableDir, snap, keep)
-    val cond = filters.toSeq
-      .flatMap(GraftPruning.translate(_, snap.schema))
-      .reduceOption(_ && _)
-    val filtered = cond.map(base.filter).getOrElse(base)
-    filtered.select(required.fieldNames.toSeq.map(col): _*).rdd
-  }
 }
 
 /** The metadata-only aggregate scan: a [[LocalScan]] whose rows are
@@ -1094,49 +1009,26 @@ private[lake] final class EraDispatchReaderFactory(
 }
 
 /** Era (rename/drop evolution) projection onto the columnar batch path:
-  * a file written under a RENAMED-away schema can still read through
-  * the stock parquet factory by requesting the era's PHYSICAL column
-  * names (resolved BY FIELD ID) at the target's positions — binding
-  * above a DSv2 scan is positional, so no per-row projection node is
-  * needed. Types must be equal or on the widening lattice the
-  * vectorized reader serves (int→long/double, long→double,
-  * float→double — the same promotions the engine's schema evolution
-  * produces); anything else keeps the V1 bridge's cast-based read. */
+  * a file written under a RENAMED-away schema reads through the stock
+  * parquet factory by requesting the era's PHYSICAL column names
+  * (resolved BY FIELD ID) at the target's positions — binding above a
+  * DSv2 scan is positional, so no per-row projection node is needed.
+  * Types must be equal or on the one widening lattice
+  * ([[SnapshotLog.widensTo]]) the parquet readers serve for by-name
+  * files too. */
 private[lake] object GraftEras {
 
   import org.apache.spark.sql.types._
 
-  /** What the VECTORIZED parquet reader's updaters can widen (Spark
-    * 4.1: IntegerToLong/IntegerToDouble/FloatToDouble — notably NO
-    * long→double). Deliberately NOT [[SnapshotLog]]'s logical promotion
-    * lattice: that one gates what a CAST-based read can heal; this one
-    * gates what the columnar reader can serve natively, and claiming
-    * more fails the read at execution instead of falling back. */
-  private def widenOk(from: DataType, to: DataType): Boolean = (from, to) match {
-    case (a, b) if a == b                => true
-    case (IntegerType, LongType)         => true
-    case (IntegerType, DoubleType)       => true
-    case (FloatType, DoubleType)         => true
-    case _                               => false
-  }
-
-  /** Era eligibility for the batch path: by-name readable, or
-    * projectable by id. ONE definition — [[GraftScanBuilder]]'s
-    * batchEligible and [[GraftMorScan.eligible]] must never drift
-    * (build() hard-fails a MOR relation the builder won't serve). */
-  def readable(ws: StructType, target: StructType): Boolean =
-    graft.model.FieldIds.byNameSafe(ws, target) || projectable(ws, target)
-
-  /** Every target field either resolves in the era BY ID with a
-    * reader-servable type, or has no era counterpart — in which case it
-    * reads as NULL via an absent-name request ([[eraField]]), exactly
-    * like the V1 bridge's by-id projection. */
+  /** Every target field either resolves in the era BY ID with a type
+    * that widens to the target's, or has no era counterpart — in which
+    * case it reads as NULL via an absent-name request ([[eraField]]). */
   def projectable(ws: StructType, target: StructType): Boolean =
     target.fields.forall { tf =>
       graft.model.FieldIds.idOf(tf)
         .flatMap(graft.model.FieldIds.fieldById(ws, _)) match {
         case None     => true // no era counterpart: absent-name null read
-        case Some(wf) => widenOk(wf.dataType, tf.dataType)
+        case Some(wf) => SnapshotLog.widensTo(wf.dataType, tf.dataType)
       }
     }
 

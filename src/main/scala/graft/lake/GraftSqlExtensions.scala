@@ -30,8 +30,8 @@ class GraftSqlExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectResolutionRule(spark => new GraftDmlRule(spark))
     // post-hoc (after resolution, before the optimizer's scan pushdown):
-    // read-position MOR relations become columnar batch scans with
-    // delete-application joins above ([[GraftMorScanRule]])
+    // MOR relations get their delete-application joins above the
+    // columnar scan ([[GraftMorScanRule]])
     ext.injectPostHocResolutionRule(spark => new GraftMorScanRule(spark))
     ext.injectPlannerStrategy(_ => GraftDmlStrategy)
     // physical (AQE stage-prep): broadcasts of content-cached delete

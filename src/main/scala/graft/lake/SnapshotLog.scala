@@ -1071,6 +1071,25 @@ object SnapshotLog {
     snap
   }
 
+  /** Can a parquet column written as `from` be READ as `to` by Spark's
+    * widening reads (no rewrite)? The one lattice: byte→short→int→long,
+    * byte/short/int→double, float→double — the by-name and the by-id
+    * (renamed era) reads both serve every step, with the vectorized and
+    * the row-based parquet reader (GraftBatchScanSpec pins each step).
+    * The long→double promotion needs a file rewrite and is deliberately
+    * absent (the merge writers rewrite in-commit for that crossing). */
+  def widensTo(from: DataType, to: DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    if (from == to) return true
+    (from, to) match {
+      case (ByteType, ShortType | IntegerType | LongType | DoubleType) => true
+      case (ShortType, IntegerType | LongType | DoubleType)            => true
+      case (IntegerType, LongType | DoubleType)                        => true
+      case (FloatType, DoubleType)                                     => true
+      case _                                                           => false
+    }
+  }
+
   /** Append already-written data files with OPTIMISTIC concurrency —
     * Iceberg's commit contract (ref internal/iceberg/catalog/rest.go:
     * 187-217: CommitSnapshot is a conditional PUT on the expected
@@ -1092,23 +1111,6 @@ object SnapshotLog {
     * a second process' interleaved commits land here as stale-parent
     * attempts and compose instead of erroring. Bounded retries — a
     * pathological commit storm still fails loudly rather than looping. */
-  /** Can a parquet column written as `from` be READ as `to` by Spark's
-    * widening reads (no rewrite)? The lattice Spark 4 supports without
-    * a rewrite: byte→short→int→long, int→double, float→double. The
-    * long→double promotion needs a file rewrite and is deliberately
-    * absent (the merge writers rewrite in-commit for that crossing). */
-  private def widensTo(from: DataType, to: DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    if (from == to) return true
-    (from, to) match {
-      case (ByteType, ShortType | IntegerType | LongType | DoubleType) => true
-      case (ShortType, IntegerType | LongType | DoubleType)            => true
-      case (IntegerType, LongType | DoubleType)                        => true
-      case (FloatType, DoubleType)                                     => true
-      case _                                                           => false
-    }
-  }
-
   def appendFiles(spark: SparkSession, tableDir: String,
                   files: Seq[DataFile], schema: StructType,
                   expectedParent: Option[Snapshot],
@@ -1529,10 +1531,11 @@ object SnapshotLog {
       // day's files. Pruning is conservative-by-contract: `keep` must
       // admit every file that COULD hold a matching row — the row
       // predicate still applies to everything scanned.
-      val hits = readCore(spark, tableDir,
-        cur.copy(files = cur.files.filter(keep)), None, keepLineage = true)
+      val hits = scan(spark, tableDir,
+        cur.copy(files = cur.files.filter(keep)), lineage = true)
         .filter(predicate)
-      val entries = writePosFile(spark, tableDir, slotsOf(spark, tableDir, hits))
+      val entries = writePosFile(spark, tableDir,
+        slotsOf(spark, tableDir, cur, hits))
       if (entries.isEmpty) return None
       Some(commit(spark, tableDir, "delete", cur.files, cur.schema,
         parent = Some(cur), deletes = cur.deletes,
@@ -1578,13 +1581,14 @@ object SnapshotLog {
         s"$tableDir is partitioned; pass partitionCol so replacement " +
           "rows keep their partition value")
       // same manifest-pruning contract as [[deleteWhere]]; adaptive
-      // persist: a mass delete set shuffle-hash-joins inside readCore,
+      // persist: a mass delete set shuffle-hash-joins inside the read,
       // and a fixed cached plan would keep every shuffle partition
-      val matched = graft.ingest.BatchExec.persistAdaptive(readCore(spark, tableDir,
-        cur.copy(files = cur.files.filter(keep)), None, keepLineage = true)
+      val matched = graft.ingest.BatchExec.persistAdaptive(scan(spark, tableDir,
+        cur.copy(files = cur.files.filter(keep)), lineage = true)
         .filter(predicate))
       try {
-        val slots = writePosFile(spark, tableDir, slotsOf(spark, tableDir, matched))
+        val slots = writePosFile(spark, tableDir,
+          slotsOf(spark, tableDir, cur, matched))
         if (slots.isEmpty) return None
         val replacement = matched.select(schema.fields.toSeq.map(f =>
           assignments.get(f.name).map(_.cast(f.dataType))
@@ -1776,7 +1780,7 @@ object SnapshotLog {
         require(dups == 0L,
           s"MERGE INTO $tableDir: source has duplicate rows under " +
             s"(${onCols.mkString(", ")}) — cardinality violation")
-      val live = readCore(spark, tableDir, cur, None, keepLineage = true)
+      val live = scan(spark, tableDir, cur, lineage = true)
       // size-gated: the dup check above materialized the persisted
       // source, so the cached relation's stats are REAL bytes — a
       // delta-sized source broadcasts, a bulk-load source shuffle-hash-
@@ -1853,12 +1857,13 @@ object SnapshotLog {
             bsPersisted = Some(bs)
             Some(bs)
           }
+        val lin = GraftMorScan.lineageOf(schema)
         val allSlotRows = bsActioned
-          .map(bs => actioned.select(col("_abs"), col("_pos"))
-            .unionByName(bs.select(col("_abs"), col("_pos"))))
+          .map(bs => actioned.select(col(lin.abs), col(lin.pos))
+            .unionByName(bs.select(col(lin.abs), col(lin.pos))))
           .getOrElse(actioned)
         val slots = writePosFile(spark, tableDir,
-          slotsOf(spark, tableDir, allSlotRows))
+          slotsOf(spark, tableDir, cur, allSlotRows))
         val updates = matchedClauses.zipWithIndex.collect {
           case (MatchedUpdate(_, assign), i) =>
             actioned.filter(col(MergeActionCol) === i)
@@ -1957,10 +1962,6 @@ object SnapshotLog {
   private[lake] def absKey(root: Path, rel: String): String =
     new Path(root, rel).toUri.toASCIIString.replaceFirst("^[a-z0-9]+:/+", "/")
 
-  /** Distinct dead `(abs, pos)` slots from ALL of `snap`'s positional-
-    * delete files — ONE multi-path scan, size-gated from manifest bytes
-    * for the anti-join above the stored side. Shared by the V1 MOR read
-    * and the columnar MOR rewrite so the two paths cannot drift. */
   // ---- content-addressed delete-frame cache -------------------------
   // Delete files are immutable once committed, so the MATERIALIZED
   // small-side frames (distinct pos-delete slots, per-key newest
@@ -1993,7 +1994,7 @@ object SnapshotLog {
   private var deleteFrameRowsHeld = 0L
   private val DeleteFrameRowBudget = 2L * 1000 * 1000
   /** A key never enters the cache on FIRST sighting — plan-time frame
-    * construction (EXPLAIN, the MOR rewrite inside analysis) must not
+    * construction (EXPLAIN, the MOR composition inside analysis) must not
     * run collect jobs for one-off plans. A repeated key is a proven
     * re-read; only that pays the one collect that fills the cache.
     * Bounded LRU so the sighting record itself cannot grow unbounded. */
@@ -2084,6 +2085,10 @@ object SnapshotLog {
     localFrame(spark, outSchema, rows)
   }
 
+  /** Distinct dead `(abs, pos)` slots from ALL of `snap`'s positional-
+    * delete files — ONE multi-path scan, size-gated from manifest bytes
+    * for the anti-join [[GraftMorScan.applyDeletes]] puts above the
+    * stored side. */
   private[lake] def posDeleteSlotsFrame(spark: SparkSession, tableDir: String,
                                         snap: Snapshot, absCol: String,
                                         posCol: String): DataFrame = {
@@ -2114,11 +2119,11 @@ object SnapshotLog {
     * row survives iff no delete outranks its file. ONE multi-path scan
     * of all delete files; each key's seq joins in from a broadcast
     * manifest-derived (path → seq) map, so plan width stays O(1) in
-    * un-folded commit count. Size-gated; shared by both MOR paths.
+    * un-folded commit count. Size-gated.
     *
     * `deletes` must share ONE key-column set — a snapshot whose delete
     * files span key-set ERAS (the merge keys changed between folds)
-    * applies one frame per era, stacked by the callers. */
+    * applies one frame per era, stacked by [[GraftMorScan.applyDeletes]]. */
   private[lake] def eqDeleteMaxFrame(spark: SparkSession, tableDir: String,
                                      snap: Snapshot, seqCol: String,
                                      deletes: Seq[DeleteFile]): DataFrame = {
@@ -2152,10 +2157,12 @@ object SnapshotLog {
     sizeGated(spark, delMax, est)
   }
 
-  /** Lineage rows → table-relative `(file, pos)` slots (the manifest's
-    * path form — stable if the table dir moves). */
-  private def slotsOf(spark: SparkSession, tableDir: String,
+  /** Lineage rows of `snap` (a [[scan]] with `lineage`) → table-relative
+    * `(file, pos)` slots (the manifest's path form — stable if the table
+    * dir moves). */
+  private def slotsOf(spark: SparkSession, tableDir: String, snap: Snapshot,
                       lineageRows: DataFrame): DataFrame = {
+    val lin = GraftMorScan.lineageOf(snap.schema)
     val (_, root) = fsOf(spark, tableDir)
     val rootNorm = absRoot(root)
     // `_abs` comes from the (percent-encoded) file URI with only the
@@ -2166,8 +2173,8 @@ object SnapshotLog {
       s"table dir $rootNorm contains URI-escaped characters; " +
         "row-level DML path mapping would misalign")
     lineageRows
-      .select(expr(s"substring(_abs, ${rootNorm.length + 2})").as("file"),
-        col("_pos").as("pos"))
+      .select(substring(col(lin.abs), rootNorm.length + 2, Int.MaxValue).as("file"),
+        col(lin.pos).as("pos"))
       .distinct()
   }
 
@@ -2231,161 +2238,59 @@ object SnapshotLog {
   // ---- reads
 
   /** The snapshot's schema-id map parsed to StructTypes — the write-era
-    * resolution table [[readFiles]] projects old files through. */
+    * resolution table [[GraftBatchScan]] projects old files through. */
   private[lake] def parsedSchemas(snap: Snapshot): Map[Int, StructType] =
     snap.schemasById.map { case (k, j) =>
       k -> DataType.fromJson(j).asInstanceOf[StructType]
     }
 
-  /** Read an explicit file subset under the stored schema (no delete
-    * application — the building block for [[read]]). */
-  /** Read an explicit file subset under the stored schema. With
-    * `lineage`, two extra columns ride along: `_abs` (the row's
-    * data-file path, scheme-normalized to a bare filesystem path) and
-    * `_pos` (the row ordinal within that file, from the parquet
-    * reader's `_metadata.row_index`) — the join identity positional
-    * deletes target. */
-  private def readFiles(spark: SparkSession, tableDir: String,
-                        schema: StructType, files: Seq[DataFile],
-                        lineage: Boolean = false,
-                        schemasById: Map[Int, StructType] = Map.empty): DataFrame = {
-    import graft.model.FieldIds
-    val lineageCols =
-      if (!lineage) Seq.empty
-      else Seq(
-        regexp_replace(col("_metadata.file_path"), "^[a-z0-9]+:/+", "/").as("_abs"),
-        col("_metadata.row_index").as("_pos"))
-    if (files.isEmpty) {
-      val outSchema =
-        if (!lineage) schema
-        else StructType(schema.fields ++ Seq(
-          org.apache.spark.sql.types.StructField("_abs",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("_pos",
-            org.apache.spark.sql.types.LongType)))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-    }
-    val ordered = schema.fieldNames.toSeq
-    // field-id resolution (rename/drop evolution): files whose write-era
-    // schema maps some shared field id to a DIFFERENT name cannot read
-    // by name — each such era reads under its own physical schema and
-    // projects onto the target BY ID (renamed columns follow the id,
-    // dropped-then-re-added names stay null). Files whose era agrees on
-    // every shared name — the overwhelming steady state — keep the
-    // single by-name scan.
-    val (renamed, inlineFiles) = files.partition(f =>
-      f.schemaId != 0 && schemasById.get(f.schemaId)
-        .exists(ws => !FieldIds.byNameSafe(ws, schema)))
-    val renamedParts = renamed.groupBy(_.schemaId).toSeq.map { case (sid, fset) =>
-      val ws = schemasById(sid)
-      spark.read.schema(ws)
-        .parquet(fset.map(f => s"$tableDir/${f.path}"): _*)
-        .select(schema.fields.toSeq.map { tf =>
-          FieldIds.idOf(tf).flatMap(FieldIds.fieldById(ws, _)) match {
-            case Some(wf) => col(wf.name).cast(tf.dataType).as(tf.name)
-            case None     => lit(null).cast(tf.dataType).as(tf.name)
-          }
-        } ++ lineageCols: _*)
-    }
-    val parts = renamedParts ++
-      (if (inlineFiles.isEmpty) None
-       // explicit schema: no footer-merge pass; files missing a column
-       // (pre-evolution) surface it as null
-       else Some(spark.read.schema(schema)
-         .parquet(inlineFiles.map(f => s"$tableDir/${f.path}"): _*)
-         .select(ordered.map(col) ++ lineageCols: _*)))
-    parts.reduce(_ unionByName _)
+  /** The one read of a snapshot's data files: a DSv2 relation over the
+    * snapshot served by [[GraftBatchScan]] — splits planned from the
+    * manifest (no file listing), columnar parquet readers, per-era
+    * by-id projection — with the live deletes composed above it by
+    * [[GraftMorScan.applyDeletes]], the same tree a SQL read of the
+    * snapshot plans. Columns are nullable, like a parquet file read. With
+    * `lineage` the LIVE rows also carry the lineage columns named by
+    * [[GraftMorScan.lineageOf]] (`abs`, `pos`) — the scan row-level DML
+    * ([[deleteWhere]], [[updateWhere]], [[mergeInto]]) evaluates
+    * predicates on: a row already dead under existing deletes must not
+    * match again (for UPDATE that would resurrect it). */
+  private def scan(spark: SparkSession, tableDir: String, snap: Snapshot,
+                   lineage: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    val rel = org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation(
+      new GraftTable(tableDir, tableDir, snap),
+      org.apache.spark.sql.catalyst.types.DataTypeUtils
+        .toAttributes(StructType(snap.schema.fields.map(_.copy(nullable = true)))),
+      None, None,
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+    org.apache.spark.sql.classic.GraftShim.ofRows(castToImpl(spark),
+      GraftMorScan.applyDeletes(spark, rel, lineage))
   }
 
   /** Read a snapshot's file set, optionally pruned to partition values —
     * manifest-level file skipping, no directory listing. Missing columns
-    * (schema evolution) surface as nulls via the explicit stored schema.
+    * (schema evolution) surface as nulls; renamed columns follow their
+    * field id.
     *
     * Equality deletes (merge-on-read, Iceberg v2) apply transparently: a
     * key tuple in a delete file with seq S drops that key's rows from
-    * every data file with seq < S. The deletes-free path is untouched —
-    * one multi-path scan, no extra plan nodes. With deletes, data files
-    * group by seq (one scan per retained commit — bounded by the fold
-    * cadence, see [[foldDeletes]]) and the delete set joins SIZE-GATED
-    * from the manifest's recorded bytes: delta-sized delete sets
-    * broadcast (the common CDC shape — the stored table never shuffles
-    * for delete application), a mass-delete's accumulated set
-    * shuffle-hash-joins instead of OOMing the driver. */
+    * every data file with seq < S; positional deletes drop their exact
+    * (file, row) slots. The deletes-free read is the bare scan. Delete
+    * sets join SIZE-GATED from the manifest's recorded bytes:
+    * delta-sized delete sets broadcast (the common CDC shape — the
+    * stored table never shuffles for delete application), a
+    * mass-delete's accumulated set shuffle-hash-joins instead of OOMing
+    * the driver. */
   def read(spark: SparkSession, tableDir: String, snap: Snapshot,
            partitions: Option[Seq[String]] = None): DataFrame =
-    readCore(spark, tableDir, snap, partitions, keepLineage = false)
-
-  /** [[read]] with `_abs`/`_pos` lineage retained on the LIVE rows —
-    * the scan row-level DML ([[deleteWhere]], [[updateWhere]]) evaluates
-    * predicates on: a row already dead under existing deletes must not
-    * match again (for UPDATE that would resurrect it). */
-  private def readCore(spark: SparkSession, tableDir: String, snap: Snapshot,
-                       partitions: Option[Seq[String]],
-                       keepLineage: Boolean): DataFrame = {
-    val schema = snap.schema
     // spec-aware pruning: each requested day is evaluated under the
     // FILE's partition transform (identity: value equality; month: the
     // day's month prefix) — partition-spec evolution means one snapshot
     // can mix layouts, and the predicate must follow the file, not the
     // table (Iceberg evaluates residuals per spec the same way)
-    val wanted = partitions.map(_.toSet)
-    val files = snap.files.filter(f =>
-      wanted.forall(ws => ws.exists(f.matchesDay)))
-    val out = schema.fieldNames.toSeq ++
-      (if (keepLineage) Seq("_abs", "_pos") else Seq.empty)
-    if ((snap.deletes.isEmpty && snap.posDeletes.isEmpty) || files.isEmpty)
-      return readFiles(spark, tableDir, schema, files, lineage = keepLineage,
-        schemasById = parsedSchemas(snap))
-    // equality deletes need each row's data-sequence-number, derived from
-    // the row's FILE — lineage rides along whenever either delete kind
-    // (or the caller) needs row identity
-    val haveLineage = snap.posDeletes.nonEmpty || keepLineage ||
-      snap.deletes.nonEmpty
-    val (_, root) = fsOf(spark, tableDir)
-    def load(fset: Seq[DataFile]): DataFrame =
-      readFiles(spark, tableDir, schema, fset, lineage = haveLineage,
-        schemasById = parsedSchemas(snap))
-    val base =
-      if (snap.deletes.isEmpty) load(files)
-      else {
-        // ONE multi-path scan for ALL data files: each row's seq joins in
-        // from a broadcast manifest-derived (path → seq) map instead of
-        // one union leg per distinct seq — plan width stays O(1) however
-        // many un-folded commits the snapshot carries (at 100 TB a CDC
-        // table between foldDeletes runs holds hundreds). Keys MUST be
-        // the `_abs` form ([[absKey]]) — a raw manifest path diverges on
-        // URI-escaped partition values and the join would drop rows.
-        import spark.implicits._
-        val seqMap = broadcast(
-          files.map(f => (absKey(root, f.path), f.seq))
-            .toDF("_abs", "_seq"))
-        load(files).join(seqMap, Seq("_abs"), "inner")
-      }
-    // positional deletes first: row identity (file, pos) is absolute —
-    // independent of seq, dead regardless of which commit added the row.
-    // Size-gated from manifest bytes: a delta-sized slot set broadcasts,
-    // a mass-delete's shuffle-hash-joins (the stored table hashes on
-    // lineage — never sorts, never builds a driver-sized table).
-    val afterPos =
-      if (snap.posDeletes.isEmpty) base
-      else base.join(
-        posDeleteSlotsFrame(spark, tableDir, snap, "_abs", "_pos"),
-        Seq("_abs", "_pos"), "left_anti")
-    // one frame per key-set ERA (merge keys may change between folds):
-    // a row dies when ANY era's newest matching delete outranks its
-    // file, so the eras stack as independent join+filter legs
-    val afterEq = if (snap.deletes.isEmpty) afterPos else {
-      snap.deletes.groupBy(_.eqCols).toSeq.sortBy(_._1.mkString(","))
-        .foldLeft(afterPos) { case (acc, (eqCols, dels)) =>
-          acc.join(eqDeleteMaxFrame(spark, tableDir, snap, "_del_seq", dels),
-            eqCols, "left")
-            .filter(col("_del_seq").isNull || col("_seq") >= col("_del_seq"))
-            .drop("_del_seq")
-        }
-    }
-    afterEq.select(out.map(col): _*)
-  }
+    scan(spark, tableDir, partitions.fold(snap)(days =>
+      snap.copy(files = pruneToDays(snap, days))))
 
   /** Read the current table state (empty frame with the last committed
     * schema if the table committed empty; None if no log exists). */
@@ -2402,8 +2307,7 @@ object SnapshotLog {
     * way they would in the full read. */
   def readPruned(spark: SparkSession, tableDir: String, snap: Snapshot,
                  keep: DataFile => Boolean): DataFrame =
-    readCore(spark, tableDir, snap.copy(files = snap.files.filter(keep)),
-      None, keepLineage = false)
+    scan(spark, tableDir, snap.copy(files = snap.files.filter(keep)))
 
   /** Manifest-level file skipping by LSN range: the files of `snap` that
     * can hold a row with `lo <= lsn <= hi`, decided from the per-file
@@ -2445,29 +2349,18 @@ object SnapshotLog {
       case None           => true
     })
 
-  /** Read exactly the files [[pruneByStats]] selects under the snapshot's
-    * schema. Callers still apply the row-level predicate — bounds overlap
-    * is necessary, not sufficient. */
+  /** [[read]] of exactly the files [[pruneByStats]] selects, live
+    * deletes applied. Callers still apply the row-level predicate —
+    * bounds overlap is necessary, not sufficient. */
   def readStatsRange(spark: SparkSession, tableDir: String, snap: Snapshot,
-                     column: String, lo: BigDecimal, hi: BigDecimal): DataFrame = {
-    require(snap.deletes.isEmpty && snap.posDeletes.isEmpty,
-      s"readStatsRange on a deletes-bearing snapshot of $tableDir — " +
-        "fold deletes first or use read()")
-    readFiles(spark, tableDir, snap.schema, pruneByStats(snap, column, lo, hi),
-      schemasById = parsedSchemas(snap))
-  }
+                     column: String, lo: BigDecimal, hi: BigDecimal): DataFrame =
+    scan(spark, tableDir, snap.copy(files = pruneByStats(snap, column, lo, hi)))
 
-  /** Read exactly the files [[pruneByLsn]] selects under the snapshot's
-    * schema (delete application is the caller's concern — the gated use
-    * is an append-only fixture; compose with [[read]] for MOR tables). */
+  /** [[read]] of exactly the files [[pruneByLsn]] selects, live deletes
+    * applied. Callers still apply the row-level predicate. */
   def readLsnRange(spark: SparkSession, tableDir: String, snap: Snapshot,
-                   lo: String, hi: String): DataFrame = {
-    require(snap.deletes.isEmpty && snap.posDeletes.isEmpty,
-      s"readLsnRange on a deletes-bearing snapshot of $tableDir — " +
-        "fold deletes first or use read()")
-    readFiles(spark, tableDir, snap.schema, pruneByLsn(snap, lo, hi),
-      schemasById = parsedSchemas(snap))
-  }
+                   lo: String, hi: String): DataFrame =
+    scan(spark, tableDir, snap.copy(files = pruneByLsn(snap, lo, hi)))
 
   // ---- compaction
 
@@ -2833,10 +2726,8 @@ object SnapshotLog {
     // RAW maps first (schemas are immutable per id), parse each id once.
     val eraJson = window.map(_.schemasById)
       .foldLeft(Map.empty[Int, String])(_ ++ _)
-    readFiles(spark, tableDir, schema, added,
-      schemasById = eraJson.map { case (k, j) =>
-        k -> DataType.fromJson(j).asInstanceOf[StructType]
-      })
+    scan(spark, tableDir, Snapshot(toId, None, 0L, "incremental",
+      schema.json, added, schemasById = eraJson))
   }
 
   /** Changelog scan (Iceberg's CDC-out surface): the NET row changes each
@@ -2875,8 +2766,8 @@ object SnapshotLog {
     val parts = window.filterNot(s =>
       s.operation == "replace" || s.operation == "evolve-schema").flatMap { s =>
       val added = s.files.filter(_.seq == s.id)
-      val upserts = readFiles(spark, tableDir, s.schema, added,
-        schemasById = parsedSchemas(s))
+      val upserts = scan(spark, tableDir,
+        s.copy(files = added, deletes = Nil, posDeletes = Nil))
       val up = upserts.select(
         lit(s.id).as("_change_snapshot_id") +: lit("upsert").as("_change_type") +:
           ordered.map(c => (if (upserts.columns.contains(c)) col(c)

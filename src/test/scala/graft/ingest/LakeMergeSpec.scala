@@ -362,6 +362,28 @@ class LakeMergeSpec extends SparkTestBase {
     assert(state === Seq((1L, 7.0), (2L, 9.5)))
   }
 
+  test("a long→double widening merge rewrites a RENAMED column's carried files by field id") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-lakemerge-promote-ren").toString + "/t"
+    CdcWriter.merge(spark, dir, envScore("long",
+      (1L, 1L, 1.0, "INSERT", "2024-01-01", 7.0),
+      (2L, 2L, 2.0, "INSERT", "2024-01-02", 9.0)), Seq("user_id"))
+    // the day-1 file stores the column as `score`, which now serves
+    // `points`: the widening check must follow the field id, or the
+    // carried long bytes stay under a double column no reader widens to
+    SnapshotLog.renameColumn(spark, dir, "score", "points")
+    val day1Before = files(dir, "2024-01-01")
+    CdcWriter.merge(spark, dir, envScore("double",
+      (2L, 20L, 2.5, "UPDATE", "2024-01-02", 9.5))
+      .withColumnRenamed("score", "points"), Seq("user_id"))
+    assert(SnapshotLog.currentSnapshot(spark, dir).get.schema("points").dataType ===
+      org.apache.spark.sql.types.DoubleType)
+    assert(files(dir, "2024-01-01") !== day1Before)
+    val state = CdcWriter.read(spark, dir)
+      .select($"user_id", $"points").as[(Long, Double)].collect().toSeq.sorted
+    assert(state === Seq((1L, 7.0), (2L, 9.5)))
+  }
+
   test("int widening stays metadata-only: carried int files are readable, not rewritten") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-lakemerge-intwiden").toString + "/t"

@@ -61,7 +61,7 @@ class AggPushdownSpec extends SparkTestBase {
     assert(meta, "count(*) was not answered from metadata")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("LocalTableScan"), s"expected LocalTableScan:\n$plan")
-    assert(!plan.contains("GraftSnapshot("), s"file scan in plan:\n$plan")
+    assert(!plan.contains("BatchScan"), s"file scan in plan:\n$plan")
   }
 
   test("day-grouped COUNT(*) comes one row per partition from the manifest") {

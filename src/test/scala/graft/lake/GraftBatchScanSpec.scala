@@ -5,11 +5,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** The native DSv2 batch path: eligible snapshots plan a BatchScanExec
-  * (columnar parquet, no V1 bridge) with identical results; MOR/hive/
-  * renamed-era snapshots fall back to the bridge; runtime (DPP) filters
-  * from a joined dimension prune manifest files before any footer
-  * opens; plan-time statistics come from the manifest. */
+/** The one scan path: every snapshot read plans a BatchScanExec over the
+  * manifest's files (columnar parquet) — live deletes compose as joins
+  * above the MOR data scan, renamed eras read through per-era reader
+  * factories, every step of the widening lattice reads in both kinds of
+  * era; runtime (DPP) filters from a joined dimension prune manifest
+  * files before any footer opens; plan-time statistics come from the
+  * manifest. */
 class GraftBatchScanSpec extends SparkTestBase {
 
   private val cat = "gbatchtest"
@@ -59,7 +61,6 @@ class GraftBatchScanSpec extends SparkTestBase {
       s"SELECT id, v FROM $cat.ns.t WHERE _cdc_date = '2024-01-02' ORDER BY id")
     val p = plan(df)
     assert(p.contains("BatchScan"), s"expected native BatchScan:\n$p")
-    assert(!p.contains("GraftSnapshot("), s"V1 bridge in plan:\n$p")
     import spark.implicits._
     assert(df.select(col("id").cast("long")).as[Long].collect().toSeq.sorted
       === Seq(21L, 22L, 23L))
@@ -83,10 +84,24 @@ class GraftBatchScanSpec extends SparkTestBase {
     assert(p.contains("BatchScan"), s"MOR read lost the batch path:\n$p")
     assert(p.contains("morData=true"), s"expected the MOR data scan:\n$p")
     assert(p.contains("ColumnarToRow"), s"vectorized read not planned:\n$p")
-    assert(!p.contains("GraftSnapshot("), s"V1 bridge in plan:\n$p")
     import spark.implicits._
     val ids = df.as[Long].collect().toSeq.sorted
     assert(ids.length === 11 && !ids.contains(21L), s"wrong survivors: $ids")
+  }
+
+  test("a command's query reads a MOR table with its deletes applied") {
+    buildTable()
+    spark.sql(s"DELETE FROM $cat.ns.t WHERE id = 21")
+    import spark.implicits._
+    // INSERT ... SELECT and CTAS root at a command; their queries still
+    // compose the deletes
+    spark.sql(s"CREATE TABLE $cat.ns.copy (id BIGINT, v BIGINT)")
+    spark.sql(s"INSERT INTO $cat.ns.copy SELECT id, v FROM $cat.ns.t")
+    spark.sql(s"CREATE TABLE $cat.ns.ctas AS SELECT id, v FROM $cat.ns.t")
+    for (t <- Seq("copy", "ctas")) {
+      val ids = spark.sql(s"SELECT id FROM $cat.ns.$t").as[Long].collect().toSeq
+      assert(ids.length === 11 && !ids.contains(21L), s"$t: $ids")
+    }
   }
 
   test("live EQ-deletes rank by data-sequence-number on the batch path") {
@@ -212,7 +227,7 @@ class GraftBatchScanSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
-  test("mixed eq-key ERAS stack one delete frame each; batch path kept, V1 agrees") {
+  test("mixed eq-key ERAS stack one delete frame each on the batch path") {
     val (_, dir) = buildTable()
     import spark.implicits._
     // era 1: equality delete keyed on id (id=21 dies)
@@ -236,25 +251,22 @@ class GraftBatchScanSpec extends SparkTestBase {
     }
     val snap = SnapshotLog.currentSnapshot(spark, dir).get
     assert(snap.deletes.map(_.eqCols).distinct.size === 2)
-    assert(GraftMorScan.eligible(snap), "mixed eras must stay batch-eligible")
     val df = spark.sql(s"SELECT id, v FROM $cat.ns.t")
     val p = plan(df)
     assert(p.contains("BatchScan") && p.contains("morData=true"),
       s"mixed-era MOR read lost the batch path:\n$p")
-    assert(!p.contains("GraftSnapshot("), s"V1 bridge in plan:\n$p")
     val batch = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(!batch.exists(_._1 == 21L), s"id-era delete not applied: $batch")
     assert(!batch.exists(_._2 == 302L), s"v-era delete not applied: $batch")
     assert(batch.size === 10)
-    // the V1 bridge stacks the same per-era frames — identical state
-    spark.conf.set("spark.graft.morBatchScan.enabled", "false")
-    try {
-      val v1df = spark.sql(s"SELECT id, v FROM $cat.ns.t")
-      val v1p = plan(v1df)
-      assert(v1p.contains("GraftSnapshot("), s"expected V1 bridge:\n$v1p")
-      assert(v1df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        === batch)
-    } finally spark.conf.set("spark.graft.morBatchScan.enabled", "true")
+    // the fixture's rows minus both eras' deletes — and the engine read
+    // of the same snapshot plans the same composition
+    val expected = (for { d <- 1 to 4; i <- 1 to 3 }
+      yield ((d * 10 + i).toLong, (d * 100 + i).toLong)).toSet -
+      ((21L, 201L)) - ((32L, 302L))
+    assert(batch === expected)
+    assert(SnapshotLog.read(spark, dir, snap).select("id", "v").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet === expected)
   }
 
   test("renamed eras keep the batch path: per-era readers request physical names by id") {
@@ -313,17 +325,114 @@ class GraftBatchScanSpec extends SparkTestBase {
       s"dropped column bytes leaked: $rows")
   }
 
-  test("spark.graft.morBatchScan.enabled=false restores the V1 MOR read") {
-    buildTable()
-    spark.sql(s"DELETE FROM $cat.ns.t WHERE id = 21")
-    spark.conf.set("spark.graft.morBatchScan.enabled", "false")
-    try {
-      val df = spark.sql(s"SELECT id FROM $cat.ns.t")
-      val p = plan(df)
-      assert(!p.contains("BatchScan"), s"kill switch ignored:\n$p")
-      import spark.implicits._
-      assert(df.as[Long].collect().length === 11)
-    } finally spark.conf.unset("spark.graft.morBatchScan.enabled")
+  /** Every step of [[SnapshotLog.widensTo]], one table each: rows written
+    * under `from`, the column's type then evolved to `to` (a metadata
+    * commit, as an append's schema rebase makes it). With `renamed` the
+    * column is renamed before the widening, so the files read through
+    * their era's by-id reader; otherwise they read by name. */
+  private def readsEveryWideningStep(renamed: Boolean): Unit = {
+    import org.apache.spark.sql.types._
+    val steps: Seq[(DataType, DataType)] = Seq(
+      ByteType -> ShortType, ByteType -> IntegerType, ByteType -> LongType,
+      ByteType -> DoubleType, ShortType -> IntegerType, ShortType -> LongType,
+      ShortType -> DoubleType, IntegerType -> LongType,
+      IntegerType -> DoubleType, FloatType -> DoubleType)
+    def extremes(t: DataType): Seq[Any] = t match {
+      case ByteType    => Seq(Byte.MinValue, -1, 0, 1, Byte.MaxValue).map(_.toByte)
+      case ShortType   => Seq(Short.MinValue, -1, 0, 1, Short.MaxValue).map(_.toShort)
+      case IntegerType => Seq(Int.MinValue, -1, 0, 1, Int.MaxValue)
+      case FloatType   => Seq(Float.MinValue, -0.25f, 0f, 1.5f, Float.MaxValue)
+      case other       => fail(s"no fixture values for $other")
+    }
+    val wh = Files.createTempDirectory("graft-widen").toString
+    register(wh)
+    val name = if (renamed) "y" else "x"
+    steps.zipWithIndex.foreach { case ((from, to), i) =>
+      val dir = s"$wh/ns/w$i"
+      val vals = extremes(from)
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(vals.zipWithIndex.map { case (v, k) =>
+          org.apache.spark.sql.Row(k.toLong, v) } :+
+          org.apache.spark.sql.Row(vals.size.toLong, null), 1),
+        StructType(Seq(StructField("id", LongType),
+          StructField("x", from))))
+      SnapshotLog.withTableLock(dir) {
+        val files = SnapshotLog.writeData(spark, dir, df, None)
+        SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      }
+      if (renamed) SnapshotLog.renameColumn(spark, dir, "x", "y")
+      SnapshotLog.withTableLock(dir) {
+        val cur = SnapshotLog.currentSnapshot(spark, dir).get
+        assert(SnapshotLog.widensTo(from, to))
+        val wider = StructType(cur.schema.fields.map(f =>
+          if (f.name == name) f.copy(dataType = to) else f))
+        SnapshotLog.commit(spark, dir, "evolve-schema", cur.files, wider,
+          parent = Some(cur))
+      }
+      val snap = SnapshotLog.currentSnapshot(spark, dir).get
+      val expected = df.select(col("id"), col("x").cast(to).as(name))
+        .collect().map(r => (r.getLong(0), Option(r.get(1)))).toSet
+      Seq("true", "false").foreach { vectorized =>
+        spark.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
+        try {
+          val engine = SnapshotLog.read(spark, dir, snap)
+          assert(engine.schema(name).dataType === to)
+          val sql = spark.sql(s"SELECT id, $name FROM $cat.ns.w$i")
+          assert(plan(sql).contains("BatchScan"))
+          Seq(engine.select("id", name), sql).foreach { got =>
+            assert(got.collect().map(r => (r.getLong(0), Option(r.get(1))))
+              .toSet === expected,
+              s"$from -> $to (renamed=$renamed, vectorized=$vectorized)")
+          }
+        } finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+      }
+    }
+  }
+
+  test("every widening step reads through the batch path (by-name era)") {
+    readsEveryWideningStep(renamed = false)
+  }
+
+  test("every widening step reads through the batch path (renamed era)") {
+    readsEveryWideningStep(renamed = true)
+  }
+
+  test("user columns named _abs/_pos/_seq read beside live pos and eq deletes") {
+    val wh = Files.createTempDirectory("graft-batch-lineage").toString
+    val dir = s"$wh/ns/lin"
+    import spark.implicits._
+    val df = Seq((1L, "a", 10L, 100L), (2L, "b", 20L, 200L),
+      (3L, "c", 30L, 300L), (4L, "d", 40L, 400L))
+      .toDF("id", "_abs", "_pos", "_seq")
+    SnapshotLog.withTableLock(dir) {
+      val files = SnapshotLog.writeData(spark, dir, df, None)
+      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+    }
+    SnapshotLog.withTableLock(dir) {
+      val cur = SnapshotLog.currentSnapshot(spark, dir).get
+      val dels = SnapshotLog.writeDeletes(spark, dir,
+        Seq(1L).toDF("id"), Seq("id"))
+      SnapshotLog.commit(spark, dir, "mor-merge", cur.files, cur.schema,
+        parent = Some(cur), deletes = cur.deletes ++ dels,
+        posDeletes = cur.posDeletes)
+    }
+    register(wh)
+    // a positional delete whose predicate names the user columns
+    spark.sql(s"DELETE FROM $cat.ns.lin WHERE `_pos` = 20")
+    val snap = SnapshotLog.currentSnapshot(spark, dir).get
+    assert(snap.deletes.nonEmpty && snap.posDeletes.nonEmpty)
+    val expected = Set((3L, "c", 30L, 300L), (4L, "d", 40L, 400L))
+    def rows(d: DataFrame): Set[(Long, String, Long, Long)] =
+      d.select("id", "_abs", "_pos", "_seq").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSet
+    val sql = spark.sql(s"SELECT * FROM $cat.ns.lin")
+    assert(plan(sql).contains("morData=true"))
+    assert(rows(sql) === expected)
+    assert(rows(SnapshotLog.read(spark, dir, snap)) === expected)
+    // row-level DML keys on the lineage columns, not the user's
+    spark.sql(s"UPDATE $cat.ns.lin SET `_seq` = 301 WHERE `_abs` = 'c'")
+    assert(rows(spark.sql(s"SELECT * FROM $cat.ns.lin")) ===
+      Set((3L, "c", 30L, 301L), (4L, "d", 40L, 400L)))
   }
 
   test("URI-escaped partition values survive the columnar MOR path") {

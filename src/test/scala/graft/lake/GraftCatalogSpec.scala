@@ -297,16 +297,14 @@ class GraftCatalogSpec extends SparkTestBase {
   test("manifest statistics are reported; joins broadcast at runtime") {
     val (_, dir) = buildTable()
     // the scan's estimate is the manifest-measured size (footer sums,
-    // zero I/O) — Spark's V1ScanWrapper does not yet surface it to the
-    // static optimizer, so the assertion targets the scan directly and
-    // the join outcome is pinned through AQE's runtime re-plan
+    // zero I/O); the join outcome is pinned through AQE's runtime re-plan
     val snap = SnapshotLog.currentSnapshot(spark, dir).get
-    val scan = new GraftScan(dir, snap, snap.schema, Array.empty)
+    val scan = new GraftBatchScan(spark, dir, snap, snap.schema, Array.empty)
     val est = scan.estimateStatistics()
     assert(est.sizeInBytes.getAsLong === snap.files.map(_.sizeBytes).sum)
     assert(est.numRows.getAsLong === 4L)
     // pruning narrows the estimate with the file set
-    val pruned = new GraftScan(dir, snap, snap.schema,
+    val pruned = new GraftBatchScan(spark, dir, snap, snap.schema,
       Array(org.apache.spark.sql.sources.EqualTo("_cdc_date", "2024-01-01")))
     assert(pruned.estimateStatistics().numRows.getAsLong === 1L)
     // a join against a big frame ends as a broadcast join at runtime

@@ -464,7 +464,7 @@ class SnapshotLogSpec extends SparkTestBase {
       }
     }
     def parquetLegs(plan: String): Int =
-      "FileScan parquet|Scan parquet".r.findAllIn(plan).length
+      """FileScan parquet|Scan parquet|\bBatchScan\b""".r.findAllIn(plan).length
     // with the content cache OFF, the structural contract: ONE
     // multi-path data scan + ONE multi-path delete scan, regardless of
     // the 10 distinct seqs on each side — the seq ranking joins in from
