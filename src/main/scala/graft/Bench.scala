@@ -110,8 +110,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = LocalSession.cpus
-    val spark = LocalSession(cpus)
+    val cpus = EngineSession.cpus
+    val spark = EngineSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // Warmup: NON-measured work only (the sf0.001 flagship), so all

@@ -170,6 +170,16 @@ object Serve {
     new Handle(spark, api, rest, cp, alerts, scaling, sampler)
   }
 
+  /** The master `main` sets, if any. Application-code `spark.master`
+    * has the HIGHEST precedence — setting it unconditionally would
+    * silently turn `spark-submit --master yarn` into local[*]. Only an
+    * explicit `GRAFT_MASTER` overrides an existing `spark.master`; a
+    * bare JVM launch (no spark.master anywhere) defaults to local[*]. */
+  def master(env: collection.Map[String, String],
+             props: collection.Map[String, String]): Option[String] =
+    env.get("GRAFT_MASTER")
+      .orElse(if (props.contains("spark.master")) None else Some("local[*]"))
+
   def main(args: Array[String]): Unit = {
     val env = sys.env
     val warehouse = env.get("GRAFT_WAREHOUSE").orElse(args.headOption)
@@ -187,20 +197,11 @@ object Serve {
         throw new IllegalArgumentException(
           s"$key must be a number of seconds, got '$v'"))
     }.getOrElse(default)
-    val builder = SparkSession.builder()
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions",
-        env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.extensions", "graft.lake.GraftSqlExtensions")
-      .config("spark.ui.enabled", "false")
-    // application-code .master() has the HIGHEST precedence — setting
-    // it unconditionally would silently turn `spark-submit --master
-    // yarn` into local[*]. Only an explicit GRAFT_MASTER overrides; a
-    // bare JVM launch (no spark.master anywhere) defaults to local[*]
-    env.get("GRAFT_MASTER")
-      .orElse(if (sys.props.contains("spark.master")) None else Some("local[*]"))
-      .foreach(builder.master)
-    val spark = builder.getOrCreate()
+    val spark = EngineSession(Seq(
+      "spark.app.name" -> "graft-serve",
+      "spark.sql.shuffle.partitions" ->
+        env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"),
+    ) ++ master(env, sys.props).map("spark.master" -> _): _*)
     spark.sparkContext.setLogLevel("WARN")
     val handle = start(spark, warehouse,
       token = env.get("GRAFT_TOKEN"),

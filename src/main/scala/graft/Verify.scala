@@ -17,8 +17,7 @@ object Verify {
     // optional trailing args: run only these queries (builder-side
     // focused checks; the driver always runs the full surface)
     val only = args.drop(2).toSet
-    val spark = LocalSession(LocalSession.cpus,
-      "spark.sql.session.timeZone" -> "UTC")
+    val spark = EngineSession.local(EngineSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     val pool = Executors.newFixedThreadPool(

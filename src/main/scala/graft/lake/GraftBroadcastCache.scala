@@ -64,9 +64,6 @@ object GraftBroadcastCache {
     * observability, mirroring [[SnapshotLog.deleteFrameBuilds]]. */
   private[graft] val computes = new AtomicLong(0L)
   private[graft] val hits = new AtomicLong(0L)
-  /** Prep-rule invocations / exchange matches — spec observability. */
-  val ruleRuns = new AtomicLong(0L)
-  val ruleSwaps = new AtomicLong(0L)
 
   private def unpersistQuiet(f: Future[Broadcast[Any]]): Unit =
     f.value match {

@@ -20,6 +20,36 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.lake.SnapshotLog.{DataFile, Snapshot}
 
+object GraftCatalog {
+  /** `schema` with the ADD COLUMN changes appended — the add-only
+    * contract both catalogs enforce (top-level, nullable, appended, no
+    * case-collisions) checked once per column. */
+  def addColumns(schema: StructType, adds: Seq[TableChange.AddColumn],
+                 table: String): StructType =
+    adds.foldLeft(schema) { (acc, add) =>
+      require(add.fieldNames.length == 1,
+        "nested column adds are not supported")
+      val colName = add.fieldNames()(0)
+      graft.model.Identifiers.validate(colName, "column")
+      // Spark resolution is case-insensitive by default: a column
+      // differing only in case would make every later reference
+      // ambiguous, with no supported ALTER to undo it
+      require(!acc.fieldNames.exists(_.equalsIgnoreCase(colName)),
+        s"column $colName already exists in $table")
+      // pre-evolution rows HAVE no value for the new column — a NOT
+      // NULL add or a position move would silently diverge from the
+      // committed layout; refuse rather than reinterpret
+      require(add.isNullable,
+        s"ADD COLUMN $colName NOT NULL is not satisfiable: existing " +
+          "rows read the new column as null")
+      require(add.position() == null,
+        "ADD COLUMN ... FIRST/AFTER is not supported: evolved " +
+          "columns append (position is display-only in this engine)")
+      acc.add(org.apache.spark.sql.types.StructField(
+        colName, add.dataType, nullable = true))
+    }
+}
+
 /** A Spark DSv2 [[TableCatalog]] over [[SnapshotLog]] tables — the SQL
   * surface of the commit log. Registering
   * `spark.sql.catalog.<name> = graft.lake.GraftCatalog` (plus
@@ -214,33 +244,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     SnapshotLog.withTableLock(dir) {
       val cur = SnapshotLog.currentSnapshot(spark, dir).getOrElse(
         throw new NoSuchTableException(ident))
-      var schema = cur.schema
-      changes.foreach {
-        case add: TableChange.AddColumn =>
-          require(add.fieldNames.length == 1,
-            "nested column adds are not supported")
-          val colName = add.fieldNames()(0)
-          graft.model.Identifiers.validate(colName, "column")
-          // Spark resolution is case-insensitive by default: a column
-          // differing only in case would make every later reference
-          // ambiguous, with no supported ALTER to undo it
-          require(!schema.fieldNames.exists(_.equalsIgnoreCase(colName)),
-            s"column $colName already exists in ${fullName(ident)}")
-          // pre-evolution rows HAVE no value for the new column — a NOT
-          // NULL add or a position move would silently diverge from the
-          // committed layout; refuse rather than reinterpret
-          require(add.isNullable,
-            s"ADD COLUMN $colName NOT NULL is not satisfiable: existing " +
-              "rows read the new column as null")
-          require(add.position() == null,
-            "ADD COLUMN ... FIRST/AFTER is not supported: evolved " +
-              "columns append (position is display-only in this engine)")
-          schema = schema.add(org.apache.spark.sql.types.StructField(
-            colName, add.dataType, nullable = true))
+      val adds = changes.map {
+        case add: TableChange.AddColumn => add
         case other => throw new UnsupportedOperationException(
           s"unsupported ALTER change $other — ADD COLUMN composes; " +
             "RENAME/DROP COLUMN must be the only change in the statement")
       }
+      val schema = GraftCatalog.addColumns(cur.schema, adds, fullName(ident))
       SnapshotLog.commit(spark, dir, "evolve-schema", cur.files, schema,
         parent = Some(cur), deletes = cur.deletes,
         posDeletes = cur.posDeletes)

@@ -34,16 +34,12 @@ class GraftSqlExtensions extends (SparkSessionExtensions => Unit) {
     // columnar scan ([[GraftMorScanRule]])
     ext.injectPostHocResolutionRule(spark => new GraftMorScanRule(spark))
     ext.injectPlannerStrategy(_ => GraftDmlStrategy)
-    // physical (AQE stage-prep): broadcasts of content-cached delete
-    // frames reuse ONE Broadcast handle per (frame, key shape) across
-    // queries instead of re-broadcasting per query
-    ext.injectQueryStagePrepRule(spark =>
-      org.apache.spark.sql.execution.exchange.GraftBroadcastReuseRule(spark))
-    // the same swap for AQE-LESS plans (stateful streaming disables
-    // AQE; stage-prep rules never run there): columnar rules run in
-    // preparations after EnsureRequirements on every plan
-    ext.injectColumnar(spark =>
-      org.apache.spark.sql.execution.exchange.GraftBroadcastReuseColumnarRule(spark))
+    // physical: broadcasts of content-cached delete frames reuse ONE
+    // Broadcast handle per (frame, key shape) across queries instead of
+    // re-broadcasting per query. Columnar rules run on every plan, AQE
+    // or not (under AQE on each new query stage).
+    ext.injectColumnar(_ =>
+      org.apache.spark.sql.execution.exchange.GraftBroadcastReuseRule)
   }
 }
 

@@ -584,23 +584,9 @@ class GraftRestCatalog extends TableCatalog with SupportsNamespaces {
       val t =
         try c.loadTable(ident.namespace.toSeq, ident.name)
         catch { case _: RestCatalogClient.NotFound => throw new NoSuchTableException(ident) }
-      var schema = t.currentSchema.getOrElse(
-        throw new IllegalStateException(s"table ${ident.name} reports no schema"))
-      adds.foreach { add =>
-        require(add.fieldNames.length == 1,
-          "nested column adds are not supported")
-        val colName = add.fieldNames()(0)
-        graft.model.Identifiers.validate(colName, "column")
-        require(!schema.fieldNames.exists(_.equalsIgnoreCase(colName)),
-          s"column $colName already exists")
-        require(add.isNullable,
-          s"ADD COLUMN $colName NOT NULL is not satisfiable: existing " +
-            "rows read the new column as null")
-        require(add.position() == null,
-          "ADD COLUMN ... FIRST/AFTER is not supported")
-        schema = schema.add(org.apache.spark.sql.types.StructField(
-          colName, add.dataType, nullable = true))
-      }
+      val schema = GraftCatalog.addColumns(t.currentSchema.getOrElse(
+        throw new IllegalStateException(s"table ${ident.name} reports no schema")),
+        adds, (catName +: ident.namespace.toSeq :+ ident.name).mkString("."))
       try {
         c.evolveSchema(ident.namespace.toSeq, ident.name, schema,
           require = Some(t.currentSnapshotId))

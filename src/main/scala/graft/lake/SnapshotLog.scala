@@ -2007,10 +2007,6 @@ object SnapshotLog {
   /** Frame builds actually planned (cache misses) — spec observability. */
   private[lake] val deleteFrameBuilds = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def deleteCacheEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.deleteFrameCache.enabled")
-      .forall(_ == "true")
-
   /** Broadcast-threshold bytes the size gate uses (-1 = disabled) —
     * the ONE parse shared with [[sizeGated]], so "only broadcast-sized
     * sets materialize" and "broadcast it" can never disagree. */
@@ -2043,8 +2039,7 @@ object SnapshotLog {
                                 outSchema: StructType, estBytes: Long)
                                (build: => DataFrame): DataFrame = {
     val threshold = broadcastThresholdBytes(spark)
-    if (!deleteCacheEnabled(spark) || threshold <= 0 ||
-        estBytes < 0 || estBytes > threshold) {
+    if (threshold <= 0 || estBytes < 0 || estBytes > threshold) {
       deleteFrameBuilds.incrementAndGet()
       return build
     }
@@ -2410,18 +2405,7 @@ object SnapshotLog {
       // partition column, writeData's repartition(pcol) already yields
       // one file per partition value
       val source = if (partitionCol.isDefined) pruned else pruned.repartition(1)
-      // compaction is bandwidth-bound over exactly the tiny files it
-      // removes — pack them into big input splits for this job instead of
-      // paying per-file task-scheduling overhead
-      val splitKey = "spark.sql.files.maxPartitionBytes"
-      val prevSplit = spark.conf.getOption(splitKey)
-      spark.conf.set(splitKey, (512L * 1024 * 1024).toString)
-      val newFiles =
-        try writeData(spark, tableDir, source, partitionCol, statsCol)
-        finally prevSplit match {
-          case Some(v) => spark.conf.set(splitKey, v)
-          case None    => spark.conf.unset(splitKey)
-        }
+      val newFiles = writeData(spark, tableDir, source, partitionCol, statsCol)
       val oset = oversized.toSet
       val untouched = cur.files.filterNot(f => oset(f.partition))
       commit(spark, tableDir, "replace", untouched ++ newFiles, cur.schema,

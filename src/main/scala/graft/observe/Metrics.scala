@@ -130,28 +130,4 @@ object Metrics {
     spark.streams.addListener(l)
     l
   }
-
-  /** Query-execution metrics (ref C4 collector polling Trino /v1/cluster,
-    * internal/scaling/query/collector.go:55-160 — here the engine IS the
-    * query engine, so the numbers come from Spark's own execution
-    * callbacks: philotes_api_requests_total / request_duration_seconds). */
-  final class QueryMetricsListener
-    extends org.apache.spark.sql.util.QueryExecutionListener {
-    override def onSuccess(funcName: String,
-                           qe: org.apache.spark.sql.execution.QueryExecution,
-                           durationNs: Long): Unit = {
-      inc("api", "requests_total")
-      setGauge("api", "request_duration_seconds", durationNs / 1e9)
-    }
-    override def onFailure(funcName: String,
-                           qe: org.apache.spark.sql.execution.QueryExecution,
-                           exception: Exception): Unit =
-      inc("api", "errors_total")
-  }
-
-  def attachQueryMetrics(spark: SparkSession): QueryMetricsListener = {
-    val l = new QueryMetricsListener
-    spark.listenerManager.register(l)
-    l
-  }
 }

@@ -147,8 +147,9 @@ final class PgPipelineRunner(spark: SparkSession, lakeRoot: String,
             registry.inc("buffer", "events_processed_total", envs.size.toLong)
             batchId += 1
           }
-          // confirm only AFTER the lake holds the batch (at-least-once;
-          // the merge is idempotent on replay)
+          // confirm only AFTER the lake holds the batch: at-least-once.
+          // The sink appends, so a crash between processBatch's commit
+          // and this confirm re-appends the batch on restart
           if (endLsn > 0L) wire.confirm(endLsn)
         }
       } catch {

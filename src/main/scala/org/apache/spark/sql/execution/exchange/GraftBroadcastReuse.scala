@@ -1,7 +1,6 @@
 package org.apache.spark.sql.execution.exchange
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.BroadcastMode
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{ColumnarRule, LocalTableScanExec, SparkPlan}
@@ -87,51 +86,33 @@ object GraftReusedBroadcastExchangeExec {
     s"__graft_unshared_${counter.incrementAndGet()}"
 }
 
-/** AQE query-stage preparation rule: spot a broadcast over a
-  * LocalTableScan whose rows belong to a registered delete frame and
-  * swap in the reusing exchange. Runs once per query on the physical
-  * plan before stages form; plans AQE never sees (stateful streaming)
-  * keep the plain exchange — a pure optimization either way.
-  * Disable with `spark.graft.broadcastReuse.enabled=false`. */
-case class GraftBroadcastReuseRule(spark: SparkSession)
-  extends Rule[SparkPlan] {
+/** Spot a broadcast over a LocalTableScan whose rows belong to a
+  * registered delete frame and swap in the reusing exchange — a pure
+  * optimization either way.
+  *
+  * Applied as a pre-columnar-transition rule, which covers every plan:
+  * `QueryExecution.preparations` runs the columnar rules after
+  * `EnsureRequirements` on AQE-less plans (stateful streaming disables
+  * AQE, so the hottest recurring read at ingest scale — a MOR table
+  * consulted every micro-batch trigger — would otherwise re-collect and
+  * re-torrent its delete frames per trigger), and AQE runs them on
+  * every new query stage (`postStageCreationRules`), so the broadcast
+  * stage itself is swapped before it materializes. */
+object GraftBroadcastReuseRule extends ColumnarRule {
+  override def preColumnarTransitions: Rule[SparkPlan] = swap
 
-  override def apply(plan: SparkPlan): SparkPlan = {
-    graft.lake.GraftBroadcastCache.ruleRuns.incrementAndGet()
-    if (!enabled) plan
-    else plan.transformUp {
+  private object swap extends Rule[SparkPlan] {
+    override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
       case b: BroadcastExchangeExec
         if !b.isInstanceOf[GraftReusedBroadcastExchangeExec] =>
         b.child match {
           case scan: LocalTableScanExec if scan.rows.nonEmpty =>
             graft.lake.GraftBroadcastCache.frameKeyOf(scan.rows.head) match {
-              case Some(key) =>
-                graft.lake.GraftBroadcastCache.ruleSwaps.incrementAndGet()
-                new GraftReusedBroadcastExchangeExec(b.mode, scan, key)
+              case Some(key) => new GraftReusedBroadcastExchangeExec(b.mode, scan, key)
               case None => b
             }
           case _ => b
         }
     }
   }
-
-  private def enabled: Boolean =
-    spark.sessionState.conf
-      .getConfString("spark.graft.broadcastReuse.enabled", "true") == "true"
-}
-
-/** Non-AQE coverage for the same swap. Query-stage-prep rules run only
-  * under AQE — and stateful streaming DISABLES AQE, so the hottest
-  * recurring read at ingest scale (a MOR table consulted every
-  * micro-batch trigger) re-collected and re-torrented its delete
-  * frames once per trigger. Columnar rules run inside
-  * `QueryExecution.preparations` right after `EnsureRequirements` for
-  * EVERY physical plan, adaptive or not, so applying the identical
-  * swap as a pre-columnar-transition covers the AQE-less plans; under
-  * AQE the stage-prep rule has usually swapped first and the
-  * `isInstanceOf` guard makes the second application a no-op. */
-case class GraftBroadcastReuseColumnarRule(spark: SparkSession)
-  extends ColumnarRule {
-  override def preColumnarTransitions: Rule[SparkPlan] =
-    GraftBroadcastReuseRule(spark)
 }

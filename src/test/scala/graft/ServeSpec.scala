@@ -12,6 +12,13 @@ import graft.lake.SnapshotLog
   * the control plane, and the REST catalog over one warehouse. */
 class ServeSpec extends SparkTestBase {
 
+  test("main's master: GRAFT_MASTER wins, an existing spark.master is kept, else local[*]") {
+    val submitted = Map("spark.master" -> "yarn")
+    assert(Serve.master(Map("GRAFT_MASTER" -> "local[2]"), submitted) === Some("local[2]"))
+    assert(Serve.master(Map.empty, submitted) === None)
+    assert(Serve.master(Map.empty, Map.empty) === Some("local[*]"))
+  }
+
   test("start wires API + control plane + REST catalog over one warehouse") {
     val wh = Files.createTempDirectory("graft-serve").toString
     val dir = s"$wh/db/t"

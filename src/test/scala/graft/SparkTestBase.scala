@@ -11,18 +11,11 @@ trait SparkTestBase extends AnyFunSuite {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.lake.GraftSqlExtensions")
-      .config("spark.ui.enabled", "false")
+    val s = EngineSession.local("4",
       // static conf — must be set at session build; BucketingSpec creates
       // managed tables and this keeps them out of the repo working tree
-      .config("spark.sql.warehouse.dir",
+      "spark.sql.warehouse.dir" ->
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

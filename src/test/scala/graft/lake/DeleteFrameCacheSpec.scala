@@ -44,23 +44,19 @@ class DeleteFrameCacheSpec extends SparkTestBase {
     def readIds(): Set[Long] = SnapshotLog.readCurrent(spark, dir).get
       .select("id").collect().map(_.getLong(0)).toSet
 
-    // read 1: first sighting stays LAZY (no plan-time collect jobs);
+    // read 1: first sighting stays LAZY (no plan-time collect jobs) —
+    // the uncached path, whose answer every cached read must match;
     // read 2: the repeated key collects once and fills the cache;
     // reads 3+: pure hits — zero frame builds
+    val beforeFirst = SnapshotLog.deleteFrameBuilds.get()
     assert(readIds() === (4L to 10L).toSet)
+    assert(SnapshotLog.deleteFrameBuilds.get() > beforeFirst)
     assert(readIds() === (4L to 10L).toSet)
     val afterFill = SnapshotLog.deleteFrameBuilds.get()
     assert(readIds() === (4L to 10L).toSet)
     assert(SnapshotLog.deleteFrameBuilds.get() === afterFill)
     assert(readIds() === (4L to 10L).toSet)
     assert(SnapshotLog.deleteFrameBuilds.get() === afterFill)
-
-    // the uncached path agrees exactly
-    spark.conf.set("spark.graft.deleteFrameCache.enabled", "false")
-    try {
-      assert(readIds() === (4L to 10L).toSet)
-      assert(SnapshotLog.deleteFrameBuilds.get() > afterFill)
-    } finally spark.conf.set("spark.graft.deleteFrameCache.enabled", "true")
 
     // a NEW delete commit changes the content key → rebuild, new answer
     SnapshotLog.deleteWhere(spark, dir, col("id") === 4L)

@@ -465,25 +465,23 @@ class SnapshotLogSpec extends SparkTestBase {
     }
     def parquetLegs(plan: String): Int =
       """FileScan parquet|Scan parquet|\bBatchScan\b""".r.findAllIn(plan).length
-    // with the content cache OFF, the structural contract: ONE
-    // multi-path data scan + ONE multi-path delete scan, regardless of
-    // the 10 distinct seqs on each side — the seq ranking joins in from
-    // broadcast manifest maps instead of widening the plan per commit
-    spark.conf.set("spark.graft.deleteFrameCache.enabled", "false")
-    try {
-      val df = SnapshotLog.readCurrent(spark, dir).get
-      // correctness first: commit i's delete (seq i) outranks id i-1's
-      // file (seq i-1) — ids 1..9 die, id 10 and every id+100 survive
-      val got = idsOf(df)
-      assert(got === (Seq(10L) ++ (1 to 10).map(_ + 100L)).sorted,
-        s"MOR survivors wrong: $got")
-      val legs = parquetLegs(df.queryExecution.executedPlan.toString)
-      assert(legs === 2,
-        s"expected 2 parquet scan legs (data + deletes), got $legs:\n" +
-          df.queryExecution.executedPlan.toString.take(4000))
-    } finally spark.conf.set("spark.graft.deleteFrameCache.enabled", "true")
-    // with the cache ON (the steady state), the delete side collapses
-    // to an in-memory LocalTableScan: ONE parquet leg total
+    // the first read is the delete frames' first sighting, which stays
+    // uncached — the structural contract: ONE multi-path data scan +
+    // ONE multi-path delete scan, regardless of the 10 distinct seqs on
+    // each side — the seq ranking joins in from broadcast manifest maps
+    // instead of widening the plan per commit
+    val df = SnapshotLog.readCurrent(spark, dir).get
+    // correctness first: commit i's delete (seq i) outranks id i-1's
+    // file (seq i-1) — ids 1..9 die, id 10 and every id+100 survive
+    val got = idsOf(df)
+    assert(got === (Seq(10L) ++ (1 to 10).map(_ + 100L)).sorted,
+      s"MOR survivors wrong: $got")
+    val legs = parquetLegs(df.queryExecution.executedPlan.toString)
+    assert(legs === 2,
+      s"expected 2 parquet scan legs (data + deletes), got $legs:\n" +
+        df.queryExecution.executedPlan.toString.take(4000))
+    // once cached (the steady state), the delete side collapses to an
+    // in-memory LocalTableScan: ONE parquet leg total
     val warm = SnapshotLog.readCurrent(spark, dir).get // populates the cache
     assert(idsOf(warm) === (Seq(10L) ++ (1 to 10).map(_ + 100L)).sorted)
     val cached = SnapshotLog.readCurrent(spark, dir).get
