@@ -86,9 +86,13 @@ object CdcWriter {
     * drop out of the manifest.
     *
     * The 100 TB shape:
-    *  1. TRUNCATE-wiped days resolve from MANIFEST LSN bounds alone (a
-    *     metadata-only probe — the Iceberg file-stats shortcut) when
-    *     every file carries bounds; otherwise a thin two-column scan.
+    *  1. TRUNCATE-wiped days resolve from the MANIFEST alone (a
+    *     metadata-only probe — the Iceberg file-stats shortcut): the days
+    *     of every file [[graft.lake.GraftPruning]] admits for
+    *     `lsn <= marker`. A file without LSN bounds is admitted, so the
+    *     set is a SUPERSET of the days holding doomed rows — safe, since
+    *     every touched day is re-read whole and only its rows past the
+    *     marker survive; an extra day is rewritten unchanged.
     *  2. Key-affected partitions resolve with a KEY+PARTITION-column-only
     *     scan semi-joined against the broadcast delta key set — the
     *     delta batch is the small side by construction.
@@ -166,9 +170,7 @@ object CdcWriter {
     // keys; a clusterBy/spec-evolved layout (may-contain pruning) would
     // pull foreign rows into survivors while untouched keeps their
     // files — duplication. Normalize first.
-    cur.foreach(s => require(SnapshotLog.allIdentitySpec(s),
-      s"$tableDir holds non-identity partition layouts; " +
-        "run SnapshotLog.normalizeLayout before a COW merge"))
+    cur.foreach(SnapshotLog.requireExactDayLayout(_, tableDir, "a COW merge"))
     val upserts = withPartitionColumn(
       deltaLatest.filter(col(Cdc.OpColumn) =!= "DELETE"))
     // deltaLatest IS one row per key (Cdc.latestVersions keeps rn=1 per
@@ -178,52 +180,36 @@ object CdcWriter {
     val stored0 = cur.map(s => SnapshotLog.read(spark, tableDir, s))
       .getOrElse(upserts.filter(lit(false)))
     // TRUNCATE: stored rows at or before the marker are discarded; every
-    // day holding such rows must be rewritten (or dropped). With LSN
-    // bounds in the manifest this is metadata-only: a file whose minLsn
-    // ≤ marker holds at least one doomed row, so its day is touched.
-    // A boundless manifest falls back to a thin two-column scan, fused
-    // below into the single touched-day job.
-    val wipedMetaDays: Seq[String] = truncLsn match {
-      case None => Seq.empty
-      case Some(t) => cur match {
-        // the metadata shortcut only holds when every file's recorded
-        // bounds ARE LSN bounds — a statsCol rewrite stores some other
-        // column's min/max under the same fields, and comparing those
-        // lexically against a zero-padded LSN would silently skip days
-        // holding doomed rows
-        case Some(snap) if snap.files.nonEmpty && snap.files.forall(f =>
-          f.boundsColumn == Cdc.LsnColumn && f.minLsn.isDefined) =>
-          snap.files.filter(_.minLsn.exists(_ <= t)).map(_.partition).distinct
-        case _ => Seq.empty
-      }
+    // day holding such rows must be rewritten (or dropped). A file the
+    // manifest admits for `lsn <= marker` may hold a doomed row, so its
+    // day is touched — metadata only, no scan.
+    val wipedDays: Seq[String] = (truncLsn, cur) match {
+      case (Some(t), Some(snap)) =>
+        val doomed = graft.lake.GraftPruning.filePredicate(
+          Array(org.apache.spark.sql.sources.LessThanOrEqual(Cdc.LsnColumn, t)))
+        snap.files.filter(doomed).map(_.partition).distinct
+      case _ => Seq.empty
     }
-    val needWipedScan = truncLsn.isDefined && (cur match {
-      case Some(snap) => !(snap.files.nonEmpty && snap.files.forall(f =>
-        f.boundsColumn == Cdc.LsnColumn && f.minLsn.isDefined))
-      case None => false
-    })
     val stored = truncLsn.fold(stored0)(t => stored0.filter(col(Cdc.LsnColumn) > t))
-    // ONE fused touched-day probe (affected ∪ new ∪ wiped-fallback) where
-    // three independent actions used to run per micro-batch — on the
-    // streaming sinks the per-batch job count IS the fixed overhead
-    // (guide §1.2): each action here is a full pass over the stored
-    // key/partition projection or the cached delta.
+    // ONE fused touched-day probe (affected ∪ new) where two independent
+    // actions would run per micro-batch — on the streaming sinks the
+    // per-batch job count IS the fixed overhead (guide §1.2): each action
+    // here is a full pass over the stored key/partition projection or the
+    // cached delta.
     val affectedFrame = stored
       .select(keyCols.map(col) :+ col(pcol): _*)
       .join(broadcast(deltaKeys), keyCols, "left_semi")
       .select(col(pcol))
     val newFrame = upserts.select(col(pcol))
-    val wipedFrame =
-      if (needWipedScan)
-        Seq(stored0.filter(col(Cdc.LsnColumn) <= truncLsn.get).select(col(pcol)))
-      else Seq.empty
-    val probed = (Seq(affectedFrame, newFrame) ++ wipedFrame)
-      .reduce(_ union _).distinct().collect().map(_.getString(0)).toSeq
-    val touched = (wipedMetaDays ++ probed).distinct.sorted.toSeq
+    val probed = affectedFrame.union(newFrame)
+      .distinct().collect().map(_.getString(0)).toSeq
+    val touched = (wipedDays ++ probed).distinct.sorted
     if (touched.isEmpty) return Seq.empty
     val touchedSet = touched.toSet
-    // survivors: manifest-pruned read of ONLY the touched days
-    val survivors = cur.map(s => SnapshotLog.read(spark, tableDir, s, Some(touched)))
+    // survivors: manifest-pruned read of ONLY the touched days — the
+    // complement of the carried files below
+    val survivors = cur
+      .map(s => SnapshotLog.readPruned(spark, tableDir, s, f => touchedSet(f.partition)))
       .getOrElse(upserts.filter(lit(false)))
       .transform(df => truncLsn.fold(df)(t => df.filter(col(Cdc.LsnColumn) > t)))
       .join(broadcast(deltaKeys), keyCols, "left_anti")

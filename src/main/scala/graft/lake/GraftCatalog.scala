@@ -408,7 +408,7 @@ private[lake] final class GraftTable(tableName: String, tableDir: String,
     // the same conjuncts prune at the MANIFEST: a day-targeted DELETE
     // scans only that day's files before the row predicate applies
     SnapshotLog.deleteWhere(spark, tableDir, cond,
-      keep = GraftPruning.filePredicate(filters, snap.schema))
+      keep = GraftPruning.filePredicate(filters))
   }
 }
 
@@ -443,7 +443,7 @@ private[lake] final class GraftScanBuilder(tableDir: String, snap: Snapshot,
   override def isPartiallyPushed(): Boolean = true
 
   /** Filters the scan CONSUMES (not re-evaluated by Spark post-scan).
-    * Empty unless every file makes identity-day pruning exact. */
+    * Empty unless every file makes day pruning exact. */
   private var claimed: Array[Filter] = Array.empty
 
   /** Residuals returned to Spark from the last [[pushFilters]]. */
@@ -451,26 +451,25 @@ private[lake] final class GraftScanBuilder(tableDir: String, snap: Snapshot,
 
   private val PartitionSentinel = "__HIVE_DEFAULT_PARTITION__"
 
-  /** Identity-day partition pruning is EXACT row filtering when every
-    * live file is identity-spec on the convention day column (the
-    * writer's partitionBy invariant: a file's rows all carry exactly its
-    * manifest partition value) and no NULL-day sentinel file exists (a
-    * sentinel file's rows have a null day, which no claimed comparison
-    * may match). */
-  private def claimableTable: Boolean =
+  /** Day pruning is EXACT row filtering, and a partition value is its
+    * rows' group key, when every live file is an exact-day file
+    * ([[GraftPruning.exactDay]]) on the string convention day column and
+    * none is a NULL-day file: a NULL day writes under Spark's
+    * default-partition sentinel directory, whose manifest value is that
+    * literal string, not NULL — no claimed comparison may match its rows,
+    * and a grouped count must not answer with the sentinel text. */
+  private def exactDayTable: Boolean =
     SnapshotLog.conventionPartitionCol(snap.schema).exists { n =>
       snap.schema(n).dataType == StringType &&
-        snap.planMemoized("claimableIdentityDay") {
+        snap.planMemoized("exactDayTable") {
           GraftFoldStats.record()
-          snap.files.forall(f => f.partition.nonEmpty &&
-            f.partition != PartitionSentinel &&
-            (f.spec.isEmpty || f.spec.contains("identity") ||
-              f.spec.contains("day")))
+          snap.files.forall(f => GraftPruning.exactDay(f) &&
+            f.partition != PartitionSentinel)
         }
     }
 
-  /** The conjunct shapes [[GraftPruning.admits]] enforces EXACTLY on
-    * identity-day files — claiming anything admits() cannot prune would
+  /** The conjunct shapes [[GraftPruning]] enforces EXACTLY on
+    * exact-day files — claiming anything its day mapping cannot prune would
     * leak rows. IsNotNull is vacuous here: with no sentinel file, every
     * row's day is non-null. */
   private def exactDayConjunct(f: Filter): Boolean = {
@@ -488,7 +487,7 @@ private[lake] final class GraftScanBuilder(tableDir: String, snap: Snapshot,
     }
   }
 
-  /** Exact identity-day conjuncts are CONSUMED (manifest pruning IS the
+  /** Exact day conjuncts are CONSUMED (manifest pruning IS the
     * filter — what unlocks aggregate pushdown under the reference's
     * day-windowed monitoring shapes, since Spark skips pushAggregation
     * whenever post-scan residuals remain); everything else returns as
@@ -497,7 +496,7 @@ private[lake] final class GraftScanBuilder(tableDir: String, snap: Snapshot,
     * uses (for EXPLAIN). */
   override def pushFilters(fs: Array[Filter]): Array[Filter] = {
     filters = fs
-    if (!claimableTable) return fs
+    if (!exactDayTable) return fs
     claimed = fs.filter(exactDayConjunct)
     residual
   }
@@ -523,9 +522,9 @@ private[lake] final class GraftScanBuilder(tableDir: String, snap: Snapshot,
     *   - MIN/MAX only on numeric columns where EVERY file records
     *     bounds for that column (a post-cluster INSERT without bounds
     *     disables the path rather than corrupting it);
-    *   - GROUP BY only on the identity day-partition column with every
-    *     file identity-partitioned (spec evolution to month transforms
-    *     disables the path). */
+    *   - GROUP BY only on the day-partition column with every file an
+    *     exact-day file (spec evolution to month transforms disables the
+    *     path). */
   override def supportCompletePushDown(agg: Aggregation): Boolean =
     canPushAgg(agg)
 
@@ -559,22 +558,8 @@ private[lake] final class GraftScanBuilder(tableDir: String, snap: Snapshot,
     if (residual.nonEmpty) return false
     val groupOk = agg.groupByExpressions match {
       case Array() => true
-      case Array(g) => fieldName(g).exists { n =>
-        SnapshotLog.conventionPartitionCol(snap.schema).contains(n) &&
-          snap.schema(n).dataType == StringType &&
-          snap.planMemoized("aggGroupIdentityDay") {
-            GraftFoldStats.record()
-            snap.files.forall(f => f.partition.nonEmpty &&
-              // a NULL day writes under Spark's default-partition
-              // sentinel directory; its manifest partition value is
-              // that literal string, not NULL — the real scan returns a
-              // NULL group, so the metadata path must refuse rather
-              // than answer with the sentinel text
-              f.partition != "__HIVE_DEFAULT_PARTITION__" &&
-              (f.spec.isEmpty || f.spec.contains("identity") ||
-                f.spec.contains("day")))
-          }
-      }
+      case Array(g) => fieldName(g).exists(n =>
+        SnapshotLog.conventionPartitionCol(snap.schema).contains(n)) && exactDayTable
       case _ => false
     }
     groupOk && agg.aggregateExpressions.forall {
@@ -608,7 +593,7 @@ private[lake] final class GraftScanBuilder(tableDir: String, snap: Snapshot,
       // pruning is exact, so the metadata answer equals the real scan's
       GraftAggScan.build(tableDir,
         snap.copy(files = snap.files.filter(
-          GraftPruning.filePredicate(claimed, snap))), agg)
+          GraftPruning.filePredicate(claimed))), agg)
     case None =>
       new GraftBatchScan(SparkSession.active, tableDir, snap, required,
         filters, limit, morData,
@@ -704,7 +689,7 @@ private[lake] final class GraftBatchScan(spark: SparkSession,
     var k = keptCache
     if (k == null) {
       k = snap.files.filter(
-        GraftPruning.filePredicate(filters ++ runtimeFilters, snap))
+        GraftPruning.filePredicate(filters ++ runtimeFilters))
       keptCache = k
     }
     k
@@ -942,9 +927,9 @@ private[lake] object GraftAggScan {
   }
 
   /** Fold the per-file bounds into the column's min or max, converted to
-    * the column's internal type. Bounds strings are decimal-parsable by
-    * the manifest contract ([[SnapshotLog.pruneByStats]] relies on the
-    * same property). Empty file set → SQL's null aggregate. */
+    * the column's internal type. Bounds strings are decimal-parsable:
+    * canPushAgg's boundsAnswerable refuses any that are not. Empty file
+    * set → SQL's null aggregate. */
   private def boundValue(files: Seq[DataFile], column: String,
                          dt: DataType, isMin: Boolean): Any = {
     if (files.isEmpty) return null
@@ -1094,10 +1079,14 @@ object GraftScanStats {
   def lastScan(dir: String): Option[(Long, Long)] = Option(last.get(dir))
 }
 
-/** Filter → manifest pruning + Column translation. All decisions are
-  * conservative: an untranslatable shape keeps every file and defers to
-  * Spark's residual evaluation. */
-private[lake] object GraftPruning {
+/** The manifest file-admission rule, decided here and nowhere else:
+  * which manifest entries may hold a row matching a predicate (partition
+  * values read under each file's spec transform, then recorded stats
+  * bounds), and which entries are exact-day files. Plus the Filter →
+  * Column translation the scans share. All decisions are conservative:
+  * an untranslatable shape keeps every file and defers to Spark's
+  * residual evaluation. */
+object GraftPruning {
 
   /** v1 Filter → Column, total translation or None (never partial — a
     * half-translated Not/Or would change semantics). */
@@ -1129,14 +1118,36 @@ private[lake] object GraftPruning {
 
   /** Conjunctive manifest pruning: a file survives iff every top-level
     * conjunct admits it. Only top-level Ands split — Or/Not conjuncts
-    * never prune (conservative). */
-  def filePredicate(filters: Array[Filter], snap: Snapshot): DataFile => Boolean =
-    filePredicate(filters, snap.schema)
-
-  def filePredicate(filters: Array[Filter], schema: StructType): DataFile => Boolean = {
+    * never prune (conservative). Callers still apply the row-level
+    * predicate: admission is necessary, not sufficient. */
+  def filePredicate(filters: Array[Filter]): DataFile => Boolean = {
     val conjuncts = filters.toSeq.flatMap(splitAnd)
-    f => conjuncts.forall(c => admits(c, f, schema))
+    f => conjuncts.forall(c => admits(c, f))
   }
+
+  /** Can file `f` hold rows of `day` (yyyy-MM-dd)? The equality case of
+    * the day mapping, for tables whose day column is not the convention
+    * one. */
+  def matchesDay(f: DataFile, day: String): Boolean =
+    admits(EqualTo(PartitionCol, day), f)
+
+  /** An exact-day file: partitioned, and its partition value IS every
+    * row's day (spec none, `identity` or `day`). Day pruning on such a
+    * file is row filtering, and its partition value is its rows' group
+    * key. */
+  def exactDay(f: DataFile): Boolean =
+    f.partition.nonEmpty && (f.spec match {
+      case None | Some("identity") | Some("day") => true
+      case Some(_)                               => false
+    })
+
+  /** Every partitioned file of `snap` is an exact-day file — the
+    * precondition for treating partition values as day keys in
+    * per-partition rewrites (compaction, retention, the COW merge, SQL
+    * INSERT). A month, hour or cluster file would pull foreign rows into
+    * a per-day rewrite while its own entry stays. */
+  def exactDayLayout(snap: Snapshot): Boolean =
+    snap.files.forall(f => f.partition.isEmpty || exactDay(f))
 
   private def splitAnd(f: Filter): Seq[Filter] = f match {
     case And(l, r) => splitAnd(l) ++ splitAnd(r)
@@ -1145,80 +1156,62 @@ private[lake] object GraftPruning {
 
   private val PartitionCol = graft.model.SchemaBuilder.partitionColumn
 
-  /** Can file `f` hold a row satisfying conjunct `c`? Partition-value
-    * tests evaluate under the FILE's own spec transform (spec evolution:
-    * one snapshot may mix identity- and month-partitioned files); stats
-    * bounds are trusted only when recorded FOR the filtered column, and
-    * numeric filter values compare numerically (string bounds lie for
-    * numbers: "9" > "10"). */
-  private def admits(c: Filter, f: DataFile, schema: StructType): Boolean = c match {
-    // ---- partition-value pruning (identity + month specs)
-    case EqualTo(PartitionCol, v: Any) if partitioned(f) =>
-      f.matchesDay(dayString(v))
-    case In(PartitionCol, vs) if partitioned(f) =>
-      vs.exists(v => f.matchesDay(dayString(v)))
-    case GreaterThan(PartitionCol, v: Any) if identityDay(f) =>
-      f.partition > dayString(v)
-    case GreaterThanOrEqual(PartitionCol, v: Any) if identityDay(f) =>
-      f.partition >= dayString(v)
-    case LessThan(PartitionCol, v: Any) if identityDay(f) =>
-      f.partition < dayString(v)
-    case LessThanOrEqual(PartitionCol, v: Any) if identityDay(f) =>
-      f.partition <= dayString(v)
-    // day ranges against coarser specs (month/year): compare the
-    // matching prefix — a file for month M (year Y) can hold day D only
-    // if M (Y) is within D's range's span
-    case GreaterThan(PartitionCol, v: Any) if monthDay(f) =>
-      f.partition >= dayString(v).take(7)
-    case GreaterThanOrEqual(PartitionCol, v: Any) if monthDay(f) =>
-      f.partition >= dayString(v).take(7)
-    case LessThan(PartitionCol, v: Any) if monthDay(f) =>
-      f.partition <= dayString(v).take(7)
-    case LessThanOrEqual(PartitionCol, v: Any) if monthDay(f) =>
-      f.partition <= dayString(v).take(7)
-    case GreaterThan(PartitionCol, v: Any) if yearDay(f) =>
-      f.partition >= dayString(v).take(4)
-    case GreaterThanOrEqual(PartitionCol, v: Any) if yearDay(f) =>
-      f.partition >= dayString(v).take(4)
-    case LessThan(PartitionCol, v: Any) if yearDay(f) =>
-      f.partition <= dayString(v).take(4)
-    case LessThanOrEqual(PartitionCol, v: Any) if yearDay(f) =>
-      f.partition <= dayString(v).take(4)
-    // day ranges against FINER (hour) specs: the file's day is its
-    // partition's day prefix — exact comparisons, same as identity
-    case GreaterThan(PartitionCol, v: Any) if hourDay(f) =>
-      f.partition.take(10) > dayString(v)
-    case GreaterThanOrEqual(PartitionCol, v: Any) if hourDay(f) =>
-      f.partition.take(10) >= dayString(v)
-    case LessThan(PartitionCol, v: Any) if hourDay(f) =>
-      f.partition.take(10) < dayString(v)
-    case LessThanOrEqual(PartitionCol, v: Any) if hourDay(f) =>
-      f.partition.take(10) <= dayString(v)
-    // ---- stats-bounds pruning (primary stats pair or the grid
-    // rewrite's multi-column extra bounds — DataFile.boundsFor)
-    case EqualTo(a, v) if hasBounds(f, a)            => overlaps(f, a, v, v)
-    case GreaterThan(a, v) if hasBounds(f, a)        => overlaps(f, a, v, null)
-    case GreaterThanOrEqual(a, v) if hasBounds(f, a) => overlaps(f, a, v, null)
-    case LessThan(a, v) if hasBounds(f, a)           => overlaps(f, a, null, v)
-    case LessThanOrEqual(a, v) if hasBounds(f, a)    => overlaps(f, a, null, v)
-    case In(a, vs) if hasBounds(f, a)                => vs.exists(v => overlaps(f, a, v, v))
-    case _ => true
+  /** A partitioned file's day key under its spec transform: the key and
+    * the length of the day prefix it stands for (None = the whole day —
+    * identity/day files, and hour files through their day prefix, which
+    * are finer than a day). None for unpartitioned files and unknown
+    * transforms, which no day predicate prunes. */
+  private def dayKey(f: DataFile): Option[(String, Option[Int])] =
+    if (exactDay(f)) Some((f.partition, None))
+    else if (f.partition.isEmpty) None
+    else f.spec match {
+      case Some("hour")  => Some((f.partition.take(10), None))
+      case Some("month") => Some((f.partition, Some(7)))
+      case Some("year")  => Some((f.partition, Some(4)))
+      case _             => None
+    }
+
+  /** Can a file whose day key is `key` (standing for a day prefix of
+    * `width`) hold a row satisfying day conjunct `c`? None = `c` is not
+    * a day conjunct. A coarse key (month, year) holds days on both sides
+    * of the one it shares a prefix with, so strict ranges keep it. Day
+    * literals render to ISO strings (a date-typed literal prints the same
+    * form). */
+  private def dayAdmits(c: Filter, key: String, width: Option[Int]): Option[Boolean] = {
+    def cmp(v: Any): Int = {
+      val day = String.valueOf(v)
+      key.compareTo(width.fold(day)(day.take))
+    }
+    val coarse = width.isDefined
+    c match {
+      case EqualTo(PartitionCol, v)            => Some(cmp(v) == 0)
+      case In(PartitionCol, vs)                => Some(vs.exists(cmp(_) == 0))
+      case GreaterThan(PartitionCol, v)        => val k = cmp(v); Some(k > 0 || coarse && k == 0)
+      case GreaterThanOrEqual(PartitionCol, v) => Some(cmp(v) >= 0)
+      case LessThan(PartitionCol, v)           => val k = cmp(v); Some(k < 0 || coarse && k == 0)
+      case LessThanOrEqual(PartitionCol, v)    => Some(cmp(v) <= 0)
+      case _                                   => None
+    }
   }
 
-  private def partitioned(f: DataFile): Boolean = f.partition.nonEmpty
-  private def identityDay(f: DataFile): Boolean =
-    partitioned(f) && (f.spec.isEmpty || f.spec.contains("identity") ||
-      f.spec.contains("day"))
-  private def monthDay(f: DataFile): Boolean =
-    partitioned(f) && f.spec.contains("month")
-  private def yearDay(f: DataFile): Boolean =
-    partitioned(f) && f.spec.contains("year")
-  private def hourDay(f: DataFile): Boolean =
-    partitioned(f) && f.spec.contains("hour")
-
-  /** Partition values are day strings; a date-typed literal renders to
-    * the same ISO form, so both filter shapes prune. */
-  private def dayString(v: Any): String = String.valueOf(v)
+  /** Can file `f` hold a row satisfying conjunct `c`? Day conjuncts
+    * evaluate under the FILE's own spec transform (spec evolution: one
+    * snapshot may mix identity-, month- and hour-partitioned files);
+    * stats bounds are trusted only when recorded FOR the filtered column
+    * ([[DataFile.boundsFor]]: the primary stats pair or the grid
+    * rewrite's extra bounds), and numeric filter values compare
+    * numerically (string bounds lie for numbers: "9" > "10"). */
+  private def admits(c: Filter, f: DataFile): Boolean =
+    dayKey(f).flatMap { case (key, width) => dayAdmits(c, key, width) }
+      .getOrElse(c match {
+        case EqualTo(a, v) if hasBounds(f, a)            => overlaps(f, a, v, v)
+        case GreaterThan(a, v) if hasBounds(f, a)        => overlaps(f, a, v, null)
+        case GreaterThanOrEqual(a, v) if hasBounds(f, a) => overlaps(f, a, v, null)
+        case LessThan(a, v) if hasBounds(f, a)           => overlaps(f, a, null, v)
+        case LessThanOrEqual(a, v) if hasBounds(f, a)    => overlaps(f, a, null, v)
+        case In(a, vs) if hasBounds(f, a)                => vs.exists(v => overlaps(f, a, v, v))
+        case _ => true
+      })
 
   private def hasBounds(f: DataFile, attr: String): Boolean =
     f.boundsFor(attr).isDefined
@@ -1226,24 +1219,21 @@ private[lake] object GraftPruning {
   /** Does the file's recorded `[min, max]` for `attr` overlap `[lo, hi]`
     * (null = unbounded)? String values compare lexically (sound for
     * zero-padded LSNs and ISO dates), numeric values numerically via
-    * BigDecimal. */
+    * BigDecimal; a bound that does not parse as a number ("Infinity",
+    * "NaN") keeps the file. */
   private def overlaps(f: DataFile, attr: String, lo: Any, hi: Any): Boolean = {
     val (mn, mx) = f.boundsFor(attr).get
-    (lo, hi) match {
-      case (null, null) => true
-      case _ =>
-        def cmpOk(bound: String, v: Any, geq: Boolean): Boolean = v match {
-          case null => true
-          case s: String => if (geq) bound >= s else bound <= s
-          case n: Number =>
-            try {
-              val b = BigDecimal(bound); val x = BigDecimal(n.toString)
-              if (geq) b >= x else b <= x
-            } catch { case _: NumberFormatException => true }
-          case _ => true // unknown literal type: never prune
-        }
-        cmpOk(mx, lo, geq = true) && cmpOk(mn, hi, geq = false)
+    def cmpOk(bound: String, v: Any, geq: Boolean): Boolean = v match {
+      case null => true
+      case s: String => if (geq) bound >= s else bound <= s
+      case n: Number =>
+        try {
+          val b = BigDecimal(bound); val x = BigDecimal(n.toString)
+          if (geq) b >= x else b <= x
+        } catch { case _: NumberFormatException => true }
+      case _ => true // unknown literal type: never prune
     }
+    cmpOk(mx, lo, geq = true) && cmpOk(mn, hi, geq = false)
   }
 }
 

@@ -127,8 +127,7 @@ private[lake] final class GraftDmlRule(spark: SparkSession)
     // manifest pruning: the condition's prunable conjuncts gate the
     // scan (partition value + stats bounds), same as SQL DELETE
     val keep = GraftPruning.filePredicate(
-      u.condition.map(pruneFilters).getOrElse(Array.empty),
-      rel.schema)
+      u.condition.map(pruneFilters).getOrElse(Array.empty))
     GraftDmlCommand(s"GraftUpdate $dir",
       () => { SnapshotLog.updateWhere(spark, dir, cond, assigns, pcol,
         keep = keep); () })

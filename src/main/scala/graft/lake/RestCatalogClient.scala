@@ -487,60 +487,51 @@ class GraftRestCatalog extends TableCatalog with SupportsNamespaces {
     }
   }
 
-  private def graftTable(ident: Identifier, snapId: Option[Long] = None): Table = {
-    val c = client
-    val t =
-      try c.loadTable(ident.namespace.toSeq, ident.name)
-      catch { case _: RestCatalogClient.NotFound => throw new NoSuchTableException(ident) }
-    val snap = snapId match {
-      case Some(id) => SnapshotLog.snapshotAt(spark, t.location, id)
-      case None     => SnapshotLog.snapshotAt(spark, t.location, t.currentSnapshotId)
-    }
+  /** The table's REST metadata; a 404 is Spark's NoSuchTableException. */
+  private def restTable(ident: Identifier): RestCatalogClient.RestTable =
+    try client.loadTable(ident.namespace.toSeq, ident.name)
+    catch { case _: RestCatalogClient.NotFound => throw new NoSuchTableException(ident) }
+
+  /** The table at the snapshot `snapshotId` resolves from its metadata. */
+  private def graftTable(ident: Identifier)(
+      snapshotId: RestCatalogClient.RestTable => Long): Table = {
+    val t = restTable(ident)
     new GraftTable(s"$catName.${(ident.namespace :+ ident.name).mkString(".")}",
-      t.location, snap)
+      t.location, SnapshotLog.snapshotAt(spark, t.location, snapshotId(t)))
   }
 
   override def tableExists(ident: Identifier): Boolean =
     client.tableExists(ident.namespace.toSeq, ident.name)
 
-  override def loadTable(ident: Identifier): Table = graftTable(ident)
+  override def loadTable(ident: Identifier): Table =
+    graftTable(ident)(_.currentSnapshotId)
 
   /** `VERSION AS OF` — a retained snapshot id, else a ref (tag or
     * branch) from the REST metadata, the same resolution order
     * [[GraftCatalog.loadTable]] applies. */
-  override def loadTable(ident: Identifier, version: String): Table = {
-    val c = client
-    val t =
-      try c.loadTable(ident.namespace.toSeq, ident.name)
-      catch { case _: RestCatalogClient.NotFound => throw new NoSuchTableException(ident) }
-    val byId =
-      if (version.nonEmpty && version.length <= 18 && version.forall(_.isDigit))
-        t.snapshots.find(_.id == version.toLong).map(_.id)
-      else None
-    val id = byId.orElse(t.refs.get(version).map(_.snapshotId)).getOrElse(
-      throw new NoSuchTableException(ident))
-    new GraftTable(s"$catName.${(ident.namespace :+ ident.name).mkString(".")}",
-      t.location, SnapshotLog.snapshotAt(spark, t.location, id))
-  }
+  override def loadTable(ident: Identifier, version: String): Table =
+    graftTable(ident) { t =>
+      val byId =
+        if (version.nonEmpty && version.length <= 18 && version.forall(_.isDigit))
+          t.snapshots.find(_.id == version.toLong).map(_.id)
+        else None
+      byId.orElse(t.refs.get(version).map(_.snapshotId)).getOrElse(
+        throw new NoSuchTableException(ident))
+    }
 
   /** `TIMESTAMP AS OF` — resolved over the REST metadata's snapshot
     * timeline (micros, Spark's contract). */
-  override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
-    val c = client
-    val t =
-      try c.loadTable(ident.namespace.toSeq, ident.name)
-      catch { case _: RestCatalogClient.NotFound => throw new NoSuchTableException(ident) }
-    val tsMs = timestampMicros / 1000L
-    // tie-break on id: same-millisecond commits must resolve to the
-    // NEWEST snapshot, matching SnapshotLog.snapshotAsOfTime's binary
-    // search (which keeps the last id at a given wall-clock)
-    val id = t.snapshots.filter(_.timestampMs <= tsMs) match {
-      case Nil => throw new NoSuchTableException(ident)
-      case ss  => ss.maxBy(s => (s.timestampMs, s.id)).id
+  override def loadTable(ident: Identifier, timestampMicros: Long): Table =
+    graftTable(ident) { t =>
+      val tsMs = timestampMicros / 1000L
+      // tie-break on id: same-millisecond commits must resolve to the
+      // NEWEST snapshot, matching SnapshotLog.snapshotAsOfTime's binary
+      // search (which keeps the last id at a given wall-clock)
+      t.snapshots.filter(_.timestampMs <= tsMs) match {
+        case Nil => throw new NoSuchTableException(ident)
+        case ss  => ss.maxBy(s => (s.timestampMs, s.id)).id
+      }
     }
-    new GraftTable(s"$catName.${(ident.namespace :+ ident.name).mkString(".")}",
-      t.location, SnapshotLog.snapshotAt(spark, t.location, id))
-  }
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val c = client
@@ -562,7 +553,7 @@ class GraftRestCatalog extends TableCatalog with SupportsNamespaces {
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
         Seq(catName) ++ ident.namespace.toSeq :+ ident.name)
     c.createTable(ident.namespace.toSeq, ident.name, schema)
-    graftTable(ident)
+    loadTable(ident)
   }
 
   /** ALTER TABLE ADD COLUMN through the REST catalog: the widened
@@ -581,16 +572,14 @@ class GraftRestCatalog extends TableCatalog with SupportsNamespaces {
     val c = client
     var attempts = 0
     while (true) {
-      val t =
-        try c.loadTable(ident.namespace.toSeq, ident.name)
-        catch { case _: RestCatalogClient.NotFound => throw new NoSuchTableException(ident) }
+      val t = restTable(ident)
       val schema = GraftCatalog.addColumns(t.currentSchema.getOrElse(
         throw new IllegalStateException(s"table ${ident.name} reports no schema")),
         adds, (catName +: ident.namespace.toSeq :+ ident.name).mkString("."))
       try {
         c.evolveSchema(ident.namespace.toSeq, ident.name, schema,
           require = Some(t.currentSnapshotId))
-        return graftTable(ident)
+        return loadTable(ident)
       } catch {
         case _: RestCatalogClient.CommitConflict if attempts < 4 =>
           attempts += 1 // a foreign commit moved the head — re-derive

@@ -74,11 +74,21 @@ object SnapshotLog {
     * ([[clusterBy]]) records bounds of its sort column instead, and
     * pruning only trusts bounds recorded FOR the queried column.
     * `spec` names the partition TRANSFORM the partition value was
-    * produced by (None = identity on the table's partition column;
-    * "month" = the day's yyyy-MM prefix) — Iceberg partition-spec
-    * evolution: a table may hold files under several specs at once, and
-    * pruning evaluates the day predicate PER SPEC instead of assuming
-    * one layout. Unknown specs never prune.
+    * produced by — Iceberg partition-spec evolution: a table may hold
+    * files under several specs at once, and pruning evaluates a day
+    * predicate PER FILE instead of assuming one layout. The vocabulary
+    * (ref internal/iceberg/types.go:54-75):
+    *   - None, "identity", "day": the value IS every row's partition
+    *     column value — the day (yyyy-MM-dd) on a day-partitioned table:
+    *     an exact-day file;
+    *   - "month" (yyyy-MM), "year" (yyyy): a prefix of the day;
+    *   - "hour" (yyyy-MM-dd HH): finer than a day, its day is the
+    *     value's 10-character prefix;
+    *   - "cluster": a [[clusterByGrid]] cell id, not a day;
+    *   - anything else ("unpartitioned", a REST transform on a column
+    *     other than the day column, "identity:region"): unknown.
+    * Unknown specs never prune on the day. [[GraftPruning]] is the one
+    * reader of this vocabulary.
     * `extraBounds` carries min/max for ADDITIONAL columns beyond the
     * primary stats column — the multi-dimension skipping surface a
     * grid/z-order rewrite ([[clusterByGrid]]) records so range queries
@@ -99,19 +109,6 @@ object SnapshotLog {
       if (boundsColumn == column)
         for (mn <- minLsn; mx <- maxLsn) yield (mn, mx)
       else extraBounds.get(column)
-
-    /** Does this file's partition possibly hold rows of `day`? The full
-      * reference transform family (ref internal/iceberg/types.go:54-75:
-      * identity/year/month/day/hour) evaluates against the day string's
-      * prefix — hour values are `yyyy-MM-dd HH`, finer than a day, so an
-      * hour file prunes EXACTLY for day predicates. */
-    def matchesDay(day: String): Boolean = spec match {
-      case None | Some("identity") | Some("day") => partition == day
-      case Some("month")           => partition == day.take(7)
-      case Some("year")            => partition == day.take(4)
-      case Some("hour")            => partition.take(10) == day
-      case Some(_)                 => true // unknown transform: never prune
-    }
   }
 
   /** One equality-delete file (Iceberg v2 merge-on-read): a parquet file
@@ -1365,11 +1362,13 @@ object SnapshotLog {
       // per-row-group stats fold under the VALUE's own ordering — a
       // lexical fold over string renderings would invert numeric bounds
       // across row groups ("100.0" < "99.0" lexically) and make pruning
-      // silently drop matching files
+      // silently drop matching files; an infinite float bound has no
+      // decimal form and compares as a double
       def fold(vs: Seq[Any], takeMin: Boolean): Any = vs.reduce { (a, b) =>
         val aFirst = (a, b) match {
           case (x: Number, y: Number) =>
-            BigDecimal(x.toString) <= BigDecimal(y.toString)
+            try BigDecimal(x.toString) <= BigDecimal(y.toString)
+            catch { case _: NumberFormatException => x.doubleValue <= y.doubleValue }
           case _ => asStr(a) <= asStr(b)
         }
         if (aFirst == takeMin) a else b
@@ -1618,7 +1617,7 @@ object SnapshotLog {
     *
     * Partitioning follows the engine convention: a table whose schema
     * carries the partition column stays day-partitioned on insert.
-    * Layout-managed tables (non-identity partition transforms from
+    * Layout-managed tables (partition values that are not exact days:
     * [[clusterBy]] / spec evolution) refuse SQL inserts loudly — a
     * naively-partitioned file would break the layout the manifest's
     * stats pruning reasons about. */
@@ -1635,10 +1634,7 @@ object SnapshotLog {
       val aligned = df.select(schema.fields.toSeq.map(f =>
         col(f.name).cast(f.dataType).as(f.name)): _*)
       def layoutGuard(sn: Snapshot): Unit =
-        require(sn.files.forall(f => f.partition.isEmpty ||
-            f.spec.isEmpty || f.spec.contains("identity")),
-          s"$tableDir has a non-identity partition layout — SQL INSERT " +
-            "would break it; use the engine writers")
+        requireExactDayLayout(sn, tableDir, "SQL INSERT")
       layoutGuard(cur)
       val pcol = conventionPartitionCol(schema)
       // 0-row part files (non-partitioned writes emit one per empty
@@ -2263,8 +2259,7 @@ object SnapshotLog {
       GraftMorScan.applyDeletes(spark, rel, lineage))
   }
 
-  /** Read a snapshot's file set, optionally pruned to partition values —
-    * manifest-level file skipping, no directory listing. Missing columns
+  /** Read a snapshot's file set — no directory listing. Missing columns
     * (schema evolution) surface as nulls; renamed columns follow their
     * field id.
     *
@@ -2277,15 +2272,8 @@ object SnapshotLog {
     * stored table never shuffles for delete application), a
     * mass-delete's accumulated set shuffle-hash-joins instead of OOMing
     * the driver. */
-  def read(spark: SparkSession, tableDir: String, snap: Snapshot,
-           partitions: Option[Seq[String]] = None): DataFrame =
-    // spec-aware pruning: each requested day is evaluated under the
-    // FILE's partition transform (identity: value equality; month: the
-    // day's month prefix) — partition-spec evolution means one snapshot
-    // can mix layouts, and the predicate must follow the file, not the
-    // table (Iceberg evaluates residuals per spec the same way)
-    scan(spark, tableDir, partitions.fold(snap)(days =>
-      snap.copy(files = pruneToDays(snap, days))))
+  def read(spark: SparkSession, tableDir: String, snap: Snapshot): DataFrame =
+    scan(spark, tableDir, snap)
 
   /** Read the current table state (empty frame with the last committed
     * schema if the table committed empty; None if no log exists). */
@@ -2293,69 +2281,19 @@ object SnapshotLog {
     currentSnapshot(spark, tableDir).map(read(spark, tableDir, _))
 
   /** [[read]] restricted to the manifest entries `keep` selects — the
-    * scan-planning hook for [[GraftCatalog]]'s SQL pushdown. Callers must
-    * only drop files whose recorded partition value or stats bounds prove
-    * no selected row lives there (pruning is an optimization, never a
-    * correctness shortcut: the row-level predicate is still applied).
+    * scan-planning hook for manifest file skipping (typically
+    * [[GraftPruning.filePredicate]] over the query's filters: partition
+    * values under each file's transform, then per-file stats bounds).
+    * Callers must only drop files whose recorded partition value or
+    * stats bounds prove no selected row lives there (pruning is an
+    * optimization, never a correctness shortcut: the row-level predicate
+    * is still applied).
     * Delete application is unchanged — dropping data files can only
     * remove rows, and both delete kinds target surviving files the same
     * way they would in the full read. */
   def readPruned(spark: SparkSession, tableDir: String, snap: Snapshot,
                  keep: DataFile => Boolean): DataFrame =
     scan(spark, tableDir, snap.copy(files = snap.files.filter(keep)))
-
-  /** Manifest-level file skipping by LSN range: the files of `snap` that
-    * can hold a row with `lo <= lsn <= hi`, decided from the per-file
-    * footer bounds recorded at commit time — no footer is opened, no
-    * data is read. This is the Iceberg scan-planning shortcut beyond
-    * partition pruning: a predicate on the stats column turns into a
-    * file-list restriction BEFORE the scan is planned, so a query over
-    * an LSN window of a 100 TB table reads only the commits that overlap
-    * it. Files without recorded bounds are kept (never a correctness
-    * shortcut). Callers still apply the row-level filter — bounds
-    * overlap is necessary, not sufficient. */
-  def pruneByLsn(snap: Snapshot, lo: String, hi: String): Seq[DataFile] =
-    snap.files.filter(f => (f.minLsn, f.maxLsn) match {
-      case (Some(mn), Some(mx))
-        if f.boundsColumn == graft.ingest.Cdc.LsnColumn =>
-        mn <= hi && mx >= lo
-      case _ => true // bounds absent or for another column: never skip
-    })
-
-  /** The files of `snap` that can hold rows of any of `days`, evaluated
-    * under each FILE's own partition transform ([[DataFile.matchesDay]])
-    * — the measurement surface for spec-evolution pruning. */
-  def pruneToDays(snap: Snapshot, days: Seq[String]): Seq[DataFile] =
-    snap.files.filter(f => days.exists(f.matchesDay))
-
-  /** Manifest-level file skipping by NUMERIC range on an arbitrary data
-    * column: keeps the files of `snap` whose recorded `[min, max]` for
-    * `column` overlaps the closed `[lo, hi]` — compared as numbers (the
-    * stored bounds are footer stats rendered to strings; LSNs compare
-    * lexically because they are zero-padded, data columns must not).
-    * Files whose bounds describe a DIFFERENT column, or carry no bounds,
-    * are always kept — skipping is an optimization, never a correctness
-    * shortcut. Selective only after [[clusterBy]] makes per-file ranges
-    * disjoint; on ingest-ordered files every range overlaps everything. */
-  def pruneByStats(snap: Snapshot, column: String,
-                   lo: BigDecimal, hi: BigDecimal): Seq[DataFile] =
-    snap.files.filter(f => f.boundsFor(column) match {
-      case Some((mn, mx)) => BigDecimal(mn) <= hi && BigDecimal(mx) >= lo
-      case None           => true
-    })
-
-  /** [[read]] of exactly the files [[pruneByStats]] selects, live
-    * deletes applied. Callers still apply the row-level predicate —
-    * bounds overlap is necessary, not sufficient. */
-  def readStatsRange(spark: SparkSession, tableDir: String, snap: Snapshot,
-                     column: String, lo: BigDecimal, hi: BigDecimal): DataFrame =
-    scan(spark, tableDir, snap.copy(files = pruneByStats(snap, column, lo, hi)))
-
-  /** [[read]] of exactly the files [[pruneByLsn]] selects, live deletes
-    * applied. Callers still apply the row-level predicate. */
-  def readLsnRange(spark: SparkSession, tableDir: String, snap: Snapshot,
-                   lo: String, hi: String): DataFrame =
-    scan(spark, tableDir, snap.copy(files = pruneByLsn(snap, lo, hi)))
 
   // ---- compaction
 
@@ -2390,23 +2328,18 @@ object SnapshotLog {
       // be split per-partition without a rewrite of the delete file
       require(cur.deletes.isEmpty && cur.posDeletes.isEmpty,
         s"$tableDir carries live deletes; run foldDeletes before compact")
-      // may-contain pruning (month/cluster specs) would pull foreign
-      // rows into the rewrite while the untouched list keeps their
-      // files — duplication. Per-partition rewrites need exact values.
-      require(allIdentitySpec(cur),
-        s"$tableDir holds non-identity partition layouts; " +
-          "run normalizeLayout before compact")
+      requireExactDayLayout(cur, tableDir, "compact")
       val oversized = cur.files.groupBy(_.partition)
         .collect { case (p, fs) if fs.size > maxFiles => p }.toSeq.sorted
       if (oversized.isEmpty) return Seq.empty
-      val pruned = read(spark, tableDir, cur, Some(oversized))
+      val oset = oversized.toSet
+      val pruned = readPruned(spark, tableDir, cur, f => oset(f.partition))
       // an unpartitioned rewrite has no partition column to cluster by —
       // fold the oversized file set into a single output file; with a
       // partition column, writeData's repartition(pcol) already yields
       // one file per partition value
       val source = if (partitionCol.isDefined) pruned else pruned.repartition(1)
       val newFiles = writeData(spark, tableDir, source, partitionCol, statsCol)
-      val oset = oversized.toSet
       val untouched = cur.files.filterNot(f => oset(f.partition))
       commit(spark, tableDir, "replace", untouched ++ newFiles, cur.schema,
         parent = Some(cur))
@@ -2421,16 +2354,14 @@ object SnapshotLog {
     * internal/cdc/buffer/postgres.go:218-234, default 7 d). Old
     * snapshots keep exact time travel; dropped bytes are reclaimed by
     * [[expire]]. Partition values compare as day strings, so only
-    * identity-day layouts qualify — a month or cluster file may hold
-    * rows on both sides of the cutoff. Returns the dropped days (sorted);
+    * exact-day layouts qualify — a month or cluster file may hold rows
+    * on both sides of the cutoff. Returns the dropped days (sorted);
     * nothing to drop commits nothing. */
   def dropDaysBefore(spark: SparkSession, tableDir: String,
                      cutoffDay: String): Seq[String] =
     withTableLock(tableDir) {
       val cur = currentSnapshot(spark, tableDir).getOrElse(return Seq.empty)
-      require(allIdentitySpec(cur),
-        s"$tableDir holds non-identity partition layouts; " +
-          "run normalizeLayout before a retention drop")
+      requireExactDayLayout(cur, tableDir, "a retention drop")
       val (dropped, kept) = cur.files.partition(f =>
         f.partition.nonEmpty && f.partition < cutoffDay)
       if (dropped.isEmpty) return Seq.empty
@@ -2442,84 +2373,52 @@ object SnapshotLog {
   /** Rewrite the WHOLE table range-clustered by `sortCol` and commit the
     * result as a "replace" snapshot whose per-file manifest bounds
     * describe `sortCol` — Iceberg's `rewrite_data_files` with a sort
-    * strategy, the step that turns [[pruneByStats]] from a no-op into
-    * real scan planning: ingest-ordered files each span the full value
-    * range (every range query reads everything), clustered files own
-    * disjoint ranges (a range query reads only the overlapping buckets).
-    *
-    * `splits` are explicit ascending bucket boundaries; row → bucket is
-    * `count(splits <= value)` — a DETERMINISTIC transform, deliberately
-    * not `repartitionByRange` (whose sampled boundaries differ run to
-    * run, making file layouts and prune counts unreproducible). At 100 TB
-    * the splits come from `approxQuantile` on a sample or from the
-    * previous manifest's bounds; the rewrite itself is ONE distributed
-    * job (bucket id is a hidden dir-partition through [[writeData]], so
-    * each bucket lands in its own file), and per-bucket skew is visible
-    * in the manifest as file sizes. Null sort values bucket to 0 and are
-    * never selected by a range predicate, so pruning them away with
-    * bucket 0 is sound. Old snapshots keep exact time travel; replaced
-    * bytes are reclaimed by [[expire]].
-    *
-    * The bucket column is written inline under a reserved name but the
-    * committed schema is unchanged — readers project it away (Iceberg
-    * hidden partitioning: the transform is table layout, not table
-    * schema). */
+    * strategy, the step that turns stats-bounds pruning from a no-op
+    * into real scan planning: ingest-ordered files each span the full
+    * value range (every range query reads everything), clustered files
+    * own disjoint ranges (a range query reads only the overlapping
+    * buckets). The one-dimension [[clusterByGrid]]. */
   def clusterBy(spark: SparkSession, tableDir: String, sortCol: String,
                 splits: Seq[Double]): Snapshot =
-    withTableLock(tableDir) {
-      val cur = currentSnapshot(spark, tableDir).getOrElse(
-        throw new NoSuchElementException(s"no snapshot log at $tableDir"))
-      require(cur.deletes.isEmpty && cur.posDeletes.isEmpty,
-        s"$tableDir carries live deletes; run foldDeletes before clusterBy")
-      require(splits.nonEmpty && splits == splits.sorted &&
-        splits.distinct.size == splits.size,
-        s"splits must be ascending and distinct: $splits")
-      require(cur.schema.fieldNames.contains(sortCol),
-        s"sort column $sortCol not in schema of $tableDir")
-      val state = read(spark, tableDir, cur)
-      val bucket = splits.foldLeft(lit(0)) { (acc, sp) =>
-        acc + when(col(sortCol) >= lit(sp), 1).otherwise(0)
-      }
-      val tagged = state.withColumn(ClusterBucketCol,
-        format_string("%04d", bucket))
-      // spec "cluster": the partition value is a bucket id, NOT a day —
-      // day pruning must never mistake it for an identity value (an
-      // unknown transform is never pruned, so day reads stay correct,
-      // just unpruned — range skipping is this layout's pruning story)
-      val files = writeData(spark, tableDir, tagged, Some(ClusterBucketCol),
-        statsCol = sortCol, spec = Some("cluster"))
-      commit(spark, tableDir, "replace", files, cur.schema,
-        parent = Some(cur))
-    }
+    clusterByGrid(spark, tableDir, Seq(sortCol -> splits))
 
-  /** Reserved hidden-partition column name [[clusterBy]] writes under. */
+  /** Reserved hidden-partition column name [[clusterByGrid]] writes under. */
   val ClusterBucketCol = "_cluster_bucket"
 
-  /** Multi-dimension clustered rewrite — the deterministic GRID form of
-    * Iceberg's `rewrite_data_files` z-order strategy. Each dimension
-    * gets explicit ascending splits; a row's cell is the tuple of its
-    * per-dimension bucket indices (`count(splits <= value)` each —
-    * deterministic, like [[clusterBy]], deliberately not sampled), and
-    * each non-empty cell lands in its own file whose manifest entry
-    * records min/max bounds for EVERY dimension. A range predicate on
-    * ANY clustered column then prunes at the manifest — the property
-    * z-order buys; the grid form trades Morton-order file packing for a
-    * reproducible layout (at 100 TB, cells are sized by choosing splits
-    * from quantiles so each cell ≈ one target file; a Morton sort would
-    * pack sparse cells together at the cost of widening per-file bounds
-    * on every dimension). Null values bucket to 0 per dimension — range
-    * predicates never select nulls, so pruning them with bucket 0 stays
-    * sound. Old snapshots keep exact time travel; replaced bytes fall to
-    * [[expire]]. */
+  /** Clustered rewrite over one or more dimensions — the deterministic
+    * GRID form of Iceberg's `rewrite_data_files` sort and z-order
+    * strategies. Each dimension gets explicit ascending splits; a row's
+    * cell is the tuple of its per-dimension bucket indices
+    * (`count(splits <= value)` each, `%04d`, joined by "-") — a
+    * DETERMINISTIC transform, deliberately not `repartitionByRange`
+    * (whose sampled boundaries differ run to run, making file layouts
+    * and prune counts unreproducible). Each non-empty cell lands in its
+    * own file (the cell id is a hidden dir-partition through
+    * [[writeData]], ONE distributed job) whose manifest entry records
+    * min/max bounds for EVERY dimension: the first as the primary stats
+    * pair, the rest as extra bounds. A range predicate on ANY clustered
+    * column then prunes at the manifest — the property z-order buys; the
+    * grid form trades Morton-order file packing for a reproducible
+    * layout (at 100 TB, cells are sized by choosing splits from
+    * quantiles so each cell ≈ one target file). Null values bucket to 0
+    * per dimension — range predicates never select nulls, so pruning
+    * them with bucket 0 stays sound. Old snapshots keep exact time
+    * travel; replaced bytes fall to [[expire]].
+    *
+    * The cell column is written inline under a reserved name but the
+    * committed schema is unchanged — readers project it away (Iceberg
+    * hidden partitioning: the transform is table layout, not table
+    * schema). Its spec is "cluster": a cell id is never a day, so day
+    * predicates keep every clustered file (range skipping is this
+    * layout's pruning story). */
   def clusterByGrid(spark: SparkSession, tableDir: String,
                     dims: Seq[(String, Seq[Double])]): Snapshot =
     withTableLock(tableDir) {
       val cur = currentSnapshot(spark, tableDir).getOrElse(
         throw new NoSuchElementException(s"no snapshot log at $tableDir"))
       require(cur.deletes.isEmpty && cur.posDeletes.isEmpty,
-        s"$tableDir carries live deletes; run foldDeletes before clusterByGrid")
-      require(dims.size >= 2,
-        "clusterByGrid needs >= 2 dimensions; use clusterBy for one")
+        s"$tableDir carries live deletes; run foldDeletes before clustering")
+      require(dims.nonEmpty, "clustering needs at least one dimension")
       dims.foreach { case (c, splits) =>
         require(cur.schema.fieldNames.contains(c),
           s"cluster column $c not in schema of $tableDir")
@@ -2564,7 +2463,7 @@ object SnapshotLog {
     * retire any live deletes along the way) — the normalization step
     * that makes a spec-evolved or clustered table eligible again for
     * the per-partition rewrites ([[compact]]) and the CDC writers'
-    * touched-day COW merge, both of which require identity values. */
+    * touched-day COW merge, both of which require exact-day values. */
   def normalizeLayout(spark: SparkSession, tableDir: String,
                       partitionCol: Option[String],
                       statsCol: String = graft.ingest.Cdc.LsnColumn): Option[Snapshot] =
@@ -2584,11 +2483,13 @@ object SnapshotLog {
       parent = Some(cur), deletes = Nil)
   }
 
-  /** Every file's partition value is an identity value (or the file is
-    * unpartitioned) — the precondition for treating partition values as
-    * exact day keys in per-partition rewrites. */
-  def allIdentitySpec(snap: Snapshot): Boolean =
-    snap.files.forall(f => f.spec.isEmpty || f.spec.contains("identity"))
+  /** Refuse `op` on a table whose partition values are not all exact
+    * days ([[GraftPruning.exactDayLayout]]). */
+  private[graft] def requireExactDayLayout(snap: Snapshot, tableDir: String,
+                                           op: String): Unit =
+    require(GraftPruning.exactDayLayout(snap),
+      s"$tableDir holds partition layouts other than identity or day; " +
+        s"run normalizeLayout before $op")
 
   /** RENAME COLUMN — metadata only (Iceberg's rename): the field keeps
     * its id under a new name, zero files are touched, and every old file

@@ -2,8 +2,10 @@ package graft.queries
 
 import graft.{GraftQuery, QueryModule, Tables}
 import graft.ingest.{Cdc, CdcWriter, TimeTravel}
+import graft.lake.GraftPruning
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{GreaterThanOrEqual, In, LessThanOrEqual}
 
 /** Lifecycle surface: the write path, time travel, catalog exploration and
   * EXPLAIN — the parts of the reference's product surface that live around
@@ -59,8 +61,8 @@ object Lifecycle extends QueryModule {
   private def writeRoundtrip(s: SparkSession, d: String): DataFrame = {
     import graft.lake.SnapshotLog
     val (dir, snap) = writeRoundtripSetup(s, d)
-    val keep = SnapshotLog.pruneToDays(snap, RoundtripDays).toSet
-    SnapshotLog.readPruned(s, dir, snap, keep)
+    SnapshotLog.readPruned(s, dir, snap, GraftPruning.filePredicate(
+      Array(In(graft.model.SchemaBuilder.partitionColumn, RoundtripDays.toArray[Any]))))
       .filter(col("_cdc_date").between(RoundtripDays.head, RoundtripDays.last))
       .groupBy(col("_cdc_date").cast("string").as("day"))
       .agg(count(lit(1)).as("n"),
@@ -742,11 +744,14 @@ object Lifecycle extends QueryModule {
     val dir = snapCompactDir(s, d)
     import graft.lake.SnapshotLog
     val sn = SnapshotLog.snapshotAt(s, dir, 3L)
-    // window is (SnapLsn1, SnapLsn2]; pruneByLsn is inclusive, so lo
-    // is the successor LSN (ids are contiguous 16-digit strings)
+    // window is (SnapLsn1, SnapLsn2]; bounds pruning treats a strict
+    // bound as inclusive, so lo is the successor LSN (ids are contiguous
+    // 16-digit strings)
     val lo = f"${SnapLsn1.toLong + 1}%016d"
-    val scanned = SnapshotLog.pruneByLsn(sn, lo, SnapLsn2)
-    SnapshotLog.readLsnRange(s, dir, sn, lo, SnapLsn2)
+    val window = GraftPruning.filePredicate(Array(
+      GreaterThanOrEqual(Cdc.LsnColumn, lo), LessThanOrEqual(Cdc.LsnColumn, SnapLsn2)))
+    val scanned = sn.files.filter(window)
+    SnapshotLog.readPruned(s, dir, sn, window)
       .filter(col(Cdc.LsnColumn) > SnapLsn1 && col(Cdc.LsnColumn) <= SnapLsn2)
       .groupBy(col(graft.model.SchemaBuilder.partitionColumn).cast("string").as("day"))
       .agg(count(lit(1)).as("n_rows"), min(col(Cdc.LsnColumn)).as("lsn_min"),
@@ -849,19 +854,20 @@ object Lifecycle extends QueryModule {
         acc + when(col(c) >= lit(sp), 1).otherwise(0)
       }.cast("bigint")
     def probe(label: String, c: String, splits: Seq[Double],
-              lo: BigDecimal, hi: BigDecimal): DataFrame =
-      SnapshotLog.readStatsRange(s, dir, post, c, lo, hi)
+              lo: BigDecimal, hi: BigDecimal): DataFrame = {
+      val range = GraftPruning.filePredicate(Array(
+        GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi)))
+      SnapshotLog.readPruned(s, dir, post, range)
         .filter(col(c).between(lo.toDouble, hi.toDouble))
         .groupBy(bucketOf(c, splits).as("bucket"))
         .agg(count(lit(1)).as("n_rows"), sum(col("event_id")).as("id_sum"))
         .select(lit(label).as("probe"), col("bucket"), col("n_rows"),
           col("id_sum"),
-          lit(SnapshotLog.pruneByStats(post, c, lo, hi).size.toLong)
-            .as("n_scanned"),
+          lit(post.files.count(range).toLong).as("n_scanned"),
           lit(post.files.size.toLong).as("n_total"),
-          lit(SnapshotLog.pruneByStats(pre, c, lo, hi).size.toLong)
-            .as("n_before_scanned"),
+          lit(pre.files.count(range).toLong).as("n_before_scanned"),
           lit(pre.files.size.toLong).as("n_before_total"))
+    }
     probe("value", "value", ZValueSplits, BigDecimal(100), BigDecimal(200))
       .unionByName(
         probe("u_mod", "u_mod", ZModSplits, BigDecimal(2), BigDecimal(7)))
@@ -913,12 +919,14 @@ object Lifecycle extends QueryModule {
     val (lo, hi) = (BigDecimal(100), BigDecimal(200))
     val pre = SnapshotLog.snapshotAt(s, dir, 3L)
     val post = SnapshotLog.currentSnapshot(s, dir).get
-    val beforeScanned = SnapshotLog.pruneByStats(pre, "value", lo, hi).size
-    val afterScanned = SnapshotLog.pruneByStats(post, "value", lo, hi).size
+    val range = GraftPruning.filePredicate(Array(
+      GreaterThanOrEqual("value", lo), LessThanOrEqual("value", hi)))
+    val beforeScanned = pre.files.count(range)
+    val afterScanned = post.files.count(range)
     val bucket = ClusterSplits.foldLeft(lit(0)) { (acc, sp) =>
       acc + when(col("value") >= lit(sp), 1).otherwise(0)
     }
-    SnapshotLog.readStatsRange(s, dir, post, "value", lo, hi)
+    SnapshotLog.readPruned(s, dir, post, range)
       .filter(col("value").between(100, 200))
       .groupBy(bucket.cast("bigint").as("bucket"))
       .agg(count(lit(1)).as("n_rows"), min(col("value")).as("value_min"),
@@ -1080,8 +1088,12 @@ object Lifecycle extends QueryModule {
     val dir = specEvoDir(s, d)
     import graft.lake.SnapshotLog
     val cur = SnapshotLog.currentSnapshot(s, dir).get
-    val scanned = SnapshotLog.pruneToDays(cur, EvoWindow).size
-    SnapshotLog.read(s, dir, cur, Some(EvoWindow))
+    // the table's day column is `day`, not the convention column, so
+    // the window prunes through the day mapping's equality case
+    val inWindow = (f: SnapshotLog.DataFile) =>
+      EvoWindow.exists(GraftPruning.matchesDay(f, _))
+    val scanned = cur.files.count(inWindow)
+    SnapshotLog.readPruned(s, dir, cur, inWindow)
       .filter(col("day").isin(EvoWindow: _*))
       .groupBy(col("day"))
       .agg(count(lit(1)).as("n_rows"), sum(col("event_id")).as("id_sum"),
@@ -2124,7 +2136,7 @@ object Lifecycle extends QueryModule {
       val minDay = graft.lake.SnapshotLog.currentSnapshot(s, dir).get
         .files.map(_.partition).filter(_.nonEmpty).min
       graft.lake.SnapshotLog.deleteWhere(s, dir, col(pcol) === minDay,
-        keep = _.matchesDay(minDay))
+        keep = GraftPruning.matchesDay(_, minDay))
     }
     val minDay = graft.lake.SnapshotLog.snapshotAt(s, dir, 1L)
       .files.map(_.partition).filter(_.nonEmpty).min
@@ -2135,7 +2147,7 @@ object Lifecycle extends QueryModule {
     import graft.lake.SnapshotLog
     val (dir, minDay) = dmlPruneDir(s, d)
     val base = SnapshotLog.snapshotAt(s, dir, 1L)
-    val scanned = base.files.count(_.matchesDay(minDay)).toLong
+    val scanned = base.files.count(GraftPruning.matchesDay(_, minDay)).toLong
     val total = base.files.size.toLong
     Seq(1L, 2L).map { id =>
       SnapshotLog.read(s, dir, SnapshotLog.snapshotAt(s, dir, id))

@@ -221,7 +221,7 @@ class LakeMergeSpec extends SparkTestBase {
     assert(state === Seq((2L, 15L)))
   }
 
-  test("TRUNCATE wipe detection falls back to a scan when file bounds are not LSN bounds") {
+  test("TRUNCATE wipe detection keeps files whose bounds are not LSN bounds") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-lakemerge-trunc3").toString + "/t"
     CdcWriter.merge(spark, dir, env(
@@ -234,11 +234,46 @@ class LakeMergeSpec extends SparkTestBase {
     val cur = graft.lake.SnapshotLog.currentSnapshot(spark, dir).get
     assert(cur.files.exists(_.statsCol === Some("value")))
     // TRUNCATE at LSN 10: both stored days hold pre-marker rows and
-    // must be wiped — a lexical value-vs-LSN compare would miss them
+    // must be wiped — a lexical value-vs-LSN compare would miss them;
+    // files without LSN bounds are admitted, so both days are touched
     CdcWriter.merge(spark, dir, truncMarker(10L, "2024-01-03"), Seq("user_id"))
     val state = CdcWriter.read(spark, dir)
       .select($"user_id").as[Long].collect().toSeq
     assert(state === Seq.empty)
+  }
+
+  test("a TRUNCATE merge over entries without LSN bounds equals currentStateWithTruncate") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-lakemerge-trunc4").toString + "/t"
+    // day1 entirely before the marker, day2 straddling it, day3 after it
+    val stored = env(
+      (1L, 1L, 1.0, "INSERT", "2024-01-01"), (2L, 2L, 2.0, "INSERT", "2024-01-01"),
+      (3L, 3L, 3.0, "INSERT", "2024-01-02"), (4L, 14L, 4.0, "INSERT", "2024-01-02"),
+      (5L, 15L, 5.0, "INSERT", "2024-01-03"))
+    CdcWriter.appendCommit(spark, dir, stored)
+    // the same files with their LSN bounds dropped from the manifest
+    SnapshotLog.withTableLock(dir) {
+      val cur = SnapshotLog.currentSnapshot(spark, dir).get
+      SnapshotLog.commit(spark, dir, "replace",
+        cur.files.map(_.copy(minLsn = None, maxLsn = None)), cur.schema,
+        parent = Some(cur))
+    }
+    assert(SnapshotLog.currentSnapshot(spark, dir).get.files
+      .forall(f => f.minLsn.isEmpty && f.maxLsn.isEmpty))
+    val delta = env(
+      (6L, 9L, 6.0, "INSERT", "2024-01-04"),
+      (2L, 11L, 20.0, "INSERT", "2024-01-04"),
+      (5L, 16L, 50.0, "UPDATE", "2024-01-03"))
+      .unionByName(truncMarker(10L, "2024-01-04"))
+    CdcWriter.merge(spark, dir, delta, Seq("user_id"))
+    val state = CdcWriter.read(spark, dir)
+      .select($"user_id", $"event_id", $"value").as[(Long, Long, Double)]
+      .collect().sortBy(_._1).toSeq
+    val recomputed = Cdc.currentStateWithTruncate(stored.unionByName(delta), Seq("user_id"))
+      .select($"user_id", $"event_id", $"value").as[(Long, Long, Double)]
+      .collect().sortBy(_._1).toSeq
+    assert(state === recomputed)
+    assert(state === Seq((2L, 11L, 20.0), (4L, 14L, 4.0), (5L, 16L, 50.0)))
   }
 
   test("COW write amplification is bounded by the DELTA's day-spread, not the table's") {

@@ -201,8 +201,9 @@ class AggPushdownSpec extends SparkTestBase {
          |FROM $cat.ns.t GROUP BY _cdc_date""".stripMargin)
     df.collect()
     val folds = GraftFoldStats.count
-    // aspects folded: aggGroupIdentityDay + boundsAnswerable:v (the
-    // era/claimable aspects don't run on the metadata path) — each ONCE
+    // aspects folded: exactDayTable (shared by the filter claim and the
+    // group check) + boundsAnswerable:v (the era aspect doesn't run on
+    // the metadata path) — each ONCE
     assert(folds <= 2L, s"expected <= 2 manifest folds for one plan, got $folds")
   }
 

@@ -82,7 +82,9 @@ class GraftProceduresSpec extends SparkTestBase {
     assert(snap.files.size === 4) // one file per non-empty bucket
     assert(snap.files.forall(_.boundsFor("v").isDefined))
     // range pruning works from the clustered bounds
-    assert(SnapshotLog.pruneByStats(snap, "v", 12, 18).size === 1)
+    assert(snap.files.count(GraftPruning.filePredicate(Array(
+      org.apache.spark.sql.sources.GreaterThanOrEqual("v", 12),
+      org.apache.spark.sql.sources.LessThanOrEqual("v", 18)))) === 1)
   }
 
   test("write-audit-publish flows through branch procedures") {

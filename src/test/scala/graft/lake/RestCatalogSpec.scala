@@ -449,6 +449,43 @@ class RestCatalogSpec extends SparkTestBase {
     } finally { srv.close(); cli.close() }
   }
 
+  test("day-transform tables take compaction, retention and SQL INSERT like identity ones") {
+    val (srv, cli, _) = fixture()
+    try {
+      import spark.implicits._
+      val batches = Seq(
+        Seq((1L, 1.0, "2024-01-01")), Seq((2L, 2.0, "2024-01-01")),
+        Seq((3L, 3.0, "2024-01-02")), Seq((4L, 4.0, "2024-01-02")),
+        Seq((5L, 5.0, "2024-01-03")))
+      // the same files committed under a `day` and an `identity` spec
+      val Seq(dayLoc, idLoc) = Seq("dd" -> "day", "di" -> "identity").map {
+        case (name, transform) =>
+          cli.createTable(Seq("db"), name, schema,
+            partitionSpec = Seq(Day -> transform))
+          val loc = cli.loadTable(Seq("db"), name).location
+          batches.zipWithIndex.foreach { case (rows, i) =>
+            cli.commitAppend(Seq("db"), name, Seq(writeFile(loc, s"f$i.parquet", rows)))
+          }
+          loc
+      }
+      assert(SnapshotLog.currentSnapshot(spark, dayLoc).get.files
+        .forall(_.spec.contains("day")))
+      def state(loc: String): Seq[(Long, Double, String)] =
+        SnapshotLog.readCurrent(spark, loc).get.select("id", "v", Day)
+          .as[(Long, Double, String)].collect().toSeq.sortBy(_._1)
+      def onBoth[T](op: String => T): Unit = {
+        assert(op(dayLoc) === op(idLoc))
+        assert(state(dayLoc) === state(idLoc))
+      }
+      onBoth(SnapshotLog.compact(spark, _, Some(Day), maxFiles = 1))
+      assert(SnapshotLog.currentSnapshot(spark, dayLoc).get.files.size === 3)
+      onBoth(loc => SnapshotLog.sqlInsert(spark, loc,
+        Seq((6L, 6.0, "2024-01-04")).toDF("id", "v", Day), overwrite = false).totalRows)
+      onBoth(SnapshotLog.dropDaysBefore(spark, _, "2024-01-02"))
+      assert(state(dayLoc).map(_._1) === Seq(3L, 4L, 5L, 6L))
+    } finally { srv.close(); cli.close() }
+  }
+
   test("ALTER TABLE ADD COLUMN evolves through the REST protocol, add-only enforced") {
     val (srv, cli, _) = fixture()
     try {
@@ -538,8 +575,11 @@ class RestCatalogSpec extends SparkTestBase {
       val snap = SnapshotLog.currentSnapshot(spark, loc).get
       assert(snap.files.head.minLsn === Some("00000003"))
       assert(snap.files.head.maxLsn === Some("00000007"))
-      assert(SnapshotLog.pruneByLsn(snap, "00000009", "00000010").isEmpty)
-      assert(SnapshotLog.pruneByLsn(snap, "00000001", "00000005").size === 1)
+      def window(lo: String, hi: String) = GraftPruning.filePredicate(Array(
+        org.apache.spark.sql.sources.GreaterThanOrEqual(graft.ingest.Cdc.LsnColumn, lo),
+        org.apache.spark.sql.sources.LessThanOrEqual(graft.ingest.Cdc.LsnColumn, hi)))
+      assert(snap.files.count(window("00000009", "00000010")) === 0)
+      assert(snap.files.count(window("00000001", "00000005")) === 1)
     } finally { srv.close(); cli.close() }
   }
 

@@ -4,6 +4,7 @@ import graft.SparkTestBase
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, GreaterThanOrEqual, LessThanOrEqual}
 import java.nio.file.Files
 
 /** The snapshot commit protocol (ref internal/iceberg/catalog/
@@ -153,7 +154,8 @@ class SnapshotLogSpec extends SparkTestBase {
       assert(files.map(_.partition).distinct.sorted === Seq("2024-01-01", "2024-01-02"))
       SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
     }
-    val pruned = SnapshotLog.read(spark, dir, snap, Some(Seq("2024-01-02")))
+    val pruned = SnapshotLog.readPruned(spark, dir, snap,
+      GraftPruning.filePredicate(Array(EqualTo("_cdc_date", "2024-01-02"))))
     assert(idsOf(pruned.select(col("id"))) === Seq(2L, 3L))
     // file-skipping happened at the manifest, before the plan: the scan's
     // input file list holds only day-02 files
@@ -255,7 +257,7 @@ class SnapshotLogSpec extends SparkTestBase {
     assertThrows[NoSuchElementException](SnapshotLog.snapshotAtTag(spark, dir, "gone"))
   }
 
-  test("clusterBy makes per-file bounds disjoint; pruneByStats then skips") {
+  test("clusterBy makes per-file bounds disjoint; stats-range pruning then skips") {
     val dir = Files.createTempDirectory("graft-snaplog-cluster").toString + "/t"
     // 3 ingest-ordered commits, each interleaving the full v range
     // (v = id * 10): every file overlaps every range → zero skipping
@@ -263,7 +265,9 @@ class SnapshotLogSpec extends SparkTestBase {
     commitRows(dir, rows(2, 11, 21), "append")
     commitRows(dir, rows(3, 12, 22), "append")
     val pre = SnapshotLog.currentSnapshot(spark, dir).get
-    assert(SnapshotLog.pruneByStats(pre, "v", 100, 150).size === pre.files.size)
+    val vRange = GraftPruning.filePredicate(Array(
+      GreaterThanOrEqual("v", 100), LessThanOrEqual("v", 150)))
+    assert(pre.files.count(vRange) === pre.files.size)
     // cluster on v: buckets [-inf,100) [100,200) [200,inf)
     val sn = SnapshotLog.clusterBy(spark, dir, "v", Seq(100.0, 200.0))
     assert(sn.operation === "replace")
@@ -274,9 +278,8 @@ class SnapshotLogSpec extends SparkTestBase {
       .sortBy(_._1)
     assert(bounds.sliding(2).forall { case Seq((_, aMax), (bMin, _)) => aMax < bMin })
     // range [100,150] now restricts to ONE file, and the read is complete
-    val hit = SnapshotLog.pruneByStats(sn, "v", 100, 150)
-    assert(hit.size === 1)
-    assert(idsOf(SnapshotLog.readStatsRange(spark, dir, sn, "v", 100, 150)
+    assert(sn.files.count(vRange) === 1)
+    assert(idsOf(SnapshotLog.readPruned(spark, dir, sn, vRange)
       .filter(col("v").between(100, 150))) === Seq(10L, 11L, 12L))
     // content preserved whole; bucket column is layout, not schema
     assert(idsOf(SnapshotLog.readCurrent(spark, dir).get)
@@ -284,19 +287,22 @@ class SnapshotLogSpec extends SparkTestBase {
     assert(sn.schema.fieldNames.toSeq === pre.schema.fieldNames.toSeq)
     // LSN pruning no longer trusts the v bounds (wrong-column guard):
     // a narrow LSN window keeps every clustered file
-    assert(SnapshotLog.pruneByLsn(sn, f"${1L}%016d", f"${1L}%016d").size === 3)
+    assert(sn.files.count(GraftPruning.filePredicate(Array(
+      GreaterThanOrEqual(graft.ingest.Cdc.LsnColumn, f"${1L}%016d"),
+      LessThanOrEqual(graft.ingest.Cdc.LsnColumn, f"${1L}%016d")))) === 3)
     // clustered files carry the "cluster" spec: bucket ids are LAYOUT,
     // never identity partition values — a day-pruned read must keep
     // them (unknown-to-the-predicate transforms never prune)
     assert(sn.files.forall(_.spec === Some("cluster")))
-    assert(idsOf(SnapshotLog.read(spark, dir, sn, Some(Seq("2024-01-01")))).size === 9)
+    assert(idsOf(SnapshotLog.readPruned(spark, dir, sn,
+      GraftPruning.matchesDay(_, "2024-01-01"))).size === 9)
     // per-partition rewrites refuse the non-identity layout loudly;
     // normalizeLayout rewrites it back to an identity table
     assertThrows[IllegalArgumentException](
       SnapshotLog.compact(spark, dir, partitionCol = None))
     SnapshotLog.normalizeLayout(spark, dir, partitionCol = None)
     val norm = SnapshotLog.currentSnapshot(spark, dir).get
-    assert(SnapshotLog.allIdentitySpec(norm))
+    assert(GraftPruning.exactDayLayout(norm))
     assert(idsOf(SnapshotLog.readCurrent(spark, dir).get).size === 9)
     // guard rails
     assertThrows[IllegalArgumentException](
@@ -354,7 +360,7 @@ class SnapshotLogSpec extends SparkTestBase {
     // admits — a day-targeted delete must open only that day's files
     var admitted = 0
     SnapshotLog.deleteWhere(spark, dir, col("day") === "2024-01-02",
-      keep = f => { val k = f.matchesDay("2024-01-02"); if (k) admitted += 1; k })
+      keep = f => { val k = GraftPruning.matchesDay(f, "2024-01-02"); if (k) admitted += 1; k })
     assert(admitted === 1, s"pruned delete admitted $admitted files")
     assert(SnapshotLog.readCurrent(spark, dir).get.count() === 200L)
     assert(SnapshotLog.readCurrent(spark, dir).get
@@ -363,7 +369,7 @@ class SnapshotLogSpec extends SparkTestBase {
     var admitted2 = 0
     SnapshotLog.updateWhere(spark, dir, col("day") === "2024-01-03",
       Map("id" -> (col("id") + 1000L)), partitionCol = Some("day"),
-      keep = f => { val k = f.matchesDay("2024-01-03"); if (k) admitted2 += 1; k })
+      keep = f => { val k = GraftPruning.matchesDay(f, "2024-01-03"); if (k) admitted2 += 1; k })
     assert(admitted2 >= 1 && admitted2 <= 2) // day-3 base (+ nothing else)
     val state = SnapshotLog.readCurrent(spark, dir).get
     assert(state.filter(col("day") === "2024-01-03" && col("id") < 1000L)
@@ -570,13 +576,15 @@ class SnapshotLogSpec extends SparkTestBase {
     val cur = SnapshotLog.currentSnapshot(spark, dir).get
     assert(cur.files.size === 4) // 2 day files + 2 month files
     // a January day keeps its own day file plus the January month file
-    val jan = SnapshotLog.pruneToDays(cur, Seq("2024-01-10"))
+    val jan = cur.files.filter(GraftPruning.matchesDay(_, "2024-01-10"))
     assert(jan.map(_.partition).sorted === Seq("2024-01", "2024-01-10"))
     // the read prunes the same way and filters rows correctly
-    assert(idsOf(SnapshotLog.read(spark, dir, cur, Some(Seq("2024-01-10")))
+    assert(idsOf(SnapshotLog.readPruned(spark, dir, cur,
+      GraftPruning.matchesDay(_, "2024-01-10"))
       .filter(col("day") === "2024-01-10")) === Seq(1L))
     // the month file yields its mid-month row through a day-window read
-    assert(idsOf(SnapshotLog.read(spark, dir, cur, Some(Seq("2024-01-15")))
+    assert(idsOf(SnapshotLog.readPruned(spark, dir, cur,
+      GraftPruning.matchesDay(_, "2024-01-15"))
       .filter(col("day") === "2024-01-15")) === Seq(3L))
     // hidden transform column is layout, not schema
     assert(SnapshotLog.readCurrent(spark, dir).get.columns.toSeq
@@ -606,18 +614,19 @@ class SnapshotLogSpec extends SparkTestBase {
     // a January-2024 day keeps: its day file, the Jan month file, the
     // 2024 year file (coarse), and ITS OWN hour file only (hour is
     // finer than the day predicate — file-exact pruning again)
-    val jan10 = SnapshotLog.pruneToDays(cur2, Seq("2024-01-10"))
+    val jan10 = cur2.files.filter(GraftPruning.matchesDay(_, "2024-01-10"))
     assert(jan10.map(_.partition).sorted ===
       Seq("2024", "2024-01", "2024-01-10", "2024-01-10 07"))
     // the read composes all four layouts and filters rows exactly
-    assert(idsOf(SnapshotLog.read(spark, dir, cur2, Some(Seq("2024-01-10")))
+    assert(idsOf(SnapshotLog.readPruned(spark, dir, cur2,
+      GraftPruning.matchesDay(_, "2024-01-10"))
       .filter(col("day") === "2024-01-10")) === Seq(1L, 7L))
     // a 2025 day prunes everything but the 2025 year file
-    assert(SnapshotLog.pruneToDays(cur2, Seq("2025-06-15"))
+    assert(cur2.files.filter(GraftPruning.matchesDay(_, "2025-06-15"))
       .map(_.partition) === Seq("2025"))
     // an unknown spec never prunes
     val alien = cur.copy(files = cur.files.map(_.copy(spec = Some("bucket"))))
-    assert(SnapshotLog.pruneToDays(alien, Seq("1999-01-01")).size === 4)
+    assert(alien.files.filter(GraftPruning.matchesDay(_, "1999-01-01")).size === 4)
   }
 
   test("updateWhere rewrites matching rows atomically by slot + append") {
@@ -725,9 +734,9 @@ class SnapshotLogSpec extends SparkTestBase {
     SnapshotLog.publish(spark, dir, "b")
     SnapshotLog.updateWhere(spark, dir, col("id") === 1,
       Map("id" -> lit(9L)), Some("day"))
-    assert(idsOf(SnapshotLog.read(spark, dir,
-      SnapshotLog.currentSnapshot(spark, dir).get, Some(Seq("2024-01-10"))))
-      .contains(9L))
+    assert(idsOf(SnapshotLog.readPruned(spark, dir,
+      SnapshotLog.currentSnapshot(spark, dir).get,
+      GraftPruning.matchesDay(_, "2024-01-10"))).contains(9L))
     assert(idsOf(SnapshotLog.readCurrent(spark, dir).get) === Seq(2L, 3L, 9L))
   }
 
@@ -772,7 +781,7 @@ class SnapshotLogSpec extends SparkTestBase {
     assert(SnapshotLog.snapshotAsOfTime(spark, dir, s2.tsMs + 1000).map(_.id) === Some(s2.id))
   }
 
-  test("pruneByLsn skips files from manifest bounds; missing bounds never skip") {
+  test("LSN windows skip files from manifest bounds; missing bounds never skip") {
     val dir = Files.createTempDirectory("graft-snaplog-prune").toString + "/t"
     // one file per commit (coalesce) so bounds-per-file are deterministic
     commitRows(dir, rows(1, 2, 3).coalesce(1), "append")    // bounds [..1, ..3]
@@ -780,18 +789,21 @@ class SnapshotLogSpec extends SparkTestBase {
     commitRows(dir, rows(20, 21).coalesce(1), "append")     // bounds [..20, ..21]
     val sn = SnapshotLog.currentSnapshot(spark, dir).get
     def lsn(i: Long) = f"$i%016d"
+    def window(lo: Long, hi: Long) = GraftPruning.filePredicate(Array(
+      GreaterThanOrEqual(graft.ingest.Cdc.LsnColumn, lsn(lo)),
+      LessThanOrEqual(graft.ingest.Cdc.LsnColumn, lsn(hi))))
     // middle window: only commit 2's file overlaps
-    val mid = SnapshotLog.pruneByLsn(sn, lsn(5), lsn(15))
+    val mid = sn.files.filter(window(5, 15))
     assert(mid.size === 1 && mid.head.minLsn === Some(lsn(10)))
-    assert(idsOf(SnapshotLog.readLsnRange(spark, dir, sn, lsn(5), lsn(15)))
+    assert(idsOf(SnapshotLog.readPruned(spark, dir, sn, window(5, 15)))
       === Seq(10L, 11L, 12L))
     // boundary inclusivity: a window ending exactly at a file's min keeps it
-    assert(SnapshotLog.pruneByLsn(sn, lsn(3), lsn(10)).size === 2)
+    assert(sn.files.count(window(3, 10)) === 2)
     // empty window between commits skips everything
-    assert(SnapshotLog.pruneByLsn(sn, lsn(13), lsn(19)).isEmpty)
+    assert(sn.files.count(window(13, 19)) === 0)
     // a file without recorded bounds is never skipped
     val blind = sn.copy(files = sn.files.map(_.copy(minLsn = None, maxLsn = None)))
-    assert(SnapshotLog.pruneByLsn(blind, lsn(13), lsn(19)).size === sn.files.size)
+    assert(blind.files.count(window(13, 19)) === sn.files.size)
   }
 
   test("unpartitioned compact folds the whole file set into one file") {

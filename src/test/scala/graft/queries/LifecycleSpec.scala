@@ -10,7 +10,8 @@ class LifecycleSpec extends SparkTestBase {
     // the registered cdc_write_roundtrip's own table and pruned read path
     val (dir, snap) = Lifecycle.writeRoundtripSetup(spark, sf0001)
     val allDays = snap.files.map(_.partition).distinct
-    val kept = SnapshotLog.pruneToDays(snap, Lifecycle.RoundtripDays)
+    val kept = snap.files.filter(graft.lake.GraftPruning.filePredicate(Array(
+      org.apache.spark.sql.sources.In("_cdc_date", Lifecycle.RoundtripDays.toArray[Any]))))
     // the manifest keeps exactly the 7 window days' files (one per day)
     // of ~31 before any file is opened
     assert(allDays.size > 25)
