@@ -1141,12 +1141,22 @@ object GraftPruning {
       case Some(_)                               => false
     })
 
-  /** Every partitioned file of `snap` is an exact-day file — the
+  /** Every file of `snap` is an exact-day file or an engine-written
+    * unpartitioned one (no partition value, spec none) — the
     * precondition for treating partition values as day keys in
-    * per-partition rewrites (compaction, retention, the COW merge, SQL
-    * INSERT). A month, hour or cluster file would pull foreign rows into
-    * a per-day rewrite while its own entry stays. */
+    * per-partition rewrites (compaction, retention, the COW merge). A
+    * month, hour or cluster file would pull foreign rows into a per-day
+    * rewrite while its own entry stays; a REST "unpartitioned" file may
+    * hold rows of any day that no per-day rewrite reaches. */
   def exactDayLayout(snap: Snapshot): Boolean =
+    snap.files.forall(f => exactDay(f) || f.partition.isEmpty && f.spec.isEmpty)
+
+  /** SQL INSERT's layout precondition: every partitioned file is an
+    * exact-day file. An insert appends beside the live files and
+    * rewrites none, so an unpartitioned file of any spec stays whole;
+    * a day-partitioned append into a month, hour or cluster layout
+    * would break the layout that layout's pruning reasons about. */
+  def insertableLayout(snap: Snapshot): Boolean =
     snap.files.forall(f => f.partition.isEmpty || exactDay(f))
 
   private def splitAnd(f: Filter): Seq[Filter] = f match {

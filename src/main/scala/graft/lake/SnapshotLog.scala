@@ -1634,7 +1634,8 @@ object SnapshotLog {
       val aligned = df.select(schema.fields.toSeq.map(f =>
         col(f.name).cast(f.dataType).as(f.name)): _*)
       def layoutGuard(sn: Snapshot): Unit =
-        requireExactDayLayout(sn, tableDir, "SQL INSERT")
+        require(GraftPruning.insertableLayout(sn),
+          layoutRefusal(tableDir, "SQL INSERT"))
       layoutGuard(cur)
       val pcol = conventionPartitionCol(schema)
       // 0-row part files (non-partitioned writes emit one per empty
@@ -2487,9 +2488,11 @@ object SnapshotLog {
     * days ([[GraftPruning.exactDayLayout]]). */
   private[graft] def requireExactDayLayout(snap: Snapshot, tableDir: String,
                                            op: String): Unit =
-    require(GraftPruning.exactDayLayout(snap),
-      s"$tableDir holds partition layouts other than identity or day; " +
-        s"run normalizeLayout before $op")
+    require(GraftPruning.exactDayLayout(snap), layoutRefusal(tableDir, op))
+
+  private def layoutRefusal(tableDir: String, op: String): String =
+    s"$tableDir holds partition layouts other than identity or day; " +
+      s"run normalizeLayout before $op"
 
   /** RENAME COLUMN — metadata only (Iceberg's rename): the field keeps
     * its id under a new name, zero files are touched, and every old file

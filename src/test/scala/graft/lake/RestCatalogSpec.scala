@@ -198,6 +198,45 @@ class RestCatalogSpec extends SparkTestBase {
     } finally { srv.close(); cli.close() }
   }
 
+  test("unpartitioned files refuse the per-day rewrites; SQL INSERT appends beside them") {
+    val (srv, cli, _) = fixture()
+    try {
+      import spark.implicits._
+      import graft.ingest.{Cdc, CdcWriter}
+      cli.createTable(Seq("db"), "u", schema) // no declared spec
+      val loc = cli.loadTable(Seq("db"), "u").location
+      // a file spanning two days registers with NO partition value
+      val f = writeFile(loc, "mix.parquet",
+        Seq((1L, 1.0, "2024-01-01"), (2L, 2.0, "2024-01-02"))).copy(partition = Nil)
+      cli.commitAppend(Seq("db"), "u", Seq(f), require = Some(1L))
+      val head = SnapshotLog.currentSnapshot(spark, loc).get.id
+      // a per-day rewrite never reads the mixed file: a merge touching
+      // 2024-01-01 would keep key 1's old version live beside its new
+      // one, and a retention drop would keep the file's 2024-01-01 row
+      val update = Seq((1L, 10.0, "UPDATE", "2024-01-01 12:00:00", "0000000000000009"))
+        .toDF("id", "v", Cdc.OpColumn, "ts", Cdc.LsnColumn)
+        .withColumn(Cdc.TsColumn, to_timestamp(col("ts"))).drop("ts")
+      def refused(op: => Any): Unit = {
+        val e = intercept[IllegalArgumentException](op)
+        assert(e.getMessage.contains("run normalizeLayout before"))
+      }
+      refused(CdcWriter.merge(spark, loc, update, Seq("id")))
+      refused(SnapshotLog.dropDaysBefore(spark, loc, "2024-01-02"))
+      refused(SnapshotLog.compact(spark, loc, Some(Day), maxFiles = 1))
+      assert(SnapshotLog.currentSnapshot(spark, loc).get.id === head)
+      def ids: Seq[Long] = SnapshotLog.readCurrent(spark, loc).get
+        .select("id").as[Long].collect().toSeq.sorted
+      // an append rewrites no live file, so it goes ahead
+      SnapshotLog.sqlInsert(spark, loc,
+        Seq((3L, 3.0, "2024-01-03")).toDF("id", "v", Day), overwrite = false)
+      assert(ids === Seq(1L, 2L, 3L))
+      // once normalized to exact days, retention drops the old day's row
+      SnapshotLog.normalizeLayout(spark, loc, Some(Day))
+      assert(SnapshotLog.dropDaysBefore(spark, loc, "2024-01-02") === Seq("2024-01-01"))
+      assert(ids === Seq(2L, 3L))
+    } finally { srv.close(); cli.close() }
+  }
+
   test("commit safety: foreign paths, escapes, unknown requirement/update kinds refused") {
     val (srv, cli, wh) = fixture()
     try {
