@@ -120,6 +120,9 @@ object CdcWriter {
     * merge-on-read delete files ([[morMerge]] — Iceberg v2 equality
     * deletes through the same commit log).
     *
+    * The batch schema meets the table's by [[graft.lake.SchemaEvolution.plan]];
+    * the COW merge is the one writer that performs a plan's rewrite set.
+    *
     * Returns the rewritten partition values (sorted). DELETE deltas drop
     * the key; a partition emptied of all rows leaves the manifest. */
   def merge(spark: SparkSession, tableDir: String, deltas: DataFrame,
@@ -171,8 +174,13 @@ object CdcWriter {
     // pull foreign rows into survivors while untouched keeps their
     // files — duplication. Normalize first.
     cur.foreach(SnapshotLog.requireExactDayLayout(_, tableDir, "a COW merge"))
-    val upserts = withPartitionColumn(
+    val upserts0 = withPartitionColumn(
       deltaLatest.filter(col(Cdc.OpColumn) =!= "DELETE"))
+    // the one evolution rule; the COW merge alone may take a rewrite
+    // set (long→double), which it pays for below by rewriting the
+    // carried narrow files in this commit
+    val plan = graft.lake.SchemaEvolution.plan(cur, upserts0.schema).fold(throw _, identity)
+    val upserts = castTo(upserts0, plan.schema)
     // deltaLatest IS one row per key (Cdc.latestVersions keeps rn=1 per
     // key partition) — a .distinct() here would add a full exchange +
     // aggregate inside every broadcast build for nothing
@@ -214,47 +222,34 @@ object CdcWriter {
       .transform(df => truncLsn.fold(df)(t => df.filter(col(Cdc.LsnColumn) > t)))
       .join(broadcast(deltaKeys), keyCols, "left_anti")
     // allowMissingColumns: a delta carrying a NEW column (mid-stream
-    // schema evolution) widens the table; survivors surface it as null,
-    // and union coercion widens TYPES (long+double → double)
+    // schema evolution) widens the table, and survivors surface it as
+    // null; survivors of a widened column widen in the union
     val merged = survivors.unionByName(upserts, allowMissingColumns = true)
     // survivors and upserts both hold only touched days
     val newFiles = SnapshotLog.writeData(spark, tableDir, merged, Some(pcol),
       partitionValues = Some(touched.size))
     val untouched = cur.toSeq.flatMap(_.files.filterNot(f => touchedSet(f.partition)))
     // Type promotion (ref schema/schema.go:149-174 + writer/writer.go:
-    // 197-253): when coercion widened a column past what a parquet scan
-    // can upcast (long→double; int→long/int→double/float→double are
-    // metadata-only widening reads — Iceberg's own promotion rule),
-    // carried files holding the narrow physical type are cast-and-
-    // rewritten IN THE SAME COMMIT, so every committed snapshot reads
-    // whole under its own schema — never an unreadable in-between state.
-    // The trigger is a driver-side schema compare; the per-file footer
-    // check only runs on the rare widening merge.
+    // 197-253): carried files of a plan's rewrite columns (long→double —
+    // the widening a parquet scan cannot upcast) are cast-and-rewritten
+    // IN THE SAME COMMIT, so every committed snapshot reads whole under
+    // its own schema. Equality-delete files store ONLY key columns and
+    // are never rewritten: a rewrite of a delete KEY column would leave
+    // them at the old physical type under a schema that can no longer
+    // read them. Refuse loudly; folding first retires the delete set.
+    val rewriteCols = plan.rewrite.map(_.name)
     val carried =
-      if (untouched.isEmpty ||
-        cur.forall(s => !needsPromotionCheck(s.schema, merged.schema))) untouched
+      if (untouched.isEmpty || rewriteCols.isEmpty) untouched
       else {
-        // equality-delete files store ONLY key columns; rewriteNarrow
-        // rewrites data files, not delete files. A promotion that hits a
-        // delete KEY column would leave delete files at the old physical
-        // type under a schema that can no longer read them — a committed
-        // but unreadable table. Refuse loudly; folding first retires the
-        // delete set and makes the widening merge clean.
-        val targetTypes = merged.schema.fields.map(f => f.name -> f.dataType).toMap
-        val rewriteCols = cur.toSeq.flatMap(_.schema.fields.collect {
-          case f if targetTypes.get(f.name).exists(tt =>
-            f.dataType != tt && !SnapshotLog.widensTo(f.dataType, tt)) => f.name
-        })
-        val delKeyCols = cur.toSeq.flatMap(_.deletes).flatMap(_.eqCols).distinct
-        val clash = rewriteCols.intersect(delKeyCols)
+        val clash = rewriteCols.intersect(cur.toSeq.flatMap(_.deletes).flatMap(_.eqCols))
         require(clash.isEmpty,
           s"widening merge would rewrite delete key column(s) ${clash.mkString(", ")} " +
             s"past their stored physical type in $tableDir — run foldDeletes first")
-        rewriteNarrow(spark, tableDir, cur.get, untouched, merged.schema, pcol)
+        rewriteNarrow(spark, tableDir, cur.get, untouched, plan.schema, rewriteCols, pcol)
       }
     SnapshotLog.commit(spark, tableDir,
       if (truncLsn.isDefined) "truncate-merge" else "merge",
-      carried ++ newFiles, merged.schema, parent = cur,
+      carried ++ newFiles, plan.schema, parent = cur,
       // carried (untouched-day) files still need the live delete set;
       // the rewritten files outrank every carried delete (higher seq)
       // and were written deletes-applied, so carrying is exact. The
@@ -286,10 +281,9 @@ object CdcWriter {
     * batch.
     *
     * Refused loudly: TRUNCATE markers (a reset is a file-set wipe — COW
-    * [[merge]] handles it as metadata) and widening past what parquet
-    * scans upcast (MOR never rewrites carried files, so a long→double
-    * delta would strand unreadable narrow files — use [[merge]], whose
-    * in-commit promotion rewrite covers it). */
+    * [[merge]] handles it as metadata) and any batch schema
+    * [[graft.lake.SchemaEvolution.plan]] refuses, or plans with a
+    * rewrite set: MOR never rewrites carried files. */
   def morMerge(spark: SparkSession, tableDir: String, deltas: DataFrame,
                keyCols: Seq[String]): graft.lake.SnapshotLog.Snapshot =
     BatchExec.withAqe(deltas) {
@@ -318,30 +312,8 @@ object CdcWriter {
       val cur = SnapshotLog.currentSnapshot(spark, tableDir)
       val upserts = withPartitionColumn(
         deltaLatest.filter(col(Cdc.OpColumn) =!= "DELETE"))
-      val schema = cur match {
-        case None => upserts.schema
-        case Some(s) =>
-          val storedTypes = s.schema.fields.map(f => f.name -> f.dataType).toMap
-          // per shared column: widen to the delta's type when stored files
-          // can be read under it; KEEP the stored type when the delta is
-          // merely narrower (its new files read fine under the stored
-          // schema — int files under a long column); refuse only when
-          // neither direction is a supported parquet upcast
-          val widened = s.schema.fields.map { f =>
-            upserts.schema.fields.find(_.name == f.name) match {
-              case Some(uf) if uf.dataType == f.dataType => f
-              case Some(uf) if SnapshotLog.widensTo(f.dataType, uf.dataType) =>
-                f.copy(dataType = uf.dataType)
-              case Some(uf) if SnapshotLog.widensTo(uf.dataType, f.dataType) => f
-              case Some(uf) => throw new IllegalArgumentException(
-                s"MOR cannot reconcile ${f.name}: ${f.dataType} vs ${uf.dataType} " +
-                  "needs a physical rewrite — use merge()")
-              case None => f
-            }
-          }
-          org.apache.spark.sql.types.StructType(widened ++
-            upserts.schema.fields.filterNot(f => storedTypes.contains(f.name)))
-      }
+      val schema = graft.lake.SchemaEvolution.plan(cur, upserts.schema)
+        .flatMap(_.metadataOnly).fold(throw _, identity)
       val newFiles = SnapshotLog.writeData(spark, tableDir, upserts, Some(pcol))
       // every key the batch touched (upserts AND deletes) outranks its
       // older versions; the batch's own rows sit at this commit's seq and
@@ -357,11 +329,14 @@ object CdcWriter {
     } finally deltaLatest.unpersist(blocking = true)
   }
 
-  private def needsPromotionCheck(stored: org.apache.spark.sql.types.StructType,
-                                  target: org.apache.spark.sql.types.StructType): Boolean = {
-    val targetTypes = target.fields.map(f => f.name -> f.dataType).toMap
-    stored.fields.exists(f => targetTypes.get(f.name).exists(tt =>
-      f.dataType != tt && !graft.lake.SnapshotLog.widensTo(f.dataType, tt)))
+  /** `df` with every column cast to its type in `schema`; `df` itself
+    * when the types already agree (the common batch: no projection). */
+  private def castTo(df: DataFrame,
+                     schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+    if (df.schema.fields.forall(f => types.get(f.name).contains(f.dataType))) df
+    else df.select(df.schema.fields.toSeq.map(f =>
+      col(f.name).cast(types(f.name)).as(f.name)): _*)
   }
 
   /** Physical file schema from the parquet footer — a driver-side
@@ -381,22 +356,23 @@ object CdcWriter {
     finally reader.close()
   }
 
-  /** Cast-and-rewrite carried files whose PHYSICAL column types cannot be
-    * read under `target` (see [[needsPromotionCheck]]); files already
-    * readable (including pre-evolution files missing the column entirely)
-    * keep their manifest entries untouched. Footer schema checks are
-    * driver-side metadata reads, O(carried files), only on widening
-    * merges; the rewrite reads exactly the narrow files, in one scan. */
+  /** Cast-and-rewrite carried files that hold a `rewriteCols` column
+    * (a plan's rewrite set) at a physical type other than its `target`
+    * type; every other file (including pre-evolution files missing the
+    * column entirely) keeps its manifest entry untouched. Footer schema
+    * checks are driver-side metadata reads, O(carried files), only on
+    * rewrite merges; the rewrite reads exactly the narrow files, in one
+    * scan. */
   private def rewriteNarrow(spark: SparkSession, tableDir: String,
                             cur: graft.lake.SnapshotLog.Snapshot,
                             carried: Seq[graft.lake.SnapshotLog.DataFile],
                             target: org.apache.spark.sql.types.StructType,
-                            pcol: String)
+                            rewriteCols: Seq[String], pcol: String)
   : Seq[graft.lake.SnapshotLog.DataFile] = {
     import graft.lake.SnapshotLog
     import graft.model.FieldIds
     import org.apache.spark.sql.types.{DataType, StructType}
-    val targetTypes = target.fields.map(f => f.name -> f.dataType).toMap
+    val rewriteTypes = rewriteCols.map(c => c -> target(c).dataType).toMap
     // footer opens are independent driver-side metadata reads — do them
     // in parallel (same treatment as SnapshotLog.writeData's stats pass);
     // a widening merge over a year of carried day files would otherwise
@@ -419,8 +395,7 @@ object CdcWriter {
         case None     => Some(physical)
       }
     val narrow = carried.filter(f => schemaOf(f).fields.exists(ff =>
-      heldAs(f, ff.name).flatMap(targetTypes.get)
-        .exists(tt => !SnapshotLog.widensTo(ff.dataType, tt))))
+      heldAs(f, ff.name).flatMap(rewriteTypes.get).exists(_ != ff.dataType)))
     if (narrow.isEmpty) return carried
     // every committed file reads under its snapshot's schema (by field
     // id), so THESE files read there and cast up. Live equality AND

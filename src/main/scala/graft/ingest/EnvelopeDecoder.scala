@@ -148,22 +148,16 @@ final class EvolvingDecoder(seed: StructType, sampleLines: Int = 1024) {
     // JSON-inference widening: a column that FIRST appeared with only
     // integral values infers long; a later batch carrying 10.5 would
     // decode to null under the frozen type (from_json PERMISSIVE) —
-    // silent corruption. Promote along the numeric lattice instead
-    // (int→long→double, float→double: Iceberg's promotion rules plus
-    // JSON's long→double, which only ever arises from inference, never
-    // from a declared source type). Existing fields otherwise keep
-    // position and type, per the add-only contract.
+    // silent corruption. Promote along the lake's one lattice instead
+    // (SchemaEvolution.promotes: the widening reads plus long→double,
+    // which only ever arises here from inference, never from a declared
+    // source type). Existing fields otherwise keep position and type,
+    // per the add-only contract.
     val incomingTypes = incoming.fields.map(f => f.name -> f.dataType).toMap
-    import org.apache.spark.sql.types._
-    val merged = StructType(added.fields.map { f =>
-      (f.dataType, incomingTypes.get(f.name)) match {
-        case (IntegerType, Some(LongType))   => f.copy(dataType = LongType)
-        case (IntegerType, Some(DoubleType)) => f.copy(dataType = DoubleType)
-        case (LongType, Some(DoubleType))    => f.copy(dataType = DoubleType)
-        case (FloatType, Some(DoubleType))   => f.copy(dataType = DoubleType)
-        case _                               => f
-      }
-    })
+    val merged = StructType(added.fields.map(f => incomingTypes.get(f.name) match {
+      case Some(t) if graft.lake.SchemaEvolution.promotes(f.dataType, t) => f.copy(dataType = t)
+      case _ => f
+    }))
     if (merged != registered) ver += 1
     registered = merged
     EnvelopeDecoder.decode(raw, jsonCol, merged)

@@ -1009,7 +1009,7 @@ private[lake] final class EraDispatchReaderFactory(
   * (resolved BY FIELD ID) at the target's positions — binding above a
   * DSv2 scan is positional, so no per-row projection node is needed.
   * Types must be equal or on the one widening lattice
-  * ([[SnapshotLog.widensTo]]) the parquet readers serve for by-name
+  * ([[SchemaEvolution.widensTo]]) the parquet readers serve for by-name
   * files too. */
 private[lake] object GraftEras {
 
@@ -1023,7 +1023,7 @@ private[lake] object GraftEras {
       graft.model.FieldIds.idOf(tf)
         .flatMap(graft.model.FieldIds.fieldById(ws, _)) match {
         case None     => true // no era counterpart: absent-name null read
-        case Some(wf) => SnapshotLog.widensTo(wf.dataType, tf.dataType)
+        case Some(wf) => SchemaEvolution.widensTo(wf.dataType, tf.dataType)
       }
     }
 

@@ -303,8 +303,9 @@ final class RestCatalogClient(baseUri: String, prefix: String,
   }
 
   /** Evolve the table schema through the catalog (the standard spec's
-    * `add-schema` + `set-current-schema-id` update pair) — add-only,
-    * one conditional commit like [[commitAppend]]. Field ids on the
+    * `add-schema` + `set-current-schema-id` update pair), which the
+    * server reconciles by [[SchemaEvolution.plan]] in one conditional
+    * commit like [[commitAppend]]. Field ids on the
     * wire are advisory for THIS call: the server reconciles the
     * evolved schema against the parent BY NAME, so matched columns
     * keep their committed ids and added columns take fresh ones —

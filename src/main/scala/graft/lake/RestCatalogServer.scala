@@ -1042,28 +1042,25 @@ final class RestCatalogServer(spark: SparkSession, warehouseDir: String,
       }
       cur match {
         case Some(c) =>
-          // a declared schema evolves ADD-ONLY (the engine's evolution
-          // contract: every committed file must read whole under the
-          // head schema) — one commit carries the new schema AND any
-          // appended files atomically, Iceberg-transaction style
-          val schema = addedSchema match {
-            case None => c.schema
-            case Some(next) =>
-              c.schema.fields.foreach { f =>
-                val kept = next.fields.find(_.name == f.name)
-                if (!kept.exists(_.dataType == f.dataType))
-                  halt(400, s"add-schema must be add-only: column " +
-                    s"${f.name} is ${kept.map(_.dataType.simpleString)
-                      .getOrElse("absent")}, table has ${f.dataType.simpleString}",
-                    "BadRequestException")
-              }
-              next.fields.filterNot(f => c.schema.fieldNames.contains(f.name))
-                .foreach { f =>
-                  if (!f.nullable)
-                    halt(400, s"added column ${f.name} must be nullable: " +
-                      "existing rows read it as null", "BadRequestException")
-                }
-              next
+          // a declared schema meets the head by the engine's one
+          // evolution rule (SchemaEvolution.plan; a refusal is a 400).
+          // The server rewrites no files, so a plan with a rewrite set is
+          // refused too. add-schema declares the WHOLE next schema, so
+          // omitting a head column is refused, and a required added
+          // column is refused as invalid input. One commit carries the
+          // new schema AND any appended files atomically, Iceberg-
+          // transaction style.
+          val schema = addedSchema.fold(c.schema) { next =>
+            val planned = SchemaEvolution.plan(Some(c), next).flatMap(_.metadataOnly)
+              .fold(throw _, identity)
+            val omitted = c.schema.fieldNames.filterNot(next.fieldNames.contains)
+            if (omitted.nonEmpty)
+              halt(400, s"add-schema omits column(s) ${omitted.mkString(", ")}: " +
+                "a declared schema keeps every table column", "BadRequestException")
+            next.fields.find(f => !f.nullable && !c.schema.fieldNames.contains(f.name))
+              .foreach(f => halt(400, s"added column ${f.name} must be nullable: " +
+                "existing rows read it as null", "BadRequestException"))
+            planned
           }
           val op = if (files.isEmpty && addedSchema.isDefined) "evolve-schema"
                    else "append"

@@ -1068,25 +1068,6 @@ object SnapshotLog {
     snap
   }
 
-  /** Can a parquet column written as `from` be READ as `to` by Spark's
-    * widening reads (no rewrite)? The one lattice: byte→short→int→long,
-    * byte/short/int→double, float→double — the by-name and the by-id
-    * (renamed era) reads both serve every step, with the vectorized and
-    * the row-based parquet reader (GraftBatchScanSpec pins each step).
-    * The long→double promotion needs a file rewrite and is deliberately
-    * absent (the merge writers rewrite in-commit for that crossing). */
-  def widensTo(from: DataType, to: DataType): Boolean = {
-    import org.apache.spark.sql.types._
-    if (from == to) return true
-    (from, to) match {
-      case (ByteType, ShortType | IntegerType | LongType | DoubleType) => true
-      case (ShortType, IntegerType | LongType | DoubleType)            => true
-      case (IntegerType, LongType | DoubleType)                        => true
-      case (FloatType, DoubleType)                                     => true
-      case _                                                           => false
-    }
-  }
-
   /** Append already-written data files with OPTIMISTIC concurrency —
     * Iceberg's commit contract (ref internal/iceberg/catalog/rest.go:
     * 187-217: CommitSnapshot is a conditional PUT on the expected
@@ -1099,9 +1080,9 @@ object SnapshotLog {
     * BEFORE the append, a concurrent delete outranks nothing the append
     * adds — the new files take a later seq).
     *
-    * The snapshot schema rebases too: if the head evolved while we
-    * raced, the committed schema is the add-only merge of the evolved
-    * schema and ours (our files read whole under any superset).
+    * The snapshot schema rebases too: each attempt commits
+    * [[SchemaEvolution.plan]] of its parent and the batch schema, and
+    * refuses a plan that would need carried files rewritten.
     *
     * This is the cross-process safety net ON TOP of the per-table JVM
     * lock: in-process writers never race (the lock serializes them);
@@ -1114,69 +1095,11 @@ object SnapshotLog {
                   maxRetries: Int = 5,
                   revalidate: Snapshot => Unit = _ => ()): Snapshot = {
     var parent = expectedParent
-    // the add-only merge applies on EVERY attempt, not just rebases: an
-    // append whose batch predates an ALTER ADD COLUMN must not shrink
-    // the head schema depending on whether it happened to race. Matched
-    // fields take the WIDER of the two types — the head schema must
-    // read BOTH file generations: a promoted batch's wide type wins
-    // over a narrow parent (appendCommit mid-promotion), a stale
-    // batch's narrow type loses to an already-promoted parent (a SQL
-    // INSERT rebasing over a concurrent promotion must not regress the
-    // head). Types neither of which widens to the other refuse the
-    // commit loudly — the old pre-rebase behavior, never a head schema
-    // that cannot read some live file.
-    def mergedSchema: StructType = parent match {
-      case Some(p) =>
-        val incoming = schema.fields.map(f => f.name -> f).toMap
-        val parentNames = p.schema.fieldNames.toSet
-        // a batch column ABSENT from the parent by name is either a
-        // genuine add (fresh id) or a stale writer still holding a
-        // pre-RENAME schema — and the add-only merge must not let the
-        // latter silently re-create the renamed-away name as a
-        // permanently-null new column. Detectable exactly when the old
-        // name survives in a retained historical schema whose field id
-        // now lives under another name in the head; a DROPPED name
-        // (id gone from the head) stays a legal re-add by design.
-        locally {
-          val pSchema = p.schema
-          val newNames = schema.fields.filterNot(f => parentNames.contains(f.name))
-          // the historical-schema parse is gated on a genuinely new name
-          // being present: the common append (batch schema == head) must
-          // not JSON-parse every retained schema — and mergedSchema
-          // re-runs on every optimistic-rebase retry
-          if (newNames.nonEmpty && graft.model.FieldIds.hasIds(pSchema)) {
-            val historical = p.schemasById.values.map(j =>
-              DataType.fromJson(j).asInstanceOf[StructType])
-            for {
-              nf  <- newNames
-              hs  <- historical
-              hf  <- hs.fields.find(_.name == nf.name)
-              hid <- graft.model.FieldIds.idOf(hf)
-              cf  <- graft.model.FieldIds.fieldById(pSchema, hid)
-              if cf.name != nf.name
-            } throw new IllegalStateException( // not retryable: the writer's schema is stale
-              s"append to $tableDir writes column ${nf.name}, which was " +
-                s"renamed to ${cf.name} — refresh the table schema and " +
-                "write under the current name")
-          }
-        }
-        StructType(
-          p.schema.fields.map { pf =>
-            incoming.get(pf.name) match {
-              case Some(inf) if widensTo(inf.dataType, pf.dataType) => pf
-              case Some(inf) if widensTo(pf.dataType, inf.dataType) => inf
-              case Some(inf) =>
-                // NOT the retryable kind: retrying cannot change it
-                throw new IllegalStateException(
-                  s"append to $tableDir cannot reconcile column " +
-                    s"${pf.name}: table has ${pf.dataType.simpleString}, " +
-                    s"batch has ${inf.dataType.simpleString} — neither " +
-                    "reads the other's files without a rewrite")
-              case None => pf
-            }
-          } ++ schema.fields.filterNot(f => parentNames.contains(f.name)))
-      case None => schema
-    }
+    // planned on EVERY attempt, not just rebases: a batch that predates
+    // an ALTER ADD COLUMN or a promotion must not shrink or narrow the
+    // head depending on whether it happened to race
+    def mergedSchema: StructType = SchemaEvolution.plan(parent, schema)
+      .flatMap(_.metadataOnly).fold(throw _, identity)
     retryOnConflict(maxRetries,
       onConflict = () => parent = currentSnapshot(spark, tableDir)) { // rebase
       // statement-time guards re-check against the REBASE parent: a

@@ -326,7 +326,7 @@ class GraftBatchScanSpec extends SparkTestBase {
       s"dropped column bytes leaked: $rows")
   }
 
-  /** Every step of [[SnapshotLog.widensTo]], one table each: rows written
+  /** Every step of [[SchemaEvolution.widensTo]], one table each: rows written
     * under `from`, the column's type then evolved to `to` (a metadata
     * commit, as an append's schema rebase makes it). With `renamed` the
     * column is renamed before the widening, so the files read through
@@ -364,7 +364,7 @@ class GraftBatchScanSpec extends SparkTestBase {
       if (renamed) SnapshotLog.renameColumn(spark, dir, "x", "y")
       SnapshotLog.withTableLock(dir) {
         val cur = SnapshotLog.currentSnapshot(spark, dir).get
-        assert(SnapshotLog.widensTo(from, to))
+        assert(SchemaEvolution.widensTo(from, to))
         val wider = StructType(cur.schema.fields.map(f =>
           if (f.name == name) f.copy(dataType = to) else f))
         SnapshotLog.commit(spark, dir, "evolve-schema", cur.files, wider,

@@ -113,7 +113,7 @@ class OptimisticCommitSpec extends SparkTestBase {
     // long vs double: neither side reads the other without a rewrite —
     // the append refuses loudly instead of committing an unreadable head
     val dbl = Seq((3L, 30.5, f"${3}%016d")).toDF("id", "v", graft.ingest.Cdc.LsnColumn)
-    intercept[IllegalStateException] {
+    intercept[IllegalArgumentException] {
       SnapshotLog.withTableLock(dir) {
         val cur = SnapshotLog.currentSnapshot(spark, dir)
         val files = SnapshotLog.writeData(spark, dir, dbl, None)

@@ -179,7 +179,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
     // not mint a permanently-null legacy-named column
     val stale = Seq((3L, 30L)).toDF("id", "v")
       .withColumn(graft.ingest.Cdc.LsnColumn, lit(lsn(3)))
-    val e = intercept[IllegalStateException](append(dir, stale))
+    val e = intercept[IllegalArgumentException](append(dir, stale))
     assert(e.getMessage.contains("renamed to score"))
     // head schema unpolluted; a refreshed writer proceeds
     assert(SnapshotLog.currentSnapshot(spark, dir).get.schema.fieldNames.toSeq

@@ -13,12 +13,9 @@ import java.nio.file.Files
   * SnapshotLog tables; checkpoint resume; DLQ on persistent sink failure. */
 class IngestPipelineSpec extends SparkTestBase {
 
-  private case class Ev(user_id: Long, event_id: Long, value: Double,
-                        _cdc_operation: String, _cdc_timestamp: java.sql.Timestamp,
-                        _cdc_lsn: String, _cdc_table: String)
 
-  private def ev(id: Long, table: String, day: Int): Ev =
-    Ev(id, id, id * 1.0, "INSERT",
+  private def ev(id: Long, table: String, day: Int): EnvelopeRow =
+    EnvelopeRow(id, id, id * 1.0, "INSERT",
       java.sql.Timestamp.valueOf(f"2024-01-$day%02d 00:00:00"),
       f"$id%016d", table)
 
@@ -36,7 +33,7 @@ class IngestPipelineSpec extends SparkTestBase {
   test("streaming ingest routes per table and day-partitions the files") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Ev]
+    val stream = MemoryStream[EnvelopeRow]
     stream.addData(ev(1, "users", 1), ev(2, "users", 2), ev(3, "orders", 1))
     val c = cfg(tmp("graft-out"))
     val q = IngestPipeline.start(stream.toDF(), c, availableNow = true)
@@ -54,7 +51,7 @@ class IngestPipelineSpec extends SparkTestBase {
     val wh = tmp("graft-ingest-cat")
     val registry = new graft.observe.Metrics.Registry
     val c = cfg(s"$wh/lake").copy(metrics = registry)
-    def batch(evs: Ev*): DataFrame = evs
+    def batch(evs: EnvelopeRow*): DataFrame = evs
       .map(e => (e.user_id, e.event_id, e.value, e._cdc_operation,
         e._cdc_timestamp, e._cdc_lsn, e._cdc_table))
       .toDF("user_id", "event_id", "value", "_cdc_operation",
@@ -133,7 +130,7 @@ class IngestPipelineSpec extends SparkTestBase {
   test("restart from checkpoint ingests only new data (exactly-once files)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Ev]
+    val stream = MemoryStream[EnvelopeRow]
     val c = cfg(tmp("graft-out"))
     stream.addData(ev(1, "users", 1))
     IngestPipeline.start(stream.toDF(), c, availableNow = true).awaitTermination()
@@ -148,7 +145,7 @@ class IngestPipelineSpec extends SparkTestBase {
   test("exhausted sink retries dead-letter the table slice, stream survives") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Ev]
+    val stream = MemoryStream[EnvelopeRow]
     stream.addData(ev(1, "users", 1), ev(2, "broken", 1))
     val c = cfg(tmp("graft-out"))
     // make writes for table `broken` fail: its target path is a FILE

@@ -18,21 +18,18 @@ import java.nio.file.Files
   */
 class ThroughputSpec extends SparkTestBase {
 
-  private case class Ev(user_id: Long, event_id: Long, value: Double,
-                        _cdc_operation: String, _cdc_timestamp: java.sql.Timestamp,
-                        _cdc_lsn: String, _cdc_table: String)
 
   test("end-to-end ingest sustains >= 2x the reference's per-worker ceiling") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val n = 10000
     val events = (1 to n).map { i =>
-      Ev(i % 500, i, i * 1.0,
+      EnvelopeRow(i % 500, i, i * 1.0,
         if (i % 7 == 0) "UPDATE" else "INSERT",
         java.sql.Timestamp.valueOf(f"2024-01-${1 + i % 28}%02d 00:00:00"),
         f"$i%016d", if (i % 3 == 0) "orders" else "users")
     }
-    val stream = MemoryStream[Ev]
+    val stream = MemoryStream[EnvelopeRow]
     stream.addData(events)
     val cfg = IngestConfig(
       outDir = Files.createTempDirectory("graft-tp-out").toString,
