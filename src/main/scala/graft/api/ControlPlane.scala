@@ -1206,17 +1206,6 @@ final class ControlPlane(val metaDir: String,
   private[api] def listOidcStates: Vector[OidcState] =
     lock.synchronized(oidcStates.value)
 
-  /** ref services/oidc.go:410-419 CleanupExpiredStates. */
-  def cleanupExpiredOidcStates(): Int = lock.synchronized {
-    val now = clock()
-    val (live, dead) = oidcStates.value.partition(_.expiresAtMs > now)
-    if (dead.nonEmpty) oidcStates.set(live)
-    dead.size
-  }
-
-  private[api] def countOidcStates(): Int =
-    lock.synchronized(oidcStates.value.size)
-
   // ---- scaling policies (ref internal/api/handlers/scaling.go:27-42
   // — the /scaling/policies CRUD + enable/disable/evaluate/state and
   // the /scaling/history rows; services evaluate through the SAME

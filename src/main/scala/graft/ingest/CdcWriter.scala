@@ -115,8 +115,7 @@ object CdcWriter {
     * the table (LakeMergeSpec pins touched == the delta's distinct days),
     * which is the right bound when CDC deltas cluster in recent days. A
     * per-trigger merge of a uniformly-spread delta rewrites the table
-    * O(batches) times — the known COW tradeoff; the scale levers are a
-    * bounded cadence ([[MergeCadence]]: stage n batches, merge once) or
+    * O(batches) times — the known COW tradeoff; the scale lever is
     * merge-on-read delete files ([[morMerge]] — Iceberg v2 equality
     * deletes through the same commit log).
     *
@@ -411,34 +410,6 @@ object CdcWriter {
           .cast(tf.dataType).as(tf.name)): _*)
     carried.filterNot(narrow.toSet) ++
       SnapshotLog.writeData(spark, tableDir, casted, Some(pcol))
-  }
-
-  /** Bounded merge cadence — the COW-amplification lever for streams whose
-    * deltas spread across many days (see [[merge]] scaladoc): micro-batches
-    * are STAGED (cheap [[appendCommit]]s, no stored-table read) and
-    * the staged backlog merges once every `every` batches, so the stored
-    * table is rewritten O(batches / every) times instead of O(batches).
-    * Correctness is unchanged: staged batches replay in one merge, and
-    * [[Cdc.latestVersions]] collapses them exactly as per-batch merges
-    * would (LakeMergeSpec: cadence ≡ per-batch ≡ recompute). Call
-    * [[flush]] after the stream drains to merge the tail. */
-  final class MergeCadence(spark: SparkSession, tableDir: String,
-                           keyCols: Seq[String], every: Int, stagingDir: String) {
-    require(every >= 1, s"merge cadence must be >= 1, got $every")
-    private var staged = 0
-    def onBatch(batch: DataFrame, batchId: Long): Unit = {
-      appendCommit(spark, stagingDir, batch)
-      staged += 1
-      if (staged >= every) flush()
-    }
-    def flush(): Unit = if (staged > 0) {
-      val p = new org.apache.hadoop.fs.Path(stagingDir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      merge(spark, tableDir,
-        read(spark, stagingDir).drop(SchemaBuilder.partitionColumn), keyCols)
-      fs.delete(p, true)
-      staged = 0
-    }
   }
 }
 

@@ -109,9 +109,10 @@ object EnvelopeDecoder {
   * with schemas) encode per the declared type, and the promotion path
   * heals the table when the wide form surfaces.
   *
-  * The seed covers the base schema ([[graft.model.SchemaBuilder
-  * .buildFromColumns]] is the typed path at 100 TB/day — inference only
-  * ever absorbs drift), and the registered schema is add-only so a
+  * The seed is the known payload schema (empty for a live pgoutput
+  * pipeline: PgWire emits numbers and booleans as bare JSON and every
+  * other value as a JSON string): the decoder infers every type from
+  * the JSON it sees and absorbs drift by the add-only merge, so a
   * column once seen is never dropped. State is one StructType on the
   * driver — O(columns), never data. */
 final class EvolvingDecoder(seed: StructType, sampleLines: Int = 1024) {

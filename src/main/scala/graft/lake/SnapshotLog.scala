@@ -413,7 +413,7 @@ object SnapshotLog {
   }
 
   /** Segment names a manifest file references (empty for pre-segment
-    * inline manifests) — the raw read [[expireCore]] uses for liveness. */
+    * inline manifests) — the raw read [[expire]] uses for liveness. */
   private def segmentNamesOf(fs: FileSystem, manifest: Path): Seq[String] = {
     val n = mapper.readTree(readFully(fs, manifest))
     n.get("segments") match {
@@ -2636,23 +2636,6 @@ object SnapshotLog {
 
   def expire(spark: SparkSession, tableDir: String, keepLast: Int,
              debrisGraceMs: Long = DefaultDebrisGraceMs): Int =
-    expireCore(spark, tableDir, keepLast, olderThanMs = Long.MaxValue,
-      debrisGraceMs)
-
-  /** Age-based retention (Iceberg's `expire_snapshots(older_than,
-    * retain_last)`): expire snapshots committed strictly before
-    * `olderThanMs`, always keeping the newest `retainLast` and every
-    * tagged snapshot regardless of age. The production cadence: "keep 7
-    * days of time travel, but never fewer than N snapshots, and never a
-    * pinned training-run snapshot". */
-  def expireOlderThan(spark: SparkSession, tableDir: String,
-                      olderThanMs: Long, retainLast: Int = 1,
-                      debrisGraceMs: Long = DefaultDebrisGraceMs): Int =
-    expireCore(spark, tableDir, retainLast, olderThanMs, debrisGraceMs)
-
-  private def expireCore(spark: SparkSession, tableDir: String,
-                         keepLast: Int, olderThanMs: Long,
-                         debrisGraceMs: Long = 0L): Int =
     withTableLock(tableDir) {
       require(keepLast >= 1, s"must keep at least the current snapshot")
       val debrisCutoffMs = System.currentTimeMillis() - debrisGraceMs
@@ -2661,8 +2644,7 @@ object SnapshotLog {
       if (all.isEmpty) return 0
       val tagged = tags(spark, tableDir).values.toSet
       val newest = all.takeRight(keepLast).map(_.id).toSet
-      val (keep, drop) = all.partition(s =>
-        newest(s.id) || tagged(s.id) || s.tsMs >= olderThanMs)
+      val (keep, drop) = all.partition(s => newest(s.id) || tagged(s.id))
       // staged branch commits reference data files main can't see yet —
       // they are LIVE (a publish would need them), not crashed debris.
       // A branch dir WITHOUT base.json (createBranch crashed between

@@ -2,13 +2,12 @@ package graft.model
 
 import org.apache.spark.sql.types._
 
-/** Builds and evolves table schemas from CDC payloads.
+/** Builds and evolves table schemas for captured tables.
   *
   * Mirrors the reference's schema builder semantics
-  * (ref internal/iceberg/schema/schema.go:25-102,149-174):
-  *  - columns inferred per batch; After wins, Before fills gaps
-  *  - type conflict within a batch → StringType fallback
-  *  - user columns sorted alphabetically, then CDC system columns appended
+  * (ref internal/iceberg/schema/schema.go:54-102,149-174):
+  *  - declared source columns map through [[TypeMapping]], then the CDC
+  *    system columns are appended
   *  - evolution is add-only: new fields appended, version bumped, existing
   *    field types never change
   *
@@ -34,38 +33,11 @@ object SchemaBuilder {
     * named `_cdc_date`). */
   val partitionColumn = "_cdc_date"
 
-  /** Build a schema from a batch of events' payload maps.
-    * `afters`/`befores` are per-event column → value maps
-    * (ref BuildFromEvents, schema.go:25-52). */
-  def buildFromEvents(
-      afters: Seq[Map[String, Any]],
-      befores: Seq[Map[String, Any]] = Seq.empty): StructType = {
-    var columns = Map.empty[String, DataType]
-    for (after <- afters; (name, value) <- after) {
-      val inferred = TypeMapping.inferType(value)
-      columns.get(name) match {
-        case None                            => columns += name -> inferred
-        case Some(t) if t != inferred        => columns += name -> StringType
-        case _                               =>
-      }
-    }
-    // Before fills in columns After never mentioned (DELETE-only columns)
-    for (before <- befores; (name, value) <- before if !columns.contains(name))
-      columns += name -> TypeMapping.inferType(value)
-    build(columns)
-  }
-
   /** Build a schema from declared source columns (the typed path: read the
     * source catalog, don't guess — SURVEY §1.3). */
   def buildFromColumns(cols: Seq[SourceColumn], compat: Boolean = false): StructType =
     StructType(
       cols.map(c => StructField(c.name, TypeMapping.pgToSpark(c.pgType, compat), c.nullable))
-        ++ systemColumns)
-
-  private def build(columns: Map[String, DataType]): StructType =
-    StructType(
-      columns.toSeq.sortBy(_._1)
-        .map { case (n, t) => StructField(n, t, nullable = true) }
         ++ systemColumns)
 
   /** Add-only merge for schema evolution (ref MergeSchemas,

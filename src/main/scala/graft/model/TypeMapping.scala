@@ -80,18 +80,4 @@ object TypeMapping {
       base.getOrElse(stripped, StringType) // unknown → string (types.go:89-90)
     }
   }
-
-  /** Infer a Spark DataType from a runtime value
-    * (ref InferTypeFromValue, types.go:94-118: nil→string, complex→string). */
-  def inferType(value: Any): DataType = value match {
-    case null          => StringType
-    case _: Boolean    => BooleanType
-    case _: Int        => IntegerType
-    case _: Long       => LongType
-    case _: Float      => FloatType
-    case _: Double     => DoubleType
-    case _: String     => StringType
-    case _: Array[Byte] => BinaryType
-    case _             => StringType // maps/seqs → JSON string
-  }
 }

@@ -124,10 +124,4 @@ object Metrics {
       }
     }
   }
-
-  def attach(spark: SparkSession): Listener = {
-    val l = new Listener
-    spark.streams.addListener(l)
-    l
-  }
 }

@@ -242,10 +242,4 @@ object Scaling {
     !isScaledToZero &&
       isIdle(lastActivityMs, nowMs, idleThresholdMs) &&
       lastWakeMs.forall(w => nowMs - w >= keepAliveWindowMs)
-
-  /** Wake on activity while scaled to zero (ref wake/trigger.go: a query
-    * arriving for a scaled-to-zero policy wakes it; activity otherwise
-    * just resets the idle clock). */
-  def shouldWake(isScaledToZero: Boolean, activityArrived: Boolean): Boolean =
-    isScaledToZero && activityArrived
 }

@@ -27,7 +27,6 @@ object Paging {
   final class QueryCursor private[Paging] (df: DataFrame, pageSize: Int)
     extends AutoCloseable {
     private val it = df.toLocalIterator().asScala
-    private var fetched = 0L
 
     /** Next page of up to `pageSize` rows; empty when exhausted.
       * Explicit drain loop: `Iterator.take` documents that the original
@@ -37,13 +36,10 @@ object Paging {
       val buf = Vector.newBuilder[Row]
       var k = 0
       while (k < pageSize && it.hasNext) { buf += it.next(); k += 1 }
-      val page = buf.result()
-      fetched += page.length
-      page
+      buf.result()
     }
 
     def hasMore: Boolean = it.hasNext
-    def rowsFetched: Long = fetched
     override def close(): Unit = () // iterator resources follow the session
   }
 }

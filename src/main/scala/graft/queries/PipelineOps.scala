@@ -229,10 +229,9 @@ object PipelineOps extends QueryModule {
   // ---- stateful streaming aggregation end-to-end: a tumbling-window
   // count maintained by Structured Streaming's state store across
   // micro-batches, drained AvailableNow and materialized per batch
-  // (complete mode — the bounded-cardinality dashboard shape; the
-  // unbounded-state production path, watermark + append, is exercised in
-  // StreamOpsSpec). The oracle recomputes the windows from the raw
-  // events, so any state-store loss or double-count fails the hash.
+  // (complete mode — the bounded-cardinality dashboard shape). The oracle
+  // recomputes the windows from the raw events, so any state-store loss
+  // or double-count fails the hash.
   private def streamAgg(s: SparkSession, d: String): DataFrame = {
     val src = envelopeSrc(s, d, "agg", nFiles = 4, tableMod = 0)
     val base = Lifecycle.scratchDir(s, "graft_streamagg", d)

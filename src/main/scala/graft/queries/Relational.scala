@@ -506,7 +506,7 @@ object Relational extends QueryModule {
       |ORDER BY tier, o_orderkey""".stripMargin
 
   // ---- tumbling time windows (epoch-aligned, same boundaries as DuckDB
-  // time_bucket; the streaming dual is StreamOps.tumblingCounts)
+  // time_bucket)
   private def q31(s: SparkSession, d: String): DataFrame =
     Tables.events(s, d)
       .groupBy(window(col("ts"), "6 hours").getField("start").as("window_start"))

@@ -189,15 +189,6 @@ object DeadLetter {
       .agg(count(lit(1)).as("n_failed"))
       .orderBy(col("source_id"), col("table_name"), col("error_type"))
 
-  /** Filtered read surfaces (ref ReadBySource / ReadByTable,
-    * deadletter/postgres.go:137-171) — predicate pushdown makes these
-    * partition/row-group-pruned scans, not full-DLQ filters. */
-  def readBySource(spark: SparkSession, dlqDir: String, sourceId: String): DataFrame =
-    read(spark, dlqDir).filter(col("source_id") === sourceId)
-
-  def readByTable(spark: SparkSession, dlqDir: String, tableName: String): DataFrame =
-    read(spark, dlqDir).filter(col("table_name") === tableName)
-
   /** Drop dead-letters whose TTL has lapsed (ref expires_at at insert +
     * Cleanup, deadletter/deadletter.go:40-68, postgres.go:240-272 —
     * expires_at = created_at + TTL, delete where expired). `now` is a

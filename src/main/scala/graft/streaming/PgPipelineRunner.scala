@@ -62,10 +62,8 @@ final class PgPipelineRunner(spark: SparkSession, lakeRoot: String,
     live.values.asScala.toSeq.map(l => (l.pipelineName, l.registry))
   }
 
-  /** Last loop error per pipeline id (surface for status probes). */
+  /** Last loop error per pipeline id, reported by [[health]]. */
   private val lastError = new ConcurrentHashMap[String, String]()
-  def errorOf(pipelineId: String): Option[String] =
-    Option(lastError.get(pipelineId))
 
   /** Slot identity derives from the IMMUTABLE pipeline id (unless the
     * source pins a slot name): a rename must not abandon the slot that

@@ -88,21 +88,6 @@ object GraftScanSupport {
       new ParquetOptions(Map.empty[String, String], sqlConf))
   }
 
-  /** Spark's own split sizing: [[FilePartition.maxSplitBytes]] picks the
-    * range size (parquet readers align ranges to row groups), the
-    * SPLITS are sorted largest-first (FileScan.partitions' order — a
-    * multi-split file's small tail chunk must not jump ahead of whole
-    * files and close bins early), and
-    * [[FilePartition.getFilePartitions]] bin-packs with the session's
-    * open-cost accounting — the identical partition layout a builtin
-    * file scan would plan. Zero-length entries plan no splits, exactly
-    * like Spark's `(0L until file.length)`. `files` are
-    * (absolute path, size) pairs. */
-  def planFilePartitions(spark: SparkSession,
-                         files: Seq[(String, Long)]): Array[InputPartition] =
-    planFilePartitionsWithValues(spark,
-      files.map { case (p, len) => (p, len, InternalRow.empty) })
-
   /** Spark's own split-size decision for a file set (open-cost
     * accounting included) — exposed so a caller planning SUBSETS of one
     * scan (per-era groups) can size splits from the WHOLE set, exactly
@@ -112,10 +97,19 @@ object GraftScanSupport {
     FilePartition.maxSplitBytes(spark, files.map(_._2 + openCost).sum)
   }
 
-  /** [[planFilePartitions]] with per-file `partitionValues` rows — each
-    * split of a file carries that file's constants (must match the
-    * factory's `partitionSchema` positionally). `maxSplitOverride`
-    * carries a whole-scan split size when this call plans one subset. */
+  /** Spark's own split sizing: [[FilePartition.maxSplitBytes]] picks the
+    * range size (parquet readers align ranges to row groups), the
+    * SPLITS are sorted largest-first (FileScan.partitions' order — a
+    * multi-split file's small tail chunk must not jump ahead of whole
+    * files and close bins early), and
+    * [[FilePartition.getFilePartitions]] bin-packs with the session's
+    * open-cost accounting — the identical partition layout a builtin
+    * file scan would plan. Zero-length entries plan no splits, exactly
+    * like Spark's `(0L until file.length)`. `files` are (absolute path,
+    * size, `partitionValues`) triples; each split of a file carries that
+    * file's constants (must match the factory's `partitionSchema`
+    * positionally). `maxSplitOverride` carries a whole-scan split size
+    * when this call plans one subset. */
   def planFilePartitionsWithValues(spark: SparkSession,
       files: Seq[(String, Long, InternalRow)],
       maxSplitOverride: Option[Long] = None): Array[InputPartition] = {

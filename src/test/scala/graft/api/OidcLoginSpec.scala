@@ -188,13 +188,11 @@ class OidcLoginSpec extends SparkTestBase {
       now += 1000
       assert(cp.consumeOidcState(st2.state).map(_.redirectUri) ===
         Some("http://localhost/done"))
-      // cleanup reports only expired rows (mints also self-prune, so
-      // the sweep runs before any further mint)
+      // the next mint sweeps the expired row: only the new state is left
       val st3 = cp.createOidcState(p.id, "http://localhost/done")
       now += ControlPlane.OidcStateTtlMs + 1
-      assert(cp.cleanupExpiredOidcStates() === 1) // st3 only
-      assert(cp.cleanupExpiredOidcStates() === 0) // idempotent
       val st4 = cp.createOidcState(p.id, "http://localhost/done")
+      assert(cp.listOidcStates.map(_.state) === Vector(st4.state))
       assert(cp.consumeOidcState(st4.state).isDefined)
       assert(cp.consumeOidcState(st3.state).isEmpty)
     } finally idp.stop()
@@ -213,7 +211,7 @@ class OidcLoginSpec extends SparkTestBase {
         now += 1 // distinct created_at, all inside the TTL
         cp.createOidcState(p.id, s"http://localhost/$i")
       }
-      assert(cp.countOidcStates() === ControlPlane.MaxOidcStates)
+      assert(cp.listOidcStates.size === ControlPlane.MaxOidcStates)
       // the oldest pending login is the one evicted
       assert(cp.consumeOidcState(first.state).isEmpty)
       // persisted: a restart keeps in-flight logins redeemable

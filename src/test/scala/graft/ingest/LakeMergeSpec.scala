@@ -292,31 +292,6 @@ class LakeMergeSpec extends SparkTestBase {
     assert(touched.size === 2)
   }
 
-  test("MergeCadence: staged merges every N batches equal per-batch merges") {
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft-lakemerge-cadence").toString
-    val batches = Seq(
-      env((1L, 1L, 1.0, "INSERT", "2024-01-01"), (2L, 2L, 2.0, "INSERT", "2024-01-01")),
-      env((1L, 10L, 10.0, "UPDATE", "2024-01-02"), (3L, 11L, 3.0, "INSERT", "2024-01-02")),
-      env((2L, 20L, 0.0, "DELETE", "2024-01-03"), (4L, 21L, 4.0, "INSERT", "2024-01-03")))
-    // per-batch COW: 3 merges
-    batches.foreach(b => CdcWriter.merge(spark, s"$base/perbatch", b, Seq("user_id")))
-    // cadence 2: batches 0-1 staged then merged once, flush() merges the tail
-    val cadence = new CdcWriter.MergeCadence(
-      spark, s"$base/cadence", Seq("user_id"), every = 2, s"$base/staging")
-    batches.zipWithIndex.foreach { case (b, i) => cadence.onBatch(b, i.toLong) }
-    cadence.flush()
-    def state(dir: String) = CdcWriter.read(spark, dir)
-      .select($"user_id", $"event_id", $"value").as[(Long, Long, Double)]
-      .collect().sortBy(_._1).toSeq
-    assert(state(s"$base/cadence") === state(s"$base/perbatch"))
-    assert(state(s"$base/cadence") === Seq(
-      (1L, 10L, 10.0), (3L, 11L, 3.0), (4L, 21L, 4.0)))
-    // the staging dir is cleared after each flush
-    assert(!new Path(s"$base/staging").getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(new Path(s"$base/staging")))
-  }
-
   test("a crash before the commit rename is invisible; the replayed merge lands whole") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-lakemerge-crash").toString + "/t"

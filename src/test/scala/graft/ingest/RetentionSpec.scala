@@ -55,7 +55,8 @@ class RetentionSpec extends SparkTestBase {
   test("streaming ingest feeds the philotes metric surface") {
     import spark.implicits._
     Metrics.reset()
-    val listener = Metrics.attach(spark)
+    val listener = new Metrics.Listener
+    spark.streams.addListener(listener)
     try {
       implicit val sqlCtx = spark.sqlContext
       val stream = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, java.sql.Timestamp, String, String)]

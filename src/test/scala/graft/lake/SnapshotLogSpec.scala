@@ -530,24 +530,21 @@ class SnapshotLogSpec extends SparkTestBase {
     assert(idsOf(SnapshotLog.readCurrent(spark, dir).get) === Seq(3L))
   }
 
-  test("expireOlderThan keeps young snapshots, the retain floor, and tags") {
-    val dir = Files.createTempDirectory("graft-snaplog-age").toString + "/t"
+  test("expire keeps the retain floor and tags") {
+    val dir = Files.createTempDirectory("graft-snaplog-floor").toString + "/t"
     commitRows(dir, rows(1), "append", carry = false)
     commitRows(dir, rows(2), "append", carry = false)
     commitRows(dir, rows(3), "append", carry = false)
-    // cutoff 0: everything is young — no snapshot expires (the returned
-    // count may still include swept non-data debris like _SUCCESS marks)
-    SnapshotLog.expireOlderThan(spark, dir, olderThanMs = 0L)
-    assert(SnapshotLog.snapshotIds(spark, dir) === Seq(1L, 2L, 3L))
-    assert(idsOf(SnapshotLog.readCurrent(spark, dir).get) === Seq(3L))
-    assert(idsOf(SnapshotLog.read(spark, dir,
-      SnapshotLog.snapshotAt(spark, dir, 1L))) === Seq(1L))
-    // cutoff in the future: everything is old, but the retain floor and
-    // the tag both hold their snapshots (and their bytes)
+    commitRows(dir, rows(4), "append", carry = false)
+    // the newest keepLast snapshots and the tagged one keep their
+    // manifests and their bytes; snapshot 2 is neither, and its data
+    // file is reclaimed
     SnapshotLog.tag(spark, dir, "pinned", 1L)
-    val future = System.currentTimeMillis() + 3600_000L
-    SnapshotLog.expireOlderThan(spark, dir, olderThanMs = future, retainLast = 1)
-    assert(SnapshotLog.snapshotIds(spark, dir) === Seq(1L, 3L))
+    assert(SnapshotLog.expire(spark, dir, keepLast = 2) >= 1)
+    assert(SnapshotLog.snapshotIds(spark, dir) === Seq(1L, 3L, 4L))
+    assert(idsOf(SnapshotLog.readCurrent(spark, dir).get) === Seq(4L))
+    assert(idsOf(SnapshotLog.read(spark, dir,
+      SnapshotLog.snapshotAt(spark, dir, 3L))) === Seq(3L))
     assert(idsOf(SnapshotLog.read(spark, dir,
       SnapshotLog.snapshotAtTag(spark, dir, "pinned"))) === Seq(1L))
   }

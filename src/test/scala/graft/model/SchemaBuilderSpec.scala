@@ -7,30 +7,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * (ref internal/iceberg/schema/schema_test.go:103-200). */
 class SchemaBuilderSpec extends AnyFunSuite {
 
-  test("buildFromEvents: alphabetical user columns + system columns") {
-    val schema = SchemaBuilder.buildFromEvents(Seq(
-      Map("id" -> 1, "name" -> "alice", "active" -> true)))
-    assert(schema.fieldNames.toSeq ===
-      Seq("active", "id", "name", "_cdc_operation", "_cdc_timestamp", "_cdc_lsn"))
-    assert(schema("id").dataType === IntegerType)
-    assert(schema("active").dataType === BooleanType)
-    assert(!schema("_cdc_operation").nullable)
-  }
-
-  test("buildFromEvents: type conflict degrades to string") {
-    val schema = SchemaBuilder.buildFromEvents(Seq(
-      Map("v" -> 1), Map("v" -> "oops")))
-    assert(schema("v").dataType === StringType)
-  }
-
-  test("buildFromEvents: before fills columns after never saw") {
-    val schema = SchemaBuilder.buildFromEvents(
-      afters = Seq(Map("id" -> 1L)),
-      befores = Seq(Map("id" -> 2L, "deleted_col" -> 3.5)))
-    assert(schema("deleted_col").dataType === DoubleType)
-    assert(schema("id").dataType === LongType)
-  }
-
   test("buildFromColumns maps declared pg types") {
     val schema = SchemaBuilder.buildFromColumns(Seq(
       SourceColumn("id", "bigint", nullable = false, primaryKey = true),
@@ -40,11 +16,14 @@ class SchemaBuilderSpec extends AnyFunSuite {
     assert(schema("price").dataType === DecimalType(10, 2))
     assert(schema("tags").dataType === ArrayType(StringType))
     assert(schema.fieldNames.contains("_cdc_lsn"))
+    assert(!schema("_cdc_operation").nullable)
   }
 
   test("merge is add-only and bumps version (ref MergeSchemas)") {
-    val v1 = SchemaBuilder.buildFromEvents(Seq(Map("id" -> 1)))
-    val v2incoming = SchemaBuilder.buildFromEvents(Seq(Map("id" -> 1, "email" -> "x")))
+    val v1 = StructType(Seq(StructField("id", IntegerType)) ++
+      SchemaBuilder.systemColumns)
+    val v2incoming = StructType(Seq(StructField("email", StringType),
+      StructField("id", IntegerType)) ++ SchemaBuilder.systemColumns)
     val (merged, version) = SchemaBuilder.merge(v1, v2incoming, version = 0)
     assert(version === 1)
     // existing fields keep position; new field appended at the end

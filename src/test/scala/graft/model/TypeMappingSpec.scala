@@ -51,15 +51,4 @@ class TypeMappingSpec extends AnyFunSuite {
     test(s"improved: $pg -> $expected") {
       assert(TypeMapping.pgToSpark(pg) === expected)
     }
-
-  test("inferType mirrors reference value inference") {
-    val cases: Seq[(Any, DataType)] = Seq(
-      (null, StringType), (true, BooleanType), (42, IntegerType),
-      (42L, LongType), (3.14f, FloatType), (3.14d, DoubleType),
-      ("hello", StringType), (Array[Byte](1, 2, 3), BinaryType),
-      (Map("k" -> 1), StringType), (Seq("x"), StringType),
-    )
-    for ((v, expected) <- cases)
-      assert(TypeMapping.inferType(v) === expected, s"for value $v")
-  }
 }

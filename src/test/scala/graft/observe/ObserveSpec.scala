@@ -1,46 +1,9 @@
 package graft.observe
 
 import graft.SparkTestBase
-import graft.streaming.{PipelineState, StateMachine}
 import org.apache.spark.sql.functions._
 
 class ObserveSpec extends SparkTestBase {
-
-  test("state machine enforces the reference transition table") {
-    import PipelineState._
-    val sm = new StateMachine()
-    var seen = List.empty[(Value, Value)]
-    sm.onTransition((f, t) => seen = (f, t) :: seen)
-
-    assert(sm.state === Starting)
-    assert(!sm.canProcess)
-    assert(!sm.transition(Paused))    // starting -> paused is illegal
-    assert(sm.transition(Running) && sm.canProcess)
-    assert(sm.transition(Paused) && !sm.canProcess)
-    assert(sm.transition(Running))
-    assert(sm.transition(Stopping))
-    assert(!sm.transition(Running))   // stopping -> running is illegal
-    assert(sm.transition(Stopped))
-    assert(sm.transition(Starting))   // restart is legal
-    assert(sm.transition(Failed))
-    assert(sm.transition(Starting))   // failed -> starting (recovery)
-    assert(seen.length === 8)
-  }
-
-  test("health aggregation: unhealthy dominates, throwing checker is unhealthy") {
-    import Health._
-    val results = runChecks(Map(
-      "buffer" -> (() => CheckResult("buffer", Healthy)),
-      "catalog" -> (() => CheckResult("catalog", Degraded, "slow")),
-      "source" -> (() => throw new RuntimeException("connection refused")),
-    ))
-    assert(results.map(_.component) === Seq("buffer", "catalog", "source"))
-    assert(results.find(_.component == "source").get.status === Unhealthy)
-    assert(overall(results) === Unhealthy)
-    assert(overall(results.filterNot(_.component == "source")) === Degraded)
-    assert(overall(results.filter(_.component == "buffer")) === Healthy)
-    assert(overall(Nil) === Unknown)
-  }
 
   test("alert operators match the reference table; unknown op rejected") {
     import spark.implicits._

@@ -107,10 +107,6 @@ class ScalingSpec extends AnyFunSuite {
       nowMs = idleMs + keepMs))
     // already at zero → nothing to do
     assert(!shouldScaleToZero(0L, None, isScaledToZero = true, nowMs = idleMs))
-    // wake only fires for a scaled-to-zero policy receiving activity
-    assert(shouldWake(isScaledToZero = true, activityArrived = true))
-    assert(!shouldWake(isScaledToZero = false, activityArrived = true))
-    assert(!shouldWake(isScaledToZero = true, activityArrived = false))
   }
 
   // ---- C3: query-engine scaling (ref internal/scaling/query/

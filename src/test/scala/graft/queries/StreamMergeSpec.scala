@@ -27,40 +27,6 @@ class StreamMergeSpec extends SparkTestBase {
     assert(merged.toSeq === recomputed.toSeq)
   }
 
-  test("a MergeCadence streaming sink (merge every 2 batches) equals per-batch merging") {
-    // the COW-amplification lever wired through the REAL streaming sink:
-    // foreachBatch stages each micro-batch, merges on cadence, and the
-    // post-drain flush picks up the tail — final state must equal the
-    // per-batch-merge sink's (which the oracle pins to the recompute)
-    import org.apache.spark.sql.functions._
-    val base = java.nio.file.Files.createTempDirectory("graft-cadence-stream").toString
-    // reuse cdc_stream_merge's cached LSN-ordered fixture
-    SparkEntry.queries("cdc_stream_merge")(spark, sf0001).collect(): Unit
-    val src = s"${System.getProperty("java.io.tmpdir")}/graft_src_ordmerge_" +
-      s"${spark.sparkContext.applicationId}_root_testdata_sf0_001"
-    val cadence = new graft.ingest.CdcWriter.MergeCadence(
-      spark, s"$base/t", Seq("user_id"), every = 2, s"$base/staging")
-    // 1 file per trigger → 4 batches → TWO cadence merges, so the second
-    // one exercises merge-into-existing-state, not just the bootstrap
-    val q = spark.readStream
-      .schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .writeStream
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch(cadence.onBatch _)
-      .start()
-    q.awaitTermination()
-    cadence.flush()
-    val merged = graft.ingest.CdcWriter.read(spark, s"$base/t")
-      .select(col("user_id"), col("event_id"), col("value"))
-      .orderBy(col("user_id")).collect()
-    val recomputed = SparkEntry.queries("cdc_current_state")(spark, sf0001).collect()
-    assert(merged.length === recomputed.length)
-    assert(merged.toSeq === recomputed.toSeq)
-  }
-
   test("the ordered source files carry strictly increasing mtimes and LSN ranges") {
     // the admission-order contract the merge correctness rests on:
     // file k older (mtime) AND strictly smaller LSNs than file k+1

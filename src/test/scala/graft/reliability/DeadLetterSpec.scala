@@ -81,15 +81,16 @@ class DeadLetterSpec extends SparkTestBase {
   }
 
   test("cleanup drops only expired rows; filtered reads slice by source and table") {
-    import spark.implicits._
     val dlqDir = Files.createTempDirectory("graft-dlq-ttl").toString + "/dlq"
     DeadLetter.append(poisonBatch, dlqDir, "srcA", "t1",
       new IllegalArgumentException("bad"), retryCount = 2)
     DeadLetter.append(poisonBatch, dlqDir, "srcB", "t2",
       new java.io.IOException("flaky"), retryCount = 2)
-    assert(DeadLetter.readBySource(spark, dlqDir, "srcA").count() === 2)
-    assert(DeadLetter.readByTable(spark, dlqDir, "t2").count() === 2)
-    assert(DeadLetter.readBySource(spark, dlqDir, "absent").count() === 0)
+    def rows(c: String, v: String) =
+      DeadLetter.read(spark, dlqDir).filter(col(c) === v).count()
+    assert(rows("source_id", "srcA") === 2)
+    assert(rows("table_name", "t2") === 2)
+    assert(rows("source_id", "absent") === 0)
     // nothing is older than an hour: cleanup with a 1h TTL drops nothing
     val now = new java.sql.Timestamp(System.currentTimeMillis())
     assert(DeadLetter.cleanup(spark, dlqDir, ttlSeconds = 3600L, now) === 0L)

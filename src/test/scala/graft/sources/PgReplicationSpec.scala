@@ -240,10 +240,12 @@ class PgReplicationSpec extends SparkTestBase
     }
     assert(state === Some(Map(2L -> ("bo", 99.0))),
       s"live pipeline never landed the expected state (got $state, " +
-        s"runner error: ${runner.errorOf(p.id)})")
+        s"runner error: ${runner.health(p)})")
+    // a healthy drain loop reads as status running
+    assert(cp.refreshStatus(p.id).status === "running")
     assert(cp.stopPipeline(p.id).status === "stopped")
-    assert(runner.errorOf(p.id).isEmpty,
-      s"runner recorded an error: ${runner.errorOf(p.id)}")
+    assert(runner.health(p).isEmpty,
+      s"runner recorded an error: ${runner.health(p)}")
     // stopped means stopped: further DML no longer lands
     psql("INSERT INTO ctl_users VALUES (7,'ghost',0.0)")
     Thread.sleep(1500L)
@@ -295,7 +297,7 @@ class PgReplicationSpec extends SparkTestBase
       while (lng(m \ "events_processed") < 3 &&
         System.currentTimeMillis() < deadline) { Thread.sleep(500L); m = metricsBody() }
       assert(lng(m \ "events_processed") >= 3,
-        s"metrics never saw the inserts (runner error: ${runner.errorOf(p.id)})")
+        s"metrics never saw the inserts (runner error: ${runner.health(p)})")
       assert((m \ "status") === JString("running"))
       assert(lng(m \ "iceberg_commits") >= 1)
       assert(lng(m \ "iceberg_bytes_written") > 0)
@@ -414,15 +416,15 @@ class PgReplicationSpec extends SparkTestBase
     psql("SELECT pg_terminate_backend(active_pid) FROM pg_replication_slots " +
       s"WHERE slot_name = '$slot' AND active_pid IS NOT NULL")
     val deadline = System.currentTimeMillis() + 30000L
-    while (runner.errorOf(p.id).isEmpty &&
+    while (runner.health(p).isEmpty &&
       System.currentTimeMillis() < deadline) Thread.sleep(250L)
-    assert(runner.errorOf(p.id).isDefined, "drain-loop crash never recorded")
+    assert(runner.health(p).isDefined, "drain-loop crash never recorded")
     assert(cp.refreshStatus(p.id).status === "error")
     // restart: the run error belongs to the DEAD run — a clean restart
     // must come back healthy, not flip to error on the next refresh
     assert(cp.startPipeline(p.id).status === "running")
-    assert(runner.errorOf(p.id).isEmpty,
-      s"stale run error survived restart: ${runner.errorOf(p.id)}")
+    assert(runner.health(p).isEmpty,
+      s"stale run error survived restart: ${runner.health(p)}")
     assert(cp.refreshStatus(p.id).status === "running")
     // and the restarted loop actually lands data
     psql("INSERT INTO rst_users VALUES (5, 'eve')")
@@ -434,8 +436,8 @@ class PgReplicationSpec extends SparkTestBase
     val d2 = System.currentTimeMillis() + 60000L
     while (!landed() && System.currentTimeMillis() < d2) Thread.sleep(500L)
     assert(landed(), s"restarted pipeline never landed data " +
-      s"(runner error: ${runner.errorOf(p.id)})")
+      s"(runner error: ${runner.health(p)})")
     assert(cp.stopPipeline(p.id).status === "stopped")
-    assert(runner.errorOf(p.id).isEmpty)
+    assert(runner.health(p).isEmpty)
   }
 }
