@@ -306,10 +306,7 @@ final class ApiServer(spark: SparkSession,
     * default — strict here like every body field). */
   private def intQueryParam(ex: HttpExchange, name: String,
                             default: Int, min: Int = 1): Int =
-    Option(ex.getRequestURI.getQuery).toSeq
-      .flatMap(_.split('&').toSeq)
-      .collectFirst { case kv if kv.startsWith(s"$name=") =>
-        kv.substring(name.length + 1) } match {
+    HttpUtil.queryParam(ex, name) match {
       case None => default
       case Some(raw) =>
         val n = try raw.toInt catch { case _: NumberFormatException =>
@@ -457,11 +454,8 @@ final class ApiServer(spark: SparkSession,
             "success" -> JBool(false), "error" -> JString(errMsg)))
         }
       case ("GET", Seq("sources", id, "tables")) =>
-        val schema = Option(ex.getRequestURI.getQuery)
-          .flatMap(_.split('&').collectFirst {
-            case q if q.startsWith("schema=") => q.substring(7)
-          })
-        ControlPlane.wireDiscoverTables(cp.getSource(id), schema) match {
+        ControlPlane.wireDiscoverTables(cp.getSource(id),
+            HttpUtil.queryParam(ex, "schema")) match {
           case Right(tables) => respond(ex, 200, JObject(
             "tables" -> JArray(tables.toList.map { case (sc, t) =>
               JObject("schema" -> JString(sc), "table" -> JString(t)) }),
@@ -543,10 +537,7 @@ final class ApiServer(spark: SparkSession,
         val ms = metricsStore.get
         val p = cp.getPipeline(id)
         val src = p.name
-        val rangeStr = Option(ex.getRequestURI.getQuery).toSeq
-          .flatMap(_.split('&'))
-          .collectFirst { case q if q.startsWith("range=") =>
-            java.net.URLDecoder.decode(q.drop(6), "UTF-8") }
+        val rangeStr = HttpUtil.queryParam(ex, "range")
           .getOrElse("1h") // ref handlers/metrics.go DefaultQuery("range","1h")
         val tr = MetricsHub.parseTimeRange(rangeStr, ms.nowMs)
           .fold(msg => throw ControlPlane.Invalid(msg), identity)
@@ -645,11 +636,7 @@ final class ApiServer(spark: SparkSession,
         cp.deleteSilence(id)
         respond(ex, 200, JObject("deleted" -> JBool(true)))
       case ("GET", Seq("alerts")) =>
-        val status = Option(ex.getRequestURI.getQuery)
-          .flatMap(_.split('&').collectFirst {
-            case q if q.startsWith("status=") => q.substring(7)
-          })
-        val all = cp.listAlertInstances(status)
+        val all = cp.listAlertInstances(HttpUtil.queryParam(ex, "status"))
         respond(ex, 200, JObject(
           "alerts" -> JArray(all.toList.map(cp.alertInstanceJson)),
           "total" -> JInt(all.size)))
@@ -704,9 +691,8 @@ final class ApiServer(spark: SparkSession,
           scalingRulesOf(b \ "scale_up_rules"),
           scalingRulesOf(b \ "scale_down_rules"))))
       case ("GET", Seq("scaling", "policies")) =>
-        val enabledOnly = Option(ex.getRequestURI.getQuery)
-          .exists(_.split('&').contains("enabled=true"))
-        val all = cp.listScalingPolicies(enabledOnly)
+        val all = cp.listScalingPolicies(
+          HttpUtil.queryParam(ex, "enabled").contains("true"))
         respond(ex, 200, JObject(
           "policies" -> JArray(all.toList.map(cp.scalingPolicyJson)),
           "total" -> JInt(all.size)))
@@ -1072,21 +1058,9 @@ final class ApiServer(spark: SparkSession,
       case (m, Seq("auth", "oidc", "callback")) if m == "GET" || m == "POST" =>
         // ref handlers/oidc.go:102-114: query params first, then the
         // JSON body (IdPs redirect with GET; SPAs relay with POST).
-        // RAW query split first, THEN decode each value exactly once —
-        // getQuery pre-decodes, and a second URLDecoder pass corrupts
-        // codes containing '+'/'%' (the r16 percent-encoding rule,
-        // RestCatalogServer.scala)
-        val q = Option(ex.getRequestURI.getRawQuery).toSeq
-          .flatMap(_.split('&')).flatMap { kv =>
-            kv.split("=", 2) match {
-              case Array(k, v) =>
-                Some(k -> java.net.URLDecoder.decode(v, "UTF-8"))
-              case _ => None
-            }
-          }.toMap
         val b = if (m == "POST") jsonBody(ex) else JNothing
         def field(name: String): String =
-          q.get(name).filter(_.nonEmpty).getOrElse(jstr(b \ name))
+          HttpUtil.queryParam(ex, name).filter(_.nonEmpty).getOrElse(jstr(b \ name))
         val errParam = field("error")
         if (errParam.nonEmpty)
           throw ControlPlane.Invalid(s"authentication failed: $errParam")

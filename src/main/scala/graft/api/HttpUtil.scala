@@ -30,6 +30,16 @@ object HttpUtil {
       .filter(_.startsWith("Bearer "))
       .map(_.substring("Bearer ".length))
 
+  /** Query parameter `name`: the RAW query split on '&', the first
+    * `name=` value decoded exactly once. `getQuery` pre-decodes percent
+    * escapes, so splitting it cuts a value that carries an encoded '&'
+    * short, and decoding its output again corrupts '+' and '%'. */
+  def queryParam(ex: HttpExchange, name: String): Option[String] =
+    Option(ex.getRequestURI.getRawQuery).toSeq
+      .flatMap(_.split('&').toSeq)
+      .collectFirst { case kv if kv.startsWith(s"$name=") =>
+        java.net.URLDecoder.decode(kv.substring(name.length + 1), UTF_8) }
+
   /** Request body as JSON: empty body → `Some(JObject())`, malformed
     * JSON → None (the caller maps it onto its own 400 shape). */
   def readJsonBody(ex: HttpExchange): Option[JValue] = {

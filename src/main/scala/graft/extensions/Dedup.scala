@@ -51,12 +51,6 @@ object Dedup extends QueryModule {
     """list_distinct(list_transform(range(0, greatest(len(string_split(text,' '))-2, 1)),
       |    i -> array_to_string(string_split(text,' ')[i+1:i+3], ' ')))""".stripMargin
 
-  /** Distinct character n-grams. */
-  def charNgrams(text: Column, n: Int): Column =
-    array_distinct(transform(
-      sequence(lit(0), greatest(length(text) - n, lit(0))),
-      i => text.substr(i + lit(1), lit(n))))
-
   private def charNgramsSql(n: Int) =
     s"""list_distinct(list_transform(range(0, greatest(length(text)-${n - 1}, 1)),
        |    i -> substr(text, i+1, $n)))""".stripMargin
@@ -605,7 +599,7 @@ object Dedup extends QueryModule {
       SnapshotLog.withTableLock(dir) {
         val b0 = logDedupBatch(s, d, 0)
         val files = SnapshotLog.writeData(s, dir, b0, None, statsCol = "doc_id")
-        SnapshotLog.commit(s, dir, "append", files, b0.schema, parent = None)
+        SnapshotLog.appendFiles(s, dir, files, b0.schema, expectedParent = None)
       }
       (1 to 2).foreach { k =>
         val corpus = SnapshotLog.readCurrent(s, dir).get
@@ -616,8 +610,7 @@ object Dedup extends QueryModule {
           val cur = SnapshotLog.currentSnapshot(s, dir).get
           val files = SnapshotLog.writeData(s, dir, survivors, None,
             statsCol = "doc_id")
-          SnapshotLog.commit(s, dir, "append", cur.files ++ files, cur.schema,
-            parent = Some(cur))
+          SnapshotLog.appendFiles(s, dir, files, cur.schema, Some(cur))
         }
       }
     }

@@ -612,7 +612,7 @@ object Similarity extends QueryModule {
       SnapshotLog.withTableLock(dir) {
         val files = SnapshotLog.writeData(s, dir, rows, Some("bucket"),
           statsCol = "vec_id")
-        SnapshotLog.commit(s, dir, "append", files, rows.schema, parent = None)
+        SnapshotLog.appendFiles(s, dir, files, rows.schema, expectedParent = None)
       }
     }
 
@@ -682,7 +682,7 @@ object Similarity extends QueryModule {
       SnapshotLog.withTableLock(dir) {
         val files = SnapshotLog.writeData(s, dir, base, Some("bucket"),
           statsCol = "vec_id")
-        SnapshotLog.commit(s, dir, "append", files, base.schema, parent = None)
+        SnapshotLog.appendFiles(s, dir, files, base.schema, expectedParent = None)
       }
       // the maintenance step: assign-to-existing-centroids + append —
       // optimistic commit, zero base files touched

@@ -237,8 +237,8 @@ object CdcWriter {
     // them at the old physical type under a schema that can no longer
     // read them. Refuse loudly; folding first retires the delete set.
     val rewriteCols = plan.rewrite.map(_.name)
-    val carried =
-      if (untouched.isEmpty || rewriteCols.isEmpty) untouched
+    val (narrow, widened) =
+      if (untouched.isEmpty || rewriteCols.isEmpty) (Set.empty[SnapshotLog.DataFile], Nil)
       else {
         val clash = rewriteCols.intersect(cur.toSeq.flatMap(_.deletes).flatMap(_.eqCols))
         require(clash.isEmpty,
@@ -246,17 +246,16 @@ object CdcWriter {
             s"past their stored physical type in $tableDir — run foldDeletes first")
         rewriteNarrow(spark, tableDir, cur.get, untouched, plan.schema, rewriteCols, pcol)
       }
+    // carried (untouched-day) files keep the live delete set; the
+    // rewritten files outrank every carried delete (higher seq) and were
+    // written deletes-applied, so carrying is exact. Positional entries
+    // naming rewritten-away files miss the manifest join and are inert
+    // until a fold retires them. A merge that rewrites every file
+    // retires the delete set (the carry rule of SnapshotLog.commit).
     SnapshotLog.commit(spark, tableDir,
       if (truncLsn.isDefined) "truncate-merge" else "merge",
-      carried ++ newFiles, plan.schema, parent = cur,
-      // carried (untouched-day) files still need the live delete set;
-      // the rewritten files outrank every carried delete (higher seq)
-      // and were written deletes-applied, so carrying is exact. The
-      // same holds for positional deletes: entries naming untouched
-      // files stay load-bearing, entries naming rewritten-away files
-      // miss the manifest join and are inert until a fold retires them.
-      deletes = cur.toSeq.flatMap(_.deletes),
-      posDeletes = cur.toSeq.flatMap(_.posDeletes))
+      plan.schema, parent = cur, add = newFiles ++ widened,
+      remove = f => touchedSet(f.partition) || narrow(f))
     touched
   }
 
@@ -321,10 +320,8 @@ object CdcWriter {
         if (cur.isEmpty) Nil
         else SnapshotLog.writeDeletes(spark, tableDir,
           deltaLatest.select(keyCols.map(col): _*), keyCols)
-      SnapshotLog.commit(spark, tableDir, "mor-merge",
-        cur.toSeq.flatMap(_.files) ++ newFiles, schema, parent = cur,
-        deletes = cur.toSeq.flatMap(_.deletes) ++ delFiles,
-        posDeletes = cur.toSeq.flatMap(_.posDeletes))
+      SnapshotLog.commit(spark, tableDir, "mor-merge", schema, parent = cur,
+        add = newFiles, addDeletes = delFiles)
     } finally deltaLatest.unpersist(blocking = true)
   }
 
@@ -358,16 +355,16 @@ object CdcWriter {
   /** Cast-and-rewrite carried files that hold a `rewriteCols` column
     * (a plan's rewrite set) at a physical type other than its `target`
     * type; every other file (including pre-evolution files missing the
-    * column entirely) keeps its manifest entry untouched. Footer schema
-    * checks are driver-side metadata reads, O(carried files), only on
-    * rewrite merges; the rewrite reads exactly the narrow files, in one
-    * scan. */
+    * column entirely) keeps its manifest entry untouched. Returns the
+    * narrow files and their rewrites. Footer schema checks are
+    * driver-side metadata reads, O(carried files), only on rewrite
+    * merges; the rewrite reads exactly the narrow files, in one scan. */
   private def rewriteNarrow(spark: SparkSession, tableDir: String,
                             cur: graft.lake.SnapshotLog.Snapshot,
                             carried: Seq[graft.lake.SnapshotLog.DataFile],
                             target: org.apache.spark.sql.types.StructType,
                             rewriteCols: Seq[String], pcol: String)
-  : Seq[graft.lake.SnapshotLog.DataFile] = {
+  : (Set[graft.lake.SnapshotLog.DataFile], Seq[graft.lake.SnapshotLog.DataFile]) = {
     import graft.lake.SnapshotLog
     import graft.model.FieldIds
     import org.apache.spark.sql.types.{DataType, StructType}
@@ -395,7 +392,7 @@ object CdcWriter {
       }
     val narrow = carried.filter(f => schemaOf(f).fields.exists(ff =>
       heldAs(f, ff.name).flatMap(rewriteTypes.get).exists(_ != ff.dataType)))
-    if (narrow.isEmpty) return carried
+    if (narrow.isEmpty) return (Set.empty, Nil)
     // every committed file reads under its snapshot's schema (by field
     // id), so THESE files read there and cast up. Live equality AND
     // positional deletes apply DURING the rewrite: the rewritten files
@@ -408,8 +405,7 @@ object CdcWriter {
       .select(target.fields.toSeq.map(tf =>
         (if (stored.contains(tf.name)) col(tf.name) else lit(null))
           .cast(tf.dataType).as(tf.name)): _*)
-    carried.filterNot(narrow.toSet) ++
-      SnapshotLog.writeData(spark, tableDir, casted, Some(pcol))
+    (narrow.toSet, SnapshotLog.writeData(spark, tableDir, casted, Some(pcol)))
   }
 }
 

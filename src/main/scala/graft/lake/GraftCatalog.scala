@@ -204,7 +204,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(
         Seq(catName) ++ ident.namespace.toSeq :+ ident.name)
     val snap = SnapshotLog.withTableLock(dir) {
-      SnapshotLog.commit(spark, dir, "create", Nil, schema, parent = None)
+      SnapshotLog.commit(spark, dir, "create", schema, parent = None)
     }
     new GraftTable(fullName(ident), dir, snap)
   }
@@ -251,9 +251,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             "RENAME/DROP COLUMN must be the only change in the statement")
       }
       val schema = GraftCatalog.addColumns(cur.schema, adds, fullName(ident))
-      SnapshotLog.commit(spark, dir, "evolve-schema", cur.files, schema,
-        parent = Some(cur), deletes = cur.deletes,
-        posDeletes = cur.posDeletes)
+      SnapshotLog.commit(spark, dir, "evolve-schema", schema, Some(cur))
     }
     loadTable(ident)
   }

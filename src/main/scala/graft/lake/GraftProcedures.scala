@@ -17,6 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *   CALL <cat>.system.rewrite_data_files(table => 'db.t', max_files => 4)
   *   CALL <cat>.system.expire_snapshots(table => 'db.t', keep_last => 7)
   *   CALL <cat>.system.fold_deletes(table => 'db.t')
+  *   CALL <cat>.system.normalize_layout(table => 'db.t')
   *   CALL <cat>.system.rollback_to_snapshot(table => 'db.t', snapshot_id => 3)
   *   CALL <cat>.system.create_tag(table => 'db.t', tag => 'run1', snapshot_id => 3)
   *   CALL <cat>.system.drop_tag(table => 'db.t', tag => 'run1')
@@ -35,12 +36,15 @@ private[lake] object GraftProcedures {
   private type Resolve = String => String
 
   val names: Seq[String] = Seq("expire_snapshots", "rewrite_data_files",
-    "cluster_by", "fold_deletes", "rollback_to_snapshot",
+    "cluster_by", "fold_deletes", "normalize_layout", "rollback_to_snapshot",
     "create_tag", "drop_tag",
     "create_branch", "fast_forward", "drop_branch")
 
   def load(resolve: Resolve, name: String): Option[UnboundProcedure] = {
     def spark = SparkSession.active
+    // the engine's day-partition convention, as the writers apply it
+    def pcolOf(dir: String) = SnapshotLog.currentSnapshot(spark, dir)
+      .flatMap(s => SnapshotLog.conventionPartitionCol(s.schema))
     name match {
       // debris_grace_ms defaults to SnapshotLog's conservative orphan-
       // cleanup grace; single-process deployments pass 0 for an
@@ -61,9 +65,7 @@ private[lake] object GraftProcedures {
         new StructType().add("rewritten_partitions", LongType),
         in => {
           val dir = resolve(str(in, 0))
-          val pcol = SnapshotLog.currentSnapshot(spark, dir)
-            .flatMap(s => SnapshotLog.conventionPartitionCol(s.schema))
-          val rewritten = SnapshotLog.compact(spark, dir, pcol, in.getInt(1))
+          val rewritten = SnapshotLog.compact(spark, dir, pcolOf(dir), in.getInt(1))
           Seq(row(rewritten.size.toLong))
         }))
       case "fold_deletes" => Some(proc(name,
@@ -71,10 +73,18 @@ private[lake] object GraftProcedures {
         new StructType().add("snapshot_id", LongType),
         in => {
           val dir = resolve(str(in, 0))
-          val pcol = SnapshotLog.currentSnapshot(spark, dir)
-            .flatMap(s => SnapshotLog.conventionPartitionCol(s.schema))
-          val folded = SnapshotLog.foldDeletes(spark, dir, pcol)
+          val folded = SnapshotLog.foldDeletes(spark, dir, pcolOf(dir))
           Seq(row(folded.map(_.id).getOrElse(-1L)))
+        }))
+      // the repair the layout refusal names: a clustered or spec-evolved
+      // table back to exact days, so COW merges and retention run again
+      case "normalize_layout" => Some(proc(name,
+        Seq("table" -> StringType),
+        new StructType().add("snapshot_id", LongType),
+        in => {
+          val dir = resolve(str(in, 0))
+          val snap = SnapshotLog.normalizeLayout(spark, dir, pcolOf(dir))
+          Seq(row(snap.map(_.id).getOrElse(-1L)))
         }))
       case "rollback_to_snapshot" => Some(proc(name,
         Seq("table" -> StringType, "snapshot_id" -> LongType),

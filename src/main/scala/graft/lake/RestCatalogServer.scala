@@ -267,16 +267,6 @@ final class RestCatalogServer(spark: SparkSession, warehouseDir: String,
     fs.exists(p) && !SnapshotLog.isSnapshotTable(spark, p.toString)
   }
 
-  // split the RAW query, decode each value exactly once — getQuery
-  // pre-decodes percent escapes, so splitting it corrupts any value
-  // legitimately carrying an encoded '&'/'='/'+' (an opaque
-  // third-party page token, a namespace name with a space)
-  private def queryParam(ex: HttpExchange, name: String): Option[String] =
-    Option(ex.getRequestURI.getRawQuery).toSeq
-      .flatMap(_.split('&').toSeq)
-      .collectFirst { case kv if kv.startsWith(s"$name=") =>
-        java.net.URLDecoder.decode(kv.substring(name.length + 1), UTF_8) }
-
   /** The Iceberg REST spec's listing pagination (`pageToken` /
     * `pageSize` in, `next-page-token` out). The token is an opaque
     * cursor — base64 of the LAST NAME served — so the next page is
@@ -287,12 +277,12 @@ final class RestCatalogServer(spark: SparkSession, warehouseDir: String,
     * warehouse scale (thousands of tables) real clients page. */
   private def pageOf(ex: HttpExchange, names: Seq[String])
   : (Seq[String], Option[String]) = {
-    val after = queryParam(ex, "pageToken").map { t =>
+    val after = graft.api.HttpUtil.queryParam(ex, "pageToken").map { t =>
       try new String(java.util.Base64.getUrlDecoder.decode(t), UTF_8)
       catch { case _: IllegalArgumentException =>
         halt(400, "malformed pageToken", "BadRequestException") }
     }
-    val size = queryParam(ex, "pageSize").map { s =>
+    val size = graft.api.HttpUtil.queryParam(ex, "pageSize").map { s =>
       val n = try s.toInt catch { case _: NumberFormatException =>
         halt(400, "pageSize must be an integer", "BadRequestException") }
       // a 0/negative pageSize silently returning the UNBOUNDED listing
@@ -328,7 +318,7 @@ final class RestCatalogServer(spark: SparkSession, warehouseDir: String,
     * its full multi-part identifier. Paginates per [[pageOf]]. */
   private def listNamespaces(ex: HttpExchange): Unit = {
     val parent: Seq[String] =
-      queryParam(ex, "parent").map(checkedNs).getOrElse(Nil)
+      graft.api.HttpUtil.queryParam(ex, "parent").map(checkedNs).getOrElse(Nil)
     if (parent.nonEmpty && !namespaceExists(parent))
       halt(404, s"namespace ${parent.mkString(".")} not found",
         "NoSuchNamespaceException")
@@ -642,7 +632,7 @@ final class RestCatalogServer(spark: SparkSession, warehouseDir: String,
           "AlreadyExistsException")
       // preReconciled: the client's field ids are authoritative — the
       // Iceberg catalog contract is to honor the declared schema ids
-      val s = SnapshotLog.commit(spark, dir, "create", Nil, schema, parent = None,
+      val s = SnapshotLog.commit(spark, dir, "create", schema, parent = None,
         preReconciled = FieldIds.hasIds(schema))
       // the sidecar ALWAYS lands (empty field list for unpartitioned
       // tables) and carries an incarnation id: the table's PATH is
@@ -1068,9 +1058,7 @@ final class RestCatalogServer(spark: SparkSession, warehouseDir: String,
           // between the head read and the manifest publish surfaces as
           // ConcurrentCommitException — that is the client's 409 retry
           // signal (Iceberg's CommitFailedException), never a 500
-          try SnapshotLog.commit(spark, dir, op, c.files ++ files,
-            schema, parent = Some(c), deletes = c.deletes,
-            posDeletes = c.posDeletes)
+          try SnapshotLog.commit(spark, dir, op, schema, Some(c), add = files)
           catch {
             case e: SnapshotLog.ConcurrentCommitException =>
               halt(409, String.valueOf(e.getMessage), "CommitFailedException")

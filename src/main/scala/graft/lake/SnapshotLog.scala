@@ -894,9 +894,7 @@ object SnapshotLog {
           "keep their partition value")
       val files = writeData(spark, tableDir, df, partitionCol)
       val id = head.id + 1
-      val snap = buildSnapshot(Some(head), id, "append",
-        head.files ++ files, df.schema, head.deletes, head.posDeletes,
-        preReconciled = false)
+      val snap = buildSnapshot(Some(head), id, "append", df.schema, add = files)
       val (fs, root) = fsOf(spark, tableDir)
       val bd = branchDir(root, name)
       val md = metaDir(root)
@@ -1034,17 +1032,27 @@ object SnapshotLog {
 
   // ---- commit
 
-  /** Commit a new snapshot. MUST be called inside [[withTableLock]] —
-    * callers resolve current, build the next manifest, and commit, all
-    * under the one lock, so concurrent commits compose. `parent` is the
-    * snapshot the manifest was built from; a mismatch with the true
-    * current (a commit that slipped in outside the lock discipline)
-    * fails loudly instead of silently dropping its files. */
+  /** Commit a new snapshot, stated as a change against its parent —
+    * Iceberg's AppendFiles/RewriteFiles/RowDelta/DeleteFiles: the next
+    * entry set is the parent's data files minus `remove`, plus `add`,
+    * `addDeletes` and `addPosDeletes`. The parent's delete files ride
+    * along while any parent data file survives; a commit that removes
+    * every parent data file retires them (nothing left holds a row they
+    * could drop — truncate, overwrite, whole-table rewrites, rollback).
+    * A rollback's restored entries keep their original seqs.
+    *
+    * MUST be called inside [[withTableLock]] — callers resolve current,
+    * write, and commit under the one lock, so concurrent commits
+    * compose. `parent` is the snapshot the change was derived from; a
+    * mismatch with the true current (a commit that slipped in outside
+    * the lock discipline) fails loudly instead of silently dropping its
+    * files. */
   def commit(spark: SparkSession, tableDir: String, operation: String,
-             files: Seq[DataFile], schema: StructType,
-             parent: Option[Snapshot],
-             deletes: Seq[DeleteFile] = Nil,
-             posDeletes: Seq[PosDeleteFile] = Nil,
+             schema: StructType, parent: Option[Snapshot],
+             add: Seq[DataFile] = Nil,
+             remove: DataFile => Boolean = _ => false,
+             addDeletes: Seq[DeleteFile] = Nil,
+             addPosDeletes: Seq[PosDeleteFile] = Nil,
              reuseFrom: Seq[Long] = Nil,
              preReconciled: Boolean = false,
              carrySchemas: Map[Int, String] = Map.empty): Snapshot = {
@@ -1055,8 +1063,8 @@ object SnapshotLog {
       throw new ConcurrentCommitException(
         s"commit to $tableDir based on ${parent.map(_.id)} but current is ${cur.map(_.id)}")
     val id = cur.map(_.id).getOrElse(0L) + 1
-    val snap = buildSnapshot(cur, id, operation, files, schema,
-      deletes, posDeletes, preReconciled, carrySchemas)
+    val snap = buildSnapshot(cur, id, operation, schema, add, remove,
+      addDeletes, addPosDeletes, preReconciled, carrySchemas)
     val md = metaDir(root)
     fs.mkdirs(md)
     // segment reuse candidates: the parent manifest (carried entries),
@@ -1106,15 +1114,12 @@ object SnapshotLog {
       // foreign commit may have changed what made the append legal
       // (e.g. a cluster_by switching the table to a managed layout)
       parent.foreach(revalidate)
-      commit(spark, tableDir, "append",
-        parent.map(_.files).getOrElse(Seq.empty) ++ files, mergedSchema,
-        parent,
-        deletes = parent.map(_.deletes).getOrElse(Nil),
-        posDeletes = parent.map(_.posDeletes).getOrElse(Nil))
+      commit(spark, tableDir, "append", mergedSchema, parent, add = files)
     }
   }
 
-  /** Build the next snapshot: stamp seq (and schema id) on fresh
+  /** Build the next snapshot: apply the change to the parent's entries
+    * (the carry rule of [[commit]]), stamp seq (and schema id) on fresh
     * entries, reconcile field ids against the parent schema, and carry
     * forward exactly the historical schemas still referenced by a live
     * file — the shared construction of [[commit]] and
@@ -1128,12 +1133,19 @@ object SnapshotLog {
     * committed files keep schemaId 0 (read-by-name legacy). `schemaId`
     * advances only when the reconciled schema actually changed. */
   private def buildSnapshot(cur: Option[Snapshot], id: Long, operation: String,
-                            files: Seq[DataFile], schema: StructType,
-                            deletes: Seq[DeleteFile],
-                            posDeletes: Seq[PosDeleteFile],
-                            preReconciled: Boolean,
+                            schema: StructType, add: Seq[DataFile],
+                            remove: DataFile => Boolean = _ => false,
+                            addDeletes: Seq[DeleteFile] = Nil,
+                            addPosDeletes: Seq[PosDeleteFile] = Nil,
+                            preReconciled: Boolean = false,
                             carrySchemas: Map[Int, String] = Map.empty): Snapshot = {
     import graft.model.FieldIds
+    val kept = cur.toSeq.flatMap(_.files.filterNot(remove))
+    // the parent's delete files ride along while one of its data files does
+    val carried = if (kept.nonEmpty) cur.toSeq else Nil
+    val files = kept ++ add
+    val deletes = carried.flatMap(_.deletes) ++ addDeletes
+    val posDeletes = carried.flatMap(_.posDeletes) ++ addPosDeletes
     def maxIdIn(s: StructType): Int =
       s.fields.flatMap(FieldIds.idOf).foldLeft(0)(math.max)
     val (parentSchema, parentLast) = cur match {
@@ -1459,9 +1471,8 @@ object SnapshotLog {
       val entries = writePosFile(spark, tableDir,
         slotsOf(spark, tableDir, cur, hits))
       if (entries.isEmpty) return None
-      Some(commit(spark, tableDir, "delete", cur.files, cur.schema,
-        parent = Some(cur), deletes = cur.deletes,
-        posDeletes = cur.posDeletes ++ entries))
+      Some(commit(spark, tableDir, "delete", cur.schema, Some(cur),
+        addPosDeletes = entries))
     } }
 
   /** Full truncate (SQL `DELETE FROM t` with no WHERE): one "delete"
@@ -1473,8 +1484,8 @@ object SnapshotLog {
     withTableLock(tableDir) { retryOnConflict(maxRetries) {
       val cur = currentSnapshot(spark, tableDir).getOrElse(
         throw new NoSuchElementException(s"no snapshot log at $tableDir"))
-      commit(spark, tableDir, "delete", Seq.empty, cur.schema,
-        parent = Some(cur))
+      commit(spark, tableDir, "delete", cur.schema, Some(cur),
+        remove = _ => true)
     } }
 
   /** UPDATE ... SET ... WHERE through the commit log: ONE snapshot that
@@ -1516,9 +1527,8 @@ object SnapshotLog {
           assignments.get(f.name).map(_.cast(f.dataType))
             .getOrElse(col(f.name)).as(f.name)): _*)
         val newFiles = writeData(spark, tableDir, replacement, partitionCol)
-        Some(commit(spark, tableDir, "update", cur.files ++ newFiles, schema,
-          parent = Some(cur), deletes = cur.deletes,
-          posDeletes = cur.posDeletes ++ slots))
+        Some(commit(spark, tableDir, "update", schema, Some(cur),
+          add = newFiles, addPosDeletes = slots))
       } finally matched.unpersist(blocking = true)
     } }
 
@@ -1585,7 +1595,8 @@ object SnapshotLog {
                   "evolution — rerun the statement against the new schema")
             layoutGuard(par)
           }
-          commit(spark, tableDir, "overwrite", files, schema, parent = p)
+          commit(spark, tableDir, "overwrite", schema, p, add = files,
+            remove = _ => true)
         }
       else
         // optimistic append: a cross-process writer racing this INSERT
@@ -1827,9 +1838,8 @@ object SnapshotLog {
         // empty-task debris forever)
         val newFiles = dropEmptyFiles(spark, tableDir, written)
         if (slots.isEmpty && newFiles.isEmpty) return None
-        Some(commit(spark, tableDir, "merge-into",
-          cur.files ++ newFiles, schema, parent = Some(cur),
-          deletes = cur.deletes, posDeletes = cur.posDeletes ++ slots))
+        Some(commit(spark, tableDir, "merge-into", schema, Some(cur),
+          add = newFiles, addPosDeletes = slots))
       } finally {
         matched.unpersist(blocking = true)
         bsPersisted.foreach(_.unpersist(blocking = true))
@@ -2147,7 +2157,7 @@ object SnapshotLog {
           statsCol = Some(statsCol))
       }
     if (files.isEmpty) None
-    else Some(commit(spark, tableDir, "import", files, schema, parent = None))
+    else Some(commit(spark, tableDir, "import", schema, None, add = files))
   }
 
   // ---- reads
@@ -2264,9 +2274,8 @@ object SnapshotLog {
       // one file per partition value
       val source = if (partitionCol.isDefined) pruned else pruned.repartition(1)
       val newFiles = writeData(spark, tableDir, source, partitionCol, statsCol)
-      val untouched = cur.files.filterNot(f => oset(f.partition))
-      commit(spark, tableDir, "replace", untouched ++ newFiles, cur.schema,
-        parent = Some(cur))
+      commit(spark, tableDir, "replace", cur.schema, Some(cur),
+        add = newFiles, remove = f => oset(f.partition))
       oversized
     }
 
@@ -2286,11 +2295,10 @@ object SnapshotLog {
     withTableLock(tableDir) {
       val cur = currentSnapshot(spark, tableDir).getOrElse(return Seq.empty)
       requireExactDayLayout(cur, tableDir, "a retention drop")
-      val (dropped, kept) = cur.files.partition(f =>
-        f.partition.nonEmpty && f.partition < cutoffDay)
+      def beforeCutoff(f: DataFile) = f.partition.nonEmpty && f.partition < cutoffDay
+      val dropped = cur.files.filter(beforeCutoff)
       if (dropped.isEmpty) return Seq.empty
-      commit(spark, tableDir, "delete", kept, cur.schema, parent = Some(cur),
-        deletes = cur.deletes, posDeletes = cur.posDeletes)
+      commit(spark, tableDir, "delete", cur.schema, Some(cur), remove = beforeCutoff)
       dropped.map(_.partition).distinct.sorted
     }
 
@@ -2361,8 +2369,8 @@ object SnapshotLog {
       val files = writeData(spark, tableDir, tagged, Some(ClusterBucketCol),
         statsCol = dims.head._1, spec = Some("cluster"),
         extraStatsCols = dims.tail.map(_._1))
-      commit(spark, tableDir, "replace", files, cur.schema,
-        parent = Some(cur))
+      commit(spark, tableDir, "replace", cur.schema, Some(cur), add = files,
+        remove = _ => true)
     }
 
   /** Fold the live equality-delete set into clean data files: materialize
@@ -2403,8 +2411,8 @@ object SnapshotLog {
                            statsCol: String): Snapshot = {
     val state = read(spark, tableDir, cur)
     val files = writeData(spark, tableDir, state, partitionCol, statsCol)
-    commit(spark, tableDir, "replace", files, cur.schema,
-      parent = Some(cur), deletes = Nil)
+    commit(spark, tableDir, "replace", cur.schema, Some(cur), add = files,
+      remove = _ => true)
   }
 
   /** Refuse `op` on a table whose partition values are not all exact
@@ -2414,8 +2422,8 @@ object SnapshotLog {
     require(GraftPruning.exactDayLayout(snap), layoutRefusal(tableDir, op))
 
   private def layoutRefusal(tableDir: String, op: String): String =
-    s"$tableDir holds partition layouts other than identity or day; " +
-      s"run normalizeLayout before $op"
+    s"$tableDir holds partition layouts other than identity or day; run " +
+      s"CALL <catalog>.system.normalize_layout(table => '<table>') before $op"
 
   /** RENAME COLUMN — metadata only (Iceberg's rename): the field keeps
     * its id under a new name, zero files are touched, and every old file
@@ -2442,9 +2450,8 @@ object SnapshotLog {
         if (FieldIds.hasIds(schema0)) (schema0, 0) else FieldIds.stamp(schema0)
       val schema = StructType(stamped.fields.map(f =>
         if (f.name == from) f.copy(name = to) else f))
-      commit(spark, tableDir, "evolve-schema", cur.files, schema,
-        parent = Some(cur), deletes = cur.deletes,
-        posDeletes = cur.posDeletes, preReconciled = true)
+      commit(spark, tableDir, "evolve-schema", schema, Some(cur),
+        preReconciled = true)
     }
 
   /** DROP COLUMN — projection-masked (Iceberg's drop): the schema loses
@@ -2468,9 +2475,8 @@ object SnapshotLog {
       val (stamped, _) =
         if (FieldIds.hasIds(schema0)) (schema0, 0) else FieldIds.stamp(schema0)
       val schema = StructType(stamped.fields.filterNot(_.name == name))
-      commit(spark, tableDir, "evolve-schema", cur.files, schema,
-        parent = Some(cur), deletes = cur.deletes,
-        posDeletes = cur.posDeletes, preReconciled = true)
+      commit(spark, tableDir, "evolve-schema", schema, Some(cur),
+        preReconciled = true)
     }
 
   /** The structural refusals rename/drop share: pre-field-id files,
@@ -2479,7 +2485,7 @@ object SnapshotLog {
     val legacy = cur.files.filter(_.schemaId == 0)
     require(legacy.isEmpty,
       s"cannot $what $column: ${legacy.size} live file(s) predate field " +
-        "ids and read by name — rewrite first (compact/normalizeLayout)")
+        "ids and read by name — rewrite first (rewrite_data_files/normalize_layout)")
     require(!cur.deletes.exists(_.eqCols.contains(column)),
       s"cannot $what $column: live equality deletes key on it — " +
         "run foldDeletes first")
@@ -2499,9 +2505,9 @@ object SnapshotLog {
       val cur = currentSnapshot(spark, tableDir).getOrElse(
         throw new NoSuchElementException(s"no snapshots in $tableDir"))
       val target = snapshotAt(spark, tableDir, toId)
-      commit(spark, tableDir, "rollback", target.files, target.schema,
-        parent = Some(cur), deletes = target.deletes,
-        posDeletes = target.posDeletes,
+      commit(spark, tableDir, "rollback", target.schema, Some(cur),
+        add = target.files, remove = _ => true,
+        addDeletes = target.deletes, addPosDeletes = target.posDeletes,
         reuseFrom = Seq(toId), // restore the target's own segments
         carrySchemas = target.schemasById)
     }

@@ -1,6 +1,5 @@
 package graft.observe
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.apache.spark.sql.streaming.StreamingQueryListener._
 import java.util.concurrent.ConcurrentHashMap
@@ -17,8 +16,9 @@ import scala.jdk.CollectionConverters._
   * a StreamingQueryListener turns progress events into the same metric
   * names, and sinks/retry paths increment their counters directly.
   *
-  * The registry is queryable as a DataFrame — metrics are data here, not
-  * an HTTP endpoint (Prometheus scraping would hang off the same rows).
+  * The registry is plain data: the `pipeline_metrics` query reads its
+  * [[Registry.snapshot]] as rows, and `/metrics` renders its typed views
+  * for Prometheus scraping.
   * [[Registry]] is instantiable so a pipeline can carry its OWN registry
   * (the registered `pipeline_metrics` query does — a process-global one
   * would mix in whatever else the session is running); [[Metrics.global]]
@@ -61,11 +61,6 @@ object Metrics {
       gauges.asScala.map { case (k, v) => k -> v.sum() }.toMap
 
     def reset(): Unit = { counters.clear(); gauges.clear() }
-
-    def toDf(spark: SparkSession): DataFrame = {
-      import spark.implicits._
-      snapshot().toSeq.sortBy(_._1).toDF("metric", "value")
-    }
   }
 
   /** The process-wide default registry. */
@@ -77,7 +72,6 @@ object Metrics {
     global.setGauge(subsystem, name, value)
   def snapshot(): Map[String, Double] = global.snapshot()
   def reset(): Unit = global.reset()
-  def toDf(spark: SparkSession): DataFrame = global.toDf(spark)
 
   /** Streaming listener: micro-batch progress → philotes_cdc_* metrics
     * (ref pipeline event-loop stats, internal/cdc/pipeline/pipeline.go:

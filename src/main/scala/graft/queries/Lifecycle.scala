@@ -106,7 +106,7 @@ object Lifecycle extends QueryModule {
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(s, dir, fragmented, Some("_fragment"))
         .map(f => f.copy(partition = f.partition.takeWhile(_ != '_')))
-      SnapshotLog.commit(s, dir, "append", files, env.schema, parent = None)
+      SnapshotLog.appendFiles(s, dir, files, env.schema, expectedParent = None)
     }
     SnapshotLog.compact(s, dir, Some(pcol), maxFiles = 4)
     dir
@@ -804,8 +804,7 @@ object Lifecycle extends QueryModule {
           val slice = ev.filter(col("event_id") % 3 === k).repartition(1)
           val files = SnapshotLog.writeData(s, dir, slice,
             partitionCol = None, statsCol = "value")
-          SnapshotLog.commit(s, dir, "append",
-            cur.toSeq.flatMap(_.files) ++ files, slice.schema, parent = cur)
+          SnapshotLog.appendFiles(s, dir, files, slice.schema, cur)
         }
       }
       SnapshotLog.clusterBy(s, dir, "value", ClusterSplits)
@@ -836,8 +835,7 @@ object Lifecycle extends QueryModule {
           val slice = ev.filter(col("event_id") % 3 === k).repartition(1)
           val files = SnapshotLog.writeData(s, dir, slice,
             partitionCol = None, statsCol = "value")
-          SnapshotLog.commit(s, dir, "append",
-            cur.toSeq.flatMap(_.files) ++ files, slice.schema, parent = cur)
+          SnapshotLog.appendFiles(s, dir, files, slice.schema, cur)
         }
       }
       SnapshotLog.clusterByGrid(s, dir,
@@ -988,8 +986,7 @@ object Lifecycle extends QueryModule {
         val slice = ev.filter(col("event_id") % 2 === k).repartition(1)
         val files = SnapshotLog.writeData(s, dir, slice,
           partitionCol = None, statsCol = "value")
-        SnapshotLog.commit(s, dir, "append",
-          cur.toSeq.flatMap(_.files) ++ files, slice.schema, parent = cur)
+        SnapshotLog.appendFiles(s, dir, files, slice.schema, cur)
       }
     }
   }
@@ -1078,8 +1075,7 @@ object Lifecycle extends QueryModule {
                 slice.withColumn("_phour", concat(col("day"), lit(" "),
                   lpad((col("event_id") % 24).cast("string"), 2, "0"))),
                 Some("_phour"), spec = Some("hour"))
-          SnapshotLog.commit(s, dir, "append",
-            cur.toSeq.flatMap(_.files) ++ files, slice.schema, parent = cur)
+          SnapshotLog.appendFiles(s, dir, files, slice.schema, cur)
         }
       }
     }
@@ -1292,7 +1288,7 @@ object Lifecycle extends QueryModule {
     SnapshotLog.withTableLock(dir) {
       val base = slice(0)
       val files = SnapshotLog.writeData(s, dir, base, partitionCol = None)
-      SnapshotLog.commit(s, dir, "append", files, base.schema, parent = None)
+      SnapshotLog.appendFiles(s, dir, files, base.schema, expectedParent = None)
     }
     SnapshotLog.createBranch(s, dir, "audit")
     SnapshotLog.appendToBranch(s, dir, "audit", slice(1))

@@ -561,7 +561,7 @@ object SqlSurface extends QueryModule {
         val idn = (Seq.tabulate(3)(i => (i.toLong, "2024-01-01")) ++
           Seq.tabulate(2)(i => (10L + i, "2024-01-02"))).toDF("id", pcol)
         val files = SnapshotLog.writeData(s, pmDir, idn, Some(pcol))
-        SnapshotLog.commit(s, pmDir, "append", files, idn.schema, parent = None)
+        SnapshotLog.appendFiles(s, pmDir, files, idn.schema, expectedParent = None)
       }
       SnapshotLog.withTableLock(pmDir) {
         val cur = SnapshotLog.currentSnapshot(s, pmDir)
@@ -570,9 +570,7 @@ object SqlSurface extends QueryModule {
           .withColumn("_pmonth", substring(col(pcol), 1, 7))
         val files = SnapshotLog.writeData(s, pmDir, late, Some("_pmonth"),
           spec = Some("month"))
-        SnapshotLog.commit(s, pmDir, "append",
-          cur.toSeq.flatMap(_.files) ++ files,
-          cur.get.schema, parent = cur)
+        SnapshotLog.appendFiles(s, pmDir, files, cur.get.schema, cur)
       }
     }
     val (c8, m8) = measured(pmDir,

@@ -68,9 +68,8 @@ object DeadLetter {
       .withColumn("retried_at", lit(null).cast("timestamp"))
     SnapshotLog.withTableLock(dlqDir) {
       val newFiles = SnapshotLog.writeData(spark, dlqDir, failed, None)
-      val cur = adopt(spark, dlqDir)
-      SnapshotLog.commit(spark, dlqDir, "append",
-        cur.toSeq.flatMap(_.files) ++ newFiles, schema, cur): Unit
+      SnapshotLog.appendFiles(spark, dlqDir, newFiles, schema,
+        expectedParent = adopt(spark, dlqDir)): Unit
     }
   }
 
@@ -146,7 +145,8 @@ object DeadLetter {
       pending.select(from_json(col("event_data"), batchSchema).as("_e"))
         .select(col("_e.*"))))
     // MarkRetried: rewrite snap's files with pending rows marked; carry
-    // every file committed since (process's re-failures) untouched. The
+    // every file committed since (process's re-failures) untouched, with
+    // the live deletes: a row deleted since snap stays deleted. The
     // commit runs under the table lock, so it composes with concurrent
     // appends instead of dropping rows a directory listing never saw.
     // Only APPENDS compose: a concurrent rewrite (another replay, a
@@ -159,22 +159,23 @@ object DeadLetter {
     SnapshotLog.withTableLock(dlqDir) {
       val cur = SnapshotLog.currentSnapshot(spark, dlqDir)
       val curPaths = cur.toSeq.flatMap(_.files.map(_.path)).toSet
-      val missing = snap.files.map(_.path).filterNot(curPaths)
+      val snapPaths = snap.files.map(_.path).toSet
+      val missing = snapPaths.filterNot(curPaths)
       if (missing.nonEmpty)
         throw new SnapshotLog.ConcurrentCommitException(
           s"replay of $dlqDir lost its snapshot basis: ${missing.size} of " +
             s"${snap.files.size} files were replaced by a concurrent " +
             "replay/cleanup; rows were reprocessed but not marked — " +
             "re-run replay against the current snapshot")
-      val marked = SnapshotLog.read(spark, dlqDir, snap)
+      // cur holds every replayed file (the basis check above)
+      def replayed(f: SnapshotLog.DataFile) = snapPaths(f.path)
+      val marked = SnapshotLog.readPruned(spark, dlqDir, cur.get, replayed)
         .withColumn("retried_at",
           when(col("retried_at").isNull, current_timestamp())
             .otherwise(col("retried_at")))
       val newFiles = SnapshotLog.writeData(spark, dlqDir, marked, None)
-      val snapPaths = snap.files.map(_.path).toSet
-      val keep = cur.toSeq.flatMap(_.files.filterNot(f => snapPaths(f.path)))
-      SnapshotLog.commit(spark, dlqDir, "replay-mark",
-        keep ++ newFiles, schema, cur): Unit
+      SnapshotLog.commit(spark, dlqDir, "replay-mark", schema, cur,
+        add = newFiles, remove = replayed): Unit
     }
     n
   }
@@ -213,8 +214,8 @@ object DeadLetter {
           else {
             val newFiles =
               SnapshotLog.writeData(spark, dlqDir, dlq.filter(!expired), None)
-            SnapshotLog.commit(spark, dlqDir, "cleanup", newFiles, schema,
-              Some(cur))
+            SnapshotLog.commit(spark, dlqDir, "cleanup", schema, Some(cur),
+              add = newFiles, remove = _ => true)
             SnapshotLog.expire(spark, dlqDir, keepLast = 1)
             n
           }

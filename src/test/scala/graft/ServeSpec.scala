@@ -26,7 +26,8 @@ class ServeSpec extends SparkTestBase {
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "name")
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, df, None)
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     val handle = Serve.start(spark, wh, token = Some("srv-tok"),
       prefix = "lake", catalogName = "servetest")

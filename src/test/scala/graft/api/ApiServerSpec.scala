@@ -26,7 +26,8 @@ class ApiServerSpec extends SparkTestBase {
       graft.ingest.Cdc.LsnColumn)
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, df, None)
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
@@ -593,6 +594,29 @@ class ApiServerSpec extends SparkTestBase {
         """{"name":"qp2","query_engine":"trino","min_replicas":1,
           |"max_replicas":3,"queued_queries_threshold":"5"}"""
           .stripMargin)._1 === 400)
+    } finally srv.close()
+  }
+
+  test("query parameters decode once from the raw query: an encoded & stays in the value") {
+    val dir = Files.createTempDirectory("graft-qparam-api").toString
+    val cp = new ControlPlane(dir, connTest = _ => Right(1L))
+    val srv = new ApiServer(spark, controlPlane = Some(cp))
+    try {
+      val base = srv.baseUri
+      Seq("on" -> true, "off" -> false).foreach { case (name, enabled) =>
+        assert(post(base, "/api/v1/scaling/policies",
+          s"""{"name":"$name","target_type":"cdc-worker","min_replicas":1,
+             |"max_replicas":2,"enabled":$enabled}""".stripMargin)._1 === 201)
+      }
+      def names(query: String): Seq[String] = {
+        val (code, body) = get(base, s"/api/v1/scaling/policies$query")
+        assert(code === 200)
+        (body \ "policies").children.map(p => str(p \ "name")).sorted
+      }
+      assert(names("") === Seq("off", "on"))
+      assert(names("?enabled=true") === Seq("on"))
+      // the handler sees enabled = "true&x", which is not "true"
+      assert(names("?enabled=true%26x") === Seq("off", "on"))
     } finally srv.close()
   }
 

@@ -108,12 +108,18 @@ class ScalingManagerSpec extends SparkTestBase {
     // make the background job invisible or late under the full suite
     @volatile var submitted = false
     @volatile var jobErr: Throwable = null
+    // the job's tasks hold until the poll loop has seen the job running
+    // (or given up): the job stays visible for as long as the status
+    // store lags, instead of ending after a fixed sleep
+    val release = new java.util.concurrent.CountDownLatch(1)
+    ScalingManagerSpec.release = release
     val runner = new Thread(() => {
       try {
         sc.clearJobGroup()
         submitted = true
         sc.parallelize(1 to 4, 4).mapPartitions { it =>
-          Thread.sleep(3000L); it
+          ScalingManagerSpec.release.await(30L, java.util.concurrent.TimeUnit.SECONDS)
+          it
         }.count()
         ()
       } catch { case e: Throwable => jobErr = e }
@@ -134,19 +140,19 @@ class ScalingManagerSpec extends SparkTestBase {
         if (m.running >= 1) { seenRunning = true; assert(m.queued === 0) }
         Thread.sleep(50L)
       }
+      release.countDown()
+      runner.join(30000L)
       assert(jobErr == null, s"background job failed: $jobErr")
       val obs = observed.result()
       // the no-double-count INVARIANT asserted on every poll above;
-      // the positive sighting is provable only against a fresh status
-      // store — after ~470 prior tests the shared session's store can
-      // stay blind to a 3 s job for the whole window (event-bus lag /
-      // trimming). Cancel then, like the repo's other
-      // environment-gated specs; standalone runs prove the sighting.
+      // the positive sighting needs the status store to catch up with
+      // the held job within the 20 s window — cancel if it never does,
+      // like the repo's other environment-gated specs.
       if (!seenRunning) cancel(
         s"status store never showed the job as running (full-suite " +
           s"store lag); submitted=$submitted, last observations " +
           s"(queued,running,activeJobs): ${obs.takeRight(5).mkString(", ")}")
-    } finally runner.join(30000L)
+    } finally { release.countDown(); runner.join(30000L) }
   }
 
   test("TickerDaemon restarts after close — never a silently dead loop") {
@@ -168,4 +174,11 @@ class ScalingManagerSpec extends SparkTestBase {
     awaitTicksAbove(afterClose)
     d.close()
   }
+}
+
+object ScalingManagerSpec {
+  /** Held by the background job's tasks in "sparkQueryMetrics is
+    * job-granular …": tasks run in this JVM (local mode) and read the
+    * latch through this object, not through a serialized closure. */
+  @volatile var release = new java.util.concurrent.CountDownLatch(0)
 }

@@ -31,11 +31,6 @@ class DedupSpec extends SparkTestBase {
     val viaJvm = docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .collect().map { case (id, t) => id -> Signatures.wordShingles(t) }.toMap
     assert(viaExpr === viaJvm)
-    val triExpr = docs.select(col("doc_id"), Dedup.charNgrams(col("text"), 5).as("sh"))
-      .as[(Long, Seq[String])].collect().toMap
-    val triJvm = docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .collect().map { case (id, t) => id -> Signatures.charNgrams(t, 5) }.toMap
-    assert(triExpr === triJvm)
   }
 
   test("char-ngram fast kernel matches the definitional shingle+hash path") {

@@ -254,9 +254,9 @@ class LakeMergeSpec extends SparkTestBase {
     // the same files with their LSN bounds dropped from the manifest
     SnapshotLog.withTableLock(dir) {
       val cur = SnapshotLog.currentSnapshot(spark, dir).get
-      SnapshotLog.commit(spark, dir, "replace",
-        cur.files.map(_.copy(minLsn = None, maxLsn = None)), cur.schema,
-        parent = Some(cur))
+      SnapshotLog.commit(spark, dir, "replace", cur.schema, Some(cur),
+        add = cur.files.map(_.copy(minLsn = None, maxLsn = None)),
+        remove = _ => true)
     }
     assert(SnapshotLog.currentSnapshot(spark, dir).get.files
       .forall(f => f.minLsn.isEmpty && f.maxLsn.isEmpty))

@@ -149,6 +149,29 @@ class MorMergeSpec extends SparkTestBase {
     assert(SnapshotLog.currentSnapshot(spark, dir).get.deletes.nonEmpty)
   }
 
+  test("a COW merge that rewrites every day retires the live deletes") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-morcow-all").toString + "/t"
+    val batches = Seq(
+      env((1L, 1L, 1.0, "INSERT", "2024-01-01"), (2L, 2L, 2.0, "INSERT", "2024-01-02"),
+        (3L, 3L, 3.0, "INSERT", "2024-01-02")),
+      env((2L, 5L, 0.0, "DELETE", "2024-01-02"), (1L, 6L, 10.0, "UPDATE", "2024-01-01")))
+    batches.foreach(CdcWriter.morMerge(spark, dir, _, Seq("user_id")))
+    assert(SnapshotLog.currentSnapshot(spark, dir).get.deletes.nonEmpty)
+    // keys 1 and 3 live on both stored days: the merge rewrites every file
+    val cow = env((3L, 7L, 30.0, "UPDATE", "2024-01-02"),
+      (1L, 8L, 11.0, "UPDATE", "2024-01-01"))
+    assert(CdcWriter.merge(spark, dir, cow, Seq("user_id")) ===
+      Seq("2024-01-01", "2024-01-02"))
+    val snap = SnapshotLog.currentSnapshot(spark, dir).get
+    assert(snap.deletes.isEmpty && snap.posDeletes.isEmpty)
+    val expected = Cdc.currentState((batches :+ cow).reduce(_ unionByName _), Seq("user_id"))
+      .select($"user_id", $"event_id", $"value").as[(Long, Long, Double)]
+      .collect().sortBy(_._1).toSeq
+    assert(state(dir) === expected)
+    assert(expected === Seq((1L, 8L, 11.0), (3L, 7L, 30.0)))
+  }
+
   test("incremental append-scan: added files only, replace skipped, merges refused") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-morinc").toString + "/t"

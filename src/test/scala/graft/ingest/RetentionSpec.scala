@@ -43,8 +43,7 @@ class RetentionSpec extends SparkTestBase {
       val files = SnapshotLog.writeData(spark, dir,
         df.withColumn("_pmonth", substring(col("_cdc_date"), 1, 7)),
         Some("_pmonth"), spec = Some("month"))
-      SnapshotLog.commit(spark, dir, "append",
-        cur.toSeq.flatMap(_.files) ++ files, df.schema, parent = cur)
+      SnapshotLog.commit(spark, dir, "append", df.schema, cur, add = files)
     }
     intercept[IllegalArgumentException] {
       SnapshotLog.dropDaysBefore(spark, dir, "2024-01-08")

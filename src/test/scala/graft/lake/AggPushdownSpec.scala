@@ -28,10 +28,7 @@ class AggPushdownSpec extends SparkTestBase {
     SnapshotLog.withTableLock(dir) {
       val cur = SnapshotLog.currentSnapshot(spark, dir)
       val files = SnapshotLog.writeData(spark, dir, df, Some("_cdc_date"))
-      SnapshotLog.commit(spark, dir, "append",
-        cur.toSeq.flatMap(_.files) ++ files, df.schema, parent = cur,
-        deletes = cur.toSeq.flatMap(_.deletes),
-        posDeletes = cur.toSeq.flatMap(_.posDeletes))
+      SnapshotLog.commit(spark, dir, "append", df.schema, cur, add = files)
     }
   }
 
@@ -153,8 +150,7 @@ class AggPushdownSpec extends SparkTestBase {
         substring(col("_cdc_date"), 1, 7))
       val files = SnapshotLog.writeData(spark, dir, withMonth,
         Some("_pmonth"), spec = Some("month"))
-      SnapshotLog.commit(spark, dir, "append",
-        cur.toSeq.flatMap(_.files) ++ files, df.schema, parent = cur)
+      SnapshotLog.commit(spark, dir, "append", df.schema, cur, add = files)
     }
     // a month-partitioned file can hold ANY January day: day pruning is
     // no longer exact row filtering, so nothing is claimed, the filter

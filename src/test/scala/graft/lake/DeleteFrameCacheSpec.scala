@@ -25,15 +25,15 @@ class DeleteFrameCacheSpec extends SparkTestBase {
       .toDF("id", "v", Cdc.LsnColumn, "_cdc_date")
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, df, Some("_cdc_date"))
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     SnapshotLog.withTableLock(dir) {
       val cur = SnapshotLog.currentSnapshot(spark, dir).get
       val del = SnapshotLog.writeDeletes(spark, dir,
         Seq(1L, 2L).toDF("id"), Seq("id"))
-      SnapshotLog.commit(spark, dir, "delete", cur.files, cur.schema,
-        parent = Some(cur), deletes = cur.deletes ++ del,
-        posDeletes = cur.posDeletes)
+      SnapshotLog.commit(spark, dir, "delete", cur.schema, Some(cur),
+        addDeletes = del)
     }
     SnapshotLog.deleteWhere(spark, dir, col("id") === 3L)
     dir

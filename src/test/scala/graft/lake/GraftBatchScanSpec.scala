@@ -29,10 +29,7 @@ class GraftBatchScanSpec extends SparkTestBase {
     SnapshotLog.withTableLock(dir) {
       val cur = SnapshotLog.currentSnapshot(spark, dir)
       val files = SnapshotLog.writeData(spark, dir, df, Some("_cdc_date"))
-      SnapshotLog.commit(spark, dir, "append",
-        cur.toSeq.flatMap(_.files) ++ files, df.schema, parent = cur,
-        deletes = cur.toSeq.flatMap(_.deletes),
-        posDeletes = cur.toSeq.flatMap(_.posDeletes))
+      SnapshotLog.commit(spark, dir, "append", df.schema, cur, add = files)
     }
   }
 
@@ -112,9 +109,8 @@ class GraftBatchScanSpec extends SparkTestBase {
       val cur = SnapshotLog.currentSnapshot(spark, dir).get
       val dels = SnapshotLog.writeDeletes(spark, dir,
         Seq(21L).toDF("id"), Seq("id"))
-      SnapshotLog.commit(spark, dir, "mor-merge", cur.files, cur.schema,
-        parent = Some(cur), deletes = cur.deletes ++ dels,
-        posDeletes = cur.posDeletes)
+      SnapshotLog.commit(spark, dir, "mor-merge", cur.schema, Some(cur),
+        addDeletes = dels)
     }
     // snapshot 3: id=21 re-appended with a HIGHER seq — the delete must
     // not outrank it (the seq comparison runs inside the rewrite's join)
@@ -137,9 +133,8 @@ class GraftBatchScanSpec extends SparkTestBase {
       val cur = SnapshotLog.currentSnapshot(spark, dir).get
       val dels = SnapshotLog.writeDeletes(spark, dir,
         Seq(21L, 32L).toDF("id"), Seq("id"))
-      SnapshotLog.commit(spark, dir, "mor-merge", cur.files, cur.schema,
-        parent = Some(cur), deletes = cur.deletes ++ dels,
-        posDeletes = cur.posDeletes)
+      SnapshotLog.commit(spark, dir, "mor-merge", cur.schema, Some(cur),
+        addDeletes = dels)
     }
     GraftBroadcastCache.reset()
     def q(): Long = spark.sql(s"SELECT sum(v) AS s FROM $cat.ns.t")
@@ -176,9 +171,8 @@ class GraftBatchScanSpec extends SparkTestBase {
       val cur = SnapshotLog.currentSnapshot(spark, dir).get
       val dels = SnapshotLog.writeDeletes(spark, dir,
         Seq(21L, 32L).toDF("id"), Seq("id"))
-      SnapshotLog.commit(spark, dir, "mor-merge", cur.files, cur.schema,
-        parent = Some(cur), deletes = cur.deletes ++ dels,
-        posDeletes = cur.posDeletes)
+      SnapshotLog.commit(spark, dir, "mor-merge", cur.schema, Some(cur),
+        addDeletes = dels)
     }
     GraftBroadcastCache.reset()
     // stateful streaming disables AQE on its triggers — model that by
@@ -236,9 +230,8 @@ class GraftBatchScanSpec extends SparkTestBase {
       val cur = SnapshotLog.currentSnapshot(spark, dir).get
       val dels = SnapshotLog.writeDeletes(spark, dir,
         Seq(21L).toDF("id"), Seq("id"))
-      SnapshotLog.commit(spark, dir, "mor-merge", cur.files, cur.schema,
-        parent = Some(cur), deletes = cur.deletes ++ dels,
-        posDeletes = cur.posDeletes)
+      SnapshotLog.commit(spark, dir, "mor-merge", cur.schema, Some(cur),
+        addDeletes = dels)
     }
     // era 2: the merge keys changed — a delete keyed on v (v=302 dies);
     // both eras' deletes are LIVE in the head snapshot simultaneously
@@ -246,9 +239,8 @@ class GraftBatchScanSpec extends SparkTestBase {
       val cur = SnapshotLog.currentSnapshot(spark, dir).get
       val dels = SnapshotLog.writeDeletes(spark, dir,
         Seq(302L).toDF("v"), Seq("v"))
-      SnapshotLog.commit(spark, dir, "mor-merge", cur.files, cur.schema,
-        parent = Some(cur), deletes = cur.deletes ++ dels,
-        posDeletes = cur.posDeletes)
+      SnapshotLog.commit(spark, dir, "mor-merge", cur.schema, Some(cur),
+        addDeletes = dels)
     }
     val snap = SnapshotLog.currentSnapshot(spark, dir).get
     assert(snap.deletes.map(_.eqCols).distinct.size === 2)
@@ -359,7 +351,8 @@ class GraftBatchScanSpec extends SparkTestBase {
           StructField("x", from))))
       SnapshotLog.withTableLock(dir) {
         val files = SnapshotLog.writeData(spark, dir, df, None)
-        SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+        SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+          add = files)
       }
       if (renamed) SnapshotLog.renameColumn(spark, dir, "x", "y")
       SnapshotLog.withTableLock(dir) {
@@ -367,8 +360,7 @@ class GraftBatchScanSpec extends SparkTestBase {
         assert(SchemaEvolution.widensTo(from, to))
         val wider = StructType(cur.schema.fields.map(f =>
           if (f.name == name) f.copy(dataType = to) else f))
-        SnapshotLog.commit(spark, dir, "evolve-schema", cur.files, wider,
-          parent = Some(cur))
+        SnapshotLog.commit(spark, dir, "evolve-schema", wider, Some(cur))
       }
       val snap = SnapshotLog.currentSnapshot(spark, dir).get
       val expected = df.select(col("id"), col("x").cast(to).as(name))
@@ -407,15 +399,15 @@ class GraftBatchScanSpec extends SparkTestBase {
       .toDF("id", "_abs", "_pos", "_seq")
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, df, None)
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     SnapshotLog.withTableLock(dir) {
       val cur = SnapshotLog.currentSnapshot(spark, dir).get
       val dels = SnapshotLog.writeDeletes(spark, dir,
         Seq(1L).toDF("id"), Seq("id"))
-      SnapshotLog.commit(spark, dir, "mor-merge", cur.files, cur.schema,
-        parent = Some(cur), deletes = cur.deletes ++ dels,
-        posDeletes = cur.posDeletes)
+      SnapshotLog.commit(spark, dir, "mor-merge", cur.schema, Some(cur),
+        addDeletes = dels)
     }
     register(wh)
     // a positional delete whose predicate names the user columns
@@ -449,15 +441,15 @@ class GraftBatchScanSpec extends SparkTestBase {
       val withHour = df.withColumn("_phour", concat(col("day"), lit(" 07")))
       val files = SnapshotLog.writeData(spark, dir, withHour,
         Some("_phour"), spec = Some("hour"))
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     SnapshotLog.withTableLock(dir) {
       val cur = SnapshotLog.currentSnapshot(spark, dir).get
       val dels = SnapshotLog.writeDeletes(spark, dir,
         Seq(1L).toDF("id"), Seq("id"))
-      SnapshotLog.commit(spark, dir, "mor-merge", cur.files, cur.schema,
-        parent = Some(cur), deletes = cur.deletes ++ dels,
-        posDeletes = cur.posDeletes)
+      SnapshotLog.commit(spark, dir, "mor-merge", cur.schema, Some(cur),
+        addDeletes = dels)
     }
     register(wh)
     spark.sql(s"DELETE FROM $cat.ns.esc WHERE id = 2")

@@ -28,10 +28,7 @@ class GraftCatalogSpec extends SparkTestBase {
     SnapshotLog.withTableLock(dir) {
       val cur = SnapshotLog.currentSnapshot(spark, dir)
       val files = SnapshotLog.writeData(spark, dir, df, Some("_cdc_date"))
-      SnapshotLog.commit(spark, dir, op,
-        cur.toSeq.flatMap(_.files) ++ files, df.schema, parent = cur,
-        deletes = cur.toSeq.flatMap(_.deletes),
-        posDeletes = cur.toSeq.flatMap(_.posDeletes))
+      SnapshotLog.commit(spark, dir, op, df.schema, cur, add = files)
     }
   }
 
@@ -327,7 +324,8 @@ class GraftCatalogSpec extends SparkTestBase {
       .toDF("id", graft.ingest.Cdc.LsnColumn, "_cdc_date")
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, idRows, Some("_cdc_date"))
-      SnapshotLog.commit(spark, dir, "append", files, idRows.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", idRows.schema, parent = None,
+        add = files)
     }
     SnapshotLog.withTableLock(dir) {
       val cur = SnapshotLog.currentSnapshot(spark, dir).get
@@ -336,8 +334,7 @@ class GraftCatalogSpec extends SparkTestBase {
         .withColumn("_month", substring(col("_cdc_date"), 1, 7))
       val files = SnapshotLog.writeData(spark, dir,
         moRows, Some("_month"), spec = Some("month"))
-      SnapshotLog.commit(spark, dir, "append",
-        cur.files ++ files, cur.schema, parent = Some(cur))
+      SnapshotLog.commit(spark, dir, "append", cur.schema, Some(cur), add = files)
     }
     register(wh)
     // equality on a January day: keeps the identity 01-05 file and the

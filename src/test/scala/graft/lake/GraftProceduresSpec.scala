@@ -72,6 +72,32 @@ class GraftProceduresSpec extends SparkTestBase {
     assert(ids(s"SELECT id FROM $cat.db.t") === Seq(1L, 2L, 3L))
   }
 
+  test("a cluster_by table refuses a COW merge until normalize_layout") {
+    import spark.implicits._
+    import graft.ingest.{Cdc, CdcWriter}
+    val (wh, _) = fresh()
+    val dir = s"$wh/db/e"
+    def env(rows: (Long, Double, String, String, String)*) =
+      rows.toDF("id", "v", Cdc.OpColumn, "day", Cdc.LsnColumn)
+        .withColumn(Cdc.TsColumn, to_timestamp(concat(col("day"), lit(" 12:00:00"))))
+        .drop("day")
+    CdcWriter.appendCommit(spark, dir, env(
+      (1L, 1.0, "INSERT", "2024-01-01", "0000000000000001"),
+      (2L, 2.0, "INSERT", "2024-01-02", "0000000000000002")))
+    call(s"CALL $cat.system.cluster_by(table => 'db.e', column => 'v', splits => '1.5')")
+    val update = env((1L, 10.0, "UPDATE", "2024-01-01", "0000000000000003"))
+    val e = intercept[IllegalArgumentException](
+      CdcWriter.merge(spark, dir, update, Seq("id")))
+    assert(e.getMessage.contains("CALL <catalog>.system.normalize_layout("))
+    assert(call(s"CALL $cat.system.normalize_layout(table => 'db.e')") ===
+      SnapshotLog.currentSnapshot(spark, dir).get.id)
+    assert(SnapshotLog.currentSnapshot(spark, dir).get.files.map(_.partition)
+      .distinct.sorted === Seq("2024-01-01", "2024-01-02"))
+    assert(CdcWriter.merge(spark, dir, update, Seq("id")) === Seq("2024-01-01"))
+    assert(spark.sql(s"SELECT id, v FROM $cat.db.e ORDER BY id").as[(Long, Double)]
+      .collect().toSeq === Seq((1L, 10.0), (2L, 2.0)))
+  }
+
   test("cluster_by rewrites into range buckets with recorded bounds") {
     val (_, dir) = fresh()
     spark.sql(s"INSERT INTO $cat.db.t VALUES (1, 5), (2, 15), (3, 25), (4, 35)")

@@ -22,7 +22,8 @@ class GridClusterSpec extends SparkTestBase {
     val df = rows.toDF("id", "x", "y")
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, df, None, statsCol = "x")
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     dir
   }
@@ -89,7 +90,8 @@ class GridClusterSpec extends SparkTestBase {
         .toDF("id", "v").repartition(1).sortWithinPartitions("id")
       SnapshotLog.withTableLock(dir) {
         val files = SnapshotLog.writeData(spark, dir, df, None, statsCol = "v")
-        SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+        SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+          add = files)
       }
       val f = SnapshotLog.currentSnapshot(spark, dir).get.files.head
       val (mn, mx) = f.boundsFor("v").get
@@ -111,7 +113,8 @@ class GridClusterSpec extends SparkTestBase {
     val df = Seq((1L, 1.0), (2L, 2.0), (3L, Double.PositiveInfinity)).toDF("id", "v")
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, df, None, statsCol = "v")
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     val snap = SnapshotLog.clusterBy(spark, dir, "v", Seq(2.0))
     // the upper bucket records max "Infinity", which has no decimal form:
@@ -137,7 +140,8 @@ class GridClusterSpec extends SparkTestBase {
         .toDF("id", "v").repartition(1).sortWithinPartitions("id")
       val f = SnapshotLog.withTableLock(dir) {
         val files = SnapshotLog.writeData(spark, dir, df, None, statsCol = "v")
-        SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+        SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+          add = files)
       }.files.head
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(

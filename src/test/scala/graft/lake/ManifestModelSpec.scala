@@ -35,10 +35,12 @@ class ManifestModelSpec extends SparkTestBase {
     var nextFile = 0
     var history = Vector.empty[(Long, Map[String, Long])]
 
-    def commitOp(op: String, files: Seq[DataFile]): Unit = {
+    def commitOp(op: String, add: Seq[DataFile],
+                 remove: DataFile => Boolean = _ => false): Unit = {
       val sn = SnapshotLog.withTableLock(dir) {
         val cur = SnapshotLog.currentSnapshot(spark, dir)
-        SnapshotLog.commit(spark, dir, op, files, schema, parent = cur)
+        SnapshotLog.commit(spark, dir, op, schema, cur, add = add,
+          remove = remove)
       }
       model = sn.files.map(f => f.path -> f.seq).toMap
       history :+= (sn.id, model)
@@ -53,12 +55,12 @@ class ManifestModelSpec extends SparkTestBase {
           val fresh = (1 to 1 + rng.nextInt(4)).map { _ =>
             nextFile += 1; entry(nextFile)
           }
-          commitOp("append", carried ++ fresh)
+          commitOp("append", fresh)
         case 6 | 7 => // remove a random subset (partial rewrite shape)
           val cur = carried
           if (cur.nonEmpty) {
-            val keep = cur.filter(_ => rng.nextBoolean())
-            commitOp("replace", keep)
+            val keep = cur.filter(_ => rng.nextBoolean()).toSet
+            commitOp("replace", Nil, remove = f => !keep(f))
           }
         case 8 => // rollback to a random retained snapshot
           val ids = SnapshotLog.snapshotIds(spark, dir)
@@ -112,7 +114,8 @@ class ManifestModelSpec extends SparkTestBase {
     // batch must land exactly once, ids must stay gapless
     val dir = Files.createTempDirectory("graft-model-conc").toString + "/t"
     SnapshotLog.withTableLock(dir) {
-      SnapshotLog.commit(spark, dir, "append", Seq(entry(0)), schema, None)
+      SnapshotLog.commit(spark, dir, "append", schema, parent = None,
+        add = Seq(entry(0)))
     }
     // three writers, enough rounds that the rename-overwrite race this
     // test CAUGHT (POSIX rename silently overwrites — two "winners",
@@ -152,7 +155,8 @@ class ManifestModelSpec extends SparkTestBase {
     // reclaim it.
     val dir = Files.createTempDirectory("graft-chaos").toString + "/t"
     SnapshotLog.withTableLock(dir) {
-      SnapshotLog.commit(spark, dir, "append", Seq(entry(0)), schema, None)
+      SnapshotLog.commit(spark, dir, "append", schema, parent = None,
+        add = Seq(entry(0)))
     }
     val md = new Path(dir, SnapshotLog.MetaDirName)
     val fs = md.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -238,7 +242,8 @@ class ManifestModelSpec extends SparkTestBase {
     // newer head expire must have kept, and nothing ever throws.
     val dir = Files.createTempDirectory("graft-read-race").toString + "/t"
     SnapshotLog.withTableLock(dir) {
-      SnapshotLog.commit(spark, dir, "append", Seq(entry(0)), schema, None)
+      SnapshotLog.commit(spark, dir, "append", schema, parent = None,
+        add = Seq(entry(0)))
     }
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()

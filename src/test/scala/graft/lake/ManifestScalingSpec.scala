@@ -41,9 +41,7 @@ class ManifestScalingSpec extends SparkTestBase {
     for (i <- 1 to n) {
       val before = mdBytes(dir)
       cur = Some(SnapshotLog.withTableLock(dir) {
-        SnapshotLog.commit(spark, dir, "append",
-          cur.map(_.files).getOrElse(Seq.empty) :+ entry(i), schema,
-          parent = cur)
+        SnapshotLog.commit(spark, dir, "append", schema, cur, add = Seq(entry(i)))
       })
       perCommit(i) = mdBytes(dir) - before
     }
@@ -83,9 +81,7 @@ class ManifestScalingSpec extends SparkTestBase {
     var cur: Option[SnapshotLog.Snapshot] = None
     (1 to 3).foreach { i =>
       cur = Some(SnapshotLog.withTableLock(dir) {
-        SnapshotLog.commit(spark, dir, "append",
-          cur.map(_.files).getOrElse(Seq.empty) :+ entry(i), schema,
-          parent = cur)
+        SnapshotLog.commit(spark, dir, "append", schema, cur, add = Seq(entry(i)))
       })
     }
     // a crashed commit's segment: written, never referenced by a renamed
@@ -125,9 +121,7 @@ class ManifestScalingSpec extends SparkTestBase {
     var cur: Option[SnapshotLog.Snapshot] = None
     (1 to 40).foreach { i =>
       cur = Some(SnapshotLog.withTableLock(dir) {
-        SnapshotLog.commit(spark, dir, "append",
-          cur.map(_.files).getOrElse(Seq.empty) :+ entry(i), schema,
-          parent = cur)
+        SnapshotLog.commit(spark, dir, "append", schema, cur, add = Seq(entry(i)))
       })
     }
     SnapshotLog.expire(spark, dir, keepLast = 2)
@@ -156,7 +150,8 @@ class ManifestScalingSpec extends SparkTestBase {
       .toDF("id", graft.ingest.Cdc.LsnColumn).coalesce(1)
     val s1 = SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, df, None)
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     val md = new Path(dir, SnapshotLog.MetaDirName)
     val fs = md.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -187,8 +182,7 @@ class ManifestScalingSpec extends SparkTestBase {
     val df2 = Seq((3L, f"${3}%016d")).toDF("id", graft.ingest.Cdc.LsnColumn)
     val s2 = SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, df2, None)
-      SnapshotLog.commit(spark, dir, "append", v1.files ++ files, df2.schema,
-        parent = Some(v1))
+      SnapshotLog.commit(spark, dir, "append", df2.schema, Some(v1), add = files)
     }
     assert(SnapshotLog.segmentCount(spark, dir, s2.id) >= 1)
     assert(SnapshotLog.read(spark, dir, s2).count() === 3L)

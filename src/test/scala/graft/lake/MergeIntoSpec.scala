@@ -24,7 +24,8 @@ class MergeIntoSpec extends SparkTestBase {
     val base = df(rows: _*)
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, base, partitionCol = None)
-      SnapshotLog.commit(spark, dir, "append", files, base.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", base.schema, parent = None,
+        add = files)
     }
     dir
   }
@@ -171,7 +172,8 @@ class MergeIntoSpec extends SparkTestBase {
     val base = Seq((1L, 10L)).toDF("_src_x", "v")
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, base, partitionCol = None)
-      SnapshotLog.commit(spark, dir, "append", files, base.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", base.schema, parent = None,
+        add = files)
     }
     val src = Seq((1L, 5L, 6L)).toDF("_src_x", "x", "v")
     val e = intercept[IllegalArgumentException](

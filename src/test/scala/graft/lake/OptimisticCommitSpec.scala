@@ -129,8 +129,8 @@ class OptimisticCommitSpec extends SparkTestBase {
     // foreign overwrite empties the table
     SnapshotLog.withTableLock(dir) {
       val cur = SnapshotLog.currentSnapshot(spark, dir)
-      SnapshotLog.commit(spark, dir, "overwrite", Seq.empty,
-        base.schema, parent = cur)
+      SnapshotLog.commit(spark, dir, "overwrite", base.schema, cur,
+        remove = _ => true)
     }
     SnapshotLog.appendFiles(spark, dir, filesA, rows(3).schema,
       expectedParent = Some(base))
@@ -142,8 +142,7 @@ class OptimisticCommitSpec extends SparkTestBase {
     val base = append(dir, rows(1))
     append(dir, rows(2))
     intercept[SnapshotLog.ConcurrentCommitException] {
-      SnapshotLog.commit(spark, dir, "replace", base.files, base.schema,
-        parent = Some(base))
+      SnapshotLog.commit(spark, dir, "replace", base.schema, Some(base))
     }
   }
 

@@ -218,7 +218,7 @@ class RestCatalogSpec extends SparkTestBase {
         .withColumn(Cdc.TsColumn, to_timestamp(col("ts"))).drop("ts")
       def refused(op: => Any): Unit = {
         val e = intercept[IllegalArgumentException](op)
-        assert(e.getMessage.contains("run normalizeLayout before"))
+        assert(e.getMessage.contains("system.normalize_layout(table => '<table>') before"))
       }
       refused(CdcWriter.merge(spark, loc, update, Seq("id")))
       refused(SnapshotLog.dropDaysBefore(spark, loc, "2024-01-02"))
@@ -358,7 +358,7 @@ class RestCatalogSpec extends SparkTestBase {
         if (dir == loc && !injected) {
           injected = true
           val c = SnapshotLog.currentSnapshot(spark, loc).get
-          SnapshotLog.commit(spark, loc, "append", c.files, c.schema, Some(c))
+          SnapshotLog.commit(spark, loc, "append", c.schema, Some(c))
         }
       }
       try {

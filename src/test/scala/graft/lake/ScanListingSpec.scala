@@ -53,7 +53,8 @@ class ScanListingSpec extends AnyFunSuite with SparkTestBase {
           concat_ws("_", col(pcol), pmod(floor(col("user_id") / 30), lit(8)))),
         Some("_fragment"))
         .map(f => f.copy(partition = f.partition.takeWhile(_ != '_')))
-      SnapshotLog.commit(spark, dir, "append", files, env.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", env.schema, parent = None,
+        add = files)
     }
     val snap = SnapshotLog.currentSnapshot(spark, dir).get
     assert(snap.files.size === 240)

@@ -22,7 +22,8 @@ class SchemaEvolutionSpec extends SparkTestBase {
       .withColumn(graft.ingest.Cdc.LsnColumn, lpad(col("id").cast("string"), 16, "0"))
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, df, None)
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     dir
   }
@@ -76,9 +77,7 @@ class SchemaEvolutionSpec extends SparkTestBase {
       dropped.schema.fields :+ org.apache.spark.sql.types.StructField(
         "v", org.apache.spark.sql.types.LongType))
     SnapshotLog.withTableLock(dir) {
-      SnapshotLog.commit(spark, dir, "evolve-schema", dropped.files, widened,
-        parent = Some(dropped), deletes = dropped.deletes,
-        posDeletes = dropped.posDeletes)
+      SnapshotLog.commit(spark, dir, "evolve-schema", widened, Some(dropped))
     }
     val re = SnapshotLog.readCurrent(spark, dir).get
     // the old files' physical 'v' bytes MUST NOT leak into the new 'v'
@@ -160,8 +159,8 @@ class SchemaEvolutionSpec extends SparkTestBase {
       val files = SnapshotLog.writeData(spark, dir, env, None)
       val dels = SnapshotLog.writeDeletes(spark, dir,
         Seq(Tuple1(99L)).toDF("id"), Seq("id"))
-      SnapshotLog.commit(spark, dir, "mor-merge", files, env.schema,
-        parent = None, deletes = dels)
+      SnapshotLog.commit(spark, dir, "mor-merge", env.schema, parent = None,
+        add = files, addDeletes = dels)
     }
     assertThrows[IllegalArgumentException](
       SnapshotLog.renameColumn(spark, dir, "id", "key"))

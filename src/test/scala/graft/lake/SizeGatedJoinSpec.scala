@@ -21,7 +21,8 @@ class SizeGatedJoinSpec extends SparkTestBase {
     val df = (1L to 100L).map(i => (i, lsn(i))).toDF("id", graft.ingest.Cdc.LsnColumn)
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, df, None)
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     SnapshotLog.deleteWhere(spark, dir, col("id") % 10 === 0L)
     dir
@@ -73,7 +74,8 @@ class SizeGatedJoinSpec extends SparkTestBase {
         .withColumn(graft.ingest.Cdc.LsnColumn, lpad(col("id").cast("string"), 16, "0"))
       SnapshotLog.withTableLock(dir) {
         val files = SnapshotLog.writeData(spark, dir, df, None)
-        SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+        SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+          add = files)
       }
       withThreshold(threshold) {
         val src = (40L to 60L).map(i => (i, i * 100)).toDF("id", "nv")

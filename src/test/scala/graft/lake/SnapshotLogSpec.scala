@@ -31,11 +31,8 @@ class SnapshotLogSpec extends SparkTestBase {
     SnapshotLog.withTableLock(dir) {
       val cur = SnapshotLog.currentSnapshot(spark, dir)
       val files = SnapshotLog.writeData(spark, dir, df, partitionCol = None)
-      SnapshotLog.commit(spark, dir, op,
-        (if (carry) cur.toSeq.flatMap(_.files) else Seq.empty) ++ files,
-        df.schema, parent = cur,
-        deletes = if (carry) cur.toSeq.flatMap(_.deletes) else Nil,
-        posDeletes = if (carry) cur.toSeq.flatMap(_.posDeletes) else Nil)
+      SnapshotLog.commit(spark, dir, op, df.schema, cur, add = files,
+        remove = _ => !carry)
     }
 
   test("commit → resolve roundtrip; historical snapshots stay readable") {
@@ -103,9 +100,8 @@ class SnapshotLogSpec extends SparkTestBase {
     SnapshotLog.withTableLock(dir) {
       val cur = SnapshotLog.currentSnapshot(spark, dir)
       val baseSet = base.files.map(_.path).toSet
-      SnapshotLog.commit(spark, dir, "rewrite",
-        cur.toSeq.flatMap(_.files.filterNot(f => baseSet(f.path))) ++ rewritten,
-        base.schema, parent = cur)
+      SnapshotLog.commit(spark, dir, "rewrite", base.schema, cur,
+        add = rewritten, remove = f => baseSet(f.path))
     }
     val fin = SnapshotLog.readCurrent(spark, dir).get
     assert(idsOf(fin) === Seq(1L, 2L, 3L)) // append survived the rewrite
@@ -121,8 +117,7 @@ class SnapshotLogSpec extends SparkTestBase {
     commitRows(dir, rows(2), "append") // current moves to 2
     val orphan = SnapshotLog.writeData(spark, dir, rows(9), partitionCol = None)
     intercept[SnapshotLog.ConcurrentCommitException] {
-      SnapshotLog.commit(spark, dir, "append",
-        s1.files ++ orphan, s1.schema, parent = Some(s1))
+      SnapshotLog.commit(spark, dir, "append", s1.schema, Some(s1), add = orphan)
     }
     assert(idsOf(SnapshotLog.readCurrent(spark, dir).get) === Seq(1L, 2L))
   }
@@ -152,7 +147,8 @@ class SnapshotLogSpec extends SparkTestBase {
     val snap = SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, df, Some("_cdc_date"))
       assert(files.map(_.partition).distinct.sorted === Seq("2024-01-01", "2024-01-02"))
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     val pruned = SnapshotLog.readPruned(spark, dir, snap,
       GraftPruning.filePredicate(Array(EqualTo("_cdc_date", "2024-01-02"))))
@@ -185,8 +181,7 @@ class SnapshotLogSpec extends SparkTestBase {
     SnapshotLog.withTableLock(dir) {
       val cur = SnapshotLog.currentSnapshot(spark, dir)
       val files = SnapshotLog.writeData(spark, dir, df, Some("_cdc_date"))
-      SnapshotLog.commit(spark, dir, "append",
-        cur.toSeq.flatMap(_.files) ++ files, df.schema, parent = cur)
+      SnapshotLog.commit(spark, dir, "append", df.schema, cur, add = files)
     }
 
   test("compact folds oversized partitions; untouched entries carried verbatim") {
@@ -321,7 +316,8 @@ class SnapshotLogSpec extends SparkTestBase {
         lpad(col("id").cast("string"), 16, "0"))
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, df, Some("day"))
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     // force small shuffle partitions so the parallel write is OBSERVABLE
     // at test scale (at 100 TB the slot volume does this by itself)
@@ -354,7 +350,8 @@ class SnapshotLogSpec extends SparkTestBase {
         lpad(col("id").cast("string"), 16, "0"))
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, df, Some("day"))
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     // the keep predicate is LOAD-BEARING: count which files the scan
     // admits — a day-targeted delete must open only that day's files
@@ -444,9 +441,8 @@ class SnapshotLogSpec extends SparkTestBase {
     SnapshotLog.withTableLock(dir) {
       val dels = SnapshotLog.writeDeletes(spark, dir,
         rows(2).select(col("id")), Seq("id"))
-      SnapshotLog.commit(spark, dir, "mor-merge", cur.files, cur.schema,
-        parent = Some(cur), deletes = cur.deletes ++ dels,
-        posDeletes = cur.posDeletes)
+      SnapshotLog.commit(spark, dir, "mor-merge", cur.schema, Some(cur),
+        addDeletes = dels)
     }
     assert(idsOf(SnapshotLog.readCurrent(spark, dir).get) === Seq(3L))
   }
@@ -463,10 +459,8 @@ class SnapshotLogSpec extends SparkTestBase {
           partitionCol = None)
         val dels = SnapshotLog.writeDeletes(spark, dir,
           rows(i.toLong - 1).select(col("id")), Seq("id"))
-        SnapshotLog.commit(spark, dir, "mor-merge",
-          cur.toSeq.flatMap(_.files) ++ files, rows(1).schema, parent = cur,
-          deletes = cur.toSeq.flatMap(_.deletes) ++ dels,
-          posDeletes = cur.toSeq.flatMap(_.posDeletes))
+        SnapshotLog.commit(spark, dir, "mor-merge", rows(1).schema, cur,
+          add = files, addDeletes = dels)
       }
     }
     def parquetLegs(plan: String): Int =
@@ -514,16 +508,16 @@ class SnapshotLogSpec extends SparkTestBase {
       val withHour = df.withColumn("_phour", concat(col("day"), lit(" 07")))
       val files = SnapshotLog.writeData(spark, dir, withHour,
         Some("_phour"), spec = Some("hour"))
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     // equality delete of id=1 (seq 2 outranks the hour files' seq 1)
     SnapshotLog.withTableLock(dir) {
       val cur = SnapshotLog.currentSnapshot(spark, dir).get
       val dels = SnapshotLog.writeDeletes(spark, dir,
         Seq(1L).toDF("id"), Seq("id"))
-      SnapshotLog.commit(spark, dir, "mor-merge", cur.files, cur.schema,
-        parent = Some(cur), deletes = cur.deletes ++ dels,
-        posDeletes = cur.posDeletes)
+      SnapshotLog.commit(spark, dir, "mor-merge", cur.schema, Some(cur),
+        addDeletes = dels)
     }
     // positional delete of id=2 (slots target the ENCODED file identity)
     SnapshotLog.deleteWhere(spark, dir, col("id") === 2L)
@@ -558,7 +552,8 @@ class SnapshotLogSpec extends SparkTestBase {
     SnapshotLog.withTableLock(dir) {
       val df = days(1L -> "2024-01-10", 2L -> "2024-02-20")
       val files = SnapshotLog.writeData(spark, dir, df, Some("day"))
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     // commit 2: month spec via a hidden transform column
     SnapshotLog.withTableLock(dir) {
@@ -567,8 +562,7 @@ class SnapshotLogSpec extends SparkTestBase {
       val withMonth = df.withColumn("_pmonth", substring(col("day"), 1, 7))
       val files = SnapshotLog.writeData(spark, dir, withMonth,
         Some("_pmonth"), spec = Some("month"))
-      SnapshotLog.commit(spark, dir, "append",
-        cur.toSeq.flatMap(_.files) ++ files, df.schema, parent = cur)
+      SnapshotLog.commit(spark, dir, "append", df.schema, cur, add = files)
     }
     val cur = SnapshotLog.currentSnapshot(spark, dir).get
     assert(cur.files.size === 4) // 2 day files + 2 month files
@@ -594,8 +588,7 @@ class SnapshotLogSpec extends SparkTestBase {
       val withYear = df.withColumn("_pyear", substring(col("day"), 1, 4))
       val files = SnapshotLog.writeData(spark, dir, withYear,
         Some("_pyear"), spec = Some("year"))
-      SnapshotLog.commit(spark, dir, "append",
-        c.toSeq.flatMap(_.files) ++ files, df.schema, parent = c)
+      SnapshotLog.commit(spark, dir, "append", df.schema, c, add = files)
     }
     SnapshotLog.withTableLock(dir) {
       val c = SnapshotLog.currentSnapshot(spark, dir)
@@ -603,8 +596,7 @@ class SnapshotLogSpec extends SparkTestBase {
       val withHour = df.withColumn("_phour", concat(col("day"), lit(" 07")))
       val files = SnapshotLog.writeData(spark, dir, withHour,
         Some("_phour"), spec = Some("hour"))
-      SnapshotLog.commit(spark, dir, "append",
-        c.toSeq.flatMap(_.files) ++ files, df.schema, parent = c)
+      SnapshotLog.commit(spark, dir, "append", df.schema, c, add = files)
     }
     val cur2 = SnapshotLog.currentSnapshot(spark, dir).get
     assert(cur2.files.size === 8) // 2 day + 2 month + 2 year + 2 hour
@@ -718,7 +710,8 @@ class SnapshotLogSpec extends SparkTestBase {
     val df = Seq((1L, "2024-01-10"), (2L, "2024-01-11")).toDF("id", "day")
     SnapshotLog.withTableLock(dir) {
       val files = SnapshotLog.writeData(spark, dir, df, Some("day"))
-      SnapshotLog.commit(spark, dir, "append", files, df.schema, parent = None)
+      SnapshotLog.commit(spark, dir, "append", df.schema, parent = None,
+        add = files)
     }
     assertThrows[IllegalArgumentException](
       SnapshotLog.updateWhere(spark, dir, col("id") === 1, Map("id" -> lit(9))))

@@ -133,6 +133,46 @@ class DeadLetterSpec extends SparkTestBase {
     assert(remaining === 0L) // the final cleanup ran after the last append
   }
 
+  /** One DLQ row by its table name and payload id — the predicate a SQL
+    * `DELETE FROM` on the served DLQ turns into. */
+  private def row(table: String, id: Long) =
+    col("table_name") === table &&
+      get_json_object(col("event_data"), "$.id") === id.toString
+
+  test("a row deleted from the DLQ stays deleted across later appends") {
+    val dlqDir = Files.createTempDirectory("graft-dlq-del").toString + "/dlq"
+    Seq("t1", "t2").foreach(t => DeadLetter.append(poisonBatch, dlqDir, "src", t,
+      new IllegalArgumentException("bad"), retryCount = 1))
+    assert(graft.lake.SnapshotLog.deleteWhere(spark, dlqDir, row("t1", 1L)).isDefined)
+    DeadLetter.append(poisonBatch, dlqDir, "src", "t3",
+      new IllegalArgumentException("bad"), retryCount = 1)
+    val dlq = DeadLetter.read(spark, dlqDir)
+    assert(dlq.count() === 5)
+    assert(dlq.filter(row("t1", 1L)).count() === 0)
+  }
+
+  test("rows deleted while a replay runs stay deleted after its mark commit") {
+    val dlqDir = Files.createTempDirectory("graft-dlq-replay-del").toString + "/dlq"
+    DeadLetter.append(poisonBatch, dlqDir, "src", "t1",
+      new IllegalArgumentException("bad"), retryCount = 1)
+    val n = DeadLetter.replay(spark, dlqDir, poisonBatch.schema,
+      repair = identity,
+      process = b => {
+        // both rows fail again into a file committed after the replay's
+        // snapshot; one of them, and one replayed row, are then deleted
+        DeadLetter.append(b, dlqDir, "src", "t2",
+          new IllegalArgumentException("still bad"), retryCount = 2)
+        graft.lake.SnapshotLog.deleteWhere(spark, dlqDir, row("t2", 2L))
+        graft.lake.SnapshotLog.deleteWhere(spark, dlqDir, row("t1", 1L)): Unit
+      })
+    assert(n === 2)
+    val dlq = DeadLetter.read(spark, dlqDir)
+    assert(dlq.filter(row("t2", 2L)).count() === 0)
+    assert(dlq.filter(row("t1", 1L)).count() === 0)
+    assert(dlq.count() === 2)
+    assert(dlq.filter(col("retried_at").isNull).count() === 1) // t2's row 1
+  }
+
   test("a DLQ dir written without retried_at reads back as all-pending") {
     import spark.implicits._
     val dlqDir = Files.createTempDirectory("graft-dlq-old").toString + "/dlq"

@@ -46,6 +46,9 @@ object Helpers {
   def inString(): Unit = ()
 
   def recursive(n: Int): Int = if (n == 0) 0 else recursive(n - 1)
+
+  /** Shares its name with ExtSupport.shared; nothing names either. */
+  def shared(x: Int): Int = x
 }
 ''',
     "src/main/scala/app/ext/Loaded.scala": '''
@@ -57,6 +60,8 @@ class ConfExt extends (String => Unit) {
 
 object ExtSupport {
   def run(s: String): Unit = ()
+
+  def shared(s: String): String = s
 }
 
 class ResourceFs extends java.io.Closeable {
@@ -124,6 +129,10 @@ class UnreachedTest(unittest.TestCase):
         self.assertIn("Helpers.recursive", self.listed)
         self.assertNotIn("Helpers.used", self.listed)
 
+    def test_defs_sharing_a_name_that_no_live_text_names_are_listed(self):
+        self.assertIn("Helpers.shared", self.listed)
+        self.assertIn("ExtSupport.shared", self.listed)
+
     def test_classes_named_in_a_resource_or_conf_string_are_not_listed(self):
         for name in ("ConfExt", "ConfExt.apply", "ExtSupport",
                      "ResourceFs", "ResourceFs.close"):
@@ -144,7 +153,7 @@ class UnreachedTest(unittest.TestCase):
             self.listed,
             {"Helpers.testOnly", "Helpers.chained", "Helpers.chainedHelper",
              "Helpers.commentOnly", "Helpers.inString", "Helpers.recursive",
-             "NamedNowhere"})
+             "Helpers.shared", "ExtSupport.shared", "NamedNowhere"})
 
     def test_exits_1_while_an_unjustified_entry_remains(self):
         tool = os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -152,7 +161,7 @@ class UnreachedTest(unittest.TestCase):
         run = subprocess.run([sys.executable, tool, self.tmp.name],
                              capture_output=True, text=True)
         self.assertEqual(run.returncode, 1, run.stdout)
-        self.assertIn("unjustified: 7", run.stdout)
+        self.assertIn("unjustified: 9", run.stdout)
 
 
 if __name__ == "__main__":

@@ -20,10 +20,11 @@ Roots:
     builds it from the name a user sets in `spark.sql.extensions`;
   - every identifier in perfbench/**/*.scala (perfbench is read only);
   - the members of a reached definition that are `override` or
-    `implicit`, that the compiler or the JVM calls without naming them
-    (`apply`, `toString`, ...), or whose name is defined more than once.
-A name defined more than once therefore counts as reached: the scan can
-miss dead code, but it never lists live code.
+    `implicit`, or that the compiler or the JVM calls without naming them
+    (`apply`, `toString`, ...).
+Reach goes by name: when live text names a name that several definitions
+share, every one of them counts as reached. The scan can miss dead code
+that shares a live name, but it never lists live code.
 
 The tool prints the outermost unreached definitions (their members go
 with them) that JUSTIFIED does not name, then the justified ones with
@@ -43,6 +44,9 @@ PAPER = "paper surface with no live path"
 
 # Qualified name (enclosing definitions joined by ".") -> (class, reason).
 JUSTIFIED = {
+    "Signatures.charNgrams": (
+        REFERENCE, "the definitional character n-grams; DedupSpec and "
+        "PropertySpec check the charNgramSig kernel against it"),
     "Dedup.spanIslandPlan": (
         SEAM, "the span-island plan without persists; DedupSpec pins the "
         "shape the live span dedup runs"),
@@ -59,9 +63,6 @@ JUSTIFIED = {
     "GraftBridge.registerFunction": (
         SEAM, "the function-registry call GraftFunctions.register makes "
         "from inside Spark's sql package"),
-    "SnapshotLog.normalizeLayout": (
-        SEAM, "specs re-lay tables out with it to drive the live merge, "
-        "retention and compaction; the live layout refusal names it"),
     "ControlPlane.listUsers": (
         FIXTURE, "ControlPlaneFixture renders the user list, and must "
         "compile in older release checkouts"),
@@ -306,9 +307,7 @@ def analyse(root):
                 texts.append(fh.read())
     named_classes = {m.group(1) for t in texts for m in QUALIFIED.finditer(t)}
 
-    counts = {}
     for d in defs:
-        counts[d.name] = counts.get(d.name, 0) + 1
         if d.kind == "def" and d.name == "main":
             p, d.why = d.parent, "root: def main"
             while p and not p.why:
@@ -342,9 +341,8 @@ def analyse(root):
                 changed = True
             elif (d.parent is None or d.parent.why) and (
                     d.mods or d.name in UNNAMED_CALLS
-                    or counts[d.name] > 1 or not IDENT.fullmatch(d.name)):
-                d.why = "member: override, implicit, unnamed call or " \
-                        "name defined more than once"
+                    or not IDENT.fullmatch(d.name)):
+                d.why = "member: override, implicit or unnamed call"
                 changed = True
     return defs
 
